@@ -2,66 +2,49 @@ package graft.engine
 
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-/** The event hot path: payload JSON → relation → transform / filter
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BasePredicate, Predicate, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.trees.TreePattern.{CURRENT_LIKE, PLAN_EXPRESSION}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+/** The event hot path: payload JSON → rows → filter / transform
   * (reference operators P1/P2/P3, src/app.py:434-579).
   *
-  * Spark-first differences from the reference, deliberately:
-  *  - no LIMIT-0 column probe — `df.schema` is free from the analyzer
-  *    (the reference runs every transform twice, src/app.py:464,475);
-  *  - inferred payload schemas are cached per (webhook, payload shape) so
-  *    steady-state events skip schema inference entirely;
-  *  - the filter gate is `count > 0` over the payload relation, executed
-  *    as one tiny local plan, not a round-trip per SURVEY §2.1 P3.
+  * Two paths compute the same answer:
+  *  - compiled: a filter or transform whose optimized plan is only
+  *    Project / Filter nodes over the payload, with deterministic,
+  *    subquery-free expressions that do not read the clock, is compiled
+  *    once per (webhook, payload schema, array-or-object, query text,
+  *    UDF-registry generation) into a predicate plus an `UnsafeProjection`
+  *    of `to_json(struct(cols))`, and evaluated on the driver over rows
+  *    parsed by a `from_json` projection compiled once per schema: no
+  *    Catalyst planning, no temp view, no Spark job per event;
+  *  - Spark: everything else (joins, aggregates, limits, sorts, windows,
+  *    generators) and any compiled evaluation that throws runs as SQL
+  *    over the parsed rows as a local relation, so every "Error: …"
+  *    outcome is the Spark path's own. The filter is `SELECT 1 … WHERE`
+  *    with `LIMIT 1`, and rows are shaped with `to_json(struct(...))`;
+  *    the optimizer folds such plans over a local relation into the
+  *    relation, so even this path launches no job unless the query
+  *    reads another relation.
+  *
+  * Inferred payload schemas are cached per (webhook, [[shapeKey]]), so
+  * steady-state events skip schema inference; both caches are bounded
+  * LRUs.
   */
 final class PayloadTransformer(spark: SparkSession) {
+  import PayloadTransformer._
 
-  import org.apache.spark.sql.types.StructType
-  import scala.collection.concurrent.TrieMap
-
-  /** schema cache key = webhookId + structural hash of the payload's
-    * key-shape (names + nesting, not values).
-    */
-  private val schemaCache = new TrieMap[String, StructType]()
-
-  /** JSON payload (object or array of objects, src/app.py:451-454) to a
-    * 1..N-row DataFrame. Nested objects become StructType columns, so
-    * `nested.key1` dot paths work natively.
-    */
-  def payloadToDf(webhookId: String, payloadJson: String): DataFrame = {
-    import spark.implicits._
-    val key = webhookId + "#" + shapeHash(payloadJson)
-    schemaCache.get(key) match {
-      case Some(schema) =>
-        spark.read.schema(schema).json(Seq(payloadJson).toDS())
-      case None =>
-        val df = spark.read.json(Seq(payloadJson).toDS())
-        schemaCache.putIfAbsent(key, df.schema)
-        df
-    }
-  }
-
-  /** Structural hash: field names and nesting only, cheap single pass. */
-  private def shapeHash(json: String): Int = {
-    var h = 17
-    var inString = false
-    var prev = ' '
-    var i = 0
-    while (i < json.length) {
-      val c = json.charAt(i)
-      if (inString) {
-        if (c == '"' && prev != '\\') inString = false else h = h * 31 + c
-      } else c match {
-        case '"' => inString = true; h = h * 31 + 7
-        case '{' | '}' | '[' | ']' | ':' | ',' => h = h * 31 + c
-        case _ => // values outside strings don't affect shape
-      }
-      prev = c
-      i += 1
-    }
-    h
-  }
+  private val shapes = new Lru[String, Shape](MaxShapes)
+  private val plans = new Lru[PlanKey, Option[Stages]](MaxPlans)
 
   /** Run a `{{payload}}` transform over one payload; returns the shaped
     * JSON per the reference's contract (src/app.py:467-504):
@@ -69,13 +52,10 @@ final class PayloadTransformer(spark: SparkSession) {
     */
   def transform(webhookId: String, transformQuery: String,
       payloadJson: String): String = {
-    val view = tempViewName()
-    val df = payloadToDf(webhookId, payloadJson)
-    df.createOrReplaceTempView(view)
-    try {
-      val result = spark.sql(substitute(transformQuery, view))
-      shapeResult(result)
-    } finally spark.catalog.dropTempView(view)
+    val p = parse(webhookId, payloadJson)
+    compiledRun(webhookId, p, transformQuery, filter = false)(_.json(_))
+      .map(shapeResult)
+      .getOrElse(sparkTransform(p, transformQuery))
   }
 
   /** Filter gate: bare WHERE-condition over the payload relation;
@@ -83,13 +63,225 @@ final class PayloadTransformer(spark: SparkSession) {
     */
   def applyFilter(webhookId: String, filterQuery: String,
       payloadJson: String): Boolean = {
-    val view = tempViewName()
-    payloadToDf(webhookId, payloadJson).createOrReplaceTempView(view)
-    try {
-      spark.sql(s"SELECT count(*) AS c FROM $view WHERE $filterQuery")
-        .head().getLong(0) > 0
-    } finally spark.catalog.dropTempView(view)
+    val p = parse(webhookId, payloadJson)
+    compiledRun(webhookId, p, filterQuery, filter = true)(_.keep(_))
+      .getOrElse(sparkFilter(p, filterQuery))
   }
+
+  // ---- payload shapes ----
+
+  private def parse(webhookId: String, json: String): Payload = {
+    val scan = new ShapeScan(json)
+    val shape = shapes.getOrElseUpdate(webhookId + "\u0000" + scan.key,
+      newShape(json, scan.isArray, scan.rowWise))
+    Payload(json, shape,
+      shape.parser.flatMap(p => attempt(parseRows(p, shape, json))))
+  }
+
+  private def newShape(json: String, isArray: Boolean,
+      rowWise: Boolean): Shape = {
+    import spark.implicits._
+    val schema = spark.read.json(Seq(json).toDS()).schema
+    val parser =
+      if (!rowWise ||
+        schema.fieldNames.contains(spark.sessionState.conf.columnNameOfCorruptRecord))
+        None
+      else attempt {
+        import org.apache.spark.sql.functions.{col, from_json}
+        val parsed = if (isArray) ArrayType(schema) else schema
+        withPlaceholder(StructType(Seq(StructField("json", StringType)))) {
+          (df, _, leaf) => compileRowWise(
+            df.select(from_json(col("json"), parsed, Map.empty[String, String])), leaf)
+        }
+      }.flatten
+    new Shape(schema, isArray, parser)
+  }
+
+  private def parseRows(parser: Stages, shape: Shape,
+      json: String): Seq[InternalRow] = {
+    val n = shape.schema.length
+    val out = parser.synchronized {
+      parser(InternalRow(UTF8String.fromString(json))).copy()
+    }
+    val rows =
+      if (shape.isArray) {
+        val a = out.getArray(0)
+        (0 until a.numElements()).map(i => a.getStruct(i, n))
+      } else Seq(out.getStruct(0, n))
+    require(rows.forall(_ != null), "payload did not parse to rows")
+    rows
+  }
+
+  // ---- compiled path ----
+
+  private def compiledRun[T](webhookId: String, p: Payload, text: String,
+      filter: Boolean)(run: (Stages, Seq[InternalRow]) => T): Option[T] =
+    for {
+      rows <- p.rows
+      stages <- compiled(webhookId, p, text, filter)
+      out <- attempt(run(stages, rows))
+    } yield out
+
+  private def compiled(webhookId: String, p: Payload, text: String,
+      filter: Boolean): Option[Stages] = {
+    val key = PlanKey(webhookId, p.shape.schema, p.shape.isArray, text,
+      filter, UdfRegistry.generation)
+    plans.getOrElseUpdate(key, compile(key))
+  }
+
+  /** Analyzes and optimizes the query once against an empty placeholder
+    * of the schema; None when it is not row-wise or does not analyze.
+    */
+  private def compile(k: PlanKey): Option[Stages] =
+    attempt(withPlaceholder(k.schema) { (_, view, leaf) =>
+      compileRowWise(
+        if (k.filter) filterDf(view, k.text)
+        else jsonDf(spark.sql(substitute(k.text, view))), leaf)
+    }).flatten
+
+  /** Runs `body` with a temp view over an empty relation of `schema`,
+    * backed by an RDD rather than a local relation, so the optimizer
+    * keeps it as a leaf instead of folding queries over it away.
+    */
+  private def withPlaceholder[T](schema: StructType)(
+      body: (DataFrame, String, RDD[InternalRow]) => T): T = {
+    val df = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    val leaf = df.queryExecution.logical.collectFirst {
+      case r: LogicalRDD => r.rdd
+    }.get
+    val view = tempViewName()
+    df.createOrReplaceTempView(view)
+    try body(df, view, leaf)
+    finally spark.catalog.dropTempView(view)
+  }
+
+  /** Driver-side stages of `df` when its optimized plan is Project /
+    * Filter nodes directly over `leaf`, with deterministic expressions,
+    * and its analyzed plan reads only `leaf`, holds no subquery and no
+    * current-time expression (the optimizer folds `now()` into a literal
+    * that a cached plan would keep).
+    */
+  private def compileRowWise(df: DataFrame,
+      leaf: RDD[InternalRow]): Option[Stages] = {
+    def isLeaf(p: LogicalPlan) = p match {
+      case r: LogicalRDD => r.rdd eq leaf
+      case _ => false
+    }
+    def stages(p: LogicalPlan): Option[List[Stage]] = p match {
+      case l if isLeaf(l) => Some(Nil)
+      case Project(list, child) if list.forall(_.deterministic) =>
+        stages(child).map(Right(UnsafeProjection.create(list, child.output)) :: _)
+      case Filter(cond, child) if cond.deterministic =>
+        stages(child).map(Left(Predicate.create(cond, child.output)) :: _)
+      case _ => None
+    }
+    val qe = df.queryExecution
+    if (!qe.analyzed.collectLeaves().forall(isLeaf) ||
+      qe.analyzed.containsAnyPattern(CURRENT_LIKE, PLAN_EXPRESSION)) None
+    else stages(qe.optimizedPlan).map { s =>
+      s.foreach(_.fold(_.initialize(0), _.initialize(0)))
+      new Stages(s.reverse)
+    }
+  }
+
+  // ---- Spark path ----
+
+  private def sparkTransform(p: Payload, transformQuery: String): String =
+    withPayloadView(p) { view =>
+      shapeResult(jsonDf(spark.sql(substitute(transformQuery, view)))
+        .collect().toSeq.map(_.getString(0)))
+    }
+
+  private def sparkFilter(p: Payload, filterQuery: String): Boolean =
+    withPayloadView(p) { view =>
+      filterDf(view, filterQuery).limit(1).collect().nonEmpty
+    }
+
+  /** The payload as a temp view: a local relation of its parsed rows, or,
+    * for a payload that did not parse to rows (a scalar, malformed JSON),
+    * the text read with the cached schema.
+    */
+  private def withPayloadView[T](p: Payload)(body: String => T): T = {
+    val schema = p.shape.schema
+    val df = p.rows match {
+      case Some(rows) =>
+        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+        spark.createDataFrame(rows.map(r => toRow(r).asInstanceOf[Row]).asJava,
+          schema)
+      case None =>
+        import spark.implicits._
+        spark.read.schema(schema).json(Seq(p.json).toDS())
+    }
+    val view = tempViewName()
+    df.createOrReplaceTempView(view)
+    try body(view) finally spark.catalog.dropTempView(view)
+  }
+
+  private def filterDf(view: String, filterQuery: String): DataFrame =
+    spark.sql(s"SELECT 1 FROM $view WHERE $filterQuery")
+
+  /** One JSON string per result row, `to_json(struct(cols))`; columns are
+    * renamed by position first, so duplicate or dotted names keep their
+    * place and spelling.
+    */
+  private def jsonDf(result: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, struct, to_json}
+    val names = result.columns.toSeq
+    val byPos = names.indices.map(i => s"_c$i")
+    result.toDF(byPos: _*).select(to_json(struct(
+      byPos.zip(names).map { case (p, n) => col(p).as(n) }: _*)))
+  }
+
+  /** {{payload}} macro expansion (src/app.py:462) — textual, same as the
+    * reference; the substituted text then goes through the full Catalyst
+    * analyzer.
+    */
+  private def substitute(transformQuery: String, view: String): String =
+    transformQuery.replace("{{payload}}", view)
+
+  private def tempViewName(): String =
+    "payload_" + UUID.randomUUID().toString.replace("-", "_")
+
+  private def shapeResult(rows: Seq[String]): String = rows.length match {
+    case 0 => "{}"
+    case 1 => rows.head
+    case _ => rows.mkString("{\"results\": [", ", ", "]}")
+  }
+
+  // ---- the two paths, separately, for tests ----
+
+  /** The compiled path alone: None when the query takes the Spark path;
+    * evaluation errors propagate.
+    */
+  private[graft] def compiledTransform(webhookId: String,
+      transformQuery: String, payloadJson: String): Option[String] = {
+    val p = parse(webhookId, payloadJson)
+    for {
+      rows <- p.rows
+      stages <- compiled(webhookId, p, transformQuery, filter = false)
+    } yield shapeResult(stages.json(rows))
+  }
+
+  private[graft] def compiledFilter(webhookId: String, filterQuery: String,
+      payloadJson: String): Option[Boolean] = {
+    val p = parse(webhookId, payloadJson)
+    for {
+      rows <- p.rows
+      stages <- compiled(webhookId, p, filterQuery, filter = true)
+    } yield stages.keep(rows)
+  }
+
+  private[graft] def sparkTransform(webhookId: String, transformQuery: String,
+      payloadJson: String): String =
+    sparkTransform(parse(webhookId, payloadJson), transformQuery)
+
+  private[graft] def sparkFilter(webhookId: String, filterQuery: String,
+      payloadJson: String): Boolean =
+    sparkFilter(parse(webhookId, payloadJson), filterQuery)
+
+  private[graft] def cachedShapes: Int = shapes.size
+
+  // ---- set-oriented filter gate ----
 
   /** Set-oriented filter gate for a micro-batch of SAME-WEBHOOK events:
     * one Spark job evaluates the bare condition over all payloads, with
@@ -118,184 +310,253 @@ final class PayloadTransformer(spark: SparkSession) {
     * inferred struct covers array elements too), then parse each payload
     * against it alongside its event id. Array payloads parse as
     * ArrayType(schema) and explode — keep = at least one row matches,
-    * exactly the per-event COUNT(*)>0 gate. Known edge vs the per-event
-    * path: an event MISSING a filtered column reads as null here
-    * (filtered out) where the per-event path raises and audits an
-    * "Error:" row — only reachable with mixed-shape batches.
+    * exactly the per-event gate. Known edge vs the per-event path: an
+    * event MISSING a filtered column reads as null here (filtered out)
+    * where the per-event path raises and audits an "Error:" row — only
+    * reachable with mixed-shape batches.
     */
-  def batchFilterPlan(events: DataFrame, filterQuery: String,
-      schema: Option[StructType] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    explodedBatch(events, schema)
+  def batchFilterPlan(events: DataFrame, filterQuery: String): DataFrame = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{array, col, explode, expr, from_json, when}
+    val schema = spark.read.json(events.select("__json").as[String]).schema
+    events
+      .select(col("__eid"),
+        explode(when(expr("__json RLIKE '^\\\\s*\\\\['"),
+          from_json(col("__json"), ArrayType(schema)))
+          .otherwise(array(from_json(col("__json"), schema)))).as("__p"))
+      .select(col("__eid").as("__graft_eid"), col("__p.*"))
       .where(expr(filterQuery))
       .select(col("__graft_eid").as("__eid"))
       .distinct()
   }
+}
 
-  /** Union schema of a batch's payloads — ONE inference job; callers
-    * running both the filter and the transform channel over the same
-    * batch share the result instead of inferring twice.
+object PayloadTransformer {
+
+  /** Bounds of the shape and compiled-plan caches (entries). */
+  private val MaxShapes = 1024
+  private val MaxPlans = 1024
+
+  /** One payload shape of one webhook: its inferred schema and, when
+    * payloads of the shape are an object or an array of objects, the
+    * driver-side `from_json` parser.
     */
-  def inferBatchSchema(events: DataFrame): StructType = {
-    import spark.implicits._
-    spark.read.json(events.select("__json").as[String]).schema
-  }
+  private final class Shape(val schema: StructType, val isArray: Boolean,
+      val parser: Option[Stages])
 
-  /** Union-schema exploded relation for a batch of same-webhook events:
-    * one schema inference over the whole batch (or the caller-provided
-    * [[inferBatchSchema]] result), then every payload parsed against it
-    * with the event id and the within-payload row index carried as
-    * metadata columns — `(__graft_eid, __graft_idx,
-    * <payload columns>)`. Array payloads explode into one row per
-    * element (index = element position), exactly the per-event
-    * payloadToDf row set.
+  /** One payload: its text, shape, and parsed rows (None when the shape
+    * has no parser or the parse failed).
     */
-  private def explodedBatch(events: DataFrame,
-      knownSchema: Option[StructType] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{array, col, expr, from_json, posexplode, when}
-    import org.apache.spark.sql.types.ArrayType
-    val schema = knownSchema.getOrElse(inferBatchSchema(events))
-    events
-      .select(col("__eid"),
-        posexplode(when(expr("__json RLIKE '^\\\\s*\\\\['"),
-          from_json(col("__json"), ArrayType(schema)))
-          .otherwise(array(from_json(col("__json"), schema))))
-          .as(Seq("__idx", "__p")))
-      .select(col("__eid").as("__graft_eid"), col("__idx").as("__graft_idx"),
-        col("__p.*"))
-  }
+  private final case class Payload(json: String, shape: Shape,
+      rows: Option[Seq[InternalRow]])
 
-  // ---- set-oriented transform channel ----
+  private final case class PlanKey(webhookId: String, schema: StructType,
+      isArray: Boolean, text: String, filter: Boolean, udfGeneration: Long)
 
-  /** Generator function names that multiply rows: per-output-row order
-    * within one payload row is generation order per-event, which the
-    * batched sort-by-index can't reproduce — so these fall back.
+  /** A driver-side stage: a predicate (Left) or a projection (Right). */
+  private type Stage = Either[BasePredicate, UnsafeProjection]
+
+  /** A compiled row-wise plan. Its projections reuse their output rows,
+    * so callers hold the instance's lock while evaluating.
     */
-  private val GeneratorFns = Set("explode", "explode_outer", "posexplode",
-    "posexplode_outer", "inline", "inline_outer", "stack", "json_tuple")
-
-  /** True when a substituted transform parses to a ROW-WISE plan — only
-    * Project / Filter / SubqueryAlias over the single payload relation,
-    * with no window functions, subquery expressions, or row-multiplying
-    * generators. Aggregates without GROUP BY parse as Project, but the
-    * injected pass-through columns then fail analysis (non-grouped
-    * reference), so they fall back at the analysis gate instead. Every
-    * other shape (Aggregate, Limit, Sort, Distinct, set ops, WITH,
-    * joins against reference tables) has a node outside the allowlist.
-    */
-  private[graft] def isRowWiseSelect(substitutedSql: String): Boolean =
-    try {
-      import org.apache.spark.sql.catalyst.analysis.{UnresolvedFunction, UnresolvedRelation}
-      import org.apache.spark.sql.catalyst.expressions.{SubqueryExpression, WindowExpression}
-      import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LogicalPlan, Project, SubqueryAlias}
-      val plan = spark.sessionState.sqlParser.parsePlan(substitutedSql)
-      val nodesOk = plan.collect { case n: LogicalPlan => n }.forall {
-        case _: Project | _: LFilter | _: SubqueryAlias |
-          _: UnresolvedRelation => true
-        case _ => false
-      }
-      def exprBad(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
-        e.exists {
-          case _: WindowExpression => true
-          case _: SubqueryExpression => true
-          case f: UnresolvedFunction =>
-            GeneratorFns(f.nameParts.last.toLowerCase(java.util.Locale.ROOT))
-          case _ => false
+  private final class Stages(stages: List[Stage]) {
+    /** The output row for `in`, or null when a predicate drops it; valid
+      * until the next call.
+      */
+    def apply(in: InternalRow): InternalRow = {
+      var row = in
+      var rest = stages
+      while (row != null && rest.nonEmpty) {
+        row = rest.head match {
+          case Left(p) => if (p.eval(row)) row else null
+          case Right(proj) => proj(row)
         }
-      nodesOk && !plan.exists(_.expressions.exists(exprBad))
-    } catch { case _: Throwable => false }
+        rest = rest.tail
+      }
+      row
+    }
 
-  private val SelectHead = "(?i)\\bselect\\b".r
+    def keep(rows: Seq[InternalRow]): Boolean =
+      synchronized(rows.exists(apply(_) != null))
 
-  /** Compile a `{{payload}}` transform ONCE against a batch's union
-    * schema and evaluate every event in ONE set-oriented plan. Input:
-    * (`__eid`, `__json`) rows; output: (`__eid`, `__transformed`) with
-    * the reference's shaping applied per event (1 row → flat object,
-    * N rows → {"results": [...]}; events whose rows all fail the
-    * transform's own WHERE produce no output row — callers coalesce to
-    * "{}"). Returns None when the transform shape requires per-event
-    * semantics: arbitrary SQL may aggregate/sort/limit over the
-    * SINGLE-EVENT relation, which a batch-wide run would evaluate over
-    * the whole batch instead, so only verified row-wise plans batch.
-    *
-    * Mechanics: the event id and row index are injected as pass-through
-    * columns into the outer SELECT (`__graft_eid AS __ge, ...`) — sound
-    * because a row-wise plan commutes with adding a constant-per-row
-    * column; any shape that would change semantics fails the parse
-    * allowlist or the post-injection analysis and falls back. Per-row
-    * JSON uses the same Jackson generator as the per-event `toJSON`
-    * path, so strings match byte-for-byte; multi-row events reassemble
-    * in payload order via the carried index.
-    *
-    * Same union-schema edge as [[batchFilterPlan]]: an event missing a
-    * referenced column reads as null here where the per-event path
-    * errors — only reachable with mixed-shape batches.
-    */
-  def batchTransformPlan(events: DataFrame, transformQuery: String,
-      schema: Option[StructType] = None): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{array_join, array_sort, col, collect_list, concat, count, lit, struct, to_json, when, transform => arrTransform}
-    if (!isRowWiseSelect(substitute(transformQuery, "__graft_probe")))
-      return None
-    val view = tempViewName()
-    explodedBatch(events, schema).createOrReplaceTempView(view)
-    try {
-      val substituted = substitute(transformQuery, view)
-      val injected = SelectHead.replaceFirstIn(substituted,
-        "SELECT __graft_eid AS __ge, __graft_idx AS __gi, ")
-      val res = spark.sql(injected) // analyzes eagerly; throws → fallback
-      val metaCols = Set("__ge", "__gi", "__graft_eid", "__graft_idx")
-      val userCols = res.columns.filterNot(metaCols)
-      Some(res
-        .select(col("__ge"), col("__gi"),
-          to_json(struct(userCols.map(col).toIndexedSeq: _*)).as("__row"))
-        .groupBy(col("__ge").as("__eid"))
-        .agg(count(lit(1)).as("__n"),
-          array_join(arrTransform(
-            array_sort(collect_list(struct(col("__gi"), col("__row")))),
-            s => s.getField("__row")), ", ").as("__rows"))
-        .select(col("__eid"),
-          when(col("__n") === 1, col("__rows"))
-            .otherwise(concat(lit("{\"results\": ["), col("__rows"),
-              lit("]}")))
-            .as("__transformed")))
-    } catch {
-      case _: Throwable => None
-    } finally spark.catalog.dropTempView(view) // plan already resolved
+    /** The first output column (the row's JSON) of every kept row. */
+    def json(rows: Seq[InternalRow]): Seq[String] = synchronized {
+      rows.flatMap(r => Option(apply(r)).map(_.getUTF8String(0).toString))
+    }
   }
 
-  /** Driver-side convenience over [[batchTransformPlan]] for
-    * [[WebhookEngine.processBatch]]: Some(eid → shaped JSON) when the
-    * transform batched (missing eids mean zero output rows → "{}"),
-    * None when it requires the per-event path.
+  private def attempt[T](body: => T): Option[T] =
+    try Some(body) catch { case NonFatal(_) => None }
+
+  /** A map holding at most `max` entries, evicting the least recently
+    * used. A value is computed outside the lock; racing computations of
+    * one key both complete, and the last one stays.
     */
-  def batchTransform(events: Seq[(String, String)],
-      transformQuery: String): Option[Map[String, String]] = {
-    import spark.implicits._
-    if (events.isEmpty) return Some(Map.empty)
-    try batchTransformPlan(events.toDF("__eid", "__json"), transformQuery)
-      .map(_.collect().map(r => r.getString(0) -> r.getString(1)).toMap)
-    catch { case _: Throwable => None } // runtime failure → per-event path
+  private final class Lru[K, V](max: Int) {
+    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+        this.size() > max
+    }
+    def getOrElseUpdate(k: K, v: => V): V =
+      synchronized(Option(m.get(k))).getOrElse {
+        val x = v
+        synchronized(m.put(k, x))
+        x
+      }
+    def size: Int = synchronized(m.size())
   }
 
-  /** {{payload}} macro expansion (src/app.py:462) — textual, same as the
-    * reference; the substituted text then goes through the full Catalyst
-    * analyzer.
+  /** Cache key of a payload's inferred schema: field names plus JSON
+    * token kinds (string, integral number, fractional number, bool,
+    * null, object, array), ignoring values. Spark's inference reads
+    * nothing else under the default options: an integral number is a
+    * long, a fractional one a double, a string a string. Integral numbers
+    * of 19 or more digits may infer as decimals of their own precision,
+    * so they key on their text. Array elements shaped like the one
+    * before are skipped (merging a type with itself changes nothing).
     */
-  def substitute(transformQuery: String, view: String): String =
-    transformQuery.replace("{{payload}}", view)
+  def shapeKey(json: String): String = new ShapeScan(json).key
 
-  def tempViewName(): String =
-    "payload_" + UUID.randomUUID().toString.replace("-", "_")
+  /** Depth past which a payload keys on its full text. */
+  private val MaxDepth = 256
 
-  /** Result shaping with type round-trip: toJSON preserves schema types
-    * (ints stay ints, booleans stay booleans) unlike stringified rows.
+  /** One pass over a payload computing [[shapeKey]]. Anything that is
+    * not strict JSON (single quotes, NaN, leading zeros, bad escapes,
+    * trailing text) keys on the full text, so it never shares a schema
+    * with a payload of another shape.
     */
-  def shapeResult(df: DataFrame): String = {
-    val rows = df.toJSON.collect()
-    rows.length match {
-      case 0 => "{}"
-      case 1 => rows(0)
-      case _ => rows.mkString("{\"results\": [", ", ", "]}")
+  private final class ShapeScan(s: String) {
+    private val out = new java.lang.StringBuilder(32)
+    private var i = 0
+    /** Top-level array elements are all objects. */
+    private var elementsAreObjects = true
+
+    private val ok = value(0) && { ws(); i == s.length }
+    val key: String = if (ok) out.toString else "!" + s
+    val isArray: Boolean = ok && key.startsWith("[")
+    /** The payload is an object or an array of objects. */
+    val rowWise: Boolean = ok && (key.startsWith("{") || isArray && elementsAreObjects)
+
+    private def ws(): Unit =
+      while (i < s.length && " \t\n\r".indexOf(s.charAt(i)) >= 0) i += 1
+
+    private def value(depth: Int): Boolean = {
+      ws()
+      if (i >= s.length || depth > MaxDepth) false
+      else s.charAt(i) match {
+        case '{' => obj(depth)
+        case '[' => arr(depth)
+        case '"' => out.append('s'); str()
+        case 't' => word("true", 'b')
+        case 'f' => word("false", 'b')
+        case 'n' => word("null", 'n')
+        case _ => num()
+      }
+    }
+
+    private def obj(depth: Int): Boolean = {
+      i += 1
+      out.append('{')
+      ws()
+      if (i < s.length && s.charAt(i) == '}') { i += 1; out.append('}'); return true }
+      while (true) {
+        ws()
+        val start = i
+        if (i >= s.length || s.charAt(i) != '"' || !str()) return false
+        out.append(s, start, i) // the name, quoted, escapes as written
+        ws()
+        if (i >= s.length || s.charAt(i) != ':') return false
+        i += 1
+        if (!value(depth + 1)) return false
+        ws()
+        if (i >= s.length) return false
+        s.charAt(i) match {
+          case ',' => i += 1
+          case '}' => i += 1; out.append('}'); return true
+          case _ => return false
+        }
+      }
+      false
+    }
+
+    private def arr(depth: Int): Boolean = {
+      i += 1
+      out.append('[')
+      ws()
+      if (i < s.length && s.charAt(i) == ']') { i += 1; out.append(']'); return true }
+      var prev = -1
+      while (true) {
+        ws()
+        if (depth == 0 && (i >= s.length || s.charAt(i) != '{'))
+          elementsAreObjects = false
+        val start = out.length
+        if (!value(depth + 1)) return false
+        val len = out.length - start
+        if (prev >= 0 && len == start - prev &&
+          out.substring(prev, start) == out.substring(start)) out.setLength(start)
+        else prev = start
+        ws()
+        if (i >= s.length) return false
+        s.charAt(i) match {
+          case ',' => i += 1
+          case ']' => i += 1; out.append(']'); return true
+          case _ => return false
+        }
+      }
+      false
+    }
+
+    private def str(): Boolean = {
+      i += 1
+      while (i < s.length) {
+        val c = s.charAt(i)
+        if (c == '"') { i += 1; return true }
+        else if (c == '\\') {
+          if (i + 1 >= s.length) return false
+          s.charAt(i + 1) match {
+            case '"' | '\\' | '/' | 'b' | 'f' | 'n' | 'r' | 't' => i += 2
+            case 'u' if i + 5 < s.length &&
+                (2 to 5).forall(k => Character.digit(s.charAt(i + k), 16) >= 0) =>
+              i += 6
+            case _ => return false
+          }
+        } else if (c < ' ') return false
+        else i += 1
+      }
+      false
+    }
+
+    private def word(w: String, kind: Char): Boolean =
+      s.startsWith(w, i) && { i += w.length; out.append(kind); true }
+
+    private def digits(): Int = {
+      val start = i
+      while (i < s.length && s.charAt(i) >= '0' && s.charAt(i) <= '9') i += 1
+      i - start
+    }
+
+    private def num(): Boolean = {
+      val start = i
+      if (s.charAt(i) == '-') i += 1
+      val intStart = i
+      val n = digits()
+      if (n == 0 || (n > 1 && s.charAt(intStart) == '0')) return false
+      var fractional = false
+      if (i < s.length && s.charAt(i) == '.') {
+        i += 1
+        if (digits() == 0) return false
+        fractional = true
+      }
+      if (i < s.length && (s.charAt(i) == 'e' || s.charAt(i) == 'E')) {
+        i += 1
+        if (i < s.length && (s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1
+        if (digits() == 0) return false
+        fractional = true
+      }
+      if (fractional) out.append('f')
+      else if (n <= 18) out.append('i')
+      else out.append('I').append(s, start, i).append(';')
+      true
     }
   }
 }

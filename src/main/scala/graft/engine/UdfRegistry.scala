@@ -199,7 +199,19 @@ final class UdfRegistry(spark: SparkSession,
       case n => throw new IllegalArgumentException(
         s"UDFs of arity $n are not supported (1-3)")
     }
+    UdfRegistry.generations.incrementAndGet()
+    ()
   }
+}
+
+object UdfRegistry {
+  private val generations = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Bumped by every function registration in this JVM; plans compiled
+    * against the function registry key on it, so a re-registered UDF
+    * takes effect on the next event.
+    */
+  def generation: Long = generations.get()
 }
 
 /** Process-wide compile cache + conversions. Lives outside any Spark

@@ -1,5 +1,7 @@
 package graft.engine
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The event pipeline driver (reference P11, `process_webhook`
@@ -15,8 +17,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    stronger);
   *  - the audit sinks are the set-oriented parquet appenders in
   *    [[AuditLog]]; the streaming ingestion wrapper
-  *    ([[graft.streaming.StreamIngest]]) reuses [[process]] unchanged
-  *    inside foreachBatch.
+  *    ([[graft.streaming.StreamIngest]]) runs each filter survivor
+  *    through the same per-event transform and delivery tail
+  *    ([[transformKept]] / [[deliverKept]]) inside foreachBatch.
   */
 final class WebhookEngine(
     val spark: SparkSession,
@@ -133,55 +136,32 @@ final class WebhookEngine(
   /** One event through the full pipeline. Mirrors src/app.py:1113-1244:
     * rehydrate UDFs → filter (filtered → audit success=false, body
     * "Filtered out by filter_query", payload "{}") → transform → deliver
-    * (simulated for example.com/localhost) → audit; any processing error
-    * → audit success=false, body "Error: <msg>".
+    * (simulated for example.com/localhost) → audit; any non-fatal
+    * processing error → audit success=false, body "Error: <msg>". Fatal
+    * errors (interrupts, OOM) propagate unaudited.
     */
   def process(webhook: Webhook, rawEventId: String,
       payloadJson: String): ProcessResult =
     try {
       udfs.loadWebhookUdfs(webhook.id)
-
       val keep = webhook.filterQuery match {
         case Some(f) if f.nonEmpty =>
           transformer.applyFilter(webhook.id, f, payloadJson)
         case _ => true
       }
-      if (!keep) {
-        audit.logTransformed(rawEventId, webhook.id, "{}",
-          webhook.destinationUrl, success = false, None,
-          "Filtered out by filter_query")
-        return ProcessResult(rawEventId, filtered = true, success = false,
-          None, None, "Filtered out by filter_query")
-      }
-
-      val transformed =
-        transformer.transform(webhook.id, webhook.transformQuery, payloadJson)
-
-      val d = deliverFn(webhook.destinationUrl, transformed, rawEventId)
-      audit.logTransformed(rawEventId, webhook.id, transformed,
-        webhook.destinationUrl, d.success, d.code, d.body)
-      ProcessResult(rawEventId, filtered = false, d.success,
-        Some(transformed), d.code, d.body)
+      if (!keep) filteredOut(webhook, rawEventId)
+      else deliverKept(webhook, rawEventId, transformKept(webhook, payloadJson))
     } catch {
-      case e: Throwable =>
-        val msg = s"Error: ${e.getMessage}"
-        audit.logTransformed(rawEventId, webhook.id, "{}",
-          webhook.destinationUrl, success = false, None, msg)
-        ProcessResult(rawEventId, filtered = false, success = false,
-          None, None, msg)
+      case NonFatal(e) => failed(webhook, rawEventId, s"Error: ${e.getMessage}")
     }
 
-  /** Set-oriented micro-batch processing — the 100 TB ingestion path
-    * (used by [[graft.streaming.StreamIngest]]'s foreachBatch).
-    *
-    * The filter gate is contractually row-wise (a bare WHERE condition
-    * over payload columns, src/app.py:524-579), so it evaluates
-    * SET-ORIENTED here: one Spark job decides keep/drop for the whole
-    * batch, with the event id carried through as a metadata column.
-    * Transforms are arbitrary per-event SQL (they may aggregate the
-    * single-event relation), so they keep per-event semantics — but the
-    * payload-shape schema cache makes steady-state per-event cost a
-    * plan-only overhead, and audit appends are buffered per batch.
+  /** Micro-batch processing of one webhook's events. The filter gate is
+    * contractually row-wise (a bare WHERE condition over payload columns,
+    * src/app.py:524-579), so it evaluates SET-ORIENTED: one Spark job
+    * decides keep/drop for the whole batch, with the event id carried
+    * through as a metadata column. Each survivor then takes the
+    * per-event transform, which for row-wise transforms is a compiled
+    * driver-side evaluation with no Spark job (see [[PayloadTransformer]]).
     */
   def processBatch(webhook: Webhook,
       events: Seq[RawEvent]): Seq[ProcessResult] = {
@@ -192,73 +172,63 @@ final class WebhookEngine(
         // a broken filter falls back to the per-event path, which
         // reproduces the reference's "Error: ..." audit rows exactly
         try Some(transformer.batchFilter(events.map(e => e.id -> e.payload), f))
-        catch { case _: Throwable => None }
+        catch { case NonFatal(_) => None }
       case _ => Some(events.map(_.id).toSet)
     }
     kept match {
       case None => events.map(e => process(webhook, e.id, e.payload))
-      case Some(keep) =>
-        // row-wise transforms compile ONCE and evaluate over all kept
-        // events as one set-oriented job; None = shape needs per-event
-        // semantics (aggregate/limit/sort/...) or the batch run failed
-        val kepts = events.filter(e => keep(e.id))
-        val batched: Option[Map[String, String]] =
-          transformer.batchTransform(
-            kepts.map(e => e.id -> e.payload), webhook.transformQuery)
-        events.map { e =>
-          if (!keep(e.id)) {
-            audit.logTransformed(e.id, webhook.id, "{}", webhook.destinationUrl,
-              success = false, None, "Filtered out by filter_query")
-            ProcessResult(e.id, filtered = true, success = false, None, None,
-              "Filtered out by filter_query")
-          } else batched match {
-            case Some(m) =>
-              deliverPrepared(webhook, e.id, m.getOrElse(e.id, "{}"))
-            case None => processKept(webhook, e.id, e.payload)
-          }
-        }
+      case Some(keep) => events.map { e =>
+        if (keep(e.id))
+          deliverKept(webhook, e.id, transformKept(webhook, e.payload))
+        else filteredOut(webhook, e.id)
+      }
     }
   }
 
-  /** Transform → deliver → audit for an event that passed the filter
-    * (also the delivery step of the distributed streaming path, which
-    * hands over only filter-passing rows).
+  /** Transform of an event that passed the filter: the shaped JSON, or
+    * the "Error: …" outcome of a failed transform.
     */
-  private[graft] def processKept(webhook: Webhook, rawEventId: String,
-      payloadJson: String): ProcessResult =
-    try {
-      val transformed =
-        transformer.transform(webhook.id, webhook.transformQuery, payloadJson)
-      deliverPrepared(webhook, rawEventId, transformed)
-    } catch {
-      case e: Throwable =>
-        val msg = s"Error: ${e.getMessage}"
-        audit.logTransformed(rawEventId, webhook.id, "{}",
-          webhook.destinationUrl, success = false, None, msg)
-        ProcessResult(rawEventId, filtered = false, success = false,
-          None, None, msg)
+  private[graft] def transformKept(webhook: Webhook,
+      payloadJson: String): Either[String, String] =
+    try Right(transformer.transform(webhook.id, webhook.transformQuery,
+      payloadJson))
+    catch { case NonFatal(e) => Left(s"Error: ${e.getMessage}") }
+
+  /** Deliver + audit a transformed event, or audit its transform error:
+    * the tail of the pipeline shared by the per-event and the
+    * micro-batch paths.
+    */
+  private[graft] def deliverKept(webhook: Webhook, rawEventId: String,
+      transformed: Either[String, String]): ProcessResult =
+    transformed match {
+      case Left(msg) => failed(webhook, rawEventId, msg)
+      case Right(out) =>
+        try {
+          val d = deliverFn(webhook.destinationUrl, out, rawEventId)
+          audit.logTransformed(rawEventId, webhook.id, out,
+            webhook.destinationUrl, d.success, d.code, d.body)
+          ProcessResult(rawEventId, filtered = false, d.success,
+            Some(out), d.code, d.body)
+        } catch {
+          case NonFatal(e) =>
+            failed(webhook, rawEventId, s"Error: ${e.getMessage}")
+        }
     }
 
-  /** Deliver + audit an ALREADY-TRANSFORMED payload — the tail of the
-    * pipeline shared by the per-event path and the set-oriented
-    * transform channel (which computes `transformed` in one batch job).
-    */
-  private[graft] def deliverPrepared(webhook: Webhook, rawEventId: String,
-      transformed: String): ProcessResult =
-    try {
-      val d = deliverFn(webhook.destinationUrl, transformed, rawEventId)
-      audit.logTransformed(rawEventId, webhook.id, transformed,
-        webhook.destinationUrl, d.success, d.code, d.body)
-      ProcessResult(rawEventId, filtered = false, d.success,
-        Some(transformed), d.code, d.body)
-    } catch {
-      case e: Throwable =>
-        val msg = s"Error: ${e.getMessage}"
-        audit.logTransformed(rawEventId, webhook.id, "{}",
-          webhook.destinationUrl, success = false, None, msg)
-        ProcessResult(rawEventId, filtered = false, success = false,
-          None, None, msg)
-    }
+  private def filteredOut(webhook: Webhook, rawEventId: String): ProcessResult = {
+    audit.logTransformed(rawEventId, webhook.id, "{}", webhook.destinationUrl,
+      success = false, None, "Filtered out by filter_query")
+    ProcessResult(rawEventId, filtered = true, success = false, None, None,
+      "Filtered out by filter_query")
+  }
+
+  private def failed(webhook: Webhook, rawEventId: String,
+      msg: String): ProcessResult = {
+    audit.logTransformed(rawEventId, webhook.id, "{}",
+      webhook.destinationUrl, success = false, None, msg)
+    ProcessResult(rawEventId, filtered = false, success = false,
+      None, None, msg)
+  }
 
   // ---- ad-hoc query surface (P8, POST /query src/app.py:955-991) ----
 
@@ -304,7 +274,7 @@ final class WebhookEngine(
           Left("Write operations not allowed in ad-hoc queries")
         else Right(())
       } catch {
-        case e: Throwable => Left(s"Parse error: ${e.getMessage}")
+        case NonFatal(e) => Left(s"Parse error: ${e.getMessage}")
       }
     }
   }
@@ -346,7 +316,7 @@ final class WebhookEngine(
           case other => other
         }))
       } catch {
-        case e: Throwable => Left(e.getMessage)
+        case NonFatal(e) => Left(e.getMessage)
       }
     }
 
@@ -496,5 +466,5 @@ final case class TrRow(id: String, webhookId: String, timestampIso: String,
 object Json {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   def isValid(s: String): Boolean =
-    try { mapper.readTree(s); true } catch { case _: Throwable => false }
+    try { mapper.readTree(s); true } catch { case NonFatal(_) => false }
 }

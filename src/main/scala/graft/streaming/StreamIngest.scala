@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,6 +39,10 @@ import graft.engine.{Webhook, WebhookEngine}
   *    (tiny) fraction that actually leaves the system as webhooks.
   *    [[driverCollectedEvents]] counts exactly these rows so tests pin
   *    the invariant collected == delivery-bound, not batch size;
+  *  - each survivor takes the per-event transform, the same code as the
+  *    HTTP path: a row-wise transform is compiled once per payload shape
+  *    and evaluated on the driver with no Spark job, so a set-oriented
+  *    Spark job over the survivors would cost more than it saves;
   *  - even the delivery-bound slice is NOT assumed small: a pass-all
   *    filter at scale would otherwise put the whole batch on the driver.
   *    Collections run through [[forEachDriverChunk]], which counts the
@@ -198,22 +204,16 @@ final class StreamIngest(engine: WebhookEngine,
   private def processWebhookGroup(webhook: Webhook,
       group: DataFrame, tsMicros: Long): Unit = {
     engine.udfs.loadWebhookUdfs(webhook.id)
-    // ONE schema-inference job per (webhook, batch), shared by the
-    // filter gate and the set-oriented transform channel
-    val batchSchema =
-      try Some(engine.transformer.inferBatchSchema(
-        group.withColumnRenamed("payload", "__json")))
-      catch { case _: Throwable => None }
     val keptPlan: Option[DataFrame] = webhook.filterQuery match {
       case Some(f) if f.nonEmpty =>
         // a broken filter (analysis error) falls back to the per-event
         // path, which reproduces the reference's "Error: ..." audit rows
         try {
           val plan = engine.transformer.batchFilterPlan(
-            group.withColumnRenamed("payload", "__json"), f, batchSchema)
+            group.withColumnRenamed("payload", "__json"), f)
           plan.queryExecution.assertAnalyzed()
           Some(plan)
-        } catch { case _: Throwable => None }
+        } catch { case NonFatal(_) => None }
       case _ => Some(group.select(col("__eid")))
     }
     keptPlan match {
@@ -234,73 +234,35 @@ final class StreamIngest(engine: WebhookEngine,
             lit(null).cast("int").as("response_code"),
             lit("Filtered out by filter_query").as("response_body")),
           tsMicros)
-        val survivors = group
-          .join(kept, group("__eid") === kept("__eid"), "left_semi")
-        deliverSurvivors(webhook, survivors, batchSchema)
+        deliverSurvivors(webhook, group
+          .join(kept, group("__eid") === kept("__eid"), "left_semi"))
     }
   }
 
-  /** Transform + deliver the filter survivors. Row-wise transforms
-    * compile ONCE and evaluate set-oriented — O(1) Spark jobs per
-    * (webhook, batch) instead of one `spark.sql` per event — and the
-    * driver then collects only (event id, shaped JSON) pairs for the
-    * per-event HTTP delivery, which is edge-bound by contract. Shapes
-    * that genuinely need the single-event relation (aggregate / limit /
-    * sort / window / join) fall back to the per-event path, as does any
-    * batch-plan failure (reproducing the reference's per-event "Error:"
-    * audit rows).
+  /** Transform + deliver the filter survivors: each (event id, payload)
+    * row takes the per-event transform on this group's thread — for
+    * row-wise transforms a compiled driver-side evaluation with no Spark
+    * job — and the deliveries then run on the bounded delivery pool.
+    * Transform errors audit the per-event path's "Error: …" rows.
     */
-  private def deliverSurvivors(webhook: Webhook, survivors: DataFrame,
-      batchSchema: Option[org.apache.spark.sql.types.StructType]): Unit = {
-    // the GROUP-wide schema is safe for the survivor subset: fields
-    // present only in filtered-out events parse as null and to_json
-    // drops null fields, so the shaped JSON matches a survivors-only
-    // inference
-    val batchedPlan = engine.transformer.batchTransformPlan(
-      survivors.withColumnRenamed("payload", "__json"),
-      webhook.transformQuery, batchSchema)
-    val deliveredBatched = batchedPlan.exists { p =>
-      // left join keeps zero-output-row events ("{}" per the shaping
-      // contract); the chunked materialization bounds driver residency
-      val prepared = survivors.select("__eid")
-        .join(p, Seq("__eid"), "left")
-        .select(col("__eid"),
-          coalesce(col("__transformed"), lit("{}")).as("__transformed"))
-        .persist() // transform evaluates once, shared by count + chunks
-      try {
-        // runtime transform failures surface here, BEFORE any delivery,
-        // so the per-event fallback never redelivers a chunk
-        val planned =
-          try { prepared.count(); true }
-          catch { case _: Throwable => false }
-        if (planned) forEachDriverChunk(prepared) { chunk =>
-          parallelDeliver(chunk.map(r => (r.getString(0), r.getString(1)))) {
-            case (eid, transformed) =>
-              engine.deliverPrepared(webhook, eid, transformed)
-          }
-        }
-        planned
-      } finally prepared.unpersist()
+  private def deliverSurvivors(webhook: Webhook, survivors: DataFrame): Unit =
+    forEachDriverChunk(survivors) { chunk =>
+      val transformed = chunk.map(r =>
+        (r.getString(0), engine.transformKept(webhook, r.getString(1))))
+      parallelDeliver(transformed) { case (eid, out) =>
+        engine.deliverKept(webhook, eid, out)
+      }
     }
-    if (!deliveredBatched) {
-      forEachDriverChunk(survivors)(_.foreach(r =>
-        engine.processKept(webhook, r.getString(0), r.getString(1))))
-    }
-  }
 
   /** Bounded-parallel per-survivor delivery: one slow destination call
     * (30 s timeout each) must not stall a whole group's batch, and the
     * reference offers no ordering contract to preserve (its per-event
-    * asyncio background tasks interleave freely). `deliverPrepared` is
+    * asyncio background tasks interleave freely). `deliverKept` is
     * thread-safe (stateless delivery fn, synchronized audit buffer);
-    * audit ids stay deterministic regardless of completion order. The
-    * per-event FALLBACK path above stays sequential — it runs a Spark
-    * job per event, and delivery-thread × job-thread fanout there would
-    * storm the scheduler for the rare shapes that take it.
+    * audit ids stay deterministic regardless of completion order.
     */
   private val DeliveryParallelism = 16
-  private def parallelDeliver(rows: Array[(String, String)])(
-      fn: ((String, String)) => Unit): Unit =
+  private def parallelDeliver[T](rows: Array[T])(fn: T => Unit): Unit =
     if (rows.length <= 1) rows.foreach(fn)
     else rows.map(r =>
       deliveryPool.submit(new java.util.concurrent.Callable[Unit] {

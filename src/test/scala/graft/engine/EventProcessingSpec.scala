@@ -156,4 +156,138 @@ class EventProcessingSpec extends SparkSpec {
     val raw = e.audit.logRaw(w.sourcePath, samplePayload)
     assert(e.process(w, raw.id, samplePayload).success)
   }
+
+  // --- compiled path: what it refuses, and what it must keep ---
+
+  test("clock, random and subquery transforms take the Spark path") {
+    val t = transformer
+    val payload = """{"a": 1}"""
+    Seq(
+      "SELECT a, current_timestamp() AS ts FROM {{payload}}",
+      "SELECT a, now() AS ts FROM {{payload}}",
+      "SELECT a, current_date() AS d FROM {{payload}}",
+      "SELECT a, rand() AS r FROM {{payload}}",
+      "SELECT a, uuid() AS u FROM {{payload}}",
+      "SELECT a, (SELECT max(id) FROM range(3)) AS m FROM {{payload}}",
+      "SELECT a FROM {{payload}} WHERE a IN (SELECT id FROM range(3))"
+    ).foreach { q =>
+      assert(t.compiledTransform("w-spark", q, payload).isEmpty, q)
+      assert(mapper.readTree(t.transform("w-spark", q, payload))
+        .get("a").asInt() == 1, q)
+    }
+    assert(t.compiledFilter("w-spark", "a < rand() + 2", payload).isEmpty)
+    // the row-wise control compiles
+    assert(t.compiledTransform("w-spark", "SELECT a FROM {{payload}}",
+      payload).contains("""{"a":1}"""))
+  }
+
+  test("a clock read is fresh on every event") {
+    val t = transformer
+    val q = "SELECT unix_micros(current_timestamp()) AS us FROM {{payload}}"
+    def micros() = mapper.readTree(t.transform("w-clock", q, """{"a": 1}"""))
+      .get("us").asLong()
+    val first = micros()
+    Thread.sleep(5)
+    assert(micros() > first)
+  }
+
+  test("a UDF re-registered under the same name applies to the next event") {
+    val e = newEngine()
+    def udf(suffix: String) = e.udfs.register("w-reudf", "tag",
+      s"""def tag(s: String): String = s + "$suffix"""")
+    assert(udf("-1").isRight)
+    val q = "SELECT udf_w_reudf_tag(b) AS t FROM {{payload}}"
+    val payload = """{"b": "x"}"""
+    assert(e.transformer.transform("w-reudf", q, payload) == """{"t":"x-1"}""")
+    assert(e.transformer.compiledTransform("w-reudf", q, payload)
+      .contains("""{"t":"x-1"}"""))
+    assert(udf("-2").isRight)
+    assert(e.transformer.transform("w-reudf", q, payload) == """{"t":"x-2"}""")
+    assert(e.transformer.compiledTransform("w-reudf", q, payload)
+      .contains("""{"t":"x-2"}"""))
+  }
+
+  test("concurrent transforms through one webhook match a serial run") {
+    val t = transformer
+    val q = "SELECT id, v * 2 AS dbl, upper(s) AS u FROM {{payload}} WHERE v >= 0"
+    val filter = "v % 3 <> 0"
+    // long strings widen the window in which a shared output row could
+    // be overwritten by another thread
+    val pad = "x" * 300
+    val payloads = (0 until 3000).map { i =>
+      if (i % 2 == 0) s"""{"id": $i, "v": $i, "s": "s$i$pad"}"""
+      else s"""[{"id": $i, "v": $i, "s": "a$i$pad"}, {"id": $i, "v": -1, "s": "b"}]"""
+    }
+    def run(p: String) = (t.applyFilter("w-par", filter, p),
+      t.transform("w-par", q, p))
+    val serial = payloads.map(run)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val futures = payloads.map(p => pool.submit(
+        new java.util.concurrent.Callable[(Boolean, String)] {
+          def call(): (Boolean, String) = run(p)
+        }))
+      assert(futures.map(_.get()) == serial)
+    } finally pool.shutdown()
+    assert(t.compiledTransform("w-par", q, payloads.head).isDefined)
+    assert(t.compiledTransform("w-par", q, payloads(1)).isDefined)
+  }
+
+  test("row-wise events launch no Spark job after the first compile") {
+    val e = newEngine()
+    val w = e.register(WebhookConfig("/no-jobs", "https://example.com/sink",
+      "SELECT id, nested.v * 2 AS dbl FROM {{payload}}",
+      Some("nested.v > 0"), None)).toOption.get
+    def payload(i: Int) = s"""{"id": "evt-$i", "nested": {"v": ${i % 7}}}"""
+    e.process(w, e.audit.logRaw(w.sourcePath, payload(1)).id, payload(1))
+    val raws = (1 to 100).map(i => e.audit.logRaw(w.sourcePath, payload(i)))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    // executed queries: the Spark path would plan one per step even
+    // where its local relation needs no job
+    val queries = new java.util.concurrent.atomic.AtomicInteger()
+    val queryListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        queries.incrementAndGet(); ()
+      }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = {
+        queries.incrementAndGet(); ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    spark.listenerManager.register(queryListener)
+    val results =
+      try raws.map(r => e.process(w, r.id, r.payload))
+      finally {
+        org.apache.spark.ListenerBusDrain(sc)
+        sc.removeSparkListener(listener)
+        spark.listenerManager.unregister(queryListener)
+      }
+    assert(jobs.get() == 0, s"${jobs.get()} jobs for 100 events")
+    assert(queries.get() == 0, s"${queries.get()} queries for 100 events")
+    assert(results.count(_.filtered) == 100 / 7) // v = 0 is filtered
+    assert(results.filterNot(_.filtered).forall(_.success))
+  }
+
+  test("process: an interrupt from delivery propagates and is not audited") {
+    val e = newEngine((_, _, _) => throw new InterruptedException("stop"))
+    val w = e.register(WebhookConfig("/interrupted",
+      "https://example.com/webhook", "SELECT * FROM {{payload}}", None,
+      None)).toOption.get
+    val raw = e.audit.logRaw(w.sourcePath, samplePayload)
+    intercept[InterruptedException](e.process(w, raw.id, samplePayload))
+    val rows = e.adHocQuery(
+      s"SELECT response_body FROM transformed_events WHERE raw_event_id = '${raw.id}'")
+      .toOption.get
+    assert(rows.isEmpty)
+  }
 }

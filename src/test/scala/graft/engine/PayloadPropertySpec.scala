@@ -138,4 +138,170 @@ class PayloadPropertySpec extends AnyFunSuite {
       assert(tree.get("results").size() == objs.size)
     }
   }
+
+  // ---- compiled path ≡ Spark path ≡ fresh inference ----
+
+  /** Payload rows over a fixed vocabulary: any field may be missing or
+    * null, `a` is integral or fractional, `n` is a nested object.
+    */
+  private val vocabRowGen: Gen[Map[String, Any]] = {
+    def opt(g: Gen[Any]): Gen[Option[Any]] =
+      Gen.frequency(1 -> Gen.const(None), 1 -> Gen.const(Some(null)),
+        5 -> g.map(Some(_)))
+    for {
+      a <- opt(Gen.oneOf(Gen.choose(-20L, 20L),
+        Gen.choose(-80, 80).map(_ / 4.0)))
+      b <- opt(Gen.oneOf("x", "abc", "Hello", "", "a-b"))
+      c <- opt(Gen.oneOf(true, false))
+      x <- opt(Gen.choose(0L, 99L))
+      y <- opt(Gen.alphaStr.map(_.take(5)))
+      n <- opt(Gen.const(Map("x" -> x, "y" -> y).collect {
+        case (k, Some(v)) => k -> v }))
+    } yield Map("a" -> a, "b" -> b, "c" -> c, "n" -> n).collect {
+      case (k, Some(v)) => k -> v }
+  }
+
+  /** An object, or an array of 1..4 objects (fields missing per element). */
+  private val vocabPayloadGen: Gen[String] = Gen.oneOf(
+    vocabRowGen.map(toJson),
+    Gen.choose(1, 4).flatMap(k => Gen.listOfN(k, vocabRowGen))
+      .map(_.map(toJson).mkString("[", ", ", "]")))
+
+  private lazy val engine = SparkSpec.newEngine()
+  private lazy val udfName = {
+    engine.udfs.register("prop-c", "tag",
+      """def tag(s: String): String = s + "!"""")
+    engine.udfs.qualifiedName("prop-c", "tag")
+  }
+
+  private def transforms = Seq(
+    "SELECT * FROM {{payload}}",
+    "SELECT n.x AS nx, n.y AS ny FROM {{payload}}",
+    "SELECT a * 2 + 1 AS t, a / 4 AS q, -a AS neg FROM {{payload}}",
+    """SELECT CASE WHEN a > 10 THEN 'big' WHEN a IS NULL THEN 'none'
+      |ELSE 'small' END AS size FROM {{payload}}""".stripMargin,
+    """SELECT upper(b) AS ub, concat(b, '-', cast(a AS string)) AS cat,
+      |length(b) AS len, substr(b, 2) AS tail FROM {{payload}}""".stripMargin,
+    "SELECT b, a FROM {{payload}} WHERE a > 5",
+    s"SELECT $udfName(b) AS tag, c FROM {{payload}}")
+
+  private def filters = Seq(
+    "a > 5",
+    "b = 'x' OR c",
+    "n.x IS NOT NULL AND n.x < 50",
+    "upper(b) LIKE 'A%'",
+    s"$udfName(b) = 'x!'")
+
+  private def attempt[T](body: => T): Either[Throwable, T] =
+    try Right(body) catch { case e: Exception => Left(e) }
+
+  test("compiled path returns the Spark path's output on generated payloads") {
+    val t = engine.transformer
+    var compiled = 0
+    var total = 0
+    forAll(vocabPayloadGen, cases = 30) { json =>
+      transforms.foreach { q =>
+        total += 1
+        val fast = attempt(t.compiledTransform("prop-c", q, json))
+        attempt(t.sparkTransform("prop-c", q, json)) match {
+          case Right(out) =>
+            assert(fast == Right(Some(out)), s"$q over $json")
+            compiled += 1
+          case Left(_) => // the compiled path refuses or fails it too
+            assert(fast.forall(_.isEmpty), s"$q over $json")
+        }
+      }
+      filters.foreach { f =>
+        total += 1
+        val fast = attempt(t.compiledFilter("prop-c", f, json))
+        attempt(t.sparkFilter("prop-c", f, json)) match {
+          case Right(keep) =>
+            assert(fast == Right(Some(keep)), s"$f over $json")
+            compiled += 1
+          case Left(_) => assert(fast.forall(_.isEmpty), s"$f over $json")
+        }
+      }
+    }
+    assert(compiled * 2 > total, s"only $compiled of $total cases compiled")
+  }
+
+  /** The transform as a transformer with no cache runs it: schema
+    * inferred from this payload alone, rows shaped with `toJSON`.
+    */
+  private def freshTransform(q: String, json: String): String = {
+    val s = spark
+    import s.implicits._
+    val view = "fresh_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    s.read.json(Seq(json).toDS()).createOrReplaceTempView(view)
+    try {
+      val rows = s.sql(q.replace("{{payload}}", view)).toJSON.collect()
+      rows.length match {
+        case 0 => "{}"
+        case 1 => rows.head
+        case _ => rows.mkString("{\"results\": [", ", ", "]}")
+      }
+    } finally s.catalog.dropTempView(view)
+  }
+
+  /** Few fields, so a sequence repeats key shapes with other number
+    * kinds and nulls.
+    */
+  private val narrowPayloadGen: Gen[String] = {
+    val row = for {
+      a <- Gen.oneOf[Any](Gen.choose(-9L, 9L), Gen.choose(-9, 9).map(_ / 2.0),
+        Gen.const(null))
+      b <- Gen.option(Gen.oneOf("x", "y"))
+    } yield Map[String, Any]("a" -> a) ++ b.map("b" -> _)
+    Gen.oneOf(row.map(toJson), Gen.choose(1, 3).flatMap(k =>
+      Gen.listOfN(k, row)).map(_.map(toJson).mkString("[", ", ", "]")))
+  }
+
+  test("cached schemas give fresh inference's output over mixed sequences") {
+    val t = new PayloadTransformer(spark) // one webhook sees every shape
+    val q = "SELECT * FROM {{payload}}"
+    forAll(Gen.listOfN(12, Gen.oneOf(vocabPayloadGen, narrowPayloadGen)),
+      cases = 4) { seq =>
+      seq.foreach { json =>
+        assert(t.transform("prop-seq", q, json) == freshTransform(q, json),
+          json)
+      }
+    }
+  }
+
+  test("an integral then a fractional number is not read with the first schema") {
+    val t = new PayloadTransformer(spark)
+    assert(t.transform("w", "SELECT * FROM {{payload}}", """{"amount": 1}""")
+      == """{"amount":1}""")
+    assert(t.transform("w", "SELECT * FROM {{payload}}", """{"amount": 1.5}""")
+      == """{"amount":1.5}""")
+    assert(!t.applyFilter("w", "amount > 1", """{"amount": 1}"""))
+    assert(t.applyFilter("w", "amount > 1", """{"amount": 1.5}"""))
+  }
+
+  test("payloads differing only in values share one schema-cache entry") {
+    val t = new PayloadTransformer(spark)
+    (1 to 50).foreach(i =>
+      assert(t.transform("w", "SELECT id FROM {{payload}}",
+        s"""{"id":"evt-$i"}""") == s"""{"id":"evt-$i"}"""))
+    assert(t.cachedShapes == 1)
+  }
+
+  test("shape keys separate token kinds and escapes, not values") {
+    import PayloadTransformer.shapeKey
+    assert(shapeKey("""{"a": 1, "b": "x"}""") == shapeKey("""{"a":2,"b":"y\"z"}"""))
+    assert(shapeKey("""{"a": 1}""") != shapeKey("""{"a": 1.0}"""))
+    assert(shapeKey("""{"a": 1}""") != shapeKey("""{"a": "1"}"""))
+    assert(shapeKey("""{"a": true}""") != shapeKey("""{"a": null}"""))
+    assert(shapeKey("""{"a": {"b": 1}}""") != shapeKey("""{"a": [1]}"""))
+    assert(shapeKey("""[{"a": 1}]""") == shapeKey("""[{"a": 2}, {"a": 3}]"""))
+    assert(shapeKey("""[{"a": 1}]""") != shapeKey("""{"a": 1}"""))
+    // a name holding key syntax does not collide with two fields
+    assert(shapeKey("""{"a\"s\"b": 1}""") != shapeKey("""{"a": "s", "b": 1}"""))
+    // longs and wider integers infer differently
+    assert(shapeKey("""{"a": 9223372036854775807}""") !=
+      shapeKey("""{"a": 9223372036854775808}"""))
+    // not strict JSON: keyed on the whole text
+    assert(shapeKey("""{'a': 1}""") != shapeKey("""{'a': 2}"""))
+    assert(shapeKey("""{"a": 01}""") != shapeKey("""{"a": 1}"""))
+  }
 }

@@ -86,59 +86,82 @@ class StreamIngestSpec extends SparkSpec {
     assert(perEvent.map(_.filtered) == Seq(false, true, false))
   }
 
+  private val mixedEvents = Seq(
+    "/mix-a" -> """{"n": 1}""", // filtered out by a's gate
+    "/mix-a" -> """{"n": 5}""",
+    "/mix-a" -> """{"n": 5}""", // duplicate payload: distinct ids
+    "/mix-b" -> """{"tag": "x"}""", // b has no filter
+    "/mix-b" -> """[{"tag": "a"}, {"tag": "b"}]""", // multi-row → results
+    "/mix-c" -> """[{"v": 2}, {"v": 3}]""", // per-event AGGREGATE transform
+    "/mix-d" -> """{"v": 1}""", // transform's own WHERE drops all rows
+    "/nowhere" -> """{"n": 9}""") // unroutable → dropped
+
+  private def registerMixed(e: graft.engine.WebhookEngine): Unit = {
+    e.register(WebhookConfig("/mix-a", "https://example.com/a",
+      "SELECT n, n + 1 AS next FROM {{payload}}", Some("n >= 2"), None))
+    e.register(WebhookConfig("/mix-b", "https://example.com/b",
+      "SELECT upper(tag) AS tag FROM {{payload}}", None, None))
+    // aggregates over the single-event relation — must take the Spark
+    // path over that one event, not aggregate the whole batch
+    e.register(WebhookConfig("/mix-c", "https://example.com/c",
+      "SELECT count(*) AS rows, sum(v) AS total FROM {{payload}}",
+      None, None))
+    // all rows fail the transform's own WHERE → "{}" delivered
+    e.register(WebhookConfig("/mix-d", "https://example.com/d",
+      "SELECT v FROM {{payload}} WHERE v > 100", None, None))
+  }
+
+  private def auditSnapshot(e: graft.engine.WebhookEngine): Seq[Seq[Any]] =
+    e.adHocQuery(
+      """SELECT r.source_path, t.success, t.response_body,
+        |       t.transformed_payload, t.destination_url
+        |FROM raw_events r LEFT JOIN transformed_events t
+        |  ON t.raw_event_id = r.id
+        |ORDER BY r.source_path, t.transformed_payload, t.response_body"""
+        .stripMargin).toOption.get
+
+  /** The mixed events through the HTTP ingest path. */
+  private def perEventSnapshot(): Seq[Seq[Any]] = {
+    val perEvent = newEngine()
+    registerMixed(perEvent)
+    mixedEvents.foreach { case (p, j) => perEvent.ingest(p, j) }
+    perEvent.drain() // ack is deferred; wait for background processing
+    auditSnapshot(perEvent)
+  }
+
   test("mixed-path micro-batch audits identically to the per-event path") {
     val s = spark
     import s.implicits._
-    val events = Seq(
-      "/mix-a" -> """{"n": 1}""", // filtered out by a's gate
-      "/mix-a" -> """{"n": 5}""",
-      "/mix-a" -> """{"n": 5}""", // duplicate payload: distinct ids
-      "/mix-b" -> """{"tag": "x"}""", // b has no filter
-      "/mix-b" -> """[{"tag": "a"}, {"tag": "b"}]""", // multi-row → results
-      "/mix-c" -> """[{"v": 2}, {"v": 3}]""", // per-event AGGREGATE transform
-      "/mix-d" -> """{"v": 1}""", // transform's own WHERE drops all rows
-      "/nowhere" -> """{"n": 9}""") // unroutable → dropped
-    def registerBoth(e: graft.engine.WebhookEngine): Unit = {
-      e.register(WebhookConfig("/mix-a", "https://example.com/a",
-        "SELECT n, n + 1 AS next FROM {{payload}}", Some("n >= 2"), None))
-      e.register(WebhookConfig("/mix-b", "https://example.com/b",
-        "SELECT upper(tag) AS tag FROM {{payload}}", None, None))
-      // aggregates over the single-event relation — must FALL BACK to the
-      // per-event path, not aggregate the whole batch
-      e.register(WebhookConfig("/mix-c", "https://example.com/c",
-        "SELECT count(*) AS rows, sum(v) AS total FROM {{payload}}",
-        None, None))
-      // all rows fail the transform's own WHERE → "{}" delivered
-      e.register(WebhookConfig("/mix-d", "https://example.com/d",
-        "SELECT v FROM {{payload}} WHERE v > 100", None, None))
-    }
-    def auditSnapshot(e: graft.engine.WebhookEngine): Seq[Seq[Any]] =
-      e.adHocQuery(
-        """SELECT r.source_path, t.success, t.response_body,
-          |       t.transformed_payload, t.destination_url
-          |FROM raw_events r LEFT JOIN transformed_events t
-          |  ON t.raw_event_id = r.id
-          |ORDER BY r.source_path, t.transformed_payload, t.response_body"""
-          .stripMargin).toOption.get
-
     val distributed = newEngine()
-    registerBoth(distributed)
+    registerMixed(distributed)
     new StreamIngest(distributed)
-      .processMicroBatch(events.toDF("source_path", "payload"), "mix|0")
+      .processMicroBatch(mixedEvents.toDF("source_path", "payload"), "mix|0")
 
-    val perEvent = newEngine()
-    registerBoth(perEvent)
-    events.foreach { case (p, j) => perEvent.ingest(p, j) }
-    perEvent.drain() // ack is deferred; wait for background processing
-
-    val (d, p) = (auditSnapshot(distributed), auditSnapshot(perEvent))
-    assert(d == p)
-    // the pin covers the set-oriented transform shapes explicitly:
+    val d = auditSnapshot(distributed)
+    assert(d == perEventSnapshot())
+    // the pin covers the transform shapes explicitly:
     val payloads = d.map(_(3).asInstanceOf[String])
     assert(payloads.exists(j => jsonEq(j,
       """{"results": [{"tag":"A"}, {"tag":"B"}]}"""))) // multi-row shaping
     assert(payloads.exists(j => jsonEq(j, """{"rows":2,"total":5}"""))) // agg
     assert(payloads.contains("{}")) // mix-d: zero transform output rows
+  }
+
+  test("attached MemoryStream audits identically to the per-event path") {
+    // foreachBatch hands over batches on the stream's cloned session,
+    // which processMicroBatch alone does not exercise
+    val s = spark
+    implicit val sqlCtx = s.sqlContext
+    import s.implicits._
+    val e = newEngine()
+    registerMixed(e)
+    val mem = MemoryStream[(String, String)]
+    val query = new StreamIngest(e).attach(mem.toDS(), "graft-ingest-mixed")
+    try {
+      mem.addData(mixedEvents: _*)
+      query.processAllAvailable()
+    } finally query.stop()
+    assert(auditSnapshot(e) == perEventSnapshot())
   }
 
   test("row-wise transforms run O(1) Spark jobs per (webhook, batch)") {
@@ -161,14 +184,18 @@ class StreamIngestSpec extends SparkSpec {
         ingest.processMicroBatch(
           (1 to n).map(i => "/setwise" -> s"""{"v": $i}""")
             .toDF("source_path", "payload"), key)
-        Thread.sleep(1500) // listener bus is async; let it flush
+        org.apache.spark.ListenerBusDrain(s.sparkContext)
         counter.get()
       } finally s.sparkContext.removeSparkListener(listener)
     }
+    // the webhook's first batch also infers its payload shape's schema,
+    // once per shape; count batches after that
+    jobsFor(1, "jobs|warm")
     val small = jobsFor(3, "jobs|small")
     val large = jobsFor(24, "jobs|large")
-    // per-event transforms would add ~2 jobs per extra event; the
-    // set-oriented channel's job count is independent of batch size
+    // a per-event Spark query would add jobs per extra event; compiled
+    // per-event transforms launch none, so the count is independent of
+    // batch size
     assert(large == small,
       s"expected O(1) jobs per batch: $small jobs at n=3, $large at n=24")
     // and the transforms really ran: all 24 delivered with shaped JSON
@@ -176,7 +203,7 @@ class StreamIngestSpec extends SparkSpec {
       """SELECT COUNT(*) FROM transformed_events
         |WHERE success AND transformed_payload LIKE '%dbl%'""".stripMargin)
       .toOption.get
-    assert(delivered == Seq(Seq(27L)))
+    assert(delivered == Seq(Seq(28L)))
   }
 
   test("webhook groups process concurrently: wall ≈ max(group), not Σ") {
