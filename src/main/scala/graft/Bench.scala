@@ -155,21 +155,25 @@ object Bench {
       })
 
     /** (wall sec, executor-task sec) for one full noop execution; the
-      * post-run pause is OUTSIDE the timed region and only lets the
-      * async listener bus drain so the task split lands on this run.
+      * listener-bus drain after it is OUTSIDE the timed region and makes
+      * the task split land on this run (a failed run's stages too, so
+      * they are not charged to the next one).
       */
     def run(name: String): (Double, Double) = {
       val m0 = taskMs.get
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return (-1.0, -1.0)
-      }
+      val ok =
+        try {
+          SparkEntry.queries(name)(spark, sfDir)
+            .write.mode("overwrite").format("noop").save()
+          true
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(120)
-      (wall, (taskMs.get - m0) / 1e3)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      if (ok) (wall, (taskMs.get - m0) / 1e3) else (-1.0, -1.0)
     }
 
     // Warm-up: run EVERY query once untimed so per-plan JIT + codegen +
@@ -214,7 +218,12 @@ object Bench {
     // effective session shape, echoed so the scaling leg's artifact
     // can prove SPARK_GRAFT_CPUS was honored (VERDICT r16 ask #2)
     val master = spark.sparkContext.master
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // a number when it is one; otherwise (e.g. `*`) a JSON string
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") match {
+      case n if n.nonEmpty && n.forall(_.isDigit) => n
+      case other =>
+        new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(other)
+    }
     val shape =
       s""","master":"$master","cpus":$cpus,"task_sec":$taskQs"""
     println(

@@ -4,6 +4,8 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
+import scala.util.control.NonFatal
+
 /** HTTP delivery sink (reference P9, src/app.py:1179-1213): POSTs the
   * transformed JSON to the webhook's destination; 30 s timeout; 2xx =
   * success. Destinations on example.com / localhost are short-circuited
@@ -26,7 +28,7 @@ object Delivery {
 
   def isSimulated(destinationUrl: String): Boolean = {
     val host = try Option(URI.create(destinationUrl).getHost).getOrElse("")
-    catch { case _: Throwable => "" }
+    catch { case NonFatal(_) => "" }
     host.endsWith("example.com") || host == "localhost" || host == "127.0.0.1"
   }
 
@@ -50,7 +52,7 @@ object Delivery {
         Result(success = false, None, s"Delivery timeout: ${e.getMessage}")
       case e: java.net.ConnectException =>
         Result(success = false, None, s"Connection error: ${e.getMessage}")
-      case e: Throwable =>
+      case NonFatal(e) =>
         Result(success = false, None, s"Delivery error: ${e.getMessage}")
     }
 }

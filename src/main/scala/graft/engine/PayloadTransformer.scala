@@ -8,10 +8,14 @@ import scala.util.control.NonFatal
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BasePredicate, Predicate, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.trees.TreePattern.{CURRENT_LIKE, PLAN_EXPRESSION}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.expressions.{BasePredicate, Expression,
+  GenericInternalRow, JoinedRow, Predicate, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sample, View}
+import org.apache.spark.sql.catalyst.trees.TreePattern.{CURRENT_LIKE, LIMIT,
+  OFFSET, PLAN_EXPRESSION, WINDOW_GROUP_LIMIT}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -23,12 +27,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *    Project / Filter nodes over the payload, with deterministic,
   *    subquery-free expressions that do not read the clock, is compiled
   *    once per (webhook, payload schema, array-or-object, query text,
-  *    UDF-registry generation) into a predicate plus an `UnsafeProjection`
-  *    of `to_json(struct(cols))`, and evaluated on the driver over rows
+  *    UDF-registry generation, reference-table generation) into
+  *    predicates plus `UnsafeProjection`s ending in
+  *    `to_json(struct(cols))`, and evaluated on the driver over rows
   *    parsed by a `from_json` projection compiled once per schema: no
-  *    Catalyst planning, no temp view, no Spark job per event;
-  *  - Spark: everything else (joins, aggregates, limits, sorts, windows,
-  *    generators) and any compiled evaluation that throws runs as SQL
+  *    Catalyst planning, no temp view, no Spark job per event. An
+  *    inner or payload-preserving outer equi-join from those rows to a
+  *    side that reads only registered reference tables compiles too:
+  *    the reference side runs once at compile time and is indexed by
+  *    its join keys in a driver-side hash map;
+  *  - Spark: everything else (other joins, aggregates and limits over
+  *    the payload, sorts, windows, generators) and any compiled
+  *    evaluation that throws runs as SQL
   *    over the parsed rows as a local relation, so every "Error: …"
   *    outcome is the Spark path's own. The filter is `SELECT 1 … WHERE`
   *    with `LIMIT 1`, and rows are shaped with `to_json(struct(...))`;
@@ -40,7 +50,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * steady-state events skip schema inference; both caches are bounded
   * LRUs.
   */
-final class PayloadTransformer(spark: SparkSession) {
+final class PayloadTransformer(spark: SparkSession,
+    isReferenceTable: String => Boolean = _ => false) {
   import PayloadTransformer._
 
   private val shapes = new Lru[String, Shape](MaxShapes)
@@ -101,7 +112,7 @@ final class PayloadTransformer(spark: SparkSession) {
       json: String): Seq[InternalRow] = {
     val n = shape.schema.length
     val out = parser.synchronized {
-      parser(InternalRow(UTF8String.fromString(json))).copy()
+      parser(InternalRow(UTF8String.fromString(json))).head.copy()
     }
     val rows =
       if (shape.isArray) {
@@ -124,8 +135,10 @@ final class PayloadTransformer(spark: SparkSession) {
 
   private def compiled(webhookId: String, p: Payload, text: String,
       filter: Boolean): Option[Stages] = {
+    // the generations are read before compiling, so a plan built from
+    // content replaced meanwhile keys on the generation before the swap
     val key = PlanKey(webhookId, p.shape.schema, p.shape.isArray, text,
-      filter, UdfRegistry.generation)
+      filter, UdfRegistry.generation, ReferenceTables.generation)
     plans.getOrElseUpdate(key, compile(key))
   }
 
@@ -156,10 +169,11 @@ final class PayloadTransformer(spark: SparkSession) {
   }
 
   /** Driver-side stages of `df` when its optimized plan is Project /
-    * Filter nodes directly over `leaf`, with deterministic expressions,
-    * and its analyzed plan reads only `leaf`, holds no subquery and no
-    * current-time expression (the optimizer folds `now()` into a literal
-    * that a cached plan would keep).
+    * Filter nodes and reference-table joins (see [[lookup]]) over
+    * `leaf`, with deterministic expressions, and its analyzed plan reads
+    * only `leaf` and registered reference tables, holds no subquery and
+    * no current-time expression (the optimizer folds `now()` into a
+    * literal that a cached plan would keep).
     */
   private def compileRowWise(df: DataFrame,
       leaf: RDD[InternalRow]): Option[Stages] = {
@@ -167,21 +181,69 @@ final class PayloadTransformer(spark: SparkSession) {
       case r: LogicalRDD => r.rdd eq leaf
       case _ => false
     }
+    def readsOnlyLeafAndReferences(p: LogicalPlan): Boolean = p match {
+      case v: View if isReferenceTable(v.desc.identifier.table) => true
+      case l if l.children.isEmpty => isLeaf(l)
+      case _ => p.children.forall(readsOnlyLeafAndReferences)
+    }
     def stages(p: LogicalPlan): Option[List[Stage]] = p match {
       case l if isLeaf(l) => Some(Nil)
       case Project(list, child) if list.forall(_.deterministic) =>
-        stages(child).map(Right(UnsafeProjection.create(list, child.output)) :: _)
+        stages(child).map(new Select(UnsafeProjection.create(list, child.output)) :: _)
       case Filter(cond, child) if cond.deterministic =>
-        stages(child).map(Left(Predicate.create(cond, child.output)) :: _)
+        stages(child).map(new Where(Predicate.create(cond, child.output)) :: _)
+      case ExtractEquiJoinKeys(joinType, leftKeys, rightKeys, residual, _,
+          left, right, _) =>
+        val probeLeft = left.exists(isLeaf)
+        val outer = joinType match {
+          case Inner => Some(false)
+          case LeftOuter if probeLeft => Some(true)
+          case RightOuter if !probeLeft => Some(true)
+          case _ => None
+        }
+        val (probe, probeKeys, build, buildKeys) =
+          if (probeLeft) (left, leftKeys, right, rightKeys)
+          else (right, rightKeys, left, leftKeys)
+        for {
+          o <- outer
+          if !build.exists(isLeaf) && isReferenceSide(build)
+          s <- stages(probe)
+        } yield lookup(probe, probeKeys, build, buildKeys,
+          residual.map(Predicate.create(_, left.output ++ right.output)),
+          probeLeft, o) :: s
       case _ => None
     }
     val qe = df.queryExecution
-    if (!qe.analyzed.collectLeaves().forall(isLeaf) ||
+    if (!readsOnlyLeafAndReferences(qe.analyzed) ||
       qe.analyzed.containsAnyPattern(CURRENT_LIKE, PLAN_EXPRESSION)) None
-    else stages(qe.optimizedPlan).map { s =>
-      s.foreach(_.fold(_.initialize(0), _.initialize(0)))
-      new Stages(s.reverse)
-    }
+    else stages(qe.optimizedPlan).map(s => new Stages(s.reverse))
+  }
+
+  /** A join side that can be computed once: deterministic, with no row
+    * cap or sample (which rows those keep is not fixed by the data).
+    */
+  private def isReferenceSide(build: LogicalPlan): Boolean =
+    build.deterministic &&
+      !build.containsAnyPattern(LIMIT, OFFSET, WINDOW_GROUP_LIMIT) &&
+      !build.exists(_.isInstanceOf[Sample])
+
+  /** Runs `build` once and indexes its rows by `buildKeys`; probe rows
+    * look up `probeKeys`. The caller has checked that `build` reads only
+    * reference tables, so its rows change only with
+    * [[ReferenceTables.generation]], which the plan's key holds.
+    */
+  private def lookup(probe: LogicalPlan, probeKeys: Seq[Expression],
+      build: LogicalPlan, buildKeys: Seq[Expression],
+      residual: Option[BasePredicate], probeLeft: Boolean,
+      outer: Boolean): Lookup = {
+    val qe = spark.sessionState.executePlan(build)
+    val rows = SQLExecution.withNewExecutionId(qe)(qe.executedPlan.executeCollect())
+    val buildKey = UnsafeProjection.create(buildKeys, build.output)
+    val table = rows.toSeq.map(r => buildKey(r).copy() -> r)
+      .filterNot(_._1.anyNull) // as a hash join: a null key matches nothing
+      .groupMap(_._1)(_._2)
+    new Lookup(UnsafeProjection.create(probeKeys, probe.output), table,
+      residual, probeLeft, outer, build.output.length)
   }
 
   // ---- Spark path ----
@@ -351,37 +413,66 @@ object PayloadTransformer {
       rows: Option[Seq[InternalRow]])
 
   private final case class PlanKey(webhookId: String, schema: StructType,
-      isArray: Boolean, text: String, filter: Boolean, udfGeneration: Long)
+      isArray: Boolean, text: String, filter: Boolean, udfGeneration: Long,
+      referenceGeneration: Long)
 
-  /** A driver-side stage: a predicate (Left) or a projection (Right). */
-  private type Stage = Either[BasePredicate, UnsafeProjection]
+  /** A driver-side stage: the output rows of its input rows. */
+  private sealed trait Stage {
+    def apply(rows: Seq[InternalRow]): Seq[InternalRow]
+  }
 
-  /** A compiled row-wise plan. Its projections reuse their output rows,
-    * so callers hold the instance's lock while evaluating.
+  private final class Where(p: BasePredicate) extends Stage {
+    p.initialize(0)
+    def apply(rows: Seq[InternalRow]): Seq[InternalRow] = rows.filter(p.eval)
+  }
+
+  /** The projection reuses one output row, so it copies its outputs when
+    * it has several.
     */
-  private final class Stages(stages: List[Stage]) {
-    /** The output row for `in`, or null when a predicate drops it; valid
-      * until the next call.
-      */
-    def apply(in: InternalRow): InternalRow = {
-      var row = in
-      var rest = stages
-      while (row != null && rest.nonEmpty) {
-        row = rest.head match {
-          case Left(p) => if (p.eval(row)) row else null
-          case Right(proj) => proj(row)
-        }
-        rest = rest.tail
-      }
-      row
+  private final class Select(proj: UnsafeProjection) extends Stage {
+    proj.initialize(0)
+    def apply(rows: Seq[InternalRow]): Seq[InternalRow] =
+      if (rows.lengthCompare(1) > 0) rows.map(proj(_).copy())
+      else rows.map(proj(_))
+  }
+
+  /** An equi-join of probe rows to a build side held as rows by join
+    * key; an outer lookup pads a probe row with no match with nulls.
+    * Matching follows Spark's hash join: a null probe key matches
+    * nothing, and the residual condition filters matches before padding.
+    */
+  private final class Lookup(probeKey: UnsafeProjection,
+      table: Map[UnsafeRow, Seq[InternalRow]], residual: Option[BasePredicate],
+      probeLeft: Boolean, outer: Boolean, buildWidth: Int) extends Stage {
+    probeKey.initialize(0)
+    residual.foreach(_.initialize(0))
+    private val nulls = new GenericInternalRow(buildWidth)
+
+    def apply(rows: Seq[InternalRow]): Seq[InternalRow] = rows.flatMap { row =>
+      val key = probeKey(row)
+      val matches = (if (key.anyNull) Nil else table.getOrElse(key, Nil))
+        .map(join(row, _)).filter(j => residual.forall(_.eval(j)))
+      if (matches.isEmpty && outer) Seq(join(row, nulls)) else matches
     }
 
-    def keep(rows: Seq[InternalRow]): Boolean =
-      synchronized(rows.exists(apply(_) != null))
+    private def join(probe: InternalRow, build: InternalRow): InternalRow =
+      if (probeLeft) new JoinedRow(probe, build) else new JoinedRow(build, probe)
+  }
 
-    /** The first output column (the row's JSON) of every kept row. */
+  /** A compiled plan. Its projections reuse their output rows, so
+    * callers hold the instance's lock while evaluating.
+    */
+  private final class Stages(stages: List[Stage]) {
+    /** The output rows for `in`; valid until the next call. */
+    def apply(in: InternalRow): Seq[InternalRow] =
+      stages.foldLeft(Seq(in))((rows, s) => s(rows))
+
+    def keep(rows: Seq[InternalRow]): Boolean =
+      synchronized(rows.exists(apply(_).nonEmpty))
+
+    /** The first output column (the row's JSON) of every output row. */
     def json(rows: Seq[InternalRow]): Seq[String] = synchronized {
-      rows.flatMap(r => Option(apply(r)).map(_.getUTF8String(0).toString))
+      rows.flatMap(r => apply(r).map(_.getUTF8String(0).toString))
     }
   }
 

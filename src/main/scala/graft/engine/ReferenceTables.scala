@@ -13,15 +13,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Spark-first: the parsed upload is registered as a temp view backed by
   * a cached DataFrame. Reference tables are dimension-sized by contract
-  * (they arrive in one HTTP upload), so caching them in memory makes
-  * every enrichment join a broadcast-hash join with zero scan cost —
-  * on a cluster these would additionally be persisted parquet for
-  * executor-local rehydration.
+  * (they arrive in one HTTP upload). An equi-join from the payload to
+  * them compiles into a driver-side hash lookup built once per
+  * [[ReferenceTables.generation]] (see [[PayloadTransformer]]); on the
+  * Spark path, the in-memory cache makes the join a broadcast-hash join
+  * with zero scan cost — on a cluster these would additionally be
+  * persisted parquet for executor-local rehydration.
   */
 final class ReferenceTables(spark: SparkSession,
     store: Option[JsonStore] = None, contentDir: Option[String] = None) {
 
   private val meta = new TrieMap[String, RefTableMeta]() // qualified → meta
+  private val content = new TrieMap[String, DataFrame]() // qualified → cached
 
   // rehydrate persisted tables: metadata from the JSON snapshot,
   // content from the per-table parquet written at upload time
@@ -38,10 +41,12 @@ final class ReferenceTables(spark: SparkSession,
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(path))) {
         val df = spark.read.parquet(path).cache()
         df.createOrReplaceTempView(m.qualifiedName)
+        content.put(m.qualifiedName, df)
         meta.put(m.qualifiedName, m)
       }
     }
   })
+  if (meta.nonEmpty) ReferenceTables.generations.incrementAndGet()
 
   private def persist(): Unit = store.foreach { s =>
     s.save(meta.values.toSeq.sortBy(_.qualifiedName).map { m =>
@@ -87,9 +92,14 @@ final class ReferenceTables(spark: SparkSession,
   def upload(webhookId: String, tableName: String, description: String,
       df: DataFrame): RefTableMeta = synchronized {
     val qname = qualifiedName(webhookId, tableName)
+    // release the replaced content first: an identical re-upload would
+    // otherwise share its cache entry and lose it with the old frame
+    content.remove(qname).foreach(_.unpersist())
     val cached = df.cache()
     cached.count() // materialize now: upload-time errors surface at upload
     cached.createOrReplaceTempView(qname)
+    content.put(qname, cached)
+    ReferenceTables.generations.incrementAndGet()
     contentDir.foreach(dir => cached.write.mode("overwrite")
       .parquet(s"$dir/$qname"))
     val now = Instant.now()
@@ -110,13 +120,31 @@ final class ReferenceTables(spark: SparkSession,
 
   def table(qname: String): DataFrame = spark.table(qname)
 
+  /** Whether `name` is a registered table's view (case-insensitive, as
+    * the session catalog resolves it).
+    */
+  def isRegistered(name: String): Boolean =
+    meta.keys.exists(_.equalsIgnoreCase(name))
+
   def delete(webhookId: String): Int = synchronized {
     val doomed = forWebhook(webhookId)
     doomed.foreach { m =>
       spark.catalog.dropTempView(m.qualifiedName)
+      content.remove(m.qualifiedName).foreach(_.unpersist())
       meta.remove(m.qualifiedName)
     }
+    if (doomed.nonEmpty) ReferenceTables.generations.incrementAndGet()
     persist()
     doomed.size
   }
+}
+
+object ReferenceTables {
+  private val generations = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Bumped after a table's view is replaced, dropped or rehydrated in
+    * this JVM; plans that read reference-table content key on it, so an
+    * upload takes effect on the next event.
+    */
+  def generation: Long = generations.get()
 }

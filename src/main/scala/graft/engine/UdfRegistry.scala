@@ -5,6 +5,7 @@ import java.time.Instant
 import java.util.UUID
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.api.java.{UDF1, UDF2, UDF3}
@@ -60,7 +61,7 @@ final class UdfRegistry(spark: SparkSession,
           Instant.ofEpochMilli(
             n.path("updated_at").asLong(0L))))
         sparkRegistered.add(qname)
-      } catch { case _: Throwable => } // unloadable source: skip, keep rest
+      } catch { case NonFatal(_) => } // unloadable source: skip, keep rest
     }
   })
 
@@ -111,7 +112,7 @@ final class UdfRegistry(spark: SparkSession,
           Right((params, ret))
       }
     } catch {
-      case e: Throwable => Left(s"Invalid function code: ${e.getMessage}")
+      case NonFatal(e) => Left(s"Invalid function code: ${e.getMessage}")
     }
 
   /** Compile + register. Returns the SQL-callable qualified name. */
@@ -175,7 +176,7 @@ final class UdfRegistry(spark: SparkSession,
   private def compile(code: String, fnName: String): Either[String, AnyRef] =
     try Right(UdfCompiler.compile(code, fnName))
     catch {
-      case e: Throwable => Left(s"Invalid function code: ${e.getMessage}")
+      case NonFatal(e) => Left(s"Invalid function code: ${e.getMessage}")
     }
 
   /** Register the serializable source-carrying wrapper with Spark. The

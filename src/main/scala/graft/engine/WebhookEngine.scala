@@ -33,7 +33,7 @@ final class WebhookEngine(
     Some(JsonStore(workDir, "reference_tables.json")),
     Some(s"$workDir/reference_tables"))
   val audit = new AuditLog(spark, workDir)
-  val transformer = new PayloadTransformer(spark)
+  val transformer = new PayloadTransformer(spark, refTables.isRegistered)
 
   // dialect shims must exist before the FIRST transform runs (webhook
   // transform queries may use json_extract), not first ad-hoc query
@@ -124,11 +124,13 @@ final class WebhookEngine(
     }
   }
 
-  /** Drain the in-flight queue and stop the background worker. */
+  /** Drain the in-flight queue, stop the background worker and flush the
+    * audit buffers, so every acked event is on disk.
+    */
   def close(): Unit = {
     processPool.shutdown()
     processPool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-    ()
+    audit.flush()
   }
 
   // ---- the pipeline driver (P11) ----

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.time.Instant
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
@@ -49,10 +50,15 @@ final class GatewayServer(val engine: WebhookEngine, port: Int = 0,
   def stop(): Unit = {
     server.stop(0)
     pool.shutdown() // non-daemon threads would otherwise pin the JVM
-    // the ingest worker is a daemon thread: without this flush, events
+    // handlers still running may yet ack an event: let them finish, so
+    // the drain below covers every ack sent
+    pool.awaitTermination(30, java.util.concurrent.TimeUnit.SECONDS)
+    // the ingest worker is a daemon thread: without this drain, events
     // acked "accepted" but still queued would be dropped at JVM exit
-    // with no transformed_events audit row
+    // with no transformed_events audit row; the flush then writes the
+    // buffered audit rows, so a restart on the same workDir sees them
     engine.drain()
+    engine.audit.flush()
   }
 
   // ---- routing ----
@@ -60,7 +66,7 @@ final class GatewayServer(val engine: WebhookEngine, port: Int = 0,
   private def handle(ex: HttpExchange): Unit =
     try route(ex)
     catch {
-      case e: Throwable => send(ex, 500, obj("detail" -> e.getMessage))
+      case NonFatal(e) => send(ex, 500, obj("detail" -> e.getMessage))
     } finally ex.close()
 
   private def route(ex: HttpExchange): Unit = {

@@ -233,14 +233,10 @@ class EventProcessingSpec extends SparkSpec {
     assert(t.compiledTransform("w-par", q, payloads(1)).isDefined)
   }
 
-  test("row-wise events launch no Spark job after the first compile") {
-    val e = newEngine()
-    val w = e.register(WebhookConfig("/no-jobs", "https://example.com/sink",
-      "SELECT id, nested.v * 2 AS dbl FROM {{payload}}",
-      Some("nested.v > 0"), None)).toOption.get
-    def payload(i: Int) = s"""{"id": "evt-$i", "nested": {"v": ${i % 7}}}"""
-    e.process(w, e.audit.logRaw(w.sourcePath, payload(1)).id, payload(1))
-    val raws = (1 to 100).map(i => e.audit.logRaw(w.sourcePath, payload(i)))
+  /** The Spark jobs and executed queries `body` launches (the Spark path
+    * plans a query per step even where its local relation needs no job).
+    */
+  private def countJobs[T](body: => T): (Int, Int, T) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -248,8 +244,6 @@ class EventProcessingSpec extends SparkSpec {
         jobs.incrementAndGet(); ()
       }
     }
-    // executed queries: the Spark path would plan one per step even
-    // where its local relation needs no job
     val queries = new java.util.concurrent.atomic.AtomicInteger()
     val queryListener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String,
@@ -265,17 +259,133 @@ class EventProcessingSpec extends SparkSpec {
     org.apache.spark.ListenerBusDrain(sc)
     sc.addSparkListener(listener)
     spark.listenerManager.register(queryListener)
-    val results =
-      try raws.map(r => e.process(w, r.id, r.payload))
+    val out =
+      try body
       finally {
         org.apache.spark.ListenerBusDrain(sc)
         sc.removeSparkListener(listener)
         spark.listenerManager.unregister(queryListener)
       }
-    assert(jobs.get() == 0, s"${jobs.get()} jobs for 100 events")
-    assert(queries.get() == 0, s"${queries.get()} queries for 100 events")
+    (jobs.get(), queries.get(), out)
+  }
+
+  test("row-wise events launch no Spark job after the first compile") {
+    val e = newEngine()
+    val w = e.register(WebhookConfig("/no-jobs", "https://example.com/sink",
+      "SELECT id, nested.v * 2 AS dbl FROM {{payload}}",
+      Some("nested.v > 0"), None)).toOption.get
+    def payload(i: Int) = s"""{"id": "evt-$i", "nested": {"v": ${i % 7}}}"""
+    e.process(w, e.audit.logRaw(w.sourcePath, payload(1)).id, payload(1))
+    val raws = (1 to 100).map(i => e.audit.logRaw(w.sourcePath, payload(i)))
+    val (jobs, queries, results) =
+      countJobs(raws.map(r => e.process(w, r.id, r.payload)))
+    assert(jobs == 0, s"$jobs jobs for 100 events")
+    assert(queries == 0, s"$queries queries for 100 events")
     assert(results.count(_.filtered) == 100 / 7) // v = 0 is filtered
     assert(results.filterNot(_.filtered).forall(_.success))
+  }
+
+  // --- reference-table joins ---
+
+  private val usersCsv =
+    "username,full_name,department\njdoe,John Doe,Eng\nasmith,Alice Smith,Sales"
+
+  /** An engine and a webhook whose transform LEFT JOINs its uploaded
+    * `users` table, registered the way clients do: hook, table, query.
+    */
+  private def refJoinHook(): (WebhookEngine, Webhook) = {
+    val e = newEngine()
+    def register(q: String) = e.register(WebhookConfig("/refjoin",
+      "https://example.com/sink", q, None, None)).toOption.get
+    val id = register("SELECT * FROM {{payload}}").id
+    val users = e.refTables.uploadCsv(id, "users", "", usersCsv).qualifiedName
+    (e, register(
+      "SELECT e.id, e.username, u.full_name, u.department FROM {{payload}} e " +
+        s"LEFT JOIN $users u ON e.username = u.username"))
+  }
+
+  private def authEvent(i: Int, user: String) =
+    s"""{"id": "auth-$i", "username": "$user", "ip": "10.0.0.$i"}"""
+
+  test("reference-table join events launch no Spark job after the first compile") {
+    val (e, w) = refJoinHook()
+    val users = Seq("jdoe", "asmith", "ghost")
+    e.process(w, e.audit.logRaw(w.sourcePath, authEvent(0, "jdoe")).id,
+      authEvent(0, "jdoe"))
+    val raws = (1 to 100).map(i =>
+      e.audit.logRaw(w.sourcePath, authEvent(i, users(i % 3))))
+    val (jobs, queries, results) =
+      countJobs(raws.map(r => e.process(w, r.id, r.payload)))
+    assert(jobs == 0, s"$jobs jobs for 100 events")
+    assert(queries == 0, s"$queries queries for 100 events")
+    assert(results.forall(_.success))
+    results.zipWithIndex.foreach { case (r, i0) =>
+      val i = i0 + 1
+      val expected = users(i % 3) match {
+        case "jdoe" => s"""{"id":"auth-$i","username":"jdoe","full_name":"John Doe","department":"Eng"}"""
+        case "asmith" => s"""{"id":"auth-$i","username":"asmith","full_name":"Alice Smith","department":"Sales"}"""
+        case u => s"""{"id":"auth-$i","username":"$u"}"""
+      }
+      assert(r.transformedJson.contains(expected))
+    }
+  }
+
+  test("a re-uploaded reference table applies to the next event; a deleted one fails like the Spark path") {
+    val (e, w) = refJoinHook()
+    val payload = authEvent(1, "jdoe")
+    def name() = mapper.readTree(e.transformer.transform(w.id,
+      w.transformQuery, payload)).path("full_name").asText()
+    assert(name() == "John Doe")
+    e.refTables.uploadCsv(w.id, "users", "",
+      "username,full_name,department\njdoe,Jane Doe,Ops")
+    assert(name() == "Jane Doe")
+    assert(e.transformer.compiledTransform(w.id, w.transformQuery, payload)
+      .exists(_.contains("Jane Doe")))
+
+    e.refTables.delete(w.id)
+    val res = e.process(w, e.audit.logRaw(w.sourcePath, payload).id, payload)
+    assert(e.transformer.compiledTransform(w.id, w.transformQuery, payload)
+      .isEmpty)
+    val sparkError = intercept[Exception](
+      e.transformer.sparkTransform(w.id, w.transformQuery, payload))
+    // the message prints the plan, whose payload view name and
+    // expression ids differ per call
+    def stable(s: String) =
+      s.replaceAll("payload_[0-9a-f_]+", "payload").replaceAll("#\\d+", "#")
+    assert(!res.success)
+    assert(res.responseBody.startsWith("Error: [TABLE_OR_VIEW_NOT_FOUND]"))
+    assert(stable(res.responseBody) ==
+      stable(s"Error: ${sparkError.getMessage}"))
+  }
+
+  test("joins to raw_events or webhooks take the Spark path and see new rows") {
+    val e = newEngine()
+    def hook(path: String, q: String) = e.register(WebhookConfig(path,
+      "https://example.com/sink", q, None, None)).toOption.get
+    val toRaw = hook("/join-raw", "SELECT p.k, r.source_path FROM {{payload}} p " +
+      "JOIN raw_events r ON r.id = p.k")
+    val toHooks = hook("/join-hooks", "SELECT p.k, w.source_path FROM {{payload}} p " +
+      "JOIN webhooks w ON w.id = p.k")
+    def out(w: Webhook, k: String) = {
+      val payload = s"""{"k": "$k"}"""
+      assert(e.transformer.compiledTransform(w.id, w.transformQuery, payload)
+        .isEmpty, w.transformQuery)
+      e.process(w, e.audit.logRaw(w.sourcePath, payload).id, payload)
+        .transformedJson
+    }
+    val first = e.audit.logRaw("/first", "{}")
+    e.refreshSqlViews()
+    assert(out(toRaw, first.id).contains(
+      s"""{"k":"${first.id}","source_path":"/first"}"""))
+    assert(out(toHooks, toRaw.id).contains(
+      s"""{"k":"${toRaw.id}","source_path":"/join-raw"}"""))
+    val second = e.audit.logRaw("/second", "{}")
+    val later = hook("/later", "SELECT * FROM {{payload}}")
+    e.refreshSqlViews()
+    assert(out(toRaw, second.id).contains(
+      s"""{"k":"${second.id}","source_path":"/second"}"""))
+    assert(out(toHooks, later.id).contains(
+      s"""{"k":"${later.id}","source_path":"/later"}"""))
   }
 
   test("process: an interrupt from delivery propagates and is not audited") {
@@ -289,5 +399,14 @@ class EventProcessingSpec extends SparkSpec {
       s"SELECT response_body FROM transformed_events WHERE raw_event_id = '${raw.id}'")
       .toOption.get
     assert(rows.isEmpty)
+  }
+
+  test("Delivery.deliver propagates an interrupt instead of reporting it") {
+    // a loopback address outside the simulated hosts, so a real send
+    // starts; the interrupted thread fails its wait for the response
+    Thread.currentThread().interrupt()
+    try intercept[InterruptedException](
+      Delivery.deliver("http://127.0.0.2:9/hook", "{}", "evt-1"))
+    finally Thread.interrupted()
   }
 }

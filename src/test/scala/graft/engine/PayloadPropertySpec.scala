@@ -1,5 +1,7 @@
 package graft.engine
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -223,6 +225,100 @@ class PayloadPropertySpec extends AnyFunSuite {
       }
     }
     assert(compiled * 2 > total, s"only $compiled of $total cases compiled")
+  }
+
+  // ---- compiled reference-table joins ≡ Spark path ----
+
+  /** Rows whose `k` is integral, null or missing and whose `s` is one of
+    * the table's names or missing.
+    */
+  private val joinRowGen: Gen[Map[String, Any]] = for {
+    k <- Gen.frequency(1 -> Gen.const(None), 1 -> Gen.const(Some(null)),
+      6 -> Gen.choose(-1L, 8L).map(Some(_)))
+    s <- Gen.frequency(1 -> Gen.const(None),
+      4 -> Gen.oneOf("one", "two", "deux", "x").map(Some(_)))
+  } yield Map("k" -> k, "s" -> s).collect { case (n, Some(v)) => n -> v }
+
+  private val joinPayloadGen: Gen[String] = Gen.oneOf(
+    joinRowGen.map(toJson),
+    Gen.choose(1, 3).flatMap(k => Gen.listOfN(k, joinRowGen))
+      .map(_.map(toJson).mkString("[", ", ", "]")))
+
+  /** Two tables of one webhook: `ids` (CSV, `int` keys, key 2 twice, one
+    * null key) and `codes` (JSON, `string` keys that read as numbers).
+    */
+  private lazy val refTables = {
+    val ids = engine.refTables.uploadCsv("prop-j", "ids", "",
+      "id,name\n1,one\n2,two\n2,deux\n3,three\n,nokey").qualifiedName
+    val codes = engine.refTables.uploadJson("prop-j", "codes", "",
+      """[{"code": "1", "label": "c-one"}, {"code": "07", "label": "c-seven"},
+        | {"code": "3", "label": "c-three"}]""".stripMargin).qualifiedName
+    (ids, codes)
+  }
+
+  private def joinTransforms = {
+    val (ids, codes) = refTables
+    Seq(
+      s"SELECT p.k, r.name FROM {{payload}} p JOIN $ids r ON p.k = r.id",
+      s"SELECT p.k, p.s, r.name FROM {{payload}} p LEFT JOIN $ids r ON p.k = r.id",
+      s"SELECT p.k, r.name FROM {{payload}} p LEFT JOIN $ids r " +
+        "ON p.k = r.id AND r.name <> p.s",
+      s"SELECT p.k, r.label FROM {{payload}} p LEFT JOIN $codes r ON p.k = r.code",
+      s"SELECT r.name, p.k FROM $ids r RIGHT JOIN {{payload}} p ON r.id = p.k",
+      s"SELECT r.id, p.s FROM $ids r JOIN {{payload}} p ON r.name = p.s",
+      s"SELECT p.k, r.name, c.label FROM {{payload}} p " +
+        s"LEFT JOIN $ids r ON p.k = r.id LEFT JOIN $codes c ON r.id = c.code",
+      s"SELECT p.k FROM {{payload}} p LEFT JOIN $ids r ON p.k = r.id " +
+        "WHERE r.name IS NULL")
+  }
+
+  /** Output with the rows of a `{"results": [...]}` sorted: without an
+    * ORDER BY, the Spark path's join order follows its physical plan.
+    */
+  private def rowsUnordered(json: String): String = {
+    val tree = mapper.readTree(json)
+    if (!tree.has("results")) json
+    else tree.get("results").elements().asScala.map(_.toString).toSeq.sorted
+      .mkString("[", ",", "]")
+  }
+
+  test("compiled reference-table joins return the Spark path's output") {
+    val t = engine.transformer
+    val compiledCount = scala.collection.mutable.Map[String, Int]()
+    var fanOut = 0
+    forAll(joinPayloadGen, cases = 30) { json =>
+      joinTransforms.foreach { q =>
+        val fast = attempt(t.compiledTransform("prop-j", q, json))
+        attempt(t.sparkTransform("prop-j", q, json)) match {
+          case Right(out) =>
+            assert(fast.map(_.map(rowsUnordered)) == Right(Some(rowsUnordered(out))),
+              s"$q over $json")
+            compiledCount(q) = compiledCount.getOrElse(q, 0) + 1
+            if (out.startsWith("{\"results\"")) fanOut += 1
+          case Left(_) => assert(fast.forall(_.isEmpty), s"$q over $json")
+        }
+      }
+    }
+    joinTransforms.foreach(q => assert(compiledCount.contains(q), s"never compiled: $q"))
+    assert(fanOut > 0, "no payload fanned out to several rows")
+  }
+
+  test("joins that do not preserve the payload side take the Spark path") {
+    val t = engine.transformer
+    val (ids, _) = refTables
+    val json = """{"k": 2, "s": "two"}"""
+    Seq(
+      s"SELECT p.k, r.name FROM {{payload}} p FULL JOIN $ids r ON p.k = r.id",
+      s"SELECT p.k, r.name FROM $ids r LEFT JOIN {{payload}} p ON p.k = r.id",
+      s"SELECT p.k, r.name FROM {{payload}} p JOIN $ids r ON p.k < r.id",
+      s"SELECT p.k, r.name FROM {{payload}} p " +
+        s"JOIN (SELECT * FROM $ids LIMIT 2) r ON p.k = r.id"
+    ).foreach { q =>
+      assert(t.compiledTransform("prop-j", q, json).isEmpty, q)
+      assert(t.transform("prop-j", q, json) == t.sparkTransform("prop-j", q, json), q)
+    }
+    // the control compiles
+    assert(t.compiledTransform("prop-j", joinTransforms.head, json).isDefined)
   }
 
   /** The transform as a transformer with no cache runs it: schema

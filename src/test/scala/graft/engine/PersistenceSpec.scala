@@ -53,6 +53,18 @@ class PersistenceSpec extends SparkSpec {
     assert(e2.ingest("/durable", """{"keep": true, "n": 6}""").isRight)
   }
 
+  test("close() flushes the audit buffers: a restart sees every acked event") {
+    val workDir = Files.createTempDirectory("graft-persist-close").toString
+    val e1 = new WebhookEngine(spark, workDir)
+    e1.register(WebhookConfig("/closed", "https://example.com/x",
+      "SELECT * FROM {{payload}}", None, None))
+    (1 to 3).foreach(i => assert(e1.ingest("/closed", s"""{"n": $i}""").isRight))
+    e1.close()
+    val e2 = new WebhookEngine(spark, workDir)
+    assert(e2.audit.rawEvents().count() == 3)
+    assert(e2.audit.transformedEvents().count() == 3)
+  }
+
   test("hard delete persists across restart") {
     val workDir = Files.createTempDirectory("graft-persist2").toString
     val e1 = new WebhookEngine(spark, workDir)

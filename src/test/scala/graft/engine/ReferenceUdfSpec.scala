@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.Row
+import org.apache.spark.storage.StorageLevel
 
 /** Ports of tests/test_reference_and_udf.py: reference-table CTAS
   * semantics, re-upload replacement, enrichment joins, and the UDF
@@ -35,6 +36,22 @@ class ReferenceUdfSpec extends SparkSpec {
     assert(rows == Seq(Row(9, "Only Row")))
     assert(e.refTables.forWebhook("wid-2").size == 1)
     assert(e.refTables.forWebhook("wid-2").head.description == "v2")
+  }
+
+  test("re-uploads and delete release the replaced table's cache") {
+    val e = newEngine()
+    val s = spark
+    import s.implicits._
+    val uploads = (0 to 5).map { i => // one upload, five re-uploads
+      val df = (0 to i).map(n => (n, s"v$i")).toDF("id", "v")
+      e.refTables.upload("wid-cache", "t", "", df)
+      df
+    }
+    def cached = uploads.filter(_.storageLevel != StorageLevel.NONE)
+    assert(cached == Seq(uploads.last))
+    assert(spark.table("ref_wid_cache_t").count() == 6)
+    e.refTables.delete("wid-cache")
+    assert(cached.isEmpty)
   }
 
   test("table name sanitization (src/app.py:605-607)") {

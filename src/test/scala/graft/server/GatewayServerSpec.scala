@@ -218,6 +218,22 @@ class GatewayServerSpec extends SparkSpec {
     assert(audited == Seq(Seq(3L)))
   }
 
+  test("stop() flushes the audit buffers: a restart sees every acked event") {
+    val workDir = java.nio.file.Files.createTempDirectory("graft-stop").toString
+    val engine = new graft.engine.WebhookEngine(spark, workDir)
+    engine.register(WebhookConfig("/flushhook", "https://example.com/x",
+      "SELECT * FROM {{payload}}", None, None))
+    val server = new GatewayServer(engine, 0, "test_key").start()
+    val base = s"http://127.0.0.1:${server.boundPort}"
+    (1 to 3).foreach(i => assert(
+      req(s"$base/flushhook", "POST", s"""{"n": $i}""", key = None)
+        .statusCode() == 200))
+    server.stop()
+    val fresh = new graft.engine.WebhookEngine(spark, workDir)
+    assert(fresh.audit.rawEvents().count() == 3)
+    assert(fresh.audit.transformedEvents().count() == 3)
+  }
+
   test("echo webhook (src/app.py:1674-1703)") {
     withServer { (_, base) =>
       val r = req(s"$base/echo-webhook", "POST", """{"ping": true}""")
