@@ -225,7 +225,9 @@ object Bench {
         new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(other)
     }
     val shape =
-      s""","master":"$master","cpus":$cpus,"task_sec":$taskQs"""
+      s""","master":"$master","cpus":$cpus""" +
+        s""","default_parallelism":${spark.sparkContext.defaultParallelism}""" +
+        s""","task_sec":$taskQs"""
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$layoutInfo$control$shape}""")
     spark.stop()

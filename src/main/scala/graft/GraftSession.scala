@@ -11,7 +11,6 @@ object GraftSession {
       : SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       // native-counter substitution for user SQL (graft.plans); the
       // token rule stays conf-gated off inside the rule itself
@@ -19,6 +18,9 @@ object GraftSession {
     Tables.sessionConf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // `cpus` when it is a number; otherwise (e.g. `*`) the master's cores
+    spark.conf.set("spark.sql.shuffle.partitions",
+      cpus.toIntOption.getOrElse(spark.sparkContext.defaultParallelism).toLong)
     spark
   }
 

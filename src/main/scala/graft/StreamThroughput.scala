@@ -6,22 +6,22 @@ import graft.engine.{Delivery, WebhookConfig, WebhookEngine}
 import graft.streaming.StreamIngest
 
 /** Dev evidence harness: measured throughput of the micro-batch
-  * ingestion path (events/s through route → filter gate → transform →
-  * delivery handoff → distributed audit), with a no-op delivery so the
-  * number isolates ENGINE cost from destination latency.
+  * ingestion path (events/s through route → raw audit → filter gate →
+  * transform → delivery handoff → audit flush), with a no-op delivery
+  * so the number isolates ENGINE cost from destination latency.
   *
   * Two webhook shapes bound the contract:
-  *  - `proj`: a projection transform — eligible for the set-oriented
-  *    channel (one compiled plan per (webhook, batch); the 100 TB path);
-  *  - `agg`: a LIMIT transform — ineligible by contract (arbitrary SQL
-  *    may aggregate over `{{payload}}`), so it pays the per-event
-  *    fallback. The printed ratio is the measured value of the r5
-  *    set-oriented channel.
+  *  - `proj`: a projection transform, compiled once per payload shape
+  *    and evaluated on the driver with no Spark job (printed as
+  *    `set-oriented`, the label earlier rounds' output used);
+  *  - `agg`: a LIMIT transform, which runs per event on the Spark path
+  *    (printed as `per-event-fallback`). The printed ratio is the
+  *    compiled path's advantage over it.
   *
-  * A third shape, `latency`, reruns the set-oriented channel against a
-  * destination with simulated per-call latency (default 50 ms) — the
-  * regime real HTTP delivery lives in — to measure the bounded-parallel
-  * delivery pool rather than raw engine cost.
+  * A third shape, `latency`, reruns `proj` against a destination with
+  * simulated per-call latency (default 50 ms) — the regime real HTTP
+  * delivery lives in — to measure the bounded-parallel delivery pool
+  * rather than raw engine cost.
   *
   * Usage: sbt "runMain graft.StreamThroughput [nProj] [nAgg] [latencyMs]".
   *

@@ -34,11 +34,14 @@ final class AuditLog(spark: SparkSession, workDir: String,
     i.getEpochSecond * 1000000L + i.getNano / 1000L
   }
 
+  /** Buffers one raw-event row, stamped now unless `tsMicros` is given
+    * (a micro-batch stamps all its rows with the batch start).
+    */
   def logRaw(sourcePath: String, payloadJson: String,
-      id: Option[String] = None): RawEvent =
+      id: Option[String] = None, tsMicros: Option[Long] = None): RawEvent =
     synchronized {
-      val e = RawEvent(id.getOrElse(UUID.randomUUID().toString), nowMicros(),
-        sourcePath, payloadJson)
+      val e = RawEvent(id.getOrElse(UUID.randomUUID().toString),
+        tsMicros.getOrElse(nowMicros()), sourcePath, payloadJson)
       rawBuf += e
       if (rawBuf.size >= flushEvery) flushRaw()
       e
@@ -77,46 +80,37 @@ final class AuditLog(spark: SparkSession, workDir: String,
 
   def flush(): Unit = synchronized { flushRaw(); flushTransformed() }
 
-  /** Distributed raw-event append for the streaming ingestion path: the
-    * batch DataFrame (`id`, `source_path`, `payload`) writes straight to
-    * the date-partitioned parquet from the executors — raw payloads never
-    * funnel through the driver (VERDICT r3 "What's wrong" #2). All rows
-    * share the batch timestamp so a checkpoint replay is idempotent
-    * modulo the audit clock.
+  /** Distributed raw-event append: the DataFrame (`id`, `source_path`,
+    * `payload`) writes straight to the date-partitioned parquet from the
+    * executors, all rows stamped `tsMicros`.
+    *
+    * Every append to a table, this one and the buffer flushes, runs
+    * under this instance's monitor: the default FileOutputCommitter
+    * stages every job under the SAME `<dir>/_temporary` and deletes it
+    * on commit, so two simultaneous appends to one directory can destroy
+    * each other's staging. A cloud deployment with a staging-free
+    * committer (magic committer, Iceberg/Delta) could append
+    * concurrently.
     */
-  /** Concurrent webhook groups append distributed from parallel threads;
-    * the default FileOutputCommitter stages every job under the SAME
-    * `<dir>/_temporary` and deletes it on commit, so two simultaneous
-    * appends to one directory can destroy each other's staging. The
-    * compute (filter/transform jobs) stays concurrent — only the final
-    * append commit serializes per table. A cloud deployment with a
-    * staging-free committer (magic committer, Iceberg/Delta) can drop
-    * these locks.
-    */
-  private val rawAppendLock = new Object
-  private val trAppendLock = new Object
-
-  def logRawBatch(df: DataFrame, tsMicros: Long): Unit =
-    rawAppendLock.synchronized {
-      df.select(col("id"), timestamp_micros(lit(tsMicros)).as("timestamp"),
-          col("source_path"), col("payload"))
-        .withColumn("dt", to_date(col("timestamp")))
-        .write.mode("append").partitionBy("dt").parquet(rawDir)
-    }
+  def logRawBatch(df: DataFrame, tsMicros: Long): Unit = synchronized {
+    df.select(col("id"), timestamp_micros(lit(tsMicros)).as("timestamp"),
+        col("source_path"), col("payload"))
+      .withColumn("dt", to_date(col("timestamp")))
+      .write.mode("append").partitionBy("dt").parquet(rawDir)
+  }
 
   /** Distributed transformed-event append (same contract as
     * [[logRawBatch]]); the caller supplies every column except the
     * timestamp.
     */
-  def logTransformedBatch(df: DataFrame, tsMicros: Long): Unit =
-    trAppendLock.synchronized {
-      df.select(col("id"), col("raw_event_id"), col("webhook_id"),
-          timestamp_micros(lit(tsMicros)).as("timestamp"),
-          col("transformed_payload"), col("destination_url"), col("success"),
-          col("response_code").cast("int"), col("response_body"))
-        .withColumn("dt", to_date(col("timestamp")))
-        .write.mode("append").partitionBy("dt").parquet(trDir)
-    }
+  def logTransformedBatch(df: DataFrame, tsMicros: Long): Unit = synchronized {
+    df.select(col("id"), col("raw_event_id"), col("webhook_id"),
+        timestamp_micros(lit(tsMicros)).as("timestamp"),
+        col("transformed_payload"), col("destination_url"), col("success"),
+        col("response_code").cast("int"), col("response_body"))
+      .withColumn("dt", to_date(col("timestamp")))
+      .write.mode("append").partitionBy("dt").parquet(trDir)
+  }
 
   private def readDir(dir: String, bufDf: => DataFrame): DataFrame = {
     // An absent directory, or one a crashed flush left with no

@@ -342,55 +342,6 @@ final class PayloadTransformer(spark: SparkSession,
     sparkFilter(parse(webhookId, payloadJson), filterQuery)
 
   private[graft] def cachedShapes: Int = shapes.size
-
-  // ---- set-oriented filter gate ----
-
-  /** Set-oriented filter gate for a micro-batch of SAME-WEBHOOK events:
-    * one Spark job evaluates the bare condition over all payloads, with
-    * the event id as a metadata column; returns the ids that pass.
-    * Semantics match per-event applyFilter because the filter contract
-    * is a row-wise WHERE condition (src/app.py:524-579).
-    */
-  def batchFilter(events: Seq[(String, String)],
-      filterQuery: String): Set[String] = {
-    import spark.implicits._
-    if (events.isEmpty) return Set.empty
-    batchFilterPlan(events.toDF("__eid", "__json"), filterQuery)
-      .collect()
-      .map(_.getString(0))
-      .toSet
-  }
-
-  /** The distributed form of [[batchFilter]]: input is a DataFrame of
-    * (`__eid`, `__json`) rows; output is the single-column DataFrame of
-    * kept `__eid`s — NO driver collect, so the streaming ingestion path
-    * can semi/anti-join it against the batch without ever materializing
-    * raw payloads driver-side.
-    *
-    * Semantics: infer a union schema from the batch's payloads
-    * (spark.read.json flattens top-level arrays into rows, so the
-    * inferred struct covers array elements too), then parse each payload
-    * against it alongside its event id. Array payloads parse as
-    * ArrayType(schema) and explode — keep = at least one row matches,
-    * exactly the per-event gate. Known edge vs the per-event path: an
-    * event MISSING a filtered column reads as null here (filtered out)
-    * where the per-event path raises and audits an "Error:" row — only
-    * reachable with mixed-shape batches.
-    */
-  def batchFilterPlan(events: DataFrame, filterQuery: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{array, col, explode, expr, from_json, when}
-    val schema = spark.read.json(events.select("__json").as[String]).schema
-    events
-      .select(col("__eid"),
-        explode(when(expr("__json RLIKE '^\\\\s*\\\\['"),
-          from_json(col("__json"), ArrayType(schema)))
-          .otherwise(array(from_json(col("__json"), schema)))).as("__p"))
-      .select(col("__eid").as("__graft_eid"), col("__p.*"))
-      .where(expr(filterQuery))
-      .select(col("__graft_eid").as("__eid"))
-      .distinct()
-  }
 }
 
 object PayloadTransformer {

@@ -11,15 +11,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the filtered-out audit row and the error-path audit row.
   *
   * Spark-first notes:
-  *  - the per-event path is synchronous (the reference defers to a
-  *    background task; the semantics pinned by its tests are "processed
-  *    within 1s and audited" — a direct call is the same contract,
-  *    stronger);
-  *  - the audit sinks are the set-oriented parquet appenders in
-  *    [[AuditLog]]; the streaming ingestion wrapper
-  *    ([[graft.streaming.StreamIngest]]) runs each filter survivor
-  *    through the same per-event transform and delivery tail
-  *    ([[transformKept]] / [[deliverKept]]) inside foreachBatch.
+  *  - HTTP ingest acks after the raw audit row and runs [[process]] on
+  *    one background worker (the reference defers to a background task;
+  *    the semantics pinned by its tests are "processed within 1s and
+  *    audited");
+  *  - the streaming ingestion wrapper ([[graft.streaming.StreamIngest]])
+  *    runs the same pipeline split in two: [[prepare]] (UDFs, filter,
+  *    transform, and the audit rows of filtered-out and failed events)
+  *    for each event of a micro-batch in arrival order, then
+  *    [[deliverKept]] for the survivors on its delivery pool;
+  *  - filters and row-wise transforms are compiled once per payload
+  *    shape and evaluated on the driver with no Spark job (see
+  *    [[PayloadTransformer]]); the audit rows buffer in [[AuditLog]] and
+  *    flush as date-partitioned parquet.
   */
 final class WebhookEngine(
     val spark: SparkSession,
@@ -144,6 +148,18 @@ final class WebhookEngine(
     */
   def process(webhook: Webhook, rawEventId: String,
       payloadJson: String): ProcessResult =
+    prepare(webhook, rawEventId, payloadJson) match {
+      case Left(done) => done
+      case Right(out) => deliverKept(webhook, rawEventId, out)
+    }
+
+  /** Everything in [[process]] before delivery: rehydrate UDFs, filter,
+    * transform. Returns the shaped JSON of an event to deliver, or the
+    * result of one already audited: filtered out, or failed with
+    * "Error: <msg>".
+    */
+  private[graft] def prepare(webhook: Webhook, rawEventId: String,
+      payloadJson: String): Either[ProcessResult, String] =
     try {
       udfs.loadWebhookUdfs(webhook.id)
       val keep = webhook.filterQuery match {
@@ -151,70 +167,28 @@ final class WebhookEngine(
           transformer.applyFilter(webhook.id, f, payloadJson)
         case _ => true
       }
-      if (!keep) filteredOut(webhook, rawEventId)
-      else deliverKept(webhook, rawEventId, transformKept(webhook, payloadJson))
+      if (!keep) Left(filteredOut(webhook, rawEventId))
+      else Right(transformer.transform(webhook.id, webhook.transformQuery,
+        payloadJson))
     } catch {
-      case NonFatal(e) => failed(webhook, rawEventId, s"Error: ${e.getMessage}")
+      case NonFatal(e) =>
+        Left(failed(webhook, rawEventId, s"Error: ${e.getMessage}"))
     }
 
-  /** Micro-batch processing of one webhook's events. The filter gate is
-    * contractually row-wise (a bare WHERE condition over payload columns,
-    * src/app.py:524-579), so it evaluates SET-ORIENTED: one Spark job
-    * decides keep/drop for the whole batch, with the event id carried
-    * through as a metadata column. Each survivor then takes the
-    * per-event transform, which for row-wise transforms is a compiled
-    * driver-side evaluation with no Spark job (see [[PayloadTransformer]]).
-    */
-  def processBatch(webhook: Webhook,
-      events: Seq[RawEvent]): Seq[ProcessResult] = {
-    if (events.isEmpty) return Nil
-    udfs.loadWebhookUdfs(webhook.id)
-    val kept: Option[Set[String]] = webhook.filterQuery match {
-      case Some(f) if f.nonEmpty =>
-        // a broken filter falls back to the per-event path, which
-        // reproduces the reference's "Error: ..." audit rows exactly
-        try Some(transformer.batchFilter(events.map(e => e.id -> e.payload), f))
-        catch { case NonFatal(_) => None }
-      case _ => Some(events.map(_.id).toSet)
-    }
-    kept match {
-      case None => events.map(e => process(webhook, e.id, e.payload))
-      case Some(keep) => events.map { e =>
-        if (keep(e.id))
-          deliverKept(webhook, e.id, transformKept(webhook, e.payload))
-        else filteredOut(webhook, e.id)
-      }
-    }
-  }
-
-  /** Transform of an event that passed the filter: the shaped JSON, or
-    * the "Error: …" outcome of a failed transform.
-    */
-  private[graft] def transformKept(webhook: Webhook,
-      payloadJson: String): Either[String, String] =
-    try Right(transformer.transform(webhook.id, webhook.transformQuery,
-      payloadJson))
-    catch { case NonFatal(e) => Left(s"Error: ${e.getMessage}") }
-
-  /** Deliver + audit a transformed event, or audit its transform error:
-    * the tail of the pipeline shared by the per-event and the
-    * micro-batch paths.
+  /** Deliver + audit a transformed event: the tail of the pipeline,
+    * which the streaming path runs on its delivery pool.
     */
   private[graft] def deliverKept(webhook: Webhook, rawEventId: String,
-      transformed: Either[String, String]): ProcessResult =
-    transformed match {
-      case Left(msg) => failed(webhook, rawEventId, msg)
-      case Right(out) =>
-        try {
-          val d = deliverFn(webhook.destinationUrl, out, rawEventId)
-          audit.logTransformed(rawEventId, webhook.id, out,
-            webhook.destinationUrl, d.success, d.code, d.body)
-          ProcessResult(rawEventId, filtered = false, d.success,
-            Some(out), d.code, d.body)
-        } catch {
-          case NonFatal(e) =>
-            failed(webhook, rawEventId, s"Error: ${e.getMessage}")
-        }
+      out: String): ProcessResult =
+    try {
+      val d = deliverFn(webhook.destinationUrl, out, rawEventId)
+      audit.logTransformed(rawEventId, webhook.id, out,
+        webhook.destinationUrl, d.success, d.code, d.body)
+      ProcessResult(rawEventId, filtered = false, d.success,
+        Some(out), d.code, d.body)
+    } catch {
+      case NonFatal(e) =>
+        failed(webhook, rawEventId, s"Error: ${e.getMessage}")
     }
 
   private def filteredOut(webhook: Webhook, rawEventId: String): ProcessResult = {

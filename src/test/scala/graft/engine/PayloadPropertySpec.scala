@@ -109,24 +109,6 @@ class PayloadPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("batchFilter agrees with per-event applyFilter on same-shape batches") {
-    val batchGen = for {
-      size <- Gen.choose(1, 5)
-      ns <- Gen.listOfN(size, Gen.choose(-50L, 50L))
-      threshold <- Gen.choose(-50L, 50L)
-    } yield (ns, threshold)
-    forAll(batchGen) { case (ns, threshold) =>
-      val events = ns.zipWithIndex.map { case (n, i) =>
-        s"e$i" -> s"""{"n": $n, "tag": "t"}"""
-      }
-      val batch = transformer.batchFilter(events, s"n > $threshold")
-      val perEvent = events.filter { case (_, json) =>
-        transformer.applyFilter("prop-w", s"n > $threshold", json)
-      }.map(_._1).toSet
-      assert(batch == perEvent)
-    }
-  }
-
   test("array payloads shape as results arrays of the same size") {
     val arrGen = for {
       size <- Gen.choose(2, 6)

@@ -74,4 +74,42 @@ class PersistenceSpec extends SparkSpec {
     val e2 = new WebhookEngine(spark, workDir)
     assert(e2.catalog.byPath("/gone").isEmpty)
   }
+
+  test("concurrent batch appends and buffer flushes lose no audit rows") {
+    val s = spark
+    import s.implicits._
+    val workDir = Files.createTempDirectory("graft-append-lock").toString
+    // flushEvery = 1: every buffered row is its own parquet append
+    val audit = new AuditLog(s, workDir, flushEvery = 1)
+    val appends: Seq[() => Unit] = (0 until 4).flatMap { t =>
+      (0 until 3).map { i =>
+        if (t % 2 == 0) () => {
+          audit.logRawBatch(Seq((s"raw-$t-$i-a", "/p", "{}"),
+            (s"raw-$t-$i-b", "/p", "{}"))
+            .toDF("id", "source_path", "payload"), audit.nowMicros())
+          audit.logTransformedBatch(Seq((s"tr-$t-$i", s"raw-$t-$i-a", "w",
+            "{}", "https://example.com/x", true, 200, "ok"))
+            .toDF("id", "raw_event_id", "webhook_id", "transformed_payload",
+              "destination_url", "success", "response_code", "response_body"),
+            audit.nowMicros())
+        } else () => {
+          val raw = audit.logRaw("/p", "{}", Some(s"raw-$t-$i"))
+          audit.logTransformed(raw.id, "w", "{}", "https://example.com/x",
+            success = true, Some(200), "ok")
+          ()
+        }
+      }
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try appends.map(a => pool.submit(new java.util.concurrent.Callable[Unit] {
+      def call(): Unit = a()
+    })).foreach(_.get())
+    finally pool.shutdown()
+    // 6 batch appends of 2 raw rows + 6 flushed rows; 12 outcome rows
+    assert(audit.rawEvents().count() == 18L)
+    assert(audit.transformedEvents().count() == 12L)
+    val onDisk = new AuditLog(s, workDir)
+    assert(onDisk.rawEvents().select("id").distinct().count() == 18L)
+    assert(onDisk.transformedEvents().count() == 12L)
+  }
 }

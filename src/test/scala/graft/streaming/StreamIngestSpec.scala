@@ -4,9 +4,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.engine.{SparkSpec, WebhookConfig}
 
-/** Streaming ingestion smoke test: MemoryStream → foreachBatch running
-  * the P11 pipeline (the brief's stated ingestion approach), plus the
-  * set-oriented batch path's semantics.
+/** Streaming ingestion: MemoryStream → foreachBatch running the P11
+  * pipeline (the brief's stated ingestion approach), and the micro-batch
+  * path's agreement with the per-event path.
   */
 class StreamIngestSpec extends SparkSpec {
   import SparkSpec._
@@ -53,37 +53,56 @@ class StreamIngestSpec extends SparkSpec {
       jsonEq(j, """{"n":3,"doubled":6}""")))
   }
 
-  test("processBatch: set-oriented filter matches per-event semantics") {
+  /** Response body of each audited event, by payload. */
+  private def outcomeByPayload(
+      e: graft.engine.WebhookEngine): Map[String, String] =
+    e.adHocQuery(
+      """SELECT r.payload, t.response_body FROM raw_events r
+        |JOIN transformed_events t ON t.raw_event_id = r.id""".stripMargin)
+      .toOption.get
+      .map(r => r(0).asInstanceOf[String] -> r(1).asInstanceOf[String]).toMap
+
+  /** One micro-batch of `payloads` to the webhook registered at `path`
+    * (filter `filter`), compared with the per-event path on the same
+    * payloads; returns the payloads the micro-batch filtered out.
+    */
+  private def filteredInBatch(path: String, filter: String,
+      payloads: Seq[String]): Set[String] = {
+    val s = spark
+    import s.implicits._
+    val config = WebhookConfig(path, "https://example.com/x",
+      "SELECT * FROM {{payload}}", Some(filter), None)
     val e = newEngine()
-    val w = e.register(WebhookConfig("/batch-hook", "https://example.com/x",
-      "SELECT * FROM {{payload}}", Some("keep = true"), None)).toOption.get
-    val raws = Seq(
-      e.audit.logRaw("/batch-hook", """{"keep": true, "v": 1}"""),
-      e.audit.logRaw("/batch-hook", """{"keep": false, "v": 2}"""),
-      e.audit.logRaw("/batch-hook", """{"keep": true, "v": 3}"""))
-    val results = e.processBatch(w, raws)
-    assert(results.map(_.filtered) == Seq(false, true, false))
-    assert(results.map(_.success) == Seq(true, false, true))
-    // per-event path agrees on the same payloads
-    val perEvent = raws.map(r => e.process(w, r.id, r.payload))
-    assert(perEvent.map(_.filtered) == Seq(false, true, false))
+    e.register(config)
+    new StreamIngest(e).processMicroBatch(
+      payloads.map(path -> _).toDF("source_path", "payload"), s"$path|0")
+    val out = outcomeByPayload(e)
+    assert(out.keySet == payloads.toSet)
+    val filtered = out.filter(_._2 == "Filtered out by filter_query").keySet
+    val perEvent = newEngine()
+    val w = perEvent.register(config).toOption.get
+    assert(payloads.filter(p =>
+      perEvent.process(w, perEvent.audit.logRaw(path, p).id, p).filtered)
+      .toSet == filtered)
+    filtered
   }
 
-  test("processBatch: JSON-array payloads filter like the per-event path") {
-    val e = newEngine()
-    val w = e.register(WebhookConfig("/array-hook", "https://example.com/x",
-      "SELECT * FROM {{payload}}", Some("amount > 100"), None)).toOption.get
-    val raws = Seq(
+  test("micro-batch: filter keeps and drops object payloads") {
+    val filtered = filteredInBatch("/batch-hook", "keep = true", Seq(
+      """{"keep": true, "v": 1}""",
+      """{"keep": false, "v": 2}""",
+      """{"keep": true, "v": 3}"""))
+    assert(filtered == Set("""{"keep": false, "v": 2}"""))
+  }
+
+  test("micro-batch: array payloads keep on any matching element") {
+    val filtered = filteredInBatch("/array-hook", "amount > 100", Seq(
       // any element matching keeps the event (COUNT(*)>0 gate)
       // leading whitespace before the array bracket must not change parsing
-      e.audit.logRaw("/array-hook", "\n [{\"amount\": 50}, {\"amount\": 200}]"),
-      e.audit.logRaw("/array-hook", """[{"amount": 1}, {"amount": 2}]"""),
-      e.audit.logRaw("/array-hook", """{"amount": 150}"""))
-    val results = e.processBatch(w, raws)
-    assert(results.map(_.filtered) == Seq(false, true, false))
-    // agrees with the per-event gate on the same payloads
-    val perEvent = raws.map(r => e.process(w, r.id, r.payload))
-    assert(perEvent.map(_.filtered) == Seq(false, true, false))
+      "\n [{\"amount\": 50}, {\"amount\": 200}]",
+      """[{"amount": 1}, {"amount": 2}]""",
+      """{"amount": 150}"""))
+    assert(filtered == Set("""[{"amount": 1}, {"amount": 2}]"""))
   }
 
   private val mixedEvents = Seq(
@@ -164,30 +183,37 @@ class StreamIngestSpec extends SparkSpec {
     assert(auditSnapshot(e) == perEventSnapshot())
   }
 
-  test("row-wise transforms run O(1) Spark jobs per (webhook, batch)") {
+  /** Spark jobs one micro-batch of `n` events `{"v": i}` to `path`
+    * launches.
+    */
+  private def jobsFor(ingest: StreamIngest, path: String, n: Int,
+      key: String): Int = {
     val s = spark
     import s.implicits._
+    val counter = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        counter.incrementAndGet(); ()
+      }
+    }
+    s.sparkContext.addSparkListener(listener)
+    try {
+      ingest.processMicroBatch(
+        (1 to n).map(i => path -> s"""{"v": $i}""")
+          .toDF("source_path", "payload"), key)
+      org.apache.spark.ListenerBusDrain(s.sparkContext)
+      counter.get()
+    } finally s.sparkContext.removeSparkListener(listener)
+  }
+
+  test("row-wise transforms run O(1) Spark jobs per (webhook, batch)") {
     val e = newEngine()
     e.register(WebhookConfig("/setwise", "https://example.com/sink",
       "SELECT v, v * 2 AS dbl FROM {{payload}}", Some("v > 0"), None))
     val ingest = new StreamIngest(e)
-    def jobsFor(n: Int, key: String): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(); ()
-        }
-      }
-      s.sparkContext.addSparkListener(listener)
-      try {
-        ingest.processMicroBatch(
-          (1 to n).map(i => "/setwise" -> s"""{"v": $i}""")
-            .toDF("source_path", "payload"), key)
-        org.apache.spark.ListenerBusDrain(s.sparkContext)
-        counter.get()
-      } finally s.sparkContext.removeSparkListener(listener)
-    }
+    def jobsFor(n: Int, key: String): Int =
+      this.jobsFor(ingest, "/setwise", n, key)
     // the webhook's first batch also infers its payload shape's schema,
     // once per shape; count batches after that
     jobsFor(1, "jobs|warm")
@@ -206,13 +232,25 @@ class StreamIngestSpec extends SparkSpec {
     assert(delivered == Seq(Seq(28L)))
   }
 
+  test("a warm 40-event micro-batch launches at most 5 Spark jobs") {
+    val e = newEngine()
+    e.register(WebhookConfig("/few-jobs", "https://example.com/sink",
+      "SELECT v, v * 2 AS dbl FROM {{payload}}", Some("v % 4 > 0"), None))
+    val ingest = new StreamIngest(e)
+    jobsFor(ingest, "/few-jobs", 1, "few|warm") // the shape's inference
+    val jobs = jobsFor(ingest, "/few-jobs", 40, "few|1")
+    // collecting the batch and flushing the two audit tables; nothing
+    // per webhook or per event
+    assert(jobs <= 5, s"$jobs jobs for one 40-event batch")
+  }
+
   test("webhook groups process concurrently: wall ≈ max(group), not Σ") {
     val s = spark
     import s.implicits._
     val sleepMs = 1500L
     // slow destination: per-event HTTP delivery takes 1.5s. Concurrency
-    // is pinned by OVERLAP, not wall-clock: serial group processing can
-    // never have two deliveries in flight at once, while the group pool
+    // is pinned by OVERLAP, not wall-clock: serial delivery can never
+    // have two deliveries in flight at once, while the delivery pool
     // overlaps the sleeps regardless of machine load (an absolute wall
     // bound here flaked 20× over budget on a loaded shared host).
     val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -272,9 +310,9 @@ class StreamIngestSpec extends SparkSpec {
     val events = (1 to 10).map(i => "/narrow" -> s"""{"v": ${i * 25}}""")
     val ingest = new StreamIngest(e)
     ingest.processMicroBatch(events.toDF("source_path", "payload"), "pin|0")
-    // 6 of 10 events pass v > 100 (125..250); the other 4 are audited as
-    // filtered WITHOUT ever reaching the driver
-    assert(ingest.driverCollectedEvents.get() == 6L)
+    // every routed event now reaches the driver once, where the compiled
+    // filter passes 6 of 10 (125..250) and audits the other 4 as filtered
+    assert(ingest.driverCollectedEvents.get() == 10L)
     val filtered = e.adHocQuery(
       """SELECT COUNT(*) FROM transformed_events
         |WHERE response_body = 'Filtered out by filter_query'""".stripMargin)
@@ -327,14 +365,69 @@ class StreamIngestSpec extends SparkSpec {
     assert(ids() == first) // replaying the batch reproduces the same id set
   }
 
-  test("processBatch: broken filter falls back to Error audit rows") {
+  test("micro-batch: broken filter audits Error rows") {
+    val s = spark
+    import s.implicits._
     val e = newEngine()
-    val w = e.register(WebhookConfig("/bad-filter", "https://example.com/x",
+    e.register(WebhookConfig("/bad-filter", "https://example.com/x",
       "SELECT * FROM {{payload}}", Some("no_such_fn(x) ==="), None))
-      .toOption.get
-    val raws = Seq(e.audit.logRaw("/bad-filter", """{"x": 1}"""))
-    val results = e.processBatch(w, raws)
-    assert(!results.head.success)
-    assert(results.head.responseBody.startsWith("Error: "))
+    new StreamIngest(e).processMicroBatch(
+      Seq("/bad-filter" -> """{"x": 1}""").toDF("source_path", "payload"),
+      "bad|0")
+    val out = outcomeByPayload(e)
+    assert(out.keySet == Set("""{"x": 1}"""))
+    assert(out.values.forall(_.startsWith("Error: ")), out)
+  }
+
+  test("micro-batch raw ids equal the Spark md5 expression they replace") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val e = newEngine()
+    e.register(WebhookConfig("/ids", "https://example.com/x",
+      "SELECT * FROM {{payload}}", None, None))
+    val events = Seq(
+      """{"a": 1}""",
+      """{"name": "Zoë – 東京 😀"}""", // non-ASCII, 1-4 byte UTF-8
+      """{"a": "x|y", "b": "|"}""", // the separator inside the payload
+      """{"dup": true}""", """{"dup": true}""", """{"dup": true}""")
+      .map("/ids" -> _).toDF("source_path", "payload")
+    val key = "ids-query|3"
+    // the distributed derivation the driver-side ids replace
+    val occ = Window.partitionBy("source_path", "payload").orderBy(lit(1))
+    val h = md5(concat_ws("|", lit(key), col("source_path"),
+      row_number().over(occ), col("payload")))
+    val expected = events.select(concat_ws("-", substring(h, 1, 8),
+        substring(h, 9, 4), substring(h, 13, 4), substring(h, 17, 4),
+        substring(h, 21, 12)))
+      .collect().map(_.getString(0)).toSet
+    assert(expected.size == 6)
+    new StreamIngest(e).processMicroBatch(events, key)
+    val ids = e.adHocQuery("SELECT id FROM raw_events").toOption.get
+      .map(_.head.asInstanceOf[String])
+    assert(ids.size == 6)
+    assert(ids.toSet == expected)
+  }
+
+  test("a micro-batch is on disk when processMicroBatch returns") {
+    val s = spark
+    import s.implicits._
+    val workDir =
+      java.nio.file.Files.createTempDirectory("graft-stream-durable").toString
+    val e1 = new graft.engine.WebhookEngine(s, workDir)
+    e1.register(WebhookConfig("/durable", "https://example.com/sink",
+      "SELECT v FROM {{payload}}", Some("v > 1"), None))
+    new StreamIngest(e1).processMicroBatch(
+      (1 to 3).map(i => "/durable" -> s"""{"v": $i}""")
+        .toDF("source_path", "payload"), "durable|0")
+    // no flush or close: a fresh engine reads only what is on disk
+    val e2 = new graft.engine.WebhookEngine(s, workDir)
+    assert(e2.audit.rawEvents().count() == 3L)
+    val outcomes = e2.audit.transformedEvents()
+      .select("success", "response_body").collect()
+    assert(outcomes.length == 3)
+    assert(outcomes.count(_.getBoolean(0)) == 2)
+    assert(outcomes.count(_.getString(1) == "Filtered out by filter_query") == 1)
   }
 }
