@@ -1,12 +1,23 @@
 package graft.engine
 
-import java.time.Instant
+import java.io.IOException
+import java.time.{Instant, LocalDate}
 import java.util.UUID
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Append-only audit tables `raw_events` / `transformed_events`
   * (reference P10, src/app.py:350-432) — the substrate every analytics
@@ -14,10 +25,26 @@ import org.apache.spark.sql.functions._
   *
   * Design for scale: appends buffer in memory and flush as parquet files
   * partitioned by event date (`dt=`), so at 100 TB the analytics queries
-  * partition-prune by day and each flush is one immutable file (no
-  * per-event writes — the reference pays one INSERT round-trip per
+  * partition-prune by day and each flush is one immutable file per day
+  * (no per-event writes — the reference pays one INSERT round-trip per
   * event). Readers see buffer ∪ parquet via union, so audit queries are
   * read-your-writes without forcing a flush per event.
+  *
+  * A buffer flush (every `flushEvery` rows, [[flush]], and so every
+  * stream micro-batch and every clean stop) runs on the calling thread,
+  * with no Spark job: Spark's own parquet writer
+  * (`ParquetFileFormat.prepareWrite`) encodes each day's rows into one
+  * file, so compression, timestamp encoding and the footer's row schema
+  * come from the session exactly as a DataFrame write's would. Each file
+  * is written under a hidden temp name (`.part-….tmp`, which Spark's
+  * listing and [[compact]] both skip) and renamed to
+  * `dt=<date>/part-<uuid>.c000<ext>` only after every file of the flush
+  * is written; the buffer is cleared only after the renames. A crash
+  * before the renames therefore leaves nothing visible, a crash between
+  * them leaves some days visible (a retried flush writes those rows
+  * again, as a retried Spark append would). Durability is as before:
+  * neither path fsyncs, so rows a flush returned from are in the OS page
+  * cache, not necessarily on the device.
   */
 final class AuditLog(spark: SparkSession, workDir: String,
     flushEvery: Int = 5000) {
@@ -66,17 +93,73 @@ final class AuditLog(spark: SparkSession, workDir: String,
       .drop("timestampMicros")
       .withColumn("dt", to_date(col("timestamp")))
 
-  private def flushRaw(): Unit = if (rawBuf.nonEmpty) {
-    withDt(rawBuf.toSeq.toDF()).write.mode("append").partitionBy("dt")
-      .parquet(rawDir)
-    rawBuf.clear()
+  private def flushRaw(): Unit = writeOnDriver(rawDir, rawBuf, rawSchema) { e =>
+    InternalRow(utf8(e.id), utf8(e.source_path), utf8(e.payload),
+      e.timestampMicros)
   }
 
-  private def flushTransformed(): Unit = if (trBuf.nonEmpty) {
-    withDt(trBuf.toSeq.toDF()).write.mode("append").partitionBy("dt")
-      .parquet(trDir)
-    trBuf.clear()
-  }
+  private def flushTransformed(): Unit =
+    writeOnDriver(trDir, trBuf, trSchema) { e =>
+      InternalRow(utf8(e.id), utf8(e.raw_event_id), utf8(e.webhook_id),
+        utf8(e.transformed_payload), utf8(e.destination_url), e.success,
+        e.response_code.map(Int.box).orNull, utf8(e.response_body),
+        e.timestampMicros)
+    }
+
+  /** The parquet columns of a flushed buffer: [[withDt]]'s, minus `dt`
+    * (a partition value lives in the directory name). The flushes fill
+    * them positionally.
+    */
+  private lazy val rawSchema = dataSchema(Seq.empty[RawEvent].toDF())
+  private lazy val trSchema = dataSchema(Seq.empty[TransformedEvent].toDF())
+
+  private def dataSchema(empty: DataFrame): StructType =
+    StructType(withDt(empty).schema.filterNot(_.name == "dt"))
+
+  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
+
+  /** Writes `buf` under `dir` as one parquet file per `dt` partition,
+    * on this thread (see the class doc), then clears it. `dt` is
+    * `to_date(timestamp)`: the day of the row's `timestamp` in the
+    * session time zone.
+    */
+  private def writeOnDriver[T](dir: String, buf: ArrayBuffer[T],
+      schema: StructType)(row: T => InternalRow): Unit =
+    if (buf.nonEmpty) SQLConf.withExistingConf(spark.sessionState.conf) {
+      val zone =
+        DateTimeUtils.getZoneId(spark.sessionState.conf.sessionLocalTimeZone)
+      val ts = schema.fieldIndex("timestamp")
+      val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      val writers = new ParquetFileFormat()
+        .prepareWrite(spark, job, Map.empty, schema)
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID())
+      val fs = new Path(dir).getFileSystem(job.getConfiguration)
+      val files = ArrayBuffer[(Path, Path)]() // temp → final name
+      try {
+        buf.map(row)
+          .groupBy(r => DateTimeUtils.microsToDays(r.getLong(ts), zone))
+          .foreach { case (day, rows) =>
+            val part = new Path(dir, s"dt=${LocalDate.ofEpochDay(day.toLong)}")
+            val name =
+              s"part-${UUID.randomUUID()}.c000${writers.getFileExtension(ctx)}"
+            val tmp = new Path(part, s".$name.tmp")
+            files += tmp -> new Path(part, name)
+            val w = writers.newInstance(tmp.toString, schema, ctx)
+            try rows.foreach(w.write)
+            finally w.close()
+          }
+        files.foreach { case (tmp, dest) =>
+          if (!fs.rename(tmp, dest))
+            throw new IOException(s"could not rename $tmp to $dest")
+        }
+      } catch {
+        case NonFatal(e) =>
+          files.foreach { case (tmp, _) => fs.delete(tmp, false) }
+          throw e
+      }
+      buf.clear()
+    }
 
   def flush(): Unit = synchronized { flushRaw(); flushTransformed() }
 

@@ -10,6 +10,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BasePredicate, Expression,
   GenericInternalRow, JoinedRow, Predicate, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.json.InferJsonSchema
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sample, View}
@@ -46,9 +47,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    relation, so even this path launches no job unless the query
   *    reads another relation.
   *
-  * Inferred payload schemas are cached per (webhook, [[shapeKey]]), so
-  * steady-state events skip schema inference; both caches are bounded
-  * LRUs.
+  * A first-seen payload shape's schema is inferred on the driver, by
+  * the steps `spark.read.json` runs as a job ([[InferJsonSchema]]), and
+  * cached per (webhook, [[shapeKey]]), so steady-state events skip
+  * schema inference; both caches are bounded LRUs.
   */
 final class PayloadTransformer(spark: SparkSession,
     isReferenceTable: String => Boolean = _ => false) {
@@ -91,8 +93,7 @@ final class PayloadTransformer(spark: SparkSession,
 
   private def newShape(json: String, isArray: Boolean,
       rowWise: Boolean): Shape = {
-    import spark.implicits._
-    val schema = spark.read.json(Seq(json).toDS()).schema
+    val schema = InferJsonSchema(spark, json)
     val parser =
       if (!rowWise ||
         schema.fieldNames.contains(spark.sessionState.conf.columnNameOfCorruptRecord))

@@ -24,8 +24,9 @@ import graft.engine.WebhookEngine
   * pipeline as HTTP ingest:
   *
   *  - the batch comes to the driver once, in chunks of at most
-  *    `maxSurvivorsInDriver` rows ([[forEachDriverChunk]]: a count and a
-  *    collect for a batch under the cap). Only rows whose `source_path`
+  *    `maxSurvivorsInDriver` rows ([[forEachDriverChunk]]: one
+  *    `limit(cap + 1)` collect for a batch under the cap, the only Spark
+  *    job of a warm batch). Only rows whose `source_path`
   *    is some webhook's exact path (case-sensitive, the same match as
   *    WebhookCatalog.byPath) are collected; unroutable events drop,
   *    mirroring the reference's 404 (src/app.py:1068-1083);
@@ -40,9 +41,10 @@ import graft.engine.WebhookEngine
   *    destination does not serialize the batch;
   *  - the batch ends with `audit.flush()`: its raw and outcome rows are
   *    on disk when foreachBatch returns, which is when Structured
-  *    Streaming commits the batch. Engine overhead, not the per-event
-  *    work, sets the cost of a small batch, so the flush's two parquet
-  *    appends are most of what a batch launches.
+  *    Streaming commits the batch. The flush encodes the parquet on this
+  *    thread with no Spark job (graft.engine.AuditLog), so what a small
+  *    batch pays beyond its per-event work is the collect and the
+  *    trigger's own overhead (offset and commit logs).
   *
   * Exactly-once notes: raw-event ids are DETERMINISTIC per stream —
   * uuid-shaped md5 of (queryName|batchId, path, occurrence#, payload),
@@ -162,30 +164,34 @@ final class StreamIngest(engine: WebhookEngine,
       })).foreach(awaitUnwrapped)
 
   /** Materializes `df` on the driver in chunks of at most
-    * [[maxSurvivorsInDriver]] rows. A batch under the cap takes a count
-    * and a single collect; past the cap the set is repartitioned to
-    * ≤-cap partitions and streamed one partition at a time via
-    * toLocalIterator, so at any moment the driver holds one ≤-cap chunk
-    * (plus toLocalIterator's current ≤-cap partition buffer).
+    * [[maxSurvivorsInDriver]] rows. One pass, `limit(cap + 1).collect()`,
+    * brings a batch under the cap to the driver whole (a single job over
+    * a one-partition source; `limit` scans more partitions in further
+    * jobs only while it has not reached its count). Only a batch past the
+    * cap pays a count, then is repartitioned to ≤-cap partitions and
+    * streamed one partition at a time via toLocalIterator, so after the
+    * probe the driver holds one ≤-cap chunk at a time (plus
+    * toLocalIterator's current ≤-cap partition buffer).
     */
   private def forEachDriverChunk(df: DataFrame)(
       handle: Array[org.apache.spark.sql.Row] => Unit): Unit = {
-    val n = df.count()
-    if (n == 0L) {
-      () // nothing to materialize
-    } else if (n <= maxSurvivorsInDriver.toLong) {
-      val rows = df.collect()
-      noteChunk(rows.length)
-      handle(rows)
-    } else {
-      import scala.jdk.CollectionConverters._
-      val parts = math.ceil(n.toDouble / maxSurvivorsInDriver).toInt
-      df.repartition(parts).toLocalIterator().asScala
-        .grouped(maxSurvivorsInDriver)
-        .foreach { chunk =>
-          noteChunk(chunk.size)
-          handle(chunk.toArray)
+    // an over-cap probe is dropped here, before the chunked pass
+    Some(df.limit(maxSurvivorsInDriver + 1).collect())
+      .filter(_.length <= maxSurvivorsInDriver) match {
+      case Some(rows) =>
+        if (rows.nonEmpty) {
+          noteChunk(rows.length)
+          handle(rows)
         }
+      case None =>
+        import scala.jdk.CollectionConverters._
+        val parts = math.ceil(df.count().toDouble / maxSurvivorsInDriver).toInt
+        df.repartition(parts).toLocalIterator().asScala
+          .grouped(maxSurvivorsInDriver)
+          .foreach { chunk =>
+            noteChunk(chunk.size)
+            handle(chunk.toArray)
+          }
     }
   }
 

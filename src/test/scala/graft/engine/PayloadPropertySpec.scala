@@ -364,6 +364,48 @@ class PayloadPropertySpec extends AnyFunSuite {
     assert(t.cachedShapes == 1)
   }
 
+  /** JSON text of every kind a first-seen payload can be: objects over a
+    * small key vocabulary (so array elements merge fields), arrays mixing
+    * integral and fractional numbers, nulls, empty objects and arrays,
+    * integers of 19 digits and more, top-level scalars, malformed text.
+    */
+  private val anyJsonGen: Gen[String] = {
+    val bigInt = Gen.choose(19, 24).flatMap(n =>
+      Gen.listOfN(n, Gen.numChar).map(ds => ("1" +: ds).mkString))
+    val scalar = Gen.oneOf(
+      Gen.choose(-1000L, 1000L).map(_.toString),
+      Gen.choose(-1000.0, 1000.0).map(d => (math.rint(d * 100) / 100).toString),
+      bigInt, Gen.const("1e3"), Gen.const("null"), Gen.oneOf("true", "false"),
+      Gen.alphaNumStr.map(v => "\"" + v.take(8) + "\""))
+    def value(depth: Int): Gen[String] =
+      if (depth == 0) scalar
+      else Gen.frequency(3 -> scalar, 2 -> obj(depth - 1), 2 -> arr(depth - 1))
+    def obj(depth: Int): Gen[String] = for {
+      n <- Gen.choose(0, 3)
+      keys <- Gen.listOfN(n, Gen.oneOf("a", "b", "c", "d_e")).map(_.distinct)
+      vals <- Gen.listOfN(keys.size, value(depth))
+    } yield keys.zip(vals).map { case (k, v) => s""""$k": $v""" }
+      .mkString("{", ", ", "}")
+    def arr(depth: Int): Gen[String] = Gen.choose(0, 4)
+      .flatMap(n => Gen.listOfN(n, value(depth))).map(_.mkString("[", ", ", "]"))
+    val malformed = Gen.oneOf("""{"a": """, """{'a': 1}""", "[1, 2",
+      "not json", """{"a": 01}""", "", "   ", """{"a": 1} trailing""")
+    Gen.frequency(4 -> obj(2), 3 -> arr(2), 1 -> scalar, 1 -> malformed)
+  }
+
+  test("driver-side schema inference equals spark.read.json's") {
+    val s = spark
+    import s.implicits._
+    def check(json: String): Unit = assert(
+      org.apache.spark.sql.catalyst.json.InferJsonSchema(s, json) ==
+        s.read.json(Seq(json).toDS()).schema, json)
+    Seq("""[1, 2.5, null]""", """[{"a": 1}, {"a": 2.5}, {"b": null}]""",
+      """{"a": {}, "b": []}""", """{"a": 12345678901234567890}""",
+      """[[1], [2.5]]""", "{}", "[]", "null", "42", "\"text\"",
+      """{"a": """, "").foreach(check)
+    forAll(anyJsonGen, cases = 80)(check)
+  }
+
   test("shape keys separate token kinds and escapes, not values") {
     import PayloadTransformer.shapeKey
     assert(shapeKey("""{"a": 1, "b": "x"}""") == shapeKey("""{"a":2,"b":"y\"z"}"""))

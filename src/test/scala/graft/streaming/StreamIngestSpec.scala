@@ -183,13 +183,9 @@ class StreamIngestSpec extends SparkSpec {
     assert(auditSnapshot(e) == perEventSnapshot())
   }
 
-  /** Spark jobs one micro-batch of `n` events `{"v": i}` to `path`
-    * launches.
-    */
-  private def jobsFor(ingest: StreamIngest, path: String, n: Int,
-      key: String): Int = {
+  /** Spark jobs `action` launches. */
+  private def jobsIn(action: => Unit): Int = {
     val s = spark
-    import s.implicits._
     val counter = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -199,12 +195,22 @@ class StreamIngestSpec extends SparkSpec {
     }
     s.sparkContext.addSparkListener(listener)
     try {
-      ingest.processMicroBatch(
-        (1 to n).map(i => path -> s"""{"v": $i}""")
-          .toDF("source_path", "payload"), key)
+      action
       org.apache.spark.ListenerBusDrain(s.sparkContext)
       counter.get()
     } finally s.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Spark jobs one micro-batch of `n` events `{"v": i}` to `path`
+    * launches.
+    */
+  private def jobsFor(ingest: StreamIngest, path: String, n: Int,
+      key: String): Int = {
+    val s = spark
+    import s.implicits._
+    jobsIn(ingest.processMicroBatch(
+      (1 to n).map(i => path -> s"""{"v": $i}""")
+        .toDF("source_path", "payload"), key))
   }
 
   test("row-wise transforms run O(1) Spark jobs per (webhook, batch)") {
@@ -232,16 +238,27 @@ class StreamIngestSpec extends SparkSpec {
     assert(delivered == Seq(Seq(28L)))
   }
 
-  test("a warm 40-event micro-batch launches at most 5 Spark jobs") {
+  test("a warm 40-event micro-batch launches at most 1 Spark job") {
     val e = newEngine()
     e.register(WebhookConfig("/few-jobs", "https://example.com/sink",
       "SELECT v, v * 2 AS dbl FROM {{payload}}", Some("v % 4 > 0"), None))
     val ingest = new StreamIngest(e)
-    jobsFor(ingest, "/few-jobs", 1, "few|warm") // the shape's inference
+    jobsFor(ingest, "/few-jobs", 1, "few|warm")
     val jobs = jobsFor(ingest, "/few-jobs", 40, "few|1")
-    // collecting the batch and flushing the two audit tables; nothing
-    // per webhook or per event
-    assert(jobs <= 5, s"$jobs jobs for one 40-event batch")
+    // the one collect of the batch, nothing per webhook, per event or
+    // for the audit flush
+    assert(jobs <= 1, s"$jobs jobs for one 40-event batch")
+  }
+
+  test("the batch-end audit flush launches no Spark job") {
+    val e = newEngine()
+    (1 to 40).foreach { i =>
+      val raw = e.audit.logRaw("/flush-jobs", s"""{"v": $i}""")
+      e.audit.logTransformed(raw.id, "w", "{}", "https://example.com/sink",
+        success = true, Some(200), "ok")
+    }
+    assert(jobsIn(e.audit.flush()) == 0)
+    assert(e.audit.rawEvents().count() == 40L)
   }
 
   test("webhook groups process concurrently: wall ≈ max(group), not Σ") {
@@ -342,6 +359,27 @@ class StreamIngestSpec extends SparkSpec {
     assert(ingest.maxDriverChunkRows.get() > 0L)
     assert(ingest.maxDriverChunkRows.get() <= cap.toLong,
       s"driver chunk exceeded cap: ${ingest.maxDriverChunkRows.get()}")
+  }
+
+  test("batches of exactly the driver cap and one past it deliver every row") {
+    val s = spark
+    import s.implicits._
+    val cap = 8
+    for (n <- Seq(cap, cap + 1)) {
+      val e = newEngine()
+      e.register(WebhookConfig("/edge", "https://example.com/sink",
+        "SELECT v FROM {{payload}}", Some("v > 0"), None))
+      val ingest = new StreamIngest(e, maxSurvivorsInDriver = cap)
+      ingest.processMicroBatch(
+        (1 to n).map(i => "/edge" -> s"""{"v": $i}""")
+          .toDF("source_path", "payload"), s"edge|$n")
+      assert(ingest.driverCollectedEvents.get() == n.toLong, n)
+      assert(ingest.maxDriverChunkRows.get() <= cap.toLong, n)
+      val delivered = e.adHocQuery(
+        "SELECT COUNT(DISTINCT raw_event_id) FROM transformed_events WHERE success")
+        .toOption.get
+      assert(delivered == Seq(Seq(n.toLong)), n)
+    }
   }
 
   test("micro-batch raw-event ids are replay-deterministic") {
