@@ -109,7 +109,7 @@ object Bench {
         operators.CorpusWriter.DefaultLineitemByPartTable,
         operators.CorpusWriter.DefaultEmbQuantTable,
         operators.CorpusWriter.DefaultDocDigestTable)
-        .foreach(BucketRehearsal.dropBucketTable(spark, wh, _))
+        .foreach(operators.CorpusWriter.dropBucketTable(spark, wh, _))
       val t0 = System.nanoTime()
       operators.CorpusWriter.writeEvents(Tables(spark, sfDir, "events"),
         sourceDir = Some(sfDir))

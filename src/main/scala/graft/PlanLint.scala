@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.joins.{CartesianProductExec, ShuffledHashJ
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** Static plan lint shared by PlanLintSpec (every `sbt test`, sf0.001)
-  * and the plan-dump mains Plans/PlansProbe (replica scale, so shapes
+  * and the plan-dump main Plans (replica scale, so shapes
   * that only appear past the broadcast thresholds fail the dump loudly
   * instead of needing a manual read — VERDICT r13 items 1 and 5). The
   * four rules are the anti-patterns every scale review checked by hand:

@@ -4,9 +4,10 @@ import java.nio.file.{Files, Paths}
 
 
 /** Dev tool: dump `explain("formatted")` for every gate query to a
-  * markdown file so the physical plans are reviewable in-repo
+  * markdown file so the physical plans are reviewable
   * (round-1 verdict ask). Usage:
-  * sbt "runMain graft.Plans [sfDir] [outFile]".
+  * sbt "runMain graft.Plans [sfDir] [outFile]" (default outFile:
+  * `target/PLANS.md`, git-ignored).
   *
   * Since r14 the dump is also a GATE: every plan runs through
   * [[PlanLint]] at the dump's data scale, so scale-dependent shapes
@@ -19,7 +20,7 @@ import java.nio.file.{Files, Paths}
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val outFile = args.lift(1).getOrElse("PLANS_r03.md")
+    val outFile = args.lift(1).getOrElse("target/PLANS.md")
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     // lint needs the full static tree; the dump prose already documents

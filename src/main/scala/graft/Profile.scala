@@ -1,16 +1,20 @@
 package graft
 
 
-/** Dev profiling harness: runs each selected query N times and prints
-  * per-iteration wall times, so cold (JIT + footer-cache) vs steady-state
-  * cost is visible. Usage:
+/** Dev profiling harness: times each selected query with the Bench
+  * protocol and prints every sample plus the host loadavg. Usage:
   * sbt "runMain graft.Profile [sfDir] [iters] [nameRegex]".
   *
-  * Each iteration ends with a BLOCKING cache release: gates that
+  * Per query: one untimed warm-up run (JIT, codegen, parquet footers),
+  * a `System.gc()` fence, then `iters` timed full-plan noop writes.
+  *
+  * Each run ends with a BLOCKING cache release: gates that
   * `trackedPersist` an intermediate would otherwise hand every warm
   * iteration the cached collapse and report impossible walls — the
   * exact artifact that contaminated the first r15 800× q162/q198
   * samples (q198 "0.56 s" at 800× vs 1.65 s at 400×; PERF_NOTES r15).
+  * Blocking, because an async eviction racing the next run's
+  * re-persist hands it a dying cache entry (see CacheRegistry).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -24,16 +28,20 @@ object Profile {
       case Some(re) =>
         SparkEntry.allDefs.map(_.name).filter(re.findFirstIn(_).isDefined)
     }
+    def run(name: String): Double = {
+      val t0 = System.nanoTime()
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.mode("overwrite").format("noop").save()
+      val t = (System.nanoTime() - t0) / 1e9
+      graft.operators.CacheRegistry.release(blocking = true)
+      t
+    }
     for (name <- names) {
-      val times = (1 to iters).map { _ =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
-        val t = (System.nanoTime() - t0) / 1e9
-        graft.operators.CacheRegistry.release(blocking = true)
-        t
-      }
-      println(f"[profile] $name%-28s ${times.map(t => f"$t%7.3f").mkString(" ")}")
+      run(name)
+      System.gc()
+      val times = (1 to iters).map(_ => run(name))
+      println(f"[profile] $name%-28s load=${Bench.loadavg()}%-14s " +
+        times.map(t => f"$t%7.3f").mkString(" "))
     }
     spark.stop()
   }

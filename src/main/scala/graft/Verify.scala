@@ -20,13 +20,6 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // dev diagnostic for the engine-cache hygiene contract: cached
-      // entries must stay BOUNDED across the full run (plan-keyed
-      // dedup — distinct parameter combos only), not grow per query
-      if (sys.env.contains("GRAFT_CACHE_STATS"))
-        System.err.println(s"[cache] after $name: " +
-          s"rdds=${spark.sparkContext.getPersistentRDDs.size} " +
-          s"tracked=${graft.operators.CacheRegistry.size}")
     }
     // release every engine-persisted frame before the session closes —
     // the library-user contract for long-lived sessions (ADVICE r9)

@@ -307,26 +307,20 @@ final class AuditLog(spark: SparkSession, workDir: String,
       compactDir(trDir, maxFilesPerPartition)
   }
 
+  /** Lists, renames and deletes through the Hadoop file system, like
+    * the flush, so its checksum file system moves and removes each data
+    * file's `.crc` along with the file.
+    */
   private def compactDir(dir: String, maxFiles: Int): Int = {
-    import java.nio.file.{Files => JFiles, Path, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(dir)
-    if (!JFiles.exists(root)) return 0
-    // Files.list returns a Stream holding an open directory handle —
-    // close it, or a long-running driver compacting every N micro-batches
-    // leaks one fd per listing until the JVM hits EMFILE (observed: the
-    // leak poisoned an entire test JVM once enough compactions ran)
-    def ls(p: Path): Seq[Path] = {
-      val st = JFiles.list(p)
-      try st.iterator().asScala.toSeq
-      finally st.close()
-    }
-    val partitions = ls(root)
-      .filter(p => JFiles.isDirectory(p) &&
-        p.getFileName.toString.startsWith("dt="))
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(root)) return 0
+    def ls(p: Path): Seq[Path] = fs.listStatus(p).toSeq.map(_.getPath)
+    val partitions = fs.listStatus(root).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("dt="))
+      .map(_.getPath)
     partitions.count { part =>
-      val dataFiles = ls(part).filter(f =>
-        f.getFileName.toString.endsWith(".parquet"))
+      val dataFiles = ls(part).filter(_.getName.endsWith(".parquet"))
       if (dataFiles.size <= maxFiles) false
       else {
         // partition-column-free read/write: parquet files under a dt=
@@ -337,27 +331,26 @@ final class AuditLog(spark: SparkSession, workDir: String,
         // and a directory read would get its rows copied into the
         // compacted file while the original survives the delete below —
         // a permanent duplicate, not just a transient race.
-        val tmp = root.resolve(
+        val tmp = new Path(root,
           s".compact-${UUID.randomUUID().toString.take(8)}")
         spark.read.parquet(dataFiles.map(_.toString): _*)
           .coalesce(1)
           .write.parquet(tmp.toString)
-        val rewritten = ls(tmp)
-          .filter(_.getFileName.toString.endsWith(".parquet"))
+        val rewritten = ls(tmp).filter(_.getName.endsWith(".parquet"))
         // new files in first, old files out after — a reader whose plan
         // listed files before this swap fails loudly on the deleted
         // originals at action time and recovers via
         // retryOnCompactionRace with a fresh listing (same rows: the
         // compacted file is a superset-equal rewrite of the originals)
         val moved = rewritten.map { f =>
-          val dest = part.resolve(
+          val dest = new Path(part,
             s"compacted-${UUID.randomUUID().toString}.parquet")
-          JFiles.move(f, dest)
+          if (!fs.rename(f, dest))
+            throw new IOException(s"could not rename $f to $dest")
           dest
         }
-        dataFiles.foreach(JFiles.delete)
-        ls(tmp).foreach(JFiles.delete) // _SUCCESS etc.
-        JFiles.delete(tmp)
+        dataFiles.foreach(fs.delete(_, false))
+        fs.delete(tmp, true) // _SUCCESS etc.
         moved.nonEmpty
       }
     }

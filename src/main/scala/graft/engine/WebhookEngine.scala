@@ -332,8 +332,8 @@ final class WebhookEngine(
     // enumerating live temp views raced the ingest path's transient
     // per-event payload views (create/drop mid-listing intermittently
     // threw PARSE_EMPTY_STATEMENT from the metadata resolution —
-    // reproduced ~1/25 concurrent rounds by graft.RaceRepro, zero after
-    // this change), and scratch views do not belong in the public
+    // reproduced in ~1/25 concurrent runs of a race harness, zero with
+    // the fixed list below), and scratch views do not belong in the public
     // catalog listing anyway — the reference lists exactly its DuckDB
     // tables (catalog + audit + uploaded reference tables).
     val catalogTables = Seq("webhooks", "reference_tables", "python_udfs",

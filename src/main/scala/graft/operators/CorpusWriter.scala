@@ -66,6 +66,42 @@ object CorpusWriter {
       .format("parquet")
       .saveAsTable(table)
 
+  /** Drop a bucketed table AND its warehouse dir (DROP on a fresh
+    * session's catalog does not remove a previous run's orphaned dirs —
+    * saveAsTable would fail with LOCATION_ALREADY_EXISTS). The walk
+    * stream is closed (it holds directory handles open otherwise).
+    */
+  def dropBucketTable(spark: org.apache.spark.sql.SparkSession,
+      wh: String, name: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    val p = java.nio.file.Paths.get(wh, name)
+    if (java.nio.file.Files.exists(p)) {
+      import scala.jdk.CollectionConverters._
+      val st = java.nio.file.Files.walk(p)
+      try st.iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.delete)
+      finally st.close()
+    }
+  }
+
+  /** The q22 shape (array-sort sessionize over (user_id, sec), minus
+    * the presentation ORDER BY, so only the aggregation shuffle is
+    * left). DataPipelineSpec pins its zero-Exchange plan on a
+    * user_id-bucketed events table.
+    */
+  def sessionizeShape(ev: DataFrame): DataFrame =
+    ev.groupBy("user_id")
+      .agg(count(col("sec")).as("n_events"),
+        array_sort(collect_list(col("sec"))).as("secs"))
+      .select(col("user_id"),
+        (lit(1L) + size(filter(
+          zip_with(
+            expr("slice(secs, 1, size(secs) - 1)"),
+            expr("slice(secs, 2, size(secs) - 1)"),
+            (a, b) => b - a > 1800),
+          x => x)).cast("long")).as("n_sessions"),
+        col("n_events"))
+
   /** Default table name for the user_id-bucketed events layout. */
   val DefaultEventsTable = "graft_events_by_user"
 
@@ -156,8 +192,8 @@ object CorpusWriter {
     * key like (user_id, event_type), which a HashPartitioning(user_id)
     * scan satisfies — Spark's subset rule). On plain parquet each of
     * those pays a full-corpus Exchange on user_id per query
-    * (ProfileQ22Decomp measured that Exchange alone exceeding the
-    * oracle's whole query at 50×); bucketed, the shuffle happens ONCE
+    * (that Exchange alone was measured exceeding the oracle's whole
+    * query at 50×); bucketed, the shuffle happens ONCE
     * at ingest and amortizes across every per-user query forever —
     * at 100 TB the event firehose is written this way from day one.
     * Schema is preserved verbatim, so consumers are layout-agnostic;

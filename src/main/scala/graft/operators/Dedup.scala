@@ -236,6 +236,10 @@ object Dedup {
     * over one doc per distinct text, and members re-attach through a
     * rep-keyed join before the bucket rollup. Same rows, same buckets,
     * same member lists; a corpus with no exact dups pays one md5 pass.
+    *
+    * The md5 projection is `trackedPersist`ed and stays cached after the
+    * result is consumed: callers must call `CacheRegistry.release()`
+    * once they are done with it.
     */
   def lshBuckets(docs: DataFrame, bands: Int = 8): DataFrame = {
     // persisted for the same two-consumer reason as
@@ -902,11 +906,13 @@ object Dedup {
   /** The collapsed edge set [[nearDupClusters]] contracts: verified
     * pairs over one representative per distinct text, unioned with the
     * member→rep star edges that expand each exact group back into its
-    * component. Factored out so the r17 plan evidence can explain the
-    * pre-contraction lineage (the checkpoint boundary hides it from
-    * the gate's own explain).
+    * component.
+    *
+    * The md5 projection is `trackedPersist`ed and stays cached after the
+    * edges are consumed: [[nearDupClusters]]' callers must call
+    * `CacheRegistry.release()` once they are done with the result.
     */
-  private[graft] def nearDupClusterEdges(docs: DataFrame,
+  private def nearDupClusterEdges(docs: DataFrame,
       threshold: Double = 0.5): DataFrame = {
     // fp feeds both the group table and the member-edge join: persist
     // the ~24 B/row digest projection so the corpus is md5'd/tokenized

@@ -272,7 +272,7 @@ object Similarity {
 
   /** Eval-set size at which [[knnLabelEval]]'s default switches from
     * exact broadcast scoring to trained-quantizer blocking. Measured
-    * (ProfileKnnEval sweep at the 50×/200× sf0.1 replicas, PERF_NOTES
+    * (eval-size sweep at the 50×/200× sf0.1 replicas, PERF_NOTES
     * round 13): the exact path's wall is |eval|·N cosines and tracks
     * it linearly; the blocked path pays a fixed quantizer-training
     * prelude and then Σ|probed block| — the measured crossover sits at
@@ -730,7 +730,7 @@ object Similarity {
     * consumer's single action reuses them, and Spark's plan-keyed
     * CacheManager dedupes repeat persists of the same combo), and
     * every persist registers with [[CacheRegistry]] — long-lived
-    * sessions and sweep harnesses (ProfileKnn) call
+    * sessions and sweep harnesses call
     * `CacheRegistry.release()` to drop all engine frames precisely
     * (ADVICE r8/r9).
     */
@@ -1158,7 +1158,7 @@ object Similarity {
 
   /** Corpus-count threshold at which the k=0 default of
     * [[semanticDedup]] switches to two-level blocking. Measured
-    * crossover (ProfileKnn, derived k on both sides, cold/warm seconds,
+    * crossover (derived k on both sides, cold/warm seconds,
     * PERF_NOTES round 10): 10k vectors 15.1/2.8 single vs 17.1/2.2
     * two-level (fixed overhead dominates — single wins cold), 20k
     * 18.1/2.3 vs 17.8/2.4 (parity), 50k 22.6/2.9 vs 21.9/2.4, 100k
@@ -1229,8 +1229,7 @@ object Similarity {
     * (the oracle's replayed quantizer); [[semanticDedup]]'s k=0
     * default ROUTES HERE at or above [[TwoLevelAutoThreshold]]
     * vectors, so this IS the production path at scale — measured in
-    * ProfileKnn's `semdedup2` sweep (crossover table at
-    * [[TwoLevelAutoThreshold]]).
+    * the two-level sweep (crossover table at [[TwoLevelAutoThreshold]]).
     *
     * Determinism: both quantizers replay q52's exact chain (the salt
     * only changes which vectors seed the sample); pair cosines are the

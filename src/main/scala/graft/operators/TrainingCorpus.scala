@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * adds — stage ordering and the funnel accounting — is pinned by its
   * spec. Stage order matters at scale and is deliberate: exact dedup
   * first (cheapest, biggest shrink — and it bounds the LSH candidate
-  * blowup, the measured 16× DedupRehearsal effect), near-dup collapse
+  * blowup, a measured 16× effect), near-dup collapse
   * before the per-row stages so regex/quality work never runs on
   * doomed duplicates, decontamination last among filters because the
   * benchmark probe is the most selective join.
@@ -30,7 +30,7 @@ object TrainingCorpus {
     * `onStage` (default no-op) receives (stage, wallSeconds) at each
     * funnel boundary — the boundaries are the count actions the
     * funnel already pays, so instrumentation adds NO extra action
-    * (ProfileCorpusBuild drives the 50×/200× stage-wall tables with
+    * (the 50×/200× stage-wall tables in PERF_NOTES were taken with
     * it). PII + decontamination share one boundary because the
     * composition materializes them together (stage 5's count is the
     * first action after both).

@@ -220,7 +220,7 @@ object Relational {
       "q07_regional_revenue",
       (s, dir) => {
         // Two measured r5 refinements over the left-deep r3 plan (~20%
-        // at 50x sf0.1, ProfileQ03Q22; values identical, gate-verified):
+        // at 50x sf0.1; values identical, gate-verified):
         //  - the ASIA semi-reduction (region → nation → customer /
         //    supplier, all broadcast: region/nation are FIXED dims)
         //    runs UPSTREAM of the fact joins, so every fact-side

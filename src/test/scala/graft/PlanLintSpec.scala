@@ -9,9 +9,9 @@ import graft.engine.SparkSpec
 /** Static plan lint over EVERY gate query — the four anti-patterns a
   * scale review checks by hand on the plan dumps, run on every `sbt
   * test` against the real sf0.001 testdata. The rules live in
-  * [[graft.PlanLint]] (shared with the Plans/PlansProbe replica-scale
-  * dump mains, which fail loudly on the same violations — VERDICT r13
-  * items 1 and 5); see its scaladoc for the rule definitions.
+  * [[graft.PlanLint]] (shared with the Plans replica-scale dump main,
+  * which fails loudly on the same violations); see its scaladoc for
+  * the rule definitions.
   *
   * Lint runs on the NON-adaptive physical plan (AQE re-plans at
   * runtime but starts from this shape; disabling it keeps the whole

@@ -131,10 +131,13 @@ class AuditLogSpec extends SparkSpec {
     assert(Files.exists(leftover))
   }
 
-  test("compaction keeps every row over driver-written and batch-written files") {
+  /** An audit log under a new `prefix` dir whose one `dt=` partition
+    * holds three driver-flushed and three batch-written files.
+    */
+  private def mixedFiles(prefix: String): (String, AuditLog) = {
     val s = spark
     import s.implicits._
-    val dir = tmpDir("graft-flush-mixed")
+    val dir = tmpDir(prefix)
     val audit = new AuditLog(s, dir)
     val ts = micros("2026-10-18T12:00:00Z")
     (1 to 3).foreach { i =>
@@ -143,12 +146,31 @@ class AuditLogSpec extends SparkSpec {
       audit.logRawBatch(Seq((s"batch-$i", "/p", s"""{"b": $i}"""))
         .toDF("id", "source_path", "payload"), ts)
     }
+    (dir, audit)
+  }
+
+  test("compaction keeps every row over driver-written and batch-written files") {
+    val (dir, audit) = mixedFiles("graft-flush-mixed")
     val before = rows(audit.rawEvents())
     assert(before.size == 6)
     assert(dataFiles(dir).size >= 6)
     assert(audit.compact(maxFilesPerPartition = 2) == 1)
     assert(dataFiles(dir).size == 1)
     assert(rows(audit.rawEvents()) == before)
+  }
+
+  test("compaction leaves no checksum file without its data file") {
+    val (dir, audit) = mixedFiles("graft-compact-crc")
+    assert(audit.compact(maxFilesPerPartition = 2) == 1)
+    val crcs = walk(dir).filter { f =>
+      f.getFileName.toString.endsWith(".crc") &&
+        f.getParent.getFileName.toString.startsWith("dt=")
+    }
+    assert(crcs.nonEmpty) // the compacted file's own checksum
+    crcs.foreach { crc =>
+      val data = crc.getFileName.toString.stripPrefix(".").stripSuffix(".crc")
+      assert(Files.exists(crc.resolveSibling(data)), s"orphan checksum $crc")
+    }
   }
 
   test("a flush whose rename fails keeps its rows buffered and invisible on disk") {

@@ -1055,7 +1055,7 @@ class DataPipelineSpec extends SparkSpec {
     val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     import graft.operators.CorpusWriter
     Seq(CorpusWriter.DefaultLineitemTable, CorpusWriter.DefaultOrdersTable)
-      .foreach(graft.BucketRehearsal.dropBucketTable(s, wh, _))
+      .foreach(CorpusWriter.dropBucketTable(s, wh, _))
     val savedAuto = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     try {
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -1098,7 +1098,7 @@ class DataPipelineSpec extends SparkSpec {
     } finally {
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", savedAuto)
       Seq(CorpusWriter.DefaultLineitemTable, CorpusWriter.DefaultOrdersTable)
-        .foreach(graft.BucketRehearsal.dropBucketTable(s, wh, _))
+        .foreach(CorpusWriter.dropBucketTable(s, wh, _))
     }
   }
 
@@ -1109,7 +1109,7 @@ class DataPipelineSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     import graft.operators.CorpusWriter
-    graft.BucketRehearsal.dropBucketTable(s, wh,
+    CorpusWriter.dropBucketTable(s, wh,
       CorpusWriter.DefaultLineitemByPartTable)
     val plain = graft.SparkEntry.queries("q03_join_broadcast_dim")(s, dir)
     val plainRows = plain.collect().toSeq
@@ -1130,7 +1130,7 @@ class DataPipelineSpec extends SparkSpec {
         "projection leg still exchanges on l_partkey:\n" +
           proj.queryExecution.executedPlan.toString)
       assert(proj.collect().toSeq == plainRows)
-    } finally graft.BucketRehearsal.dropBucketTable(s, wh,
+    } finally CorpusWriter.dropBucketTable(s, wh,
       CorpusWriter.DefaultLineitemByPartTable)
   }
 
@@ -1141,7 +1141,7 @@ class DataPipelineSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     import graft.operators.CorpusWriter
-    graft.BucketRehearsal.dropBucketTable(s, wh,
+    CorpusWriter.dropBucketTable(s, wh,
       CorpusWriter.DefaultEmbQuantTable)
     val gates = Seq("q179_centroid_shift", "q182_norm_bands",
       "q199_cosine_band_census")
@@ -1186,7 +1186,7 @@ class DataPipelineSpec extends SparkSpec {
         .where(col("pqv") =!= col("fqv") || col("pn2q") =!= col("fn2q"))
         .count()
       assert(mism == 0L, s"$mism rows drifted between stored and derived")
-    } finally graft.BucketRehearsal.dropBucketTable(s, wh,
+    } finally CorpusWriter.dropBucketTable(s, wh,
       CorpusWriter.DefaultEmbQuantTable)
   }
 
@@ -1197,7 +1197,7 @@ class DataPipelineSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     import graft.operators.CorpusWriter
-    graft.BucketRehearsal.dropBucketTable(s, wh,
+    CorpusWriter.dropBucketTable(s, wh,
       CorpusWriter.DefaultDocDigestTable)
     val gates = Seq("q162_dup_spread_census", "q184_cross_source_matrix")
     val plainRows = gates.map(n =>
@@ -1231,7 +1231,7 @@ class DataPipelineSpec extends SparkSpec {
         .where(col("ph") =!= col("fh"))
         .count()
       assert(mism == 0L, s"$mism rows drifted between stored and derived")
-    } finally graft.BucketRehearsal.dropBucketTable(s, wh,
+    } finally CorpusWriter.dropBucketTable(s, wh,
       CorpusWriter.DefaultDocDigestTable)
   }
 
@@ -1245,7 +1245,7 @@ class DataPipelineSpec extends SparkSpec {
       (3L, 10L)).toDF("user_id", "sec")
     try {
       graft.operators.CorpusWriter.writeBucketed(ev, "sess_ev", "user_id", 4)
-      val bucketed = graft.BucketRehearsal.sessionizeShape(s.table("sess_ev"))
+      val bucketed = CorpusWriter.sessionizeShape(s.table("sess_ev"))
       val plan = bucketed.queryExecution.executedPlan.toString
       // the groupBy(user_id) consumes the bucket distribution directly —
       // the per-query event shuffle q22 pays on plain parquet is gone
@@ -1255,7 +1255,7 @@ class DataPipelineSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       assert(rows == Seq((1L, 2L, 3L), (2L, 1L, 2L), (3L, 1L, 1L)))
       // same values as the plain (shuffling) layout
-      val plain = graft.BucketRehearsal.sessionizeShape(ev)
+      val plain = CorpusWriter.sessionizeShape(ev)
       assert(plain.queryExecution.executedPlan.toString.contains("Exchange"))
       assert(plain.orderBy("user_id").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq == rows)
@@ -1281,7 +1281,7 @@ class DataPipelineSpec extends SparkSpec {
         lit("{}").as("props"))
     val savedAuto = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     val wh0 = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    graft.BucketRehearsal.dropBucketTable(s, wh0, "evb_ops")
+    CorpusWriter.dropBucketTable(s, wh0, "evb_ops")
     try {
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       graft.operators.CorpusWriter.writeEvents(ev, "evb_ops", buckets = 4,
@@ -1326,7 +1326,7 @@ class DataPipelineSpec extends SparkSpec {
       }
     } finally {
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", savedAuto)
-      graft.BucketRehearsal.dropBucketTable(s, wh0, "evb_ops")
+      CorpusWriter.dropBucketTable(s, wh0, "evb_ops")
     }
   }
 
@@ -1347,7 +1347,7 @@ class DataPipelineSpec extends SparkSpec {
     // no catalog entry (saveAsTable then fails LOCATION_ALREADY_EXISTS);
     // the warehouse-aware drop clears both
     val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    graft.BucketRehearsal.dropBucketTable(s, wh,
+    CorpusWriter.dropBucketTable(s, wh,
       graft.operators.CorpusWriter.DefaultEventsTable)
     try {
       // no layout registered → plain parquet read
@@ -1375,7 +1375,7 @@ class DataPipelineSpec extends SparkSpec {
         "regenerated source must not resolve to the stale bucketed table")
       assert(stale.count() == 2)
     } finally {
-      graft.BucketRehearsal.dropBucketTable(s, wh,
+      CorpusWriter.dropBucketTable(s, wh,
         graft.operators.CorpusWriter.DefaultEventsTable)
     }
   }
