@@ -5,18 +5,13 @@ import java.time.{Instant, LocalDate}
 import java.util.UUID
 
 import scala.collection.mutable.ArrayBuffer
-import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DateType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Append-only audit tables `raw_events` / `transformed_events`
@@ -32,19 +27,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * A buffer flush (every `flushEvery` rows, [[flush]], and so every
   * stream micro-batch and every clean stop) runs on the calling thread,
-  * with no Spark job: Spark's own parquet writer
-  * (`ParquetFileFormat.prepareWrite`) encodes each day's rows into one
-  * file, so compression, timestamp encoding and the footer's row schema
-  * come from the session exactly as a DataFrame write's would. Each file
-  * is written under a hidden temp name (`.part-….tmp`, which Spark's
-  * listing and [[compact]] both skip) and renamed to
-  * `dt=<date>/part-<uuid>.c000<ext>` only after every file of the flush
-  * is written; the buffer is cleared only after the renames. A crash
-  * before the renames therefore leaves nothing visible, a crash between
-  * them leaves some days visible (a retried flush writes those rows
-  * again, as a retried Spark append would). Durability is as before:
-  * neither path fsyncs, so rows a flush returned from are in the OS page
-  * cache, not necessarily on the device.
+  * with no Spark job, through [[DriverParquet]]: one file per `dt` day,
+  * each written under a hidden temp name (which [[compact]] skips too)
+  * and renamed only after every file of the flush is written; the buffer
+  * is cleared only after the renames. A crash before the renames
+  * therefore leaves nothing visible, a crash between them leaves some
+  * days visible (a retried flush writes those rows again, as a retried
+  * Spark append would). Durability is as before: neither path fsyncs,
+  * so rows a flush returned from are in the OS page cache, not
+  * necessarily on the device.
   */
 final class AuditLog(spark: SparkSession, workDir: String,
     flushEvery: Int = 5000) {
@@ -108,7 +99,7 @@ final class AuditLog(spark: SparkSession, workDir: String,
 
   /** The parquet columns of a flushed buffer: [[withDt]]'s, minus `dt`
     * (a partition value lives in the directory name). The flushes fill
-    * them positionally.
+    * them positionally, and reads use them instead of inferring a schema.
     */
   private lazy val rawSchema = dataSchema(Seq.empty[RawEvent].toDF())
   private lazy val trSchema = dataSchema(Seq.empty[TransformedEvent].toDF())
@@ -118,46 +109,21 @@ final class AuditLog(spark: SparkSession, workDir: String,
 
   private def utf8(s: String): UTF8String = UTF8String.fromString(s)
 
-  /** Writes `buf` under `dir` as one parquet file per `dt` partition,
-    * on this thread (see the class doc), then clears it. `dt` is
-    * `to_date(timestamp)`: the day of the row's `timestamp` in the
-    * session time zone.
+  /** Writes `buf` under `dir` as one parquet file per `dt` partition
+    * (see the class doc), then clears it. `dt` is `to_date(timestamp)`:
+    * the day of the row's `timestamp` in the session time zone.
     */
   private def writeOnDriver[T](dir: String, buf: ArrayBuffer[T],
       schema: StructType)(row: T => InternalRow): Unit =
-    if (buf.nonEmpty) SQLConf.withExistingConf(spark.sessionState.conf) {
+    if (buf.nonEmpty) {
       val zone =
         DateTimeUtils.getZoneId(spark.sessionState.conf.sessionLocalTimeZone)
       val ts = schema.fieldIndex("timestamp")
-      val job = Job.getInstance(spark.sessionState.newHadoopConf())
-      val writers = new ParquetFileFormat()
-        .prepareWrite(spark, job, Map.empty, schema)
-      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
-        new TaskAttemptID())
-      val fs = new Path(dir).getFileSystem(job.getConfiguration)
-      val files = ArrayBuffer[(Path, Path)]() // temp → final name
-      try {
-        buf.map(row)
-          .groupBy(r => DateTimeUtils.microsToDays(r.getLong(ts), zone))
-          .foreach { case (day, rows) =>
-            val part = new Path(dir, s"dt=${LocalDate.ofEpochDay(day.toLong)}")
-            val name =
-              s"part-${UUID.randomUUID()}.c000${writers.getFileExtension(ctx)}"
-            val tmp = new Path(part, s".$name.tmp")
-            files += tmp -> new Path(part, name)
-            val w = writers.newInstance(tmp.toString, schema, ctx)
-            try rows.foreach(w.write)
-            finally w.close()
-          }
-        files.foreach { case (tmp, dest) =>
-          if (!fs.rename(tmp, dest))
-            throw new IOException(s"could not rename $tmp to $dest")
-        }
-      } catch {
-        case NonFatal(e) =>
-          files.foreach { case (tmp, _) => fs.delete(tmp, false) }
-          throw e
-      }
+      DriverParquet.write(spark, schema, buf.map(row)
+        .groupBy(r => DateTimeUtils.microsToDays(r.getLong(ts), zone))
+        .toSeq.map { case (day, rows) =>
+          new Path(dir, s"dt=${LocalDate.ofEpochDay(day.toLong)}") -> rows
+        })
       buf.clear()
     }
 
@@ -195,38 +161,34 @@ final class AuditLog(spark: SparkSession, workDir: String,
       .write.mode("append").partitionBy("dt").parquet(trDir)
   }
 
-  private def readDir(dir: String, bufDf: => DataFrame): DataFrame = {
-    // An absent directory, or one a crashed flush left with no
-    // committed parquet yet (schema inference fails), means "nothing
-    // flushed" — degrade to buffer-only. Any OTHER read failure
-    // (corruption, permissions, missing files) propagates: silently
-    // treating it as empty would drop audit history from query results.
-    // In particular, no ignoreMissingFiles here: that option would mask
-    // genuinely lost/deleted audit files in EVERY read. The one
-    // legitimate transient — a DataFrame whose file listing resolved
-    // just before compact() swapped a partition, executing just after —
-    // fails loudly with FileNotFoundException, and action sites recover
-    // via [[retryOnCompactionRace]] with a rebuilt (fresh-listing) plan.
-    val onDisk =
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir))) None
-      else try Some(spark.read.parquet(dir))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-              e.getMessage.contains("Unable to infer schema") => None
-      }
-    onDisk match {
-      case Some(d) => d.unionByName(bufDf, allowMissingColumns = true)
-      case None => bufDf
-    }
-  }
+  /** The parquet under `dir` ∪ the buffer, read with the table's known
+    * columns plus `dt`, so the read infers nothing and runs no Spark job;
+    * an absent directory reads as the buffer alone, and one whose flush
+    * has not renamed any file yet reads as empty. Any read failure
+    * (corruption, permissions, missing files) propagates: silently
+    * treating it as empty would drop audit history from query results.
+    * In particular, no ignoreMissingFiles here: that option would mask
+    * genuinely lost/deleted audit files in EVERY read. The one
+    * legitimate transient — a DataFrame whose file listing resolved just
+    * before compact() swapped a partition, executing just after — fails
+    * loudly with FileNotFoundException, and action sites recover via
+    * [[retryOnCompactionRace]] with a rebuilt (fresh-listing) plan.
+    */
+  private def readDir(dir: String, schema: StructType,
+      bufDf: DataFrame): DataFrame =
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir))) bufDf
+    else spark.read
+      .schema(StructType(schema.map(_.copy(nullable = true)))
+        .add("dt", DateType))
+      .parquet(dir)
+      .unionByName(bufDf, allowMissingColumns = true)
 
   def rawEvents(): DataFrame = synchronized {
-    readDir(rawDir, withDt(rawBuf.toSeq.toDF()))
+    readDir(rawDir, rawSchema, withDt(rawBuf.toSeq.toDF()))
   }
 
   def transformedEvents(): DataFrame = synchronized {
-    readDir(trDir, withDt(trBuf.toSeq.toDF()))
+    readDir(trDir, trSchema, withDt(trBuf.toSeq.toDF()))
   }
 
   /** Register both audit tables in the session catalog for ad-hoc SQL

@@ -36,7 +36,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    inner or payload-preserving outer equi-join from those rows to a
   *    side that reads only registered reference tables compiles too:
   *    the reference side runs once at compile time and is indexed by
-  *    its join keys in a driver-side hash map;
+  *    its join keys in a driver-side hash map (reference tables are
+  *    local relations, so that run is a local scan with no Spark job);
   *  - Spark: everything else (other joins, aggregates and limits over
   *    the payload, sorts, windows, generators) and any compiled
   *    evaluation that throws runs as SQL
@@ -215,8 +216,11 @@ final class PayloadTransformer(spark: SparkSession,
       case _ => None
     }
     val qe = df.queryExecution
+    // row caps are looked for before optimization too: over a reference
+    // table's local relation the optimizer folds them into the relation
     if (!readsOnlyLeafAndReferences(qe.analyzed) ||
-      qe.analyzed.containsAnyPattern(CURRENT_LIKE, PLAN_EXPRESSION)) None
+      qe.analyzed.containsAnyPattern(CURRENT_LIKE, PLAN_EXPRESSION, LIMIT,
+        OFFSET)) None
     else stages(qe.optimizedPlan).map(s => new Stages(s.reverse))
   }
 
@@ -231,7 +235,10 @@ final class PayloadTransformer(spark: SparkSession,
   /** Runs `build` once and indexes its rows by `buildKeys`; probe rows
     * look up `probeKeys`. The caller has checked that `build` reads only
     * reference tables, so its rows change only with
-    * [[ReferenceTables.generation]], which the plan's key holds.
+    * [[ReferenceTables.generation]], which the plan's key holds. Those
+    * tables are local relations, and the optimizer folds filters and
+    * projections over them into the relation, so the collect is a local
+    * scan that launches no Spark job.
     */
   private def lookup(probe: LogicalPlan, probeKeys: Seq[Expression],
       build: LogicalPlan, buildKeys: Seq[Expression],

@@ -4,30 +4,38 @@ import java.time.Instant
 import java.util.UUID
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.csv.ParseCsvText
+import org.apache.spark.sql.catalyst.json.ParseJsonText
+import org.apache.spark.sql.types.StructType
 
 /** Per-webhook uploaded enrichment tables (reference P4,
   * src/app.py:581-671): a CSV/JSON upload becomes a queryable table named
   * `ref_<webhookId>_<name>` that transform queries join against.
   *
-  * Spark-first: the parsed upload is registered as a temp view backed by
-  * a cached DataFrame. Reference tables are dimension-sized by contract
-  * (they arrive in one HTTP upload). An equi-join from the payload to
-  * them compiles into a driver-side hash lookup built once per
-  * [[ReferenceTables.generation]] (see [[PayloadTransformer]]); on the
-  * Spark path, the in-memory cache makes the join a broadcast-hash join
-  * with zero scan cost — on a cluster these would additionally be
-  * persisted parquet for executor-local rehydration.
+  * Reference tables are dimension-sized by contract (they arrive in one
+  * HTTP upload), so registering one runs no Spark job: the text is
+  * parsed on the driver by Spark's own CSV and JSON machinery
+  * ([[ParseCsvText]], [[ParseJsonText]]), the rows become a temp view
+  * over a local relation, and the content is persisted as one parquet
+  * file through [[DriverParquet]]. Nothing is cached: an equi-join from
+  * the payload to these views compiles into a driver-side hash lookup
+  * whose build side is a local scan, built once per
+  * [[ReferenceTables.generation]] (see [[PayloadTransformer]]), and the
+  * Spark path plans a local relation as a broadcast-sized join side.
   */
 final class ReferenceTables(spark: SparkSession,
     store: Option[JsonStore] = None, contentDir: Option[String] = None) {
 
   private val meta = new TrieMap[String, RefTableMeta]() // qualified → meta
-  private val content = new TrieMap[String, DataFrame]() // qualified → cached
 
-  // rehydrate persisted tables: metadata from the JSON snapshot,
-  // content from the per-table parquet written at upload time
+  // rehydrate persisted tables: metadata from the JSON snapshot, content
+  // from the table's parquet directory (written by this class, or by the
+  // Spark write earlier versions used; the read takes either)
   store.foreach(_.load().foreach { n =>
     val m = RefTableMeta(n.get("id").asText(), n.get("webhook_id").asText(),
       n.get("table_name").asText(), n.get("qualified_name").asText(),
@@ -39,9 +47,9 @@ final class ReferenceTables(spark: SparkSession,
     contentDir.foreach { dir =>
       val path = s"$dir/${m.qualifiedName}"
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(path))) {
-        val df = spark.read.parquet(path).cache()
-        df.createOrReplaceTempView(m.qualifiedName)
-        content.put(m.qualifiedName, df)
+        val df = spark.read.parquet(path)
+        spark.createDataFrame(df.collectAsList(), df.schema)
+          .createOrReplaceTempView(m.qualifiedName)
         meta.put(m.qualifiedName, m)
       }
     }
@@ -68,40 +76,39 @@ final class ReferenceTables(spark: SparkSession,
     s"ref_${webhookId.replace("-", "_")}_$safe"
   }
 
-  /** CSV text upload with header + schema inference (src/app.py:1019-1020). */
+  /** CSV text upload with header + schema inference (src/app.py:1019-1020);
+    * a quoted field may span lines.
+    */
   def uploadCsv(webhookId: String, tableName: String, description: String,
       csvText: String): RefTableMeta = {
-    import spark.implicits._
-    val df = spark.read.option("header", "true").option("inferSchema", "true")
-      .csv(csvText.linesIterator.toSeq.toDS())
-    upload(webhookId, tableName, description, df)
+    val (schema, rows) = ParseCsvText(spark, csvText)
+    upload(webhookId, tableName, description, schema, rows)
   }
 
-  /** JSON-lines / JSON-array text upload (src/app.py:1021-1022). */
+  /** JSON-lines / JSON-array text upload (src/app.py:1021-1022): every
+    * root-level value is a record, a root array's elements are rows.
+    */
   def uploadJson(webhookId: String, tableName: String, description: String,
       jsonText: String): RefTableMeta = {
-    import spark.implicits._
-    val df = spark.read.json(Seq(jsonText).toDS())
-    upload(webhookId, tableName, description, df)
+    val (schema, rows) = ParseJsonText(spark, jsonText)
+    upload(webhookId, tableName, description, schema, rows)
   }
 
   /** CTAS semantics: DROP + CREATE from the parsed upload, metadata
     * upserted (src/app.py:621-648). Re-upload replaces content (pinned
-    * tests/test_reference_and_udf.py:82-153).
+    * tests/test_reference_and_udf.py:82-153). The content is written
+    * before the view is replaced, so a failed write leaves the old table
+    * in place.
     */
-  def upload(webhookId: String, tableName: String, description: String,
-      df: DataFrame): RefTableMeta = synchronized {
+  private def upload(webhookId: String, tableName: String,
+      description: String, schema: StructType,
+      rows: Seq[InternalRow]): RefTableMeta = synchronized {
     val qname = qualifiedName(webhookId, tableName)
-    // release the replaced content first: an identical re-upload would
-    // otherwise share its cache entry and lose it with the old frame
-    content.remove(qname).foreach(_.unpersist())
-    val cached = df.cache()
-    cached.count() // materialize now: upload-time errors surface at upload
-    cached.createOrReplaceTempView(qname)
-    content.put(qname, cached)
+    contentDir.foreach(dir => writeContent(new Path(dir, qname), schema, rows))
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    spark.createDataFrame(rows.map(r => toRow(r).asInstanceOf[Row]).asJava,
+      schema).createOrReplaceTempView(qname)
     ReferenceTables.generations.incrementAndGet()
-    contentDir.foreach(dir => cached.write.mode("overwrite")
-      .parquet(s"$dir/$qname"))
     val now = Instant.now()
     val row = meta.get(qname) match {
       case Some(m) => m.copy(description = description, updatedAt = now)
@@ -113,12 +120,23 @@ final class ReferenceTables(spark: SparkSession,
     row
   }
 
+  /** Writes the table as one parquet file in `dir`, then deletes what
+    * was there before (a crash in between leaves both, so a restart
+    * would read the replaced rows too until the next upload).
+    */
+  private def writeContent(dir: Path, schema: StructType,
+      rows: Seq[InternalRow]): Unit = {
+    val written = DriverParquet.write(spark, schema, Seq(dir -> rows)).head
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.listStatus(dir).map(_.getPath)
+      .filterNot(_.getName == written.getName)
+      .foreach(fs.delete(_, true))
+  }
+
   def forWebhook(webhookId: String): Seq[RefTableMeta] =
     meta.values.filter(_.webhookId == webhookId).toSeq.sortBy(_.tableName)
 
   def list(): Seq[RefTableMeta] = meta.values.toSeq.sortBy(_.qualifiedName)
-
-  def table(qname: String): DataFrame = spark.table(qname)
 
   /** Whether `name` is a registered table's view (case-insensitive, as
     * the session catalog resolves it).
@@ -130,7 +148,6 @@ final class ReferenceTables(spark: SparkSession,
     val doomed = forWebhook(webhookId)
     doomed.foreach { m =>
       spark.catalog.dropTempView(m.qualifiedName)
-      content.remove(m.qualifiedName).foreach(_.unpersist())
       meta.remove(m.qualifiedName)
     }
     if (doomed.nonEmpty) ReferenceTables.generations.incrementAndGet()

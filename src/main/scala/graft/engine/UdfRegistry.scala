@@ -32,9 +32,16 @@ import org.apache.spark.sql.types._
   *
   * Scale note: the compiled closure is serialized to executors like any
   * Spark UDF; compilation happens once on the driver per distinct source.
+  *
+  * The in-process compiler is slow to start (seconds for its first
+  * compile), so construction starts [[UdfCompiler.warmUp]] on a
+  * background thread; a registration that arrives while it runs waits
+  * for it on the compiler's lock instead of starting the compiler again.
   */
 final class UdfRegistry(spark: SparkSession,
     store: Option[JsonStore] = None) {
+
+  UdfCompiler.warmUp()
 
   private val meta = new TrieMap[String, UdfMeta]() // qualifiedName → meta
   // qnames currently registered in the session FunctionRegistry — makes
@@ -226,6 +233,25 @@ object UdfCompiler {
   }
 
   private val cache = new TrieMap[String, AnyRef]() // sha → compiled fn
+
+  private val warming = new java.util.concurrent.atomic.AtomicBoolean()
+
+  /** Once per JVM: builds the ToolBox and compiles a trivial function on
+    * a daemon thread, under this object's lock, so the compiler's classes
+    * are loaded and warm before the first registration needs them.
+    */
+  def warmUp(): Unit =
+    if (warming.compareAndSet(false, true)) startWarmUp()
+
+  private[engine] def startWarmUp(): Thread = {
+    val t = new Thread(() =>
+      try synchronized { toolbox.eval(toolbox.parse("(s: String) => s")); () }
+      catch { case NonFatal(_) => }, // a registration reports its own error
+      "graft-udf-compiler-warmup")
+    t.setDaemon(true)
+    t.start()
+    t
+  }
 
   private def sha(s: String): String =
     MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8"))

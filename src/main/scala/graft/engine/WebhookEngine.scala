@@ -52,6 +52,11 @@ final class WebhookEngine(
 
   import WebhookEngine._
 
+  // notified whenever the in-flight set below shrinks and when the pool
+  // terminates, so [[drain]] waits on a signal rather than polling
+  private val settled = new Object
+  private var poolTerminated = false // guarded by `settled`
+
   /** Deferred-ack processing queue — the reference acks right after the
     * raw-event insert and runs the pipeline as a background task
     * (src/app.py:1104-1111); this is its bounded equivalent. One worker
@@ -67,7 +72,12 @@ final class WebhookEngine(
     (r: Runnable) => {
       val t = new Thread(r, "graft-ingest-worker"); t.setDaemon(true); t
     },
-    new java.util.concurrent.ThreadPoolExecutor.CallerRunsPolicy)
+    new java.util.concurrent.ThreadPoolExecutor.CallerRunsPolicy) {
+    override def terminated(): Unit = settled.synchronized {
+      poolTerminated = true
+      settled.notifyAll()
+    }
+  }
 
   // per-event sequence + in-flight set back [[drain]]: a sentinel task
   // would lie under CallerRunsPolicy (a saturated queue runs the sentinel
@@ -100,7 +110,10 @@ final class WebhookEngine(
           inFlight.add(seq)
           processPool.execute { () =>
             try process(webhook, raw.id, payloadJson)
-            finally inFlight.remove(seq)
+            finally settled.synchronized {
+              inFlight.remove(seq)
+              settled.notifyAll()
+            }
           }
           Right(Ack("accepted", raw.id))
         }
@@ -113,18 +126,18 @@ final class WebhookEngine(
     */
   def drain(): Unit = {
     val snapshot = ingestSeq.get()
-    while (true) {
+    settled.synchronized {
       // done when no event acked at-or-before the snapshot is still in
-      // flight (events ingested after drain() started are not waited on)
-      val it = inFlight.iterator()
-      val pending = it.hasNext && it.next() <= snapshot
-      if (!pending) return
-      // after shutdown the queued tasks still run; once the pool is
+      // flight (events ingested after drain() started are not waited on).
+      // After shutdown the queued tasks still run; once the pool has
       // TERMINATED nothing will clear the in-flight set again (a
       // post-shutdown CallerRunsPolicy rejection silently discards), so
-      // stop waiting rather than spin forever
-      if (processPool.isTerminated) return
-      Thread.sleep(2)
+      // stop waiting rather than wait forever
+      def pending = {
+        val it = inFlight.iterator()
+        it.hasNext && it.next() <= snapshot
+      }
+      while (pending && !poolTerminated) settled.wait()
     }
   }
 

@@ -285,6 +285,35 @@ class EventProcessingSpec extends SparkSpec {
     assert(results.filterNot(_.filtered).forall(_.success))
   }
 
+  test("drain wakes when the last event finishes and waits for every earlier ack") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val release = new CountDownLatch(1)
+    @volatile var lastDelivered = 0L
+    val e = newEngine { (_, _, _) =>
+      release.await()
+      lastDelivered = System.nanoTime()
+      Delivery.Result(success = true, Some(200), "ok")
+    }
+    e.register(WebhookConfig("/drain", "https://example.com/sink",
+      "SELECT * FROM {{payload}}", None, None))
+    (1 to 3).foreach(i => e.ingest("/drain", s"""{"n": $i}"""))
+    val drained = new CountDownLatch(1)
+    @volatile var returnedAt = 0L
+    val drainer = new Thread(() => {
+      e.drain()
+      returnedAt = System.nanoTime()
+      drained.countDown()
+    })
+    drainer.start()
+    // every acked event is still blocked in delivery
+    assert(!drained.await(200, TimeUnit.MILLISECONDS))
+    release.countDown()
+    assert(drained.await(30, TimeUnit.SECONDS))
+    assert(e.audit.transformedEvents().count() == 3L)
+    val lagMs = (returnedAt - lastDelivered) / 1e6
+    assert(lagMs < 50, s"drain returned $lagMs ms after the last event")
+  }
+
   // --- reference-table joins ---
 
   private val usersCsv =
@@ -306,6 +335,27 @@ class EventProcessingSpec extends SparkSpec {
 
   private def authEvent(i: Int, user: String) =
     s"""{"id": "auth-$i", "username": "$user", "ip": "10.0.0.$i"}"""
+
+  test("CSV and JSON uploads and a reference-join compile launch no Spark job") {
+    val e = newEngine()
+    val w = e.register(WebhookConfig("/refjoin-nojob", "https://example.com/sink",
+      "SELECT * FROM {{payload}}", None, None)).toOption.get
+    val (jobs, _, out) = countJobs {
+      val users = e.refTables.uploadCsv(w.id, "users", "", usersCsv)
+        .qualifiedName
+      val depts = e.refTables.uploadJson(w.id, "depts", "",
+        """[{"department": "Eng", "floor": 3}, {"department": "Sales", "floor": 1}]""")
+        .qualifiedName
+      e.transformer.compiledTransform(w.id,
+        s"SELECT e.id, u.full_name, d.floor FROM {{payload}} e " +
+          s"JOIN $users u ON e.username = u.username " +
+          s"JOIN $depts d ON u.department = d.department",
+        authEvent(1, "jdoe"))
+    }
+    assert(jobs == 0, s"$jobs jobs")
+    assert(out.exists(jsonEq(_,
+      """{"id":"auth-1","full_name":"John Doe","floor":3}""")), out)
+  }
 
   test("reference-table join events launch no Spark job after the first compile") {
     val (e, w) = refJoinHook()

@@ -65,6 +65,41 @@ class PersistenceSpec extends SparkSpec {
     assert(e2.audit.transformedEvents().count() == 3)
   }
 
+  test("a restart rehydrates reference tables with equal schema and rows, Spark-written ones too") {
+    val s = spark
+    import s.implicits._
+    val workDir = Files.createTempDirectory("graft-persist-ref").toString
+    val e1 = new WebhookEngine(spark, workDir)
+    val csv = e1.refTables.uploadCsv("wid-r", "csv", "",
+      "id,amount,at,day,name,ok\n" +
+        "1,2.5,2024-01-02 03:04:05,2024-01-02,Ann,true\n" +
+        "2,,2024-02-03 04:05:06,2024-02-03,\"B, b\",false").qualifiedName
+    val json = e1.refTables.uploadJson("wid-r", "json", "",
+      """{"k": 1, "big": 12345678901234567890, "tags": ["a", null], "inner": {"x": 1.5}}
+        |{"k": 2, "tags": [], "inner": {"x": null, "y": "z"}}""".stripMargin)
+      .qualifiedName
+    val legacy = e1.refTables.uploadCsv("wid-r", "legacy", "", "k,v\n9,nine")
+      .qualifiedName
+    // the content as earlier versions wrote it: a Spark job's parquet
+    // output of the CSV read, replacing the file written above
+    val old = spark.read.option("header", "true").option("inferSchema", "true")
+      .csv(Seq("k,v", "1,one", "2,two").toDS())
+    old.write.mode("overwrite").parquet(s"$workDir/reference_tables/$legacy")
+    def snapshot(q: String) = {
+      val t = spark.table(q)
+      (t.schema, t.collect().toSeq)
+    }
+    val before = Seq(csv, json).map(snapshot)
+    assert(before.map(_._2.size) == Seq(2, 2))
+
+    new WebhookEngine(spark, workDir)
+    assert(Seq(csv, json).map(snapshot) == before)
+    // that write's part files read back in no fixed order
+    val (schema, rows) = snapshot(legacy)
+    assert(schema == old.schema)
+    assert(rows.sortBy(_.toString) == old.collect().toSeq.sortBy(_.toString))
+  }
+
   test("hard delete persists across restart") {
     val workDir = Files.createTempDirectory("graft-persist2").toString
     val e1 = new WebhookEngine(spark, workDir)

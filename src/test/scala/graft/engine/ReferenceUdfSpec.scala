@@ -40,18 +40,39 @@ class ReferenceUdfSpec extends SparkSpec {
 
   test("re-uploads and delete release the replaced table's cache") {
     val e = newEngine()
-    val s = spark
-    import s.implicits._
-    val uploads = (0 to 5).map { i => // one upload, five re-uploads
-      val df = (0 to i).map(n => (n, s"v$i")).toDF("id", "v")
-      e.refTables.upload("wid-cache", "t", "", df)
-      df
+    val views = (0 to 5).map { i => // one upload, five re-uploads
+      val q = e.refTables.uploadCsv("wid-cache", "t", "",
+        ("id,v" +: (0 to i).map(n => s"$n,v$i")).mkString("\n")).qualifiedName
+      spark.table(q)
     }
-    def cached = uploads.filter(_.storageLevel != StorageLevel.NONE)
-    assert(cached == Seq(uploads.last))
+    // no uploaded table's plan is in the session's cache manager
+    def cached = views.filter(_.storageLevel != StorageLevel.NONE)
+    assert(cached.isEmpty)
     assert(spark.table("ref_wid_cache_t").count() == 6)
     e.refTables.delete("wid-cache")
     assert(cached.isEmpty)
+  }
+
+  test("JSON upload: every root value is a record, a root array's elements are rows") {
+    val e = newEngine()
+    def rows(text: String): Seq[Row] = {
+      val q = e.refTables.uploadJson("wid-json", "t", "", text).qualifiedName
+      spark.table(q).orderBy("a").collect().toSeq
+    }
+    val three = Seq(Row(1L), Row(2L), Row(3L))
+    assert(rows("{\"a\":1}\n{\"a\":2}\n{\"a\":3}") == three) // JSON Lines
+    assert(rows("""[{"a":1},{"a":2},{"a":3}]""") == three)
+    assert(rows("[\n  {\n    \"a\": 1\n  },\n  {\"a\": 2},\n  {\"a\": 3}\n]\n") ==
+      three)
+    assert(rows("\n{\"a\":1}\n\n\n{\"a\":2}\r\n\n{\"a\":3}\n\n") == three)
+  }
+
+  test("CSV upload: a quoted field may span lines") {
+    val e = newEngine()
+    val q = e.refTables.uploadCsv("wid-csv", "notes", "",
+      "id,note\n1,\"two\nlines\"\n2,plain").qualifiedName
+    assert(spark.table(q).collect().toSeq ==
+      Seq(Row(1, "two\nlines"), Row(2, "plain")))
   }
 
   test("table name sanitization (src/app.py:605-607)") {
@@ -112,6 +133,22 @@ class ReferenceUdfSpec extends SparkSpec {
       "SELECT udf_wid_u3_first_char(s) AS c FROM {{payload}}",
       """{"s": "spark"}""")
     assert(jsonEq(out, """{"c":"s"}"""))
+  }
+
+  test("registration during the compiler warm-up compiles valid and rejects invalid source") {
+    val e = newEngine()
+    val warm = UdfCompiler.startWarmUp()
+    val ok = e.udfs.register("wid-warm", "twice",
+      "def twice(s: String): String = s + s")
+    val bad = e.udfs.register("wid-warm", "broken",
+      "def broken(s: String String = ")
+    warm.join(60000)
+    assert(!warm.isAlive)
+    assert(ok.isRight)
+    assert(bad.isLeft)
+    val out = e.transformer.transform("wid-warm",
+      "SELECT udf_wid_warm_twice(x) AS y FROM {{payload}}", """{"x": "ab"}""")
+    assert(jsonEq(out, """{"y":"abab"}"""))
   }
 
   test("invalid code is rejected (test_reference_and_udf.py:432-444)") {
