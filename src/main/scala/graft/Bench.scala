@@ -28,16 +28,10 @@ package graft
   *     though proven non-predictive — a high END loadavg at least
   *     flags in-window contention.
   *
-  * Second official leg (VERDICT r10 item 2): `SPARK_GRAFT_LAYOUT=
-  * bucketed` first writes the events table through
-  * [[operators.CorpusWriter.writeEvents]] (user_id-bucketed,
-  * (user_id, ts)-sorted, tagged for this SF dir) and then runs the
-  * SAME queries — q22 resolves the layout via [[Tables.events]] and
-  * loses its corpus-wide Exchange, which is how a 100 TB deployment
-  * stores the event firehose from day one. The one-off write is
-  * reported separately as `layout_write_sec` (ingest-time cost,
-  * amortized across every per-user query forever), never folded into
-  * the per-query timings. Default (driver runs) stays `plain`.
+  * Every table is read as plain parquet (one read path, [[Tables]]);
+  * `"layout":"plain"` stays in the JSON so its keys do not change. The
+  * bucketed-layout leg was deleted after a plain/bucketed A/B at sf0.1
+  * (PERF_NOTES.md, "Layout A/B").
   */
 object Bench {
 
@@ -97,48 +91,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadStart = loadavg()
-    val layout = sys.env.getOrElse("SPARK_GRAFT_LAYOUT", "plain")
     val spark = GraftSession.local()
-
-    var layoutWriteSec = -1.0
-    if (layout == "bucketed") {
-      val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      Seq(operators.CorpusWriter.DefaultEventsTable,
-        operators.CorpusWriter.DefaultLineitemTable,
-        operators.CorpusWriter.DefaultOrdersTable,
-        operators.CorpusWriter.DefaultLineitemByPartTable,
-        operators.CorpusWriter.DefaultEmbQuantTable,
-        operators.CorpusWriter.DefaultDocDigestTable)
-        .foreach(operators.CorpusWriter.dropBucketTable(spark, wh, _))
-      val t0 = System.nanoTime()
-      operators.CorpusWriter.writeEvents(Tables(spark, sfDir, "events"),
-        sourceDir = Some(sfDir))
-      // the relational side of the deployed layout: lineitem/orders
-      // co-bucketed on the order key (read via the plain parquet path
-      // here — Tables.apply would otherwise resolve a half-written pair)
-      operators.CorpusWriter.writeOrderFacts(
-        spark.read.parquet(s"$sfDir/lineitem.parquet"),
-        spark.read.parquet(s"$sfDir/orders.parquet"),
-        sourceDir = Some(sfDir))
-      // the partkey-clustered SECOND projection (C-Store): deletes the
-      // measured q03 regression on the orderkey layout AND beats plain
-      // (r15 pkproj A/B at 200×: 2.5–2.9 s vs plain 3.5–4.4 vs oracle
-      // 2.97 — parity-or-win); q03's per-key frame resolves it
-      operators.CorpusWriter.writePartProjection(
-        spark.read.parquet(s"$sfDir/lineitem.parquet"),
-        sourceDir = Some(sfDir))
-      // the r16 derived projections (VERDICT r16 ask #3): quantized
-      // embeddings (q179/q182/q199's integer forms) and the documents
-      // digest (q162/q184's md5) — now part of the official deployed
-      // leg so the artifact tracks their delta round-over-round
-      operators.CorpusWriter.writeEmbQuantProjection(
-        spark.read.parquet(s"$sfDir/embeddings.parquet"),
-        sourceDir = Some(sfDir))
-      operators.CorpusWriter.writeDocDigestProjection(
-        spark.read.parquet(s"$sfDir/documents.parquet"),
-        sourceDir = Some(sfDir))
-      layoutWriteSec = (System.nanoTime() - t0) / 1e9
-    }
 
     // per-query executor task-time totals (VERDICT r16 ask #2): at
     // floor-dominated SFs wall time can't show scaling (the 8-vs-32
@@ -198,10 +151,6 @@ object Bench {
     val taskQs = results.map { case (k, (_, tk)) => "\"" + k + "\":" + tk }
       .mkString("{", ",", "}")
     val total = results.map(_._2._1).filter(_ >= 0).sum
-    val layoutInfo =
-      if (layout == "bucketed")
-        s""","layout":"bucketed","layout_write_sec":$layoutWriteSec"""
-      else s""","layout":"plain""""
 
     // Same-window controls (r15 ask #1): oracle leg + calibration spin
     // AFTER the Spark timings so they sample the identical host window.
@@ -229,7 +178,7 @@ object Bench {
         s""","default_parallelism":${spark.sparkContext.defaultParallelism}""" +
         s""","task_sec":$taskQs"""
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$layoutInfo$control$shape}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","layout":"plain"$control$shape}""")
     spark.stop()
   }
 }

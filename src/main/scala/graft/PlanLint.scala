@@ -61,10 +61,11 @@ object PlanLint extends PredicateHelper {
     * in nearDupPairs" — re-tokenization rides the OS page cache;
     * materializing ~67 M exploded rows costs more than it saves). At
     * real scale the remedy is materializing the shingle table ONCE as
-    * a bucketed parquet layout shared across all dedup passes
-    * (CorpusWriter), not a per-query persist. The small side tables in
-    * the same pipelines (minhash signatures, per-doc shingle counts)
-    * were A/B-measured separately in r14 — see PERF_NOTES r14.
+    * a table shared across all dedup passes, not a per-query persist
+    * (the repo ships no such layout: every gate reads plain parquet).
+    * The small side tables in the same pipelines (minhash signatures,
+    * per-doc shingle counts) were A/B-measured separately in r14 — see
+    * PERF_NOTES r14.
     */
   val sharedSubtreeWhitelist: Map[String, String] = Map(
     "q51_chargram_jaccard" -> "corpus-sized char-gram explode; r11 negative result",

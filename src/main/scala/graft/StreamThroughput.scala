@@ -242,7 +242,7 @@ object StreamThroughput {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.streaming.EventStreamOps
-    val rows = Tables.events(spark, sfDir)
+    val rows = Tables(spark, sfDir, "events")
       .selectExpr("event_type", "CAST(value AS DOUBLE) AS value")
       .limit(batchSize * nBatches)
       .as[EventStreamOps.VEv].collect()
@@ -302,7 +302,7 @@ object StreamThroughput {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.streaming.EventStreamOps
-    val rows = Tables.events(spark, sfDir)
+    val rows = Tables(spark, sfDir, "events")
       .selectExpr("event_id", "ts", "user_id")
       .limit(batchSize * nBatches)
       .as[EventStreamOps.Ev].collect()

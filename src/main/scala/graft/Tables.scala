@@ -6,11 +6,10 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** Readers for the driver-generated test tables (TESTDATA.md).
   *
-  * Plain `spark.read.parquet` so Catalyst owns pushdown/pruning: every
-  * downstream `.select`/`.filter` reaches the scan as `ReadSchema` /
-  * `PushedFilters`. At 100 TB these would be partitioned/bucketed table
-  * scans; the query code is agnostic to that (it never assumes a
-  * single-file layout).
+  * One read path per table, plain `spark.read.parquet`, so Catalyst owns
+  * pushdown/pruning: every downstream `.select`/`.filter` reaches the
+  * scan as `ReadSchema` / `PushedFilters`. The query code never assumes
+  * a single-file layout.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -18,34 +17,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    name match {
-      // prefer the orderkey-co-bucketed fact pair when writeOrderFacts
-      // has registered one FOR THIS SOURCE generation (schema-identical
-      // — values never change, only the per-orderkey exchanges
-      // disappear; the events table keeps its explicit Tables.events
-      // entry point)
-      case "lineitem" => graft.operators.CorpusWriter
-        .bucketedSource(spark, dir, "lineitem.parquet",
-          graft.operators.CorpusWriter.DefaultLineitemTable)
-        .getOrElse(spark.read.parquet(s"$dir/lineitem.parquet"))
-      case "orders" => graft.operators.CorpusWriter
-        .bucketedSource(spark, dir, "orders.parquet",
-          graft.operators.CorpusWriter.DefaultOrdersTable)
-        .getOrElse(spark.read.parquet(s"$dir/orders.parquet"))
-      case _ => spark.read.parquet(s"$dir/$name.parquet")
-    }
-
-  /** The events table for `dir`, preferring the user_id-bucketed layout
-    * when [[graft.operators.CorpusWriter.writeEvents]] has registered
-    * one FOR THIS SOURCE in the session catalog (schema-identical, so
-    * values never change — only the per-user shuffle disappears; see
-    * the writer's scaladoc for the 100 TB argument). Falls back to the
-    * plain parquet read otherwise, which is what the round driver's
-    * fresh-session Verify/Bench runs always get.
-    */
-  def events(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.CorpusWriter.bucketedEvents(spark, dir)
-      .getOrElse(apply(spark, dir, "events"))
+    spark.read.parquet(s"$dir/$name.parquet")
 
   /** Epoch-seconds for an event-time column, robust to the physical type
     * the driver's generator emits for `events.ts` (it has changed across

@@ -144,6 +144,10 @@ final class ReferenceTables(spark: SparkSession,
   def isRegistered(name: String): Boolean =
     meta.keys.exists(_.equalsIgnoreCase(name))
 
+  /** Drops the webhook's tables: views and metadata first, then each
+    * table's content directory (through the Hadoop file system, so the
+    * checksum files go too).
+    */
   def delete(webhookId: String): Int = synchronized {
     val doomed = forWebhook(webhookId)
     doomed.foreach { m =>
@@ -152,6 +156,12 @@ final class ReferenceTables(spark: SparkSession,
     }
     if (doomed.nonEmpty) ReferenceTables.generations.incrementAndGet()
     persist()
+    contentDir.foreach { dir =>
+      doomed.foreach { m =>
+        val path = new Path(dir, m.qualifiedName)
+        path.getFileSystem(spark.sessionState.newHadoopConf()).delete(path, true)
+      }
+    }
     doomed.size
   }
 }

@@ -91,32 +91,42 @@ final class WebhookEngine(
   private val inFlight =
     new java.util.concurrent.ConcurrentSkipListSet[java.lang.Long]()
 
-  /** Receive one event: normalize path → route → validate JSON → audit
-    * raw → ACK, with the pipeline (filter/transform/deliver/audit)
-    * scheduled in the background. Returns the same
+  /** Receive one event: [[admit]] (route → validate JSON → audit raw) →
+    * ACK, with the pipeline (filter/transform/deliver/audit) scheduled
+    * in the background. Returns the same
     * `{"status":"accepted","event_id":…}` ack the reference returns,
     * BEFORE delivery happens — ack latency is decoupled from Spark job
     * time, matching the reference's deferred contract.
     */
-  def ingest(path: String, payloadJson: String): Either[IngestError, Ack] = {
+  def ingest(path: String, payloadJson: String): Either[IngestError, Ack] =
+    admit(path, payloadJson).map { case (webhook, raw) =>
+      val seq = ingestSeq.incrementAndGet()
+      inFlight.add(seq)
+      processPool.execute { () =>
+        try process(webhook, raw.id, payloadJson)
+        finally settled.synchronized {
+          inFlight.remove(seq)
+          settled.notifyAll()
+        }
+      }
+      Ack("accepted", raw.id)
+    }
+
+  /** The admission step HTTP and stream ingest share: normalize the
+    * path, route it to its webhook, check the payload parses as JSON,
+    * then write the raw audit row (with `id` and `tsMicros` when the
+    * caller fixes them). An unroutable or malformed event is rejected
+    * before its raw row exists.
+    */
+  private[graft] def admit(path: String, payloadJson: String,
+      id: Option[String] = None, tsMicros: Option[Long] = None)
+      : Either[IngestError, (Webhook, RawEvent)] = {
     val normalized = WebhookConfig.normalizePath(path)
     catalog.byPath(normalized) match {
       case None => Left(UnknownPath)
+      case Some(_) if !Json.isValid(payloadJson) => Left(InvalidJson)
       case Some(webhook) =>
-        if (!Json.isValid(payloadJson)) Left(InvalidJson)
-        else {
-          val raw = audit.logRaw(normalized, payloadJson)
-          val seq = ingestSeq.incrementAndGet()
-          inFlight.add(seq)
-          processPool.execute { () =>
-            try process(webhook, raw.id, payloadJson)
-            finally settled.synchronized {
-              inFlight.remove(seq)
-              settled.notifyAll()
-            }
-          }
-          Right(Ack("accepted", raw.id))
-        }
+        Right((webhook, audit.logRaw(normalized, payloadJson, id, tsMicros)))
     }
   }
 

@@ -84,9 +84,8 @@ object Dedup {
     * mutable timestamp column drifted.
     *
     * Scale shape: one full-outer join keyed on doc_id — co-located and
-    * shuffle-free when both snapshots are written with
-    * [[graft.operators.CorpusWriter.writeBucketed]] — comparing
-    * 128-bit digests computed in the scan projection, then a
+    * shuffle-free when both snapshots are stored bucketed by doc_id —
+    * comparing 128-bit digests computed in the scan projection, then a
     * |sources|-sized rollup. A removed doc reports under its OLD
     * source, everything else under the new one.
     */

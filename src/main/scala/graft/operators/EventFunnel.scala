@@ -258,7 +258,7 @@ object EventFunnel {
     * (user_id)-partitioned (sec, event_id) ordering, so Catalyst
     * plans one Exchange + one sort feeding two stacked Window
     * operators (the second consumes the first's session_id but needs
-    * no re-sort; zero Exchange on the bucketed events layout). The
+    * no re-sort; zero Exchange on a user_id-bucketed table). The
     * within-session constraint is `lead(session_id, 1|2) ==
     * session_id` on that same window — NOT a second window
     * partitioned by (user, session), which would re-shuffle. The
@@ -349,8 +349,8 @@ object EventFunnel {
     * Scale shape: NO window — the first event is `min(struct(sec,
     * event_id, event_type))` inside the same single user_id-keyed hash
     * aggregate that counts the user's conversions (map-side partial
-    * mins/sums; one corpus-sized shuffle, zero on the bucketed
-    * layout), then a |event_types|-row rollup. Rates are integer ppm
+    * mins/sums; one corpus-sized shuffle, zero on a user_id-
+    * bucketed table), then a |event_types|-row rollup. Rates are integer ppm
     * DIVs of exact longs.
     */
   def acquisitionAttribution(events: DataFrame,
@@ -384,7 +384,7 @@ object EventFunnel {
     *
     * Scale shape: two user_id-keyed filtered MIN aggregates and one
     * user_id equi-join (all co-partitioned — one shuffle key
-    * throughout, zero Exchange on the bucketed layout), then the
+    * throughout, zero Exchange on a user_id-bucketed table), then the
     * count-table percentile read: delays collapse to (cohort, delay)
     * counts (map-side partials; the distinct-delay domain is bounded
     * by the corpus time span in seconds, not by users), the window
@@ -616,8 +616,8 @@ object EventFunnel {
     * "which behaviors travel together" table that seeds feature
     * crosses and next-action candidate sets.
     *
-    * Scale shape: ONE corpus-sized user_id shuffle (zero on the
-    * bucketed events layout) feeds the sessionizing window; the
+    * Scale shape: ONE corpus-sized user_id shuffle (zero on a
+    * user_id-bucketed table) feeds the sessionizing window; the
     * per-session distinct-type sets come from a (user_id, session_id)
     * hash aggregate that introduces NO new exchange (the child is
     * already hash-partitioned on user_id ⊆ the grouping keys); pairs
@@ -730,7 +730,7 @@ object EventFunnel {
     * stickiness curve (q139's DAU/WAU is its tumbling-week cousin).
     *
     * Exact rolling distincts with ONE corpus-sized shuffle (zero on
-    * the bucketed events layout) and NO fan-out anywhere: the corpus
+    * a user_id-bucketed table) and NO fan-out anywhere: the corpus
     * collapses to per-user SORTED active-day sets in a single user_id
     * hash aggregate (map-side partial collect_sets absorb the event
     * stream; per-user sets are bounded by the span, the q22 group-size
@@ -854,8 +854,8 @@ object EventFunnel {
     * bijection for any long day, so pre-epoch days round-trip. The
     * spill never reaches past word w+1 because `windowDays ≤ 64`
     * (required): max bit position 63 + (W−1) < 128. The per-user word
-    * list keeps both aggs user_id-clustered (exchange-free on the
-    * bucketed events layout, one exchange on plain parquet — identical
+    * list keeps both aggs user_id-clustered (exchange-free on a
+    * user_id-bucketed table, one exchange on plain parquet — identical
     * to the set spelling); the merged word list has DISTINCT w per
     * user (real words are grouped; a virtual spill word w+1 is emitted
     * only when no real w+1 follows), so each (user, window-end day)
@@ -983,7 +983,7 @@ object EventFunnel {
     * max(0, k_users − users_before))`. The only window is over the
     * distinct-value table (the q154 caveat: |values|-sized by
     * construction, single partition is fine); the corpus-sized work is
-    * one user_id hash agg (zero exchanges on the bucketed layout).
+    * one user_id hash agg (zero exchanges on a user_id-bucketed table).
     * Covered·10⁶ lifts to DECIMAL(38,0) (int64 wraps at ~9·10¹²
     * events).
     */
@@ -1067,8 +1067,8 @@ object EventFunnel {
     * bot, so int64 would wrap on n·S2 long before the inputs do.
     *
     * Scale shape: one (user_id, day) fact-absorbing aggregate with
-    * map-side combine is the only corpus-sized op (bucket-local on the
-    * user_id-bucketed events layout — hash(user_id) already clusters
+    * map-side combine is the only corpus-sized op (bucket-local on
+    * a user_id-bucketed table — hash(user_id) already clusters
     * (user_id, day)); the per-user moment rollup runs on the collapsed
     * |user·days| table and the class rollup is 3 rows. Shares are
     * exact floored ppm (n_users·10⁶ fits int64 to ~9·10¹² users).
@@ -1107,7 +1107,7 @@ object EventFunnel {
     * timeouts from data instead of folklore.
     *
     * Scale shape: the only corpus-sized exchange is the per-user
-    * grouping (ZERO on the user_id-bucketed layout); gaps come from the
+    * grouping (ZERO on a user_id-bucketed table); gaps come from the
     * per-user sorted array (the q22 argument: per-user event counts are
     * bounded and do not grow with corpus size), the exploded gap rows
     * collapse map-side to ≤4 band counters per partition, and the final
@@ -1153,8 +1153,8 @@ object EventFunnel {
     * "sessions" are single-hit bounces or long trajectories before it
     * prices per-session features.
     *
-    * Scale shape: one per-user grouping (ZERO exchange on the bucketed
-    * events layout) builds the sorted second array; session sizes are
+    * Scale shape: one per-user grouping (ZERO exchange on a user_id-
+    * bucketed table) builds the sorted second array; session sizes are
     * derived INSIDE the array — boundary positions are the gaps
     * > gapSec, and sizes are the diffs of consecutive boundary edges —
     * so nothing event-sized crosses a second exchange. The exploded

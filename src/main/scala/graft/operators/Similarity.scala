@@ -32,16 +32,6 @@ object Similarity {
 
   private val Q = 1e12
 
-  /** True when `embs` is the quantized PROJECTION shape rather than a
-    * raw embeddings frame that happens to carry a same-named column
-    * (r16 ADVICE): the fast paths engage only when the projection
-    * column is present AND the frame lacks `embedding` — a frame
-    * carrying the floats is by definition not the projection, so the
-    * plain path (which every oracle gate verifies) wins any ambiguity.
-    */
-  private def fromProjection(embs: DataFrame, c: String): Boolean =
-    embs.columns.contains(c) && !embs.columns.contains("embedding")
-
   /** Exact integer-quantized dot product of two float-array columns
     * (sum of 64 pico-scaled longs — fits a long with 5 orders of
     * headroom for unit-ish vectors). Higher-order-function reference
@@ -1427,19 +1417,10 @@ object Similarity {
   def centroidShift(embs: DataFrame): DataFrame = {
     // Residual-vs-oracle disposition: ENGINE-FLOOR LEDGER row in
     // PERF_NOTES r15 (measured floor stage, scales, anchors).
-    // When handed the quantized projection (CorpusWriter.
-    // writeEmbQuantProjection), read its stored `qv` — the identical
-    // micro grid, int32-narrowed losslessly at write time — instead of
-    // re-deriving it from the floats; values are unchanged by
-    // construction (spec-pinned).
-    val qd =
-      if (fromProjection(embs, "qv"))
-        embs.select(col("label"),
-          posexplode(col("qv").cast("array<bigint>")).as(Seq("dim", "q")))
-      else embs.select(col("label"),
-        posexplode(expr("transform(embedding, x -> " +
-          "CAST(floor(CAST(x AS double) * 1000000 + 0.5) AS bigint))"))
-          .as(Seq("dim", "q")))
+    val qd = embs.select(col("label"),
+      posexplode(expr("transform(embedding, x -> " +
+        "CAST(floor(CAST(x AS double) * 1000000 + 0.5) AS bigint))"))
+        .as(Seq("dim", "q")))
     val ld = qd.groupBy(col("label"), col("dim"))
       .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
       .trackedPersist() // feeds the global rollup AND the shift join
@@ -1474,17 +1455,9 @@ object Similarity {
     */
   def normBands(embs: DataFrame): DataFrame = {
     // Residual-vs-oracle disposition: ENGINE-FLOOR LEDGER row in
-    // PERF_NOTES r15 (measured floor stage, scales, anchors) — closed
-    // in r16 where the quantized projection is deployed: the floor was
-    // the bare array<float> scan, and the projection's stored `n2q`
-    // (the identical pico self-dot, materialized at ingest) shrinks
-    // this gate's per-row read from the ~260-byte float array to 8
-    // bytes. Values unchanged by construction (spec-pinned).
-    val n2 =
-      if (fromProjection(embs, "n2q")) embs.select(col("label"), col("n2q"))
-      else embs.select(col("label"),
-        dotQ(col("embedding"), col("embedding")).as("n2q"))
-    n2
+    // PERF_NOTES r15 (measured floor stage, scales, anchors): the
+    // floor is the bare array<float> scan.
+    embs.select(col("label"), dotQ(col("embedding"), col("embedding")).as("n2q"))
       .select(col("label"), expr("n2q DIV 100000000000").as("band"))
       .groupBy(col("label"), col("band"))
       .agg(count(lit(1)).as("n"))
@@ -1602,14 +1575,9 @@ object Similarity {
     // oracle's HUGEINT list_sum keeps going — a silent-wrong-band
     // divergence on non-unit-normalized inputs (r13 ADVICE). The
     // decimal cost is bounded by the fixed ~1.3 M-pair budget.
-    // The quantized projection's stored `qv` is the same micro grid —
-    // cast back to bigint so the decimal accumulators below see the
-    // exact types (and values) the float-derived path produces.
-    val q = (if (fromProjection(embs, "qv"))
-        embs.select(col("vec_id"), col("qv").cast("array<bigint>").as("qv"))
-      else embs.select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) " +
-          "* 1000000 + 0.5) AS BIGINT))").as("qv")))
+    val q = embs.select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) " +
+        "* 1000000 + 0.5) AS BIGINT))").as("qv"))
       .withColumn("nrm2", expr(
         "aggregate(qv, CAST(0 AS DECIMAL(38,0)), " +
           "(acc, x) -> acc + CAST(x AS DECIMAL(38,0)) * x)"))

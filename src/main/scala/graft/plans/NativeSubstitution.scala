@@ -26,8 +26,7 @@ import graft.functions.{HexPrefixLong, TokenRunCount, WordRunCount}
   *
   *  - `size(regexp_extract_all(lower(x), '[a-z]+|[0-9]+|[^a-z0-9\s]'))`
   *    (the `regexp_count` replacement tree) →
-  *    `CAST(token_run_count(x) AS INT)` — ON by default (disable with
-  *    `spark.graft.substitute.tokenRunCount=false`), the measured ~9×
+  *    `CAST(token_run_count(x) AS INT)`, the measured ~9×
   *    regex→run-classifier win (q126, r9). Value-identical for every
   *    input since r11: [[TokenRunCount]] handles the two code points
   *    whose full lowercase involves an ASCII letter (U+212A KELVIN →
@@ -58,6 +57,10 @@ import graft.functions.{HexPrefixLong, TokenRunCount, WordRunCount}
   * Runs in the user-provided optimizer batch, i.e. AFTER
   * `RuntimeReplaceable` expansion — so `regexp_count` spellings are
   * already in their `size(regexp_extract_all(...))` form when matched.
+  *
+  * The rule has no switch of its own: a reference run that needs the
+  * interpreted spellings excludes it with Spark's
+  * `spark.sql.optimizer.excludedRules=graft.plans.NativeSubstitutionRule`.
   */
 object NativeSubstitutionRule extends Rule[LogicalPlan] {
 
@@ -129,43 +132,26 @@ object NativeSubstitutionRule extends Rule[LogicalPlan] {
     if (ok) Some(HexPrefixLong(h0, Literal(p0))) else None
   }
 
-  /** Flag read that RECOVERS to the default on a malformed value
-    * (ADVICE r10: `.toBoolean` threw IllegalArgumentException out of
-    * the optimizer, failing the whole query over a typo'd conf).
-    */
-  private def flag(name: String, default: Boolean): Boolean = {
-    val v = conf.getConfString(name, default.toString).trim
-    if (v.equalsIgnoreCase("true")) true
-    else if (v.equalsIgnoreCase("false")) false
-    else default
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val wordOn = flag("spark.graft.substitute.wordRunCount", default = true)
-    val tokenOn =
-      flag("spark.graft.substitute.tokenRunCount", default = true)
-    val hexOn = flag("spark.graft.substitute.hexPrefix", default = true)
-    if (!wordOn && !tokenOn && !hexOn) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
       // single evaluation of the 8-term structural match (ADVICE r10:
       // the guard-then-get shape ran it twice per matched Add during
       // fixed-point optimization); returning `a` unchanged is the
       // no-match identity transformDown expects
-      case a: Add if hexOn => rewriteHexSpelling(a).getOrElse(a)
+      case a: Add => rewriteHexSpelling(a).getOrElse(a)
       // size(filter(split(lower(x), ' '), t -> t <> ''))  [lower optional]
       case Size(ArrayFilter(
             StringSplit(str, Literal(sep, _), Literal(-1, IntegerType)),
             LambdaFunction(f, args, _)), false)
-          if wordOn && sep != null && sep.toString == " " &&
+          if sep != null && sep.toString == " " &&
             isNonEmptyTest(f, args) =>
         Cast(WordRunCount(stripLower(str)), IntegerType)
       // size(regexp_extract_all(lower(x), BPE_PATTERN[, 0]))
       case Size(RegExpExtractAll(Lower(x), Literal(pat, _),
             Literal(0, IntegerType)), false)
-          if tokenOn && pat != null && pat.toString == TokenPattern =>
+          if pat != null && pat.toString == TokenPattern =>
         Cast(TokenRunCount(x), IntegerType)
     }
-  }
 }
 
 /** Session-extension entry point: registers

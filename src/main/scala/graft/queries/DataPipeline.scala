@@ -1170,7 +1170,7 @@ object DataPipeline {
     //     the emitted counts are domain-independent.
     QueryDef(
       "q63_funnel",
-      (s, dir) => EventFunnel.funnel(graft.Tables.events(s, dir)),
+      (s, dir) => EventFunnel.funnel(graft.Tables(s, dir, "events")),
       Some("""WITH v AS (
              |  SELECT user_id, MIN(ts) AS t1 FROM events
              |  WHERE event_type = 'view' GROUP BY user_id
@@ -1202,7 +1202,7 @@ object DataPipeline {
     //     oracle from EPOCH(ts) — same integer weeks.
     QueryDef(
       "q64_retention",
-      (s, dir) => EventFunnel.retention(graft.Tables.events(s, dir)),
+      (s, dir) => EventFunnel.retention(graft.Tables(s, dir, "events")),
       Some("""WITH uw AS (
              |  SELECT DISTINCT user_id,
              |         CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 604800 AS wk
@@ -1270,7 +1270,7 @@ object DataPipeline {
     //     then a constant-size aggregate.
     QueryDef(
       "q67_transitions",
-      (s, dir) => EventFunnel.transitions(graft.Tables.events(s, dir)),
+      (s, dir) => EventFunnel.transitions(graft.Tables(s, dir, "events")),
       Some("""WITH seq AS (
              |  SELECT user_id, event_type,
              |         LEAD(event_type) OVER (PARTITION BY user_id
@@ -1546,7 +1546,7 @@ object DataPipeline {
     //     emits the sessions.
     QueryDef(
       "q75_session_features",
-      (s, dir) => EventFunnel.sessionFeatures(graft.Tables.events(s, dir)),
+      (s, dir) => EventFunnel.sessionFeatures(graft.Tables(s, dir, "events")),
       Some("""WITH e AS (
              |  SELECT user_id, event_id,
              |         CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS sec, value
@@ -2513,7 +2513,7 @@ object DataPipeline {
     //     cumulative table — deterministic, unlike approx_percentile.
     QueryDef(
       "q110_interarrival",
-      (s, dir) => EventFunnel.interArrival(graft.Tables.events(s, dir)),
+      (s, dir) => EventFunnel.interArrival(graft.Tables(s, dir, "events")),
       Some("""WITH e AS (
              |  SELECT user_id, event_type, event_id,
              |         CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS sec
@@ -4273,7 +4273,7 @@ object DataPipeline {
     //     via the (n DESC, steps ASC) total order.
     QueryDef(
       "q148_session_paths",
-      (s, dir) => EventFunnel.sessionPaths(graft.Tables.events(s, dir)),
+      (s, dir) => EventFunnel.sessionPaths(graft.Tables(s, dir, "events")),
       Some("""WITH e AS (
              |  SELECT user_id, event_id,
              |         CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS sec, event_type
@@ -4314,7 +4314,7 @@ object DataPipeline {
     QueryDef(
       "q149_transition_concentration",
       (s, dir) =>
-        EventFunnel.transitionConcentration(graft.Tables.events(s, dir)),
+        EventFunnel.transitionConcentration(graft.Tables(s, dir, "events")),
       Some("""WITH e AS (
              |  SELECT user_id, event_id,
              |         CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS sec, event_type
@@ -4358,7 +4358,7 @@ object DataPipeline {
     QueryDef(
       "q150_acquisition_attribution",
       (s, dir) =>
-        EventFunnel.acquisitionAttribution(graft.Tables.events(s, dir)),
+        EventFunnel.acquisitionAttribution(graft.Tables(s, dir, "events")),
       Some("""WITH e AS (
              |  SELECT user_id, event_id,
              |         CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS sec, event_type
@@ -4504,7 +4504,7 @@ object DataPipeline {
     //     cohort week.
     QueryDef(
       "q153_time_to_convert",
-      (s, dir) => EventFunnel.timeToConvert(graft.Tables.events(s, dir)),
+      (s, dir) => EventFunnel.timeToConvert(graft.Tables(s, dir, "events")),
       Some("""WITH e AS (
              |  SELECT user_id, event_type,
              |         CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS sec
@@ -4550,7 +4550,7 @@ object DataPipeline {
     //     deterministic under ties, no global row-ranking.
     QueryDef(
       "q154_rfm_segments",
-      (s, dir) => EventFunnel.rfmSegments(graft.Tables.events(s, dir)),
+      (s, dir) => EventFunnel.rfmSegments(graft.Tables(s, dir, "events")),
       Some("""WITH p AS (
              |  SELECT user_id,
              |         CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 86400 AS day,
@@ -4682,7 +4682,7 @@ object DataPipeline {
     //     double division — never an iterative/float-accumulating fit).
     QueryDef(
       "q158_volume_trend",
-      (s, dir) => EventFunnel.volumeTrend(graft.Tables.events(s, dir)),
+      (s, dir) => EventFunnel.volumeTrend(graft.Tables(s, dir, "events")),
       Some("""WITH d AS (
              |  SELECT event_type,
              |         CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 86400 AS day,
@@ -4748,7 +4748,7 @@ object DataPipeline {
     //     cross products, floored `//`/DIV on both sides).
     QueryDef(
       "q160_type_affinity",
-      (s, dir) => EventFunnel.typeAffinity(graft.Tables.events(s, dir)),
+      (s, dir) => EventFunnel.typeAffinity(graft.Tables(s, dir, "events")),
       Some("""WITH e AS (
              |  SELECT user_id, event_id,
              |         CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS sec, event_type
@@ -4793,7 +4793,7 @@ object DataPipeline {
     QueryDef(
       "q161_weekly_seasonality",
       (s, dir) =>
-        EventFunnel.weeklySeasonality(graft.Tables.events(s, dir)),
+        EventFunnel.weeklySeasonality(graft.Tables(s, dir, "events")),
       Some("""WITH d AS (
              |  SELECT event_type,
              |         ((CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 86400) + 3) % 7
@@ -4834,16 +4834,9 @@ object DataPipeline {
       "q162_dup_spread_census",
       (s, dir) => {
         val noLeg = array().cast("array<struct<source:string>>")
-        // resolves the documents DIGEST projection when one is
-        // deployed (CorpusWriter.writeDocDigestProjection): the stored
-        // `h` IS unhex(md5(text)) — identical values, and the scan
-        // drops the corpus text bytes, which the engine-floor
-        // decomposition measured as this gate's entire residual.
-        // Absent it, plain files.
-        val legs = graft.operators.CorpusWriter.docDigestProjection(s, dir)
-          .getOrElse(Tables(s, dir, "documents")
-            .select(col("doc_id"), unhex(md5(col("text"))).as("h"),
-              col("source")))
+        val legs = Tables(s, dir, "documents")
+          .select(col("doc_id"), unhex(md5(col("text"))).as("h"),
+            col("source"))
           .select(col("h"), explode(concat(
             array(struct(col("source").as("source"))),
             when(col("doc_id") % 7 === 0,
@@ -4877,10 +4870,7 @@ object DataPipeline {
              |       CAST(SUM(size - max_c) AS BIGINT) * 1000000
              |         // CAST(SUM(size) AS BIGINT) AS spill_ppm
              |FROM cl GROUP BY 1, 2 ORDER BY size, n_sources""".stripMargin),
-      // headline since r17 (VERDICT r16 ask #3): the digest-projection
-      // gate the repo's biggest r16 win lives on — in benchNames so the
-      // driver's own artifact tracks it round-over-round (plain leg =
-      // oracle-comparable control, bucketed leg shows the projection)
+      // headline since r17: the exact-dup census family in the bench set
       headline = true),
 
     // --- Per-source unigram drift vs the corpus mixture: exact
@@ -4925,7 +4915,7 @@ object DataPipeline {
     //     the straddling run is sliced arithmetically).
     QueryDef(
       "q166_power_users",
-      (s, dir) => EventFunnel.powerUserShare(graft.Tables.events(s, dir)),
+      (s, dir) => EventFunnel.powerUserShare(graft.Tables(s, dir, "events")),
       Some("""WITH uc AS (
              |  SELECT user_id, CAST(COUNT(*) AS BIGINT) AS c
              |  FROM events GROUP BY 1
@@ -4961,7 +4951,7 @@ object DataPipeline {
     //     table — never a per-day re-count or event-sized explode.
     QueryDef(
       "q167_rolling_active",
-      (s, dir) => EventFunnel.rollingActive(graft.Tables.events(s, dir)),
+      (s, dir) => EventFunnel.rollingActive(graft.Tables(s, dir, "events")),
       Some("""WITH ud AS (
              |  SELECT DISTINCT user_id,
              |         CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 86400 AS day
@@ -5043,7 +5033,7 @@ object DataPipeline {
     QueryDef(
       "q171_seasonal_anomalies",
       (s, dir) =>
-        EventFunnel.seasonalAnomalies(graft.Tables.events(s, dir)),
+        EventFunnel.seasonalAnomalies(graft.Tables(s, dir, "events")),
       Some("""WITH d AS (
              |  SELECT event_type,
              |         CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 86400 AS day,
@@ -5176,13 +5166,7 @@ object DataPipeline {
     //     means; see Similarity.centroidShift for the scale shape.
     QueryDef(
       "q179_centroid_shift",
-      // resolves the quantized projection when one is deployed
-      // (CorpusWriter.writeEmbQuantProjection): the stored `qv` is the
-      // same micro grid this operator derives per query — identical
-      // values, no per-row float→int transform. Absent it, plain files.
-      (s, dir) => Similarity.centroidShift(
-        graft.operators.CorpusWriter.embQuantProjection(s, dir)
-          .getOrElse(Tables(s, dir, "embeddings"))),
+      (s, dir) => Similarity.centroidShift(Tables(s, dir, "embeddings")),
       Some("""WITH qd AS (
              |  SELECT label,
              |         unnest(range(len(embedding))) AS dim,
@@ -5221,14 +5205,7 @@ object DataPipeline {
     //     integer tenth-of-unit-norm² bands — see Similarity.normBands.
     QueryDef(
       "q182_norm_bands",
-      // resolves the quantized projection when one is deployed: its
-      // stored `n2q` (the identical pico self-dot) turns this gate's
-      // per-row read from the ~260-byte float array into 8 bytes — the
-      // ENGINE-FLOOR LEDGER named the bare array<float> scan as q182's
-      // floor, and the projection deletes it. Absent it, plain files.
-      (s, dir) => Similarity.normBands(
-        graft.operators.CorpusWriter.embQuantProjection(s, dir)
-          .getOrElse(Tables(s, dir, "embeddings"))),
+      (s, dir) => Similarity.normBands(Tables(s, dir, "embeddings")),
       Some("""WITH n2 AS (
              |  SELECT label,
              |         list_sum(list_transform(embedding, x ->
@@ -5241,8 +5218,7 @@ object DataPipeline {
              |       CAST(COUNT(*) AS BIGINT) AS n
              |FROM n2 GROUP BY 1, 2
              |ORDER BY label, band""".stripMargin),
-      // headline since r17 (VERDICT r16 ask #3): same rationale as
-      // q162 — the quantized-projection gate, now driver-tracked
+      // headline since r17: the embedding-scan family in the bench set
       headline = true),
 
     // --- Exact nearest-rank value-percentile bands per event type
@@ -5279,12 +5255,9 @@ object DataPipeline {
       "q184_cross_source_matrix",
       (s, dir) => {
         val noLeg = array().cast("array<struct<source:string>>")
-        // digest projection resolution: see q162 (same legs, same
-        // stored-h identity argument)
-        val legs = graft.operators.CorpusWriter.docDigestProjection(s, dir)
-          .getOrElse(Tables(s, dir, "documents")
-            .select(col("doc_id"), unhex(md5(col("text"))).as("h"),
-              col("source")))
+        val legs = Tables(s, dir, "documents")
+          .select(col("doc_id"), unhex(md5(col("text"))).as("h"),
+            col("source"))
           .select(col("h"), explode(concat(
             array(struct(col("source").as("source"))),
             when(col("doc_id") % 7 === 0,
@@ -5315,7 +5288,7 @@ object DataPipeline {
     QueryDef(
       "q191_burstiness_census",
       (s, dir) =>
-        EventFunnel.burstinessCensus(graft.Tables.events(s, dir)),
+        EventFunnel.burstinessCensus(graft.Tables(s, dir, "events")),
       Some("""WITH ud AS (
              |  SELECT user_id,
              |         CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 86400 AS day,
@@ -5391,7 +5364,7 @@ object DataPipeline {
     //     counters).
     QueryDef(
       "q196_gap_band_census",
-      (s, dir) => EventFunnel.gapBandCensus(graft.Tables.events(s, dir)),
+      (s, dir) => EventFunnel.gapBandCensus(graft.Tables(s, dir, "events")),
       Some("""WITH e AS (SELECT user_id,
              |                  CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS sec
              |           FROM events),
@@ -5415,7 +5388,7 @@ object DataPipeline {
     //     ≤5 band counters cross the second exchange).
     QueryDef(
       "q197_session_depth_census",
-      (s, dir) => EventFunnel.sessionDepthCensus(graft.Tables.events(s, dir)),
+      (s, dir) => EventFunnel.sessionDepthCensus(graft.Tables(s, dir, "events")),
       Some("""WITH e AS (SELECT user_id,
              |                  CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS sec
              |           FROM events),
@@ -5452,7 +5425,7 @@ object DataPipeline {
     //     DECIMAL(38,0) products).
     QueryDef(
       "q198_ks_value_drift",
-      (s, dir) => EventFunnel.ksValueDrift(graft.Tables.events(s, dir)),
+      (s, dir) => EventFunnel.ksValueDrift(graft.Tables(s, dir, "events")),
       Some("""WITH ev AS (SELECT event_type AS t,
              |                   CAST(FLOOR(value*100 + 0.5) AS BIGINT) AS v
              |            FROM events),
@@ -5495,12 +5468,8 @@ object DataPipeline {
       // corpus size (r13 ADVICE). The adaptive arm is oracle-verified
       // end-to-end by q200_cosine_band_adaptive (below), whose oracle
       // computes the mods from COUNT(*) with cosineBandPlan's formula.
-      // resolves the quantized projection when one is deployed (the
-      // census quantizes to the same micro grid the projection stores).
       (s, dir) => Similarity.cosineBandCensus(
-        graft.operators.CorpusWriter.embQuantProjection(s, dir)
-          .getOrElse(Tables(s, dir, "embeddings")),
-        7, 11),
+        Tables(s, dir, "embeddings"), 7, 11),
       Some("""WITH q AS (
              |  SELECT vec_id,
              |         list_transform(embedding,

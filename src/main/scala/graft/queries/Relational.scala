@@ -116,14 +116,7 @@ object Relational {
         // are plain long cents sums (bounded by a key's ~30 items); the
         // brand-level finish reuses the 128-bit-safe exactSum, so the
         // final double is bit-identical to the direct formulation.
-        // The per-key frame resolves the partkey-clustered SECOND
-        // projection when one is deployed (C-Store-style; written by
-        // CorpusWriter.writePartProjection) — bucket partitioning on
-        // l_partkey deletes this rollup's corpus exchange, the remedy
-        // for the measured orderkey-layout regression (PERF_NOTES r13
-        // "the q03 counter-case"). Absent a projection, plain files.
-        val perKey = graft.operators.CorpusWriter.partProjection(s, dir)
-          .getOrElse(t(s, dir, "lineitem"))
+        val perKey = t(s, dir, "lineitem")
           .groupBy("l_partkey")
           .agg(sum("l_quantity").as("pk_qty"),
             sum(cents(col("l_extendedprice"))).as("pk_cents"),
@@ -701,11 +694,7 @@ object Relational {
         // corpus with unbounded power-user groups would use the Window
         // form instead. Integer seconds via Tables.epochSec (adaptive
         // to the testdata generation's physical ts type).
-        // Tables.events resolves to the user_id-bucketed layout when
-        // CorpusWriter.writeEvents registered one for this source — then
-        // even the remaining Exchange disappears (pinned in
-        // DataPipelineSpec).
-        val ev = Tables.events(s, dir)
+        val ev = t(s, dir, "events")
         ev.select(col("user_id"), Tables.epochSec(ev).as("sec"))
           .groupBy("user_id")
           .agg(count(lit(1)).as("n_events"),
@@ -718,23 +707,8 @@ object Relational {
                 (a, b) => b - a > 1800),
               x => x)).cast("long")).as("n_sessions"),
             col("n_events"))
-          // Anchor the presentation sort: a global ORDER BY range-
-          // partitions, and Spark's range sampler RECOMPUTES the
-          // sort's child for the bounds pass unless something below
-          // materializes it. On plain parquet the aggregation's hash
-          // Exchange is that point (the sampler re-reads shuffle
-          // files); on the bucketed layout the aggregation is
-          // exchange-free, so the bounds pass re-scanned and
-          // re-aggregated the WHOLE corpus — 2× the query, measured at
-          // the 200× replica (an inserted repartition doesn't survive:
-          // EnsureRequirements collapses adjacent exchanges). The
-          // lazy localCheckpoint materializes the |users|-row report
-          // (three longs per row, corpus-size-independent) on first
-          // compute; bounds pass and sort both read the blocks. At
-          // 100 TB this is the rule, not a tweak: a global sort over
-          // an exchange-free corpus aggregate must pin its child
-          // first or the engine pays the corpus twice.
-          .localCheckpoint(eager = false)
+          // the range sampler of the presentation sort re-reads the
+          // aggregation's shuffle files, not the corpus
           .orderBy("user_id")
       },
       Some("""WITH e AS (SELECT user_id, event_id,

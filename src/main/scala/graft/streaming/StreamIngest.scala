@@ -30,8 +30,11 @@ import graft.engine.WebhookEngine
   *    is some webhook's exact path (case-sensitive, the same match as
   *    WebhookCatalog.byPath) are collected; unroutable events drop,
   *    mirroring the reference's 404 (src/app.py:1068-1083);
-  *  - every routed event gets its raw-event audit row in the audit
-  *    buffer, all stamped with the batch start, then takes
+  *  - every routed event passes [[graft.engine.WebhookEngine.admit]],
+  *    the same route/validate/raw-audit step as HTTP ingest: a payload
+  *    that does not parse as JSON drops before its raw row, mirroring
+  *    the HTTP 400. The others get their raw-event audit row in the
+  *    audit buffer, all stamped with the batch start, then take
   *    [[graft.engine.WebhookEngine.prepare]] in arrival order: UDF
   *    rehydration, the filter and the transform, compiled once per
   *    payload shape and evaluated on the driver with no Spark job;
@@ -90,23 +93,23 @@ final class StreamIngest(engine: WebhookEngine,
     * pipeline, deliver the survivors, flush the audit log.
     */
   def processMicroBatch(batch: DataFrame, replayKey: String): Unit = {
-    val hooks = engine.catalog.list().map(w => w.sourcePath -> w).toMap
-    if (hooks.isEmpty) return
+    val paths = engine.catalog.list().map(_.sourcePath)
+    if (paths.isEmpty) return
     val tsMicros = engine.audit.nowMicros()
     // counts per (path, payload) across the whole batch, keyed by a
     // digest so only the counts, not the payloads, outlive each chunk
     val seen = mutable.HashMap[String, Int]()
     val routed = batch.select("source_path", "payload")
-      .where(col("source_path").isin(hooks.keys.toSeq: _*))
+      .where(col("source_path").isin(paths: _*))
     forEachDriverChunk(routed) { rows =>
-      val events = rows.map { r =>
+      val events = rows.flatMap { r =>
         val (path, payload) = (r.getString(0), r.getString(1))
         val key = StreamIngest.md5Hex(s"${path.length}:$path" +
           Option(payload).fold("")("|" + _))
         val occurrence = seen.updateWith(key)(n => Some(n.getOrElse(0) + 1)).get
         val id = StreamIngest.rawEventId(replayKey, path, occurrence, payload)
-        engine.audit.logRaw(path, payload, Some(id), Some(tsMicros))
-        (hooks(path), id, payload)
+        engine.admit(path, payload, Some(id), Some(tsMicros)).toOption
+          .map { case (w, raw) => (w, raw.id, payload) }
       }
       val survivors = events.flatMap { case (w, id, payload) =>
         engine.prepare(w, id, payload).toOption.map((w, id, _))

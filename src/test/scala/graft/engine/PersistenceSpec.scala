@@ -110,6 +110,26 @@ class PersistenceSpec extends SparkSpec {
     assert(e2.catalog.byPath("/gone").isEmpty)
   }
 
+  test("deleting a webhook removes its reference tables' content") {
+    val workDir = Files.createTempDirectory("graft-ref-delete").toString
+    val e1 = new WebhookEngine(spark, workDir)
+    val w = e1.register(WebhookConfig("/ref-gone", "https://example.com/x",
+      "SELECT * FROM {{payload}}", None, None)).toOption.get
+    e1.refTables.uploadCsv(w.id, "dims", "lookup", "k,v\n1,one\n2,two")
+    val dir = java.nio.file.Paths.get(workDir, "reference_tables",
+      e1.refTables.qualifiedName(w.id, "dims"))
+    assert(Files.list(dir).count() > 0)
+    e1.deleteWebhook(w.id)
+    assert(!Files.exists(dir), s"$dir outlived the delete")
+    assert(new WebhookEngine(spark, workDir).refTables.list().isEmpty)
+    // a re-upload under the same name after the delete still works
+    e1.refTables.uploadCsv(w.id, "dims", "lookup", "k,v\n3,three")
+    val e2 = new WebhookEngine(spark, workDir)
+    assert(e2.refTables.list().map(_.tableName) == Seq("dims"))
+    assert(spark.table(e2.refTables.qualifiedName(w.id, "dims"))
+      .collect().map(_.getString(1)).toSeq == Seq("three"))
+  }
+
   test("concurrent batch appends and buffer flushes lose no audit rows") {
     val s = spark
     import s.implicits._

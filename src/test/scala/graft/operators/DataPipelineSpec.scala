@@ -1006,380 +1006,6 @@ class DataPipelineSpec extends SparkSpec {
       (1L to 40L))
   }
 
-  test("bucketed tables join with zero Exchange on either side") {
-    val s = spark
-    import s.implicits._
-    val docsT = (1L to 200L).map(i => (i, s"text $i")).toDF("doc_id", "text")
-    val embsT = (1L to 200L).map(i => (i, (i % 10).toInt))
-      .toDF("vec_id", "label")
-    val savedAuto = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    val savedAdaptive =
-      s.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    try {
-      // force the shuffle-join path so the assertion pins BUCKETING as
-      // the thing that removed the Exchanges, not a broadcast
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      graft.operators.CorpusWriter.writeBucketed(docsT, "bj_docs", "doc_id", 8)
-      graft.operators.CorpusWriter.writeBucketed(embsT, "bj_embs", "vec_id", 8)
-      val j = s.table("bj_docs")
-        .join(s.table("bj_embs"), col("doc_id") === col("vec_id"))
-      assert(j.collect().length == 200)
-      val plan = j.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"expected bucket join, got:\n$plan")
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", savedAuto)
-      savedAdaptive match {
-        case Some(v) =>
-          s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
-        case None =>
-          s.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      }
-      s.sql("DROP TABLE IF EXISTS bj_docs")
-      s.sql("DROP TABLE IF EXISTS bj_embs")
-    }
-  }
-
-  test("writeOrderFacts: the co-bucketed fact pair substitutes only for " +
-    "its tagged source; order-grain join + pre-agg plan with zero " +
-    "orderkey Exchange and identical values") {
-    val s = spark
-    import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("factsrc").toString
-    val li = (1L to 80L).map(i => (i % 20, 100.0 + i, 0.05))
-      .toDF("l_orderkey", "l_extendedprice", "l_discount")
-    val ord = (0L until 20L).map(i => (i, i % 7))
-      .toDF("o_orderkey", "o_custkey")
-    li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    ord.write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    import graft.operators.CorpusWriter
-    Seq(CorpusWriter.DefaultLineitemTable, CorpusWriter.DefaultOrdersTable)
-      .foreach(CorpusWriter.dropBucketTable(s, wh, _))
-    val savedAuto = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    try {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      CorpusWriter.writeOrderFacts(
-        s.read.parquet(s"$dir/lineitem.parquet"),
-        s.read.parquet(s"$dir/orders.parquet"),
-        buckets = 4, sourceDir = Some(dir))
-      // substitution gated on the tagged source dir
-      assert(graft.Tables(s, dir, "lineitem").queryExecution.analyzed
-        .toString.contains(CorpusWriter.DefaultLineitemTable))
-      val dir2 = java.nio.file.Files.createTempDirectory("factsrc2").toString
-      li.write.mode("overwrite").parquet(s"$dir2/lineitem.parquet")
-      assert(!graft.Tables(s, dir2, "lineitem").queryExecution.analyzed
-        .toString.contains(CorpusWriter.DefaultLineitemTable))
-      // q163/q176-shaped order-grain chain: per-order pre-agg + okey
-      // join + custkey rollup
-      def shape(liDf: org.apache.spark.sql.DataFrame,
-          ordDf: org.apache.spark.sql.DataFrame) = liDf
-        .groupBy(col("l_orderkey"))
-        .agg(org.apache.spark.sql.functions
-          .sum(expr("CAST(floor(l_extendedprice*100 + 0.5) AS bigint)"))
-          .as("orev"))
-        .join(ordDf, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey"))
-        .agg(org.apache.spark.sql.functions.sum(col("orev")).as("c"))
-        .orderBy("o_custkey")
-      val bucketed = shape(graft.Tables(s, dir, "lineitem"),
-        graft.Tables(s, dir, "orders"))
-      val plain = shape(s.read.parquet(s"$dir/lineitem.parquet"),
-        s.read.parquet(s"$dir/orders.parquet"))
-      assert(bucketed.collect().toSeq == plain.collect().toSeq)
-      val bplan = bucketed.queryExecution.executedPlan.toString
-      val pplan = plain.queryExecution.executedPlan.toString
-      for (k <- Seq("l_orderkey", "o_orderkey")) {
-        assert(pplan.contains(s"Exchange hashpartitioning($k"),
-          s"plain path lost its $k shuffle?\n$pplan")
-        assert(!bplan.contains(s"Exchange hashpartitioning($k"),
-          s"bucketed layout still exchanges on $k:\n$bplan")
-      }
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", savedAuto)
-      Seq(CorpusWriter.DefaultLineitemTable, CorpusWriter.DefaultOrdersTable)
-        .foreach(CorpusWriter.dropBucketTable(s, wh, _))
-    }
-  }
-
-  test("writePartProjection: the partkey-clustered second projection " +
-    "substitutes into q03's per-key frame with zero partkey Exchange " +
-    "and identical values (deployed in r15 after the 200x A/B win)") {
-    val s = spark
-    val dir = "/root/testdata/sf0.001"
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    import graft.operators.CorpusWriter
-    CorpusWriter.dropBucketTable(s, wh,
-      CorpusWriter.DefaultLineitemByPartTable)
-    val plain = graft.SparkEntry.queries("q03_join_broadcast_dim")(s, dir)
-    val plainRows = plain.collect().toSeq
-    assert(plain.queryExecution.executedPlan.toString
-      .contains("Exchange hashpartitioning(l_partkey"),
-      "plain path lost its partkey shuffle?")
-    try {
-      CorpusWriter.writePartProjection(
-        s.read.parquet(s"$dir/lineitem.parquet"), buckets = 4,
-        sourceDir = Some(dir))
-      assert(CorpusWriter.partProjection(s, dir).isDefined)
-      // a DIFFERENT source dir must not resolve the projection
-      assert(CorpusWriter.partProjection(s,
-        "/root/testdata/sf0.01").isEmpty)
-      val proj = graft.SparkEntry.queries("q03_join_broadcast_dim")(s, dir)
-      assert(!proj.queryExecution.executedPlan.toString
-        .contains("Exchange hashpartitioning(l_partkey"),
-        "projection leg still exchanges on l_partkey:\n" +
-          proj.queryExecution.executedPlan.toString)
-      assert(proj.collect().toSeq == plainRows)
-    } finally CorpusWriter.dropBucketTable(s, wh,
-      CorpusWriter.DefaultLineitemByPartTable)
-  }
-
-  test("writeEmbQuantProjection: the quantized embeddings projection " +
-    "substitutes into q179/q182/q199 with identical values, is " +
-    "source-gated, and q182's scan narrows to (label, n2q)") {
-    val s = spark
-    val dir = "/root/testdata/sf0.001"
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    import graft.operators.CorpusWriter
-    CorpusWriter.dropBucketTable(s, wh,
-      CorpusWriter.DefaultEmbQuantTable)
-    val gates = Seq("q179_centroid_shift", "q182_norm_bands",
-      "q199_cosine_band_census")
-    val plainRows = gates.map(n =>
-      n -> graft.SparkEntry.queries(n)(s, dir).collect().toSeq).toMap
-    try {
-      assert(CorpusWriter.writeEmbQuantProjection(
-        s.read.parquet(s"$dir/embeddings.parquet"), buckets = 4,
-        sourceDir = Some(dir)))
-      assert(CorpusWriter.embQuantProjection(s, dir).isDefined)
-      // a DIFFERENT source dir must not resolve the projection
-      assert(CorpusWriter.embQuantProjection(s,
-        "/root/testdata/sf0.01").isEmpty)
-      // value identity on every consumer gate: the stored integer
-      // forms are the exact grids the float path derives per query
-      for (n <- gates) {
-        val proj = graft.SparkEntry.queries(n)(s, dir)
-        assert(proj.queryExecution.analyzed.toString
-          .contains(CorpusWriter.DefaultEmbQuantTable),
-          s"$n did not resolve the projection")
-        assert(proj.collect().toSeq == plainRows(n), s"$n values drifted")
-      }
-      // the q182 win mechanism: its scan reads 8-byte n2q + label, not
-      // the float array — visible as the projection scan's ReadSchema
-      val q182 = graft.SparkEntry.queries("q182_norm_bands")(s, dir)
-      val scan = q182.queryExecution.executedPlan.collectLeaves()
-        .map(_.toString).mkString("\n")
-      // (the table NAME contains "embeddings" — test the schema type)
-      assert(scan.contains("n2q") && !scan.contains("array<float>"),
-        s"q182 projection scan still reads the float array:\n$scan")
-      // int32 narrowing is lossless where written: stored qv re-widened
-      // equals the float-derived bigint grid on every row
-      val mism = s.table(CorpusWriter.DefaultEmbQuantTable)
-        .select(col("vec_id"), col("qv").cast("array<bigint>").as("pqv"),
-          col("n2q").as("pn2q"))
-        .join(s.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(floor(CAST(x AS double)" +
-              " * 1000000 + 0.5) AS bigint))").as("fqv"),
-            graft.operators.Similarity.dotQ(col("embedding"),
-              col("embedding")).as("fn2q")), "vec_id")
-        .where(col("pqv") =!= col("fqv") || col("pn2q") =!= col("fn2q"))
-        .count()
-      assert(mism == 0L, s"$mism rows drifted between stored and derived")
-    } finally CorpusWriter.dropBucketTable(s, wh,
-      CorpusWriter.DefaultEmbQuantTable)
-  }
-
-  test("writeDocDigestProjection: the documents digest projection " +
-    "substitutes into q162/q184 with identical values, is source-gated," +
-    " and the gates' scans drop the text column") {
-    val s = spark
-    val dir = "/root/testdata/sf0.001"
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    import graft.operators.CorpusWriter
-    CorpusWriter.dropBucketTable(s, wh,
-      CorpusWriter.DefaultDocDigestTable)
-    val gates = Seq("q162_dup_spread_census", "q184_cross_source_matrix")
-    val plainRows = gates.map(n =>
-      n -> graft.SparkEntry.queries(n)(s, dir).collect().toSeq).toMap
-    try {
-      CorpusWriter.writeDocDigestProjection(
-        s.read.parquet(s"$dir/documents.parquet"), buckets = 4,
-        sourceDir = Some(dir))
-      assert(CorpusWriter.docDigestProjection(s, dir).isDefined)
-      assert(CorpusWriter.docDigestProjection(s,
-        "/root/testdata/sf0.01").isEmpty)
-      for (n <- gates) {
-        val proj = graft.SparkEntry.queries(n)(s, dir)
-        assert(proj.queryExecution.analyzed.toString
-          .contains(CorpusWriter.DefaultDocDigestTable),
-          s"$n did not resolve the projection")
-        assert(proj.collect().toSeq == plainRows(n), s"$n values drifted")
-        // the win mechanism: no scan in the projection plan reads the
-        // corpus text bytes
-        val scans = proj.queryExecution.executedPlan.collectLeaves()
-          .map(_.toString).mkString("\n")
-        assert(!scans.contains("text:string"),
-          s"$n projection plan still scans the text column:\n$scans")
-      }
-      // stored digest equals the text-derived digest on every row
-      val mism = s.table(CorpusWriter.DefaultDocDigestTable)
-        .select(col("doc_id"), col("h").as("ph"))
-        .join(s.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id"), unhex(md5(col("text"))).as("fh")),
-          "doc_id")
-        .where(col("ph") =!= col("fh"))
-        .count()
-      assert(mism == 0L, s"$mism rows drifted between stored and derived")
-    } finally CorpusWriter.dropBucketTable(s, wh,
-      CorpusWriter.DefaultDocDigestTable)
-  }
-
-  test("sessionize over user_id-bucketed events plans with zero Exchange") {
-    val s = spark
-    import s.implicits._
-    // 3 users, one with a >30-min gap → 2 sessions
-    val ev = Seq(
-      (1L, 100L), (1L, 200L), (1L, 2100L),
-      (2L, 50L), (2L, 60L),
-      (3L, 10L)).toDF("user_id", "sec")
-    try {
-      graft.operators.CorpusWriter.writeBucketed(ev, "sess_ev", "user_id", 4)
-      val bucketed = CorpusWriter.sessionizeShape(s.table("sess_ev"))
-      val plan = bucketed.queryExecution.executedPlan.toString
-      // the groupBy(user_id) consumes the bucket distribution directly —
-      // the per-query event shuffle q22 pays on plain parquet is gone
-      assert(!plan.contains("Exchange"),
-        s"expected bucket-fed aggregate, got:\n$plan")
-      val rows = bucketed.orderBy("user_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      assert(rows == Seq((1L, 2L, 3L), (2L, 1L, 2L), (3L, 1L, 1L)))
-      // same values as the plain (shuffling) layout
-      val plain = CorpusWriter.sessionizeShape(ev)
-      assert(plain.queryExecution.executedPlan.toString.contains("Exchange"))
-      assert(plain.orderBy("user_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq == rows)
-    } finally {
-      s.sql("DROP TABLE IF EXISTS sess_ev")
-    }
-  }
-
-  test("writeEvents layout: funnel/sessionFeatures/interArrival go " +
-      "user-shuffle-free with identical values") {
-    val s = spark
-    import s.implicits._
-    // the real events schema (event_id, ts, user_id, event_type, value,
-    // props); user 1 completes the funnel and has a >30-min session gap
-    val ev = Seq(
-      (1L, 100L, 1L, "view", 2.0), (2L, 400L, 1L, "click", 1.0),
-      (3L, 900L, 1L, "purchase", 5.0), (4L, 3000L, 1L, "view", 0.5),
-      (5L, 50L, 2L, "view", 1.0), (6L, 55L, 2L, "click", 1.0),
-      (7L, 60L, 2L, "view", 1.0), (8L, 10L, 3L, "click", 0.0))
-      .toDF("event_id", "sec", "user_id", "event_type", "value")
-      .select(col("event_id"), expr("timestamp_seconds(sec)").as("ts"),
-        col("user_id"), col("event_type"), col("value"),
-        lit("{}").as("props"))
-    val savedAuto = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    val wh0 = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    CorpusWriter.dropBucketTable(s, wh0, "evb_ops")
-    try {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      graft.operators.CorpusWriter.writeEvents(ev, "evb_ops", buckets = 4,
-        sourceDir = Some("/marker/src"))
-      // the source tag gates substitution: right dir resolves, wrong
-      // dir does not
-      assert(graft.operators.CorpusWriter
-        .bucketedEvents(s, "/marker/src", "evb_ops").isDefined)
-      assert(graft.operators.CorpusWriter
-        .bucketedEvents(s, "/other/dir", "evb_ops").isEmpty)
-      val b = s.table("evb_ops")
-      def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
-        df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
-      for ((name, op) <- Seq[(String,
-          org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
-        ("funnel", EventFunnel.funnel(_)),
-        ("sessionFeatures", EventFunnel.sessionFeatures(_)),
-        ("interArrival", EventFunnel.interArrival(_)),
-        ("sessionPaths", EventFunnel.sessionPaths(_)),
-        ("transitionConcentration", EventFunnel.transitionConcentration(_)),
-        ("acquisitionAttribution", EventFunnel.acquisitionAttribution(_)),
-        ("timeToConvert", EventFunnel.timeToConvert(_)),
-        ("rfmSegments", EventFunnel.rfmSegments(_)),
-        ("typeAffinity", EventFunnel.typeAffinity(_)),
-        ("rollingActive", EventFunnel.rollingActive(_)),
-        ("powerUserShare", EventFunnel.powerUserShare(_)))) {
-        val plain = op(ev)
-        val bucketed = op(b)
-        assert(canon(bucketed) == canon(plain), s"$name values diverge")
-        // the corpus-sized per-user Exchange exists on plain parquet and
-        // is GONE on the bucketed layout (the scan's
-        // HashPartitioning(user_id) satisfies every per-user
-        // distribution, including (user_id, event_type) by the subset
-        // rule); only presentation sorts / 1-row global counts may
-        // still exchange
-        val bplan = bucketed.queryExecution.executedPlan.toString
-        val pplan = plain.queryExecution.executedPlan.toString
-        assert(pplan.contains("Exchange hashpartitioning(user_id"),
-          s"$name plain path lost its user shuffle?\n$pplan")
-        assert(!bplan.contains("Exchange hashpartitioning(user_id"),
-          s"$name still shuffles on user_id over the bucketed layout:\n$bplan")
-      }
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", savedAuto)
-      CorpusWriter.dropBucketTable(s, wh0, "evb_ops")
-    }
-  }
-
-  test("Tables.events substitutes the bucketed layout only for its " +
-      "tagged source") {
-    val s = spark
-    import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("evsrc").toString
-    val ev = Seq((1L, 10L, 7L, "view", 1.0))
-      .toDF("event_id", "sec", "user_id", "event_type", "value")
-      .select(col("event_id"), expr("timestamp_seconds(sec)").as("ts"),
-        col("user_id"), col("event_type"), col("value"),
-        lit("{}").as("props"))
-    val dir2 = java.nio.file.Files.createTempDirectory("evsrc2").toString
-    ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    ev.write.mode("overwrite").parquet(s"$dir2/events.parquet")
-    // a previous JVM's run may have left the warehouse dir behind with
-    // no catalog entry (saveAsTable then fails LOCATION_ALREADY_EXISTS);
-    // the warehouse-aware drop clears both
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    CorpusWriter.dropBucketTable(s, wh,
-      graft.operators.CorpusWriter.DefaultEventsTable)
-    try {
-      // no layout registered → plain parquet read
-      assert(graft.Tables.events(s, dir).inputFiles
-        .forall(_.contains(dir.stripPrefix("/"))))
-      graft.operators.CorpusWriter.writeEvents(ev, sourceDir = Some(dir))
-      // registered for THIS dir → catalog table; schema unchanged
-      val resolved = graft.Tables.events(s, dir)
-      assert(resolved.inputFiles.forall(
-        _.contains(graft.operators.CorpusWriter.DefaultEventsTable)))
-      assert(resolved.schema.fieldNames.toSeq ==
-        ev.schema.fieldNames.toSeq)
-      // a DIFFERENT source still reads its own parquet
-      assert(graft.Tables.events(s, dir2).inputFiles
-        .forall(!_.contains(graft.operators.CorpusWriter.DefaultEventsTable)))
-      // REGENERATING the source parquet at the same path invalidates
-      // the layout (ADVICE r10: path equality alone would serve last
-      // generation's rows): the recorded content fingerprint no longer
-      // matches, so the read falls back to the fresh plain parquet
-      ev.union(ev.withColumn("event_id", col("event_id") + 1))
-        .write.mode("overwrite").parquet(s"$dir/events.parquet")
-      val stale = graft.Tables.events(s, dir)
-      assert(stale.inputFiles.forall(
-        !_.contains(graft.operators.CorpusWriter.DefaultEventsTable)),
-        "regenerated source must not resolve to the stale bucketed table")
-      assert(stale.count() == 2)
-    } finally {
-      CorpusWriter.dropBucketTable(s, wh,
-        graft.operators.CorpusWriter.DefaultEventsTable)
-    }
-  }
-
   test("dedupBlockingPlan: k=0 default switches to two-level at the " +
       "measured crossover") {
     import graft.operators.Similarity

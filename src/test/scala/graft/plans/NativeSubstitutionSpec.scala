@@ -27,6 +27,15 @@ class NativeSubstitutionSpec extends SparkSpec {
   private def optimized(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.optimizedPlan.toString
 
+  /** Runs `body` with the rule excluded through Spark's own optimizer
+    * conf: the reference path for the interpreted spellings.
+    */
+  private def withoutRule[T](body: => T): T = {
+    val k = "spark.sql.optimizer.excludedRules"
+    s.conf.set(k, NativeSubstitutionRule.ruleName)
+    try body finally s.conf.unset(k)
+  }
+
   test("word spelling rewrites to word_run_count and keeps values") {
     texts.createOrReplaceTempView("nst")
     val df = s.sql("SELECT id, size(filter(split(lower(text), ' '), " +
@@ -70,14 +79,13 @@ class NativeSubstitutionSpec extends SparkSpec {
     assert(optimized(on).contains("tokenruncount"), optimized(on))
     val onVals = on.collect().map(r =>
       (r.getLong(0), if (r.isNullAt(1)) null else r.getInt(1))).toMap
-    try {
-      s.conf.set("spark.graft.substitute.tokenRunCount", "false")
+    withoutRule {
       val off = s.sql(q)
       assert(!optimized(off).contains("tokenruncount"), optimized(off))
       val offVals = off.collect().map(r =>
         (r.getLong(0), if (r.isNullAt(1)) null else r.getInt(1))).toMap
       assert(onVals == offVals)
-    } finally s.conf.unset("spark.graft.substitute.tokenRunCount")
+    }
     // regexp_count spells the same replacement tree and rewrites too
     val rc = s.sql("SELECT regexp_count(lower(text), " +
       "'[a-z]+|[0-9]+|[^a-z0-9\\\\s]') AS c FROM nst WHERE id = 4")
@@ -99,28 +107,12 @@ class NativeSubstitutionSpec extends SparkSpec {
     val on = s.sql(q)
     assert(optimized(on).contains("tokenruncount"), optimized(on))
     val got = on.collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-    try {
-      s.conf.set("spark.graft.substitute.tokenRunCount", "false")
+    withoutRule {
       val ref = s.sql(q).collect().map(r => (r.getLong(0), r.getInt(1))).toMap
       assert(got == ref, s"native $got != regex $ref")
-    } finally s.conf.unset("spark.graft.substitute.tokenRunCount")
+    }
     // aKb lowers to akb: ONE run; aİb lowers to ai̇b: run + mark + run
     assert(got == Map(1L -> 1, 2L -> 3, 3L -> 4, 4L -> 1, 5L -> 6))
-  }
-
-  test("malformed conf values recover to the default, never throw") {
-    texts.createOrReplaceTempView("nst")
-    val wq = "SELECT size(filter(split(lower(text), ' '), " +
-      "t -> t <> '')) AS c FROM nst WHERE id = 1"
-    try {
-      // a typo'd flag must not fail the query out of the optimizer
-      // (ADVICE r10: .toBoolean threw IllegalArgumentException); it
-      // recovers to the flag's default — ON for wordRunCount
-      s.conf.set("spark.graft.substitute.wordRunCount", "enabled")
-      val df = s.sql(wq)
-      assert(optimized(df).contains("wordruncount"), optimized(df))
-      assert(df.collect().head.getInt(0) == 3)
-    } finally s.conf.unset("spark.graft.substitute.wordRunCount")
   }
 
   test("hex-prefix spelling fuses to hex_prefix_long and keeps values") {
@@ -131,13 +123,12 @@ class NativeSubstitutionSpec extends SparkSpec {
     val on = s.sql(q)
     assert(optimized(on).contains("hexprefixlong"), optimized(on))
     val onVals = on.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    try {
-      s.conf.set("spark.graft.substitute.hexPrefix", "false")
+    withoutRule {
       val off = s.sql(q)
       assert(!optimized(off).contains("hexprefixlong"), optimized(off))
       val offVals = off.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(onVals == offVals)
-    } finally s.conf.unset("spark.graft.substitute.hexPrefix")
+    }
     // an offset start (the h2 = chars 9..16 spelling) fuses too
     val mid = s.sql("SELECT " + graft.operators.Dedup
       .hexToLongSql("md5(coalesce(text, ''))", 9, "instr") +
@@ -162,11 +153,11 @@ class NativeSubstitutionSpec extends SparkSpec {
 
   test("word rule can be disabled by conf") {
     texts.createOrReplaceTempView("nst")
-    try {
-      s.conf.set("spark.graft.substitute.wordRunCount", "false")
+    withoutRule {
       val df = s.sql("SELECT size(filter(split(lower(text), ' '), " +
-        "t -> t <> '')) AS c FROM nst")
-      assert(!optimized(df).contains("wordruncount"))
-    } finally s.conf.unset("spark.graft.substitute.wordRunCount")
+        "t -> t <> '')) AS c FROM nst WHERE id = 1")
+      assert(!optimized(df).contains("wordruncount"), optimized(df))
+      assert(df.collect().head.getInt(0) == 3)
+    }
   }
 }

@@ -403,6 +403,44 @@ class StreamIngestSpec extends SparkSpec {
     assert(ids() == first) // replaying the batch reproduces the same id set
   }
 
+  test("malformed stream payloads drop before their raw row, like HTTP 400") {
+    val s = spark
+    import s.implicits._
+    val delivered = new java.util.concurrent.atomic.AtomicInteger()
+    def engine() = newEngine((_, _, _) => {
+      delivered.incrementAndGet()
+      graft.engine.Delivery.Result(success = true, Some(200), "ok")
+    })
+    val hook = WebhookConfig("/malformed", "https://example.com/sink",
+      "SELECT * FROM {{payload}}", None, None)
+    val bad = Seq("{not json", """{"a": 1""", "'single'")
+    val e = engine()
+    e.register(hook)
+    bad.foreach(b =>
+      assert(e.ingest("/malformed", b) ==
+        Left(graft.engine.WebhookEngine.InvalidJson), b))
+    val ingest = new StreamIngest(e)
+    val jobs = jobsIn(ingest.processMicroBatch(
+      bad.map("/malformed" -> _).toDF("source_path", "payload"), "bad|1"))
+    assert(jobs == 0, s"$jobs jobs for an all-malformed batch")
+    assert(delivered.get == 0)
+    assert(e.audit.rawEvents().count() == 0L)
+    assert(e.audit.transformedEvents().count() == 0L)
+    // valid neighbours keep the ids they get in a batch without them
+    val good = Seq("""{"a": 1}""", """{"a": 1}""", """{"b": 2}""")
+    def rawIds(payloads: Seq[String]): Set[String] = {
+      val eng = engine()
+      eng.register(hook)
+      new StreamIngest(eng).processMicroBatch(
+        payloads.map("/malformed" -> _).toDF("source_path", "payload"), "mix|1")
+      eng.adHocQuery("SELECT id FROM raw_events").toOption.get
+        .map(_.head.asInstanceOf[String]).toSet
+    }
+    val mixed = rawIds(Seq(bad(0), good(0), bad(1), good(1), good(2), bad(2)))
+    assert(mixed.size == 3)
+    assert(mixed == rawIds(good))
+  }
+
   test("micro-batch: broken filter audits Error rows") {
     val s = spark
     import s.implicits._
