@@ -1,6 +1,5 @@
 package graft.engine
 
-import java.io.IOException
 import java.time.{Instant, LocalDate}
 import java.util.UUID
 
@@ -25,17 +24,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * event). Readers see buffer ∪ parquet via union, so audit queries are
   * read-your-writes without forcing a flush per event.
   *
-  * A buffer flush (every `flushEvery` rows, [[flush]], and so every
-  * stream micro-batch and every clean stop) runs on the calling thread,
-  * with no Spark job, through [[DriverParquet]]: one file per `dt` day,
-  * each written under a hidden temp name (which [[compact]] skips too)
-  * and renamed only after every file of the flush is written; the buffer
-  * is cleared only after the renames. A crash before the renames
-  * therefore leaves nothing visible, a crash between them leaves some
-  * days visible (a retried flush writes those rows again, as a retried
-  * Spark append would). Durability is as before: neither path fsyncs,
-  * so rows a flush returned from are in the OS page cache, not
-  * necessarily on the device.
+  * Every parquet file of both tables is written on the calling thread,
+  * with no Spark job, through [[DriverParquet]] (which describes when a
+  * file becomes visible): a buffer flush (every `flushEvery` rows,
+  * [[flush]], and so every stream micro-batch and every clean stop)
+  * writes one file per `dt` day and clears the buffer only after the
+  * files are renamed into place, so a failed flush keeps its rows
+  * buffered and a retried one writes them once.
   */
 final class AuditLog(spark: SparkSession, workDir: String,
     flushEvery: Int = 5000) {
@@ -77,7 +72,7 @@ final class AuditLog(spark: SparkSession, workDir: String,
       e
     }
 
-  /** Timestamp micros → date-partitioned parquet append. */
+  /** Timestamp micros → the tables' `timestamp` and `dt` columns. */
   private def withDt(df: DataFrame): DataFrame =
     df.withColumn("timestamp",
         timestamp_micros(col("timestampMicros")))
@@ -129,36 +124,26 @@ final class AuditLog(spark: SparkSession, workDir: String,
 
   def flush(): Unit = synchronized { flushRaw(); flushTransformed() }
 
-  /** Distributed raw-event append: the DataFrame (`id`, `source_path`,
-    * `payload`) writes straight to the date-partitioned parquet from the
-    * executors, all rows stamped `tsMicros`.
-    *
-    * Every append to a table, this one and the buffer flushes, runs
-    * under this instance's monitor: the default FileOutputCommitter
-    * stages every job under the SAME `<dir>/_temporary` and deletes it
-    * on commit, so two simultaneous appends to one directory can destroy
-    * each other's staging. A cloud deployment with a staging-free
-    * committer (magic committer, Iceberg/Delta) could append
-    * concurrently.
+  /** Appends `df`'s rows (`id`, `source_path`, `payload`) to the raw
+    * table, all stamped `tsMicros`, and flushes the buffer. The append is
+    * driver-side: the rows are collected into the buffer, so a local
+    * DataFrame (a `Seq(...).toDF`, which every caller passes) costs no
+    * Spark job.
     */
   def logRawBatch(df: DataFrame, tsMicros: Long): Unit = synchronized {
-    df.select(col("id"), timestamp_micros(lit(tsMicros)).as("timestamp"),
-        col("source_path"), col("payload"))
-      .withColumn("dt", to_date(col("timestamp")))
-      .write.mode("append").partitionBy("dt").parquet(rawDir)
+    rawBuf ++= df.withColumn("timestampMicros", lit(tsMicros))
+      .as[RawEvent].collect()
+    flushRaw()
   }
 
-  /** Distributed transformed-event append (same contract as
-    * [[logRawBatch]]); the caller supplies every column except the
-    * timestamp.
+  /** Transformed-event append, as [[logRawBatch]]; the caller supplies
+    * every column except the timestamp.
     */
   def logTransformedBatch(df: DataFrame, tsMicros: Long): Unit = synchronized {
-    df.select(col("id"), col("raw_event_id"), col("webhook_id"),
-        timestamp_micros(lit(tsMicros)).as("timestamp"),
-        col("transformed_payload"), col("destination_url"), col("success"),
-        col("response_code").cast("int"), col("response_body"))
-      .withColumn("dt", to_date(col("timestamp")))
-      .write.mode("append").partitionBy("dt").parquet(trDir)
+    trBuf ++= df.withColumn("timestampMicros", lit(tsMicros))
+      .withColumn("response_code", col("response_code").cast("int"))
+      .as[TransformedEvent].collect()
+    flushTransformed()
   }
 
   /** The parquet under `dir` ∪ the buffer, read with the table's known
@@ -256,65 +241,47 @@ final class AuditLog(spark: SparkSession, workDir: String,
     * one-or-more parquet files per table, so a long-running stream
     * accumulates millions of small files — the classic streaming-sink
     * pathology. Each `dt=` partition holding more than
-    * `maxFilesPerPartition` data files is rewritten as one file
-    * (write-new-then-delete-old, so a crash mid-compaction leaves
-    * duplicate rows rather than lost audit history; the deterministic
-    * raw-event ids make duplicates detectable downstream). Buffered
-    * rows are untouched — compaction only touches committed files.
+    * `maxFilesPerPartition` data files is rewritten as one file through
+    * [[DriverParquet]], with no Spark job (write-new-then-delete-old, so
+    * a crash mid-compaction leaves duplicate rows rather than lost audit
+    * history; the deterministic raw-event ids make duplicates detectable
+    * downstream). Buffered rows are untouched — compaction only touches
+    * committed files.
     *
     * Returns the number of partitions rewritten.
     */
   def compact(maxFilesPerPartition: Int = 8): Int = synchronized {
-    compactDir(rawDir, maxFilesPerPartition) +
-      compactDir(trDir, maxFilesPerPartition)
+    compactDir(rawDir, rawSchema, maxFilesPerPartition) +
+      compactDir(trDir, trSchema, maxFilesPerPartition)
   }
 
-  /** Lists, renames and deletes through the Hadoop file system, like
-    * the flush, so its checksum file system moves and removes each data
-    * file's `.crc` along with the file.
+  /** Reads a partition's files by name with the table's `schema`, so
+    * files that older versions wrote with Spark, in another column
+    * order, map onto the flush's; lists and deletes through the Hadoop
+    * file system, so its checksum file system removes each data file's
+    * `.crc` along with the file.
     */
-  private def compactDir(dir: String, maxFiles: Int): Int = {
+  private def compactDir(dir: String, schema: StructType,
+      maxFiles: Int): Int = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return 0
-    def ls(p: Path): Seq[Path] = fs.listStatus(p).toSeq.map(_.getPath)
-    val partitions = fs.listStatus(root).toSeq
+    fs.listStatus(root).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("dt="))
       .map(_.getPath)
-    partitions.count { part =>
-      val dataFiles = ls(part).filter(_.getName.endsWith(".parquet"))
-      if (dataFiles.size <= maxFiles) false
-      else {
-        // partition-column-free read/write: parquet files under a dt=
-        // leaf never store the dt column, so the rewritten file matches
-        // the survivors' schema exactly.
-        // Read EXACTLY the files listed above, not the directory: a
-        // concurrent batch append committing a file between the listing
-        // and a directory read would get its rows copied into the
-        // compacted file while the original survives the delete below —
-        // a permanent duplicate, not just a transient race.
-        val tmp = new Path(root,
-          s".compact-${UUID.randomUUID().toString.take(8)}")
-        spark.read.parquet(dataFiles.map(_.toString): _*)
-          .coalesce(1)
-          .write.parquet(tmp.toString)
-        val rewritten = ls(tmp).filter(_.getName.endsWith(".parquet"))
-        // new files in first, old files out after — a reader whose plan
-        // listed files before this swap fails loudly on the deleted
-        // originals at action time and recovers via
-        // retryOnCompactionRace with a fresh listing (same rows: the
-        // compacted file is a superset-equal rewrite of the originals)
-        val moved = rewritten.map { f =>
-          val dest = new Path(part,
-            s"compacted-${UUID.randomUUID().toString}.parquet")
-          if (!fs.rename(f, dest))
-            throw new IOException(s"could not rename $f to $dest")
-          dest
+      .count { part =>
+        // rewrites EXACTLY the files listed here; new file in first, old
+        // files out after — a reader whose plan listed files before the
+        // swap fails on the deleted originals and recovers via
+        // retryOnCompactionRace with a fresh listing (same rows)
+        val files = fs.listStatus(part).toSeq
+          .filter(_.getPath.getName.endsWith(".parquet"))
+        files.size > maxFiles && {
+          DriverParquet.write(spark, schema,
+            Seq(part -> DriverParquet.read(spark, schema, files)))
+          files.foreach(f => fs.delete(f.getPath, false))
+          true
         }
-        dataFiles.foreach(fs.delete(_, false))
-        fs.delete(tmp, true) // _SUCCESS etc.
-        moved.nonEmpty
       }
-    }
   }
 }

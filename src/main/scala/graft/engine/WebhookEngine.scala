@@ -2,6 +2,7 @@ package graft.engine
 
 import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.databind.DeserializationFeature
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The event pipeline driver (reference P11, `process_webhook`
@@ -461,9 +462,13 @@ final case class TrRow(id: String, webhookId: String, timestampIso: String,
     transformedJson: String, destinationUrl: String, success: Boolean,
     responseCode: Option[Int], responseBody: String)
 
-/** Minimal JSON validity check via Jackson (ships with Spark). */
+/** JSON validity via Jackson (ships with Spark), as the reference's
+  * `json.loads`: one value, whitespace around it allowed; empty input and
+  * anything after the value are invalid.
+  */
 object Json {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
   def isValid(s: String): Boolean =
-    try { mapper.readTree(s); true } catch { case NonFatal(_) => false }
+    try !mapper.readTree(s).isMissingNode catch { case NonFatal(_) => false }
 }

@@ -9,8 +9,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{LocalFileSystem, Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, timestamp_micros, to_date}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, timestamp_micros, to_date}
 
 /** The audit buffers' driver-side parquet flush against the Spark append
   * it replaced, and the flush's temp-then-rename visibility.
@@ -132,10 +132,12 @@ class AuditLogSpec extends SparkSpec {
   }
 
   /** An audit log under a new `prefix` dir whose one `dt=` partition
-    * holds three driver-flushed and three batch-written files.
+    * holds three files of each kind: driver-flushed, batch-appended, and
+    * written by Spark in the column order older versions' batch append
+    * used (`id`, `timestamp`, `source_path`, `payload`).
     */
-  private def mixedFiles(prefix: String): (String, AuditLog) = {
-    val s = spark
+  private def mixedFiles(prefix: String,
+      s: SparkSession = spark): (String, AuditLog) = {
     import s.implicits._
     val dir = tmpDir(prefix)
     val audit = new AuditLog(s, dir)
@@ -145,18 +147,36 @@ class AuditLogSpec extends SparkSpec {
       audit.flush()
       audit.logRawBatch(Seq((s"batch-$i", "/p", s"""{"b": $i}"""))
         .toDF("id", "source_path", "payload"), ts)
+      Seq((s"spark-$i", "/p", s"""{"s": $i}"""))
+        .toDF("id", "source_path", "payload")
+        .select(col("id"), timestamp_micros(lit(ts)).as("timestamp"),
+          col("source_path"), col("payload"))
+        .withColumn("dt", to_date(col("timestamp")))
+        .write.mode("append").partitionBy("dt").parquet(s"$dir/raw_events")
     }
     (dir, audit)
+  }
+
+  /** The entries directly under the raw table's directory other than
+    * `dt=` partitions: only the `_SUCCESS` marker (and its checksum)
+    * that the Spark-written files came with.
+    */
+  private def assertOnlyPartitions(dir: String): Unit = {
+    val others = Files.list(Paths.get(dir, "raw_events")).iterator().asScala
+      .map(_.getFileName.toString).filterNot(_.startsWith("dt=")).toSet
+    assert(others.subsetOf(Set("_SUCCESS", "._SUCCESS.crc")), others)
   }
 
   test("compaction keeps every row over driver-written and batch-written files") {
     val (dir, audit) = mixedFiles("graft-flush-mixed")
     val before = rows(audit.rawEvents())
-    assert(before.size == 6)
-    assert(dataFiles(dir).size >= 6)
+    assert(before.size == 9)
+    assert(dataFiles(dir).size == 9)
     assert(audit.compact(maxFilesPerPartition = 2) == 1)
     assert(dataFiles(dir).size == 1)
     assert(rows(audit.rawEvents()) == before)
+    assert(rows(new AuditLog(spark, dir).rawEvents()) == before)
+    assertOnlyPartitions(dir)
   }
 
   test("compaction leaves no checksum file without its data file") {
@@ -171,6 +191,23 @@ class AuditLogSpec extends SparkSpec {
       val data = crc.getFileName.toString.stripPrefix(".").stripSuffix(".crc")
       assert(Files.exists(crc.resolveSibling(data)), s"orphan checksum $crc")
     }
+    assertOnlyPartitions(dir)
+  }
+
+  test("a compaction whose write fails keeps every original file and row") {
+    val s = spark.newSession()
+    s.conf.set("fs.file.impl", classOf[RenameFailingFs].getName)
+    s.conf.set("fs.file.impl.disable.cache", "true")
+    val (dir, audit) = mixedFiles("graft-compact-rename", s)
+    val (files, before) = (walk(dir).toSet, rows(audit.rawEvents()))
+    RenameFailingFs.failing = true
+    try intercept[java.io.IOException](audit.compact(maxFilesPerPartition = 2))
+    finally RenameFailingFs.failing = false
+    assert(walk(dir).toSet == files) // originals kept, temp files gone
+    assert(rows(audit.rawEvents()) == before)
+    assert(audit.compact(maxFilesPerPartition = 2) == 1) // a retry compacts
+    assert(dataFiles(dir).size == 1)
+    assert(rows(audit.rawEvents()) == before)
   }
 
   test("a flush whose rename fails keeps its rows buffered and invisible on disk") {

@@ -237,13 +237,6 @@ class EventProcessingSpec extends SparkSpec {
     * plans a query per step even where its local relation needs no job).
     */
   private def countJobs[T](body: => T): (Int, Int, T) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     val queries = new java.util.concurrent.atomic.AtomicInteger()
     val queryListener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String,
@@ -255,18 +248,11 @@ class EventProcessingSpec extends SparkSpec {
         queries.incrementAndGet(); ()
       }
     }
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
     spark.listenerManager.register(queryListener)
-    val out =
-      try body
-      finally {
-        org.apache.spark.ListenerBusDrain(sc)
-        sc.removeSparkListener(listener)
-        spark.listenerManager.unregister(queryListener)
-      }
-    (jobs.get(), queries.get(), out)
+    try {
+      val (jobs, out) = jobsIn(body)
+      (jobs, queries.get(), out)
+    } finally spark.listenerManager.unregister(queryListener)
   }
 
   test("row-wise events launch no Spark job after the first compile") {
@@ -355,6 +341,63 @@ class EventProcessingSpec extends SparkSpec {
     assert(jobs == 0, s"$jobs jobs")
     assert(out.exists(jsonEq(_,
       """{"id":"auth-1","full_name":"John Doe","floor":3}""")), out)
+  }
+
+  test("gateway set-up as the benchmark does it launches no Spark job") {
+    val s = spark
+    import s.implicits._
+    val e = newEngine((_, _, _) => Delivery.Result(success = true, Some(200), "ok"))
+    val events = Seq(
+      "/setup/nested" -> """{"type": "push", "repo": {"name": "graft"}}""",
+      "/setup/array" -> """[{"sku": "a", "qty": 2}, {"sku": "b", "qty": 3}]""",
+      "/setup/refjoin" -> authEvent(1, "jdoe"),
+      "/setup/udf" -> """{"email": "jdoe@corp.example"}""")
+    def register(path: String, q: String, filter: Option[String] = None) =
+      e.register(WebhookConfig(path, "https://example.com/sink", q, filter,
+        None)).toOption.get.id
+    val (jobs, acks) = jobsIn {
+      // hook first, then its table or UDF, then the final transform
+      val ids = events.map { case (p, _) =>
+        p -> register(p, "SELECT * FROM {{payload}}")
+      }.toMap
+      val users = e.refTables.uploadCsv(ids("/setup/refjoin"), "users", "",
+        usersCsv).qualifiedName
+      val domain = e.udfs.register(ids("/setup/udf"), "domain_of",
+        """def domain_of(email: String): String = email.split("@").last""")
+        .toOption.get.qualifiedName
+      register("/setup/nested", "SELECT type, repo.name AS repo FROM {{payload}}",
+        Some("type = 'push'"))
+      register("/setup/array", "SELECT sku, qty * 2 AS dbl FROM {{payload}}")
+      register("/setup/refjoin", "SELECT e.id, u.full_name FROM {{payload}} e " +
+        s"LEFT JOIN $users u ON e.username = u.username")
+      register("/setup/udf", s"SELECT $domain(email) AS domain FROM {{payload}}")
+      // a past day of audit history through the batch appenders
+      val ts = e.audit.nowMicros() - 86400000000L
+      val rows = (1 to 500).map(i => (s"pre-$i", "/setup/nested", s"""{"n": $i}"""))
+      e.audit.logRawBatch(rows.toDF("id", "source_path", "payload"), ts)
+      e.audit.logTransformedBatch(rows.map { case (id, path, payload) =>
+        (s"out-$id", id, ids(path), payload, "https://example.com/sink", true,
+          200, "ok")
+      }.toDF("id", "raw_event_id", "webhook_id", "transformed_payload",
+        "destination_url", "success", "response_code", "response_body"), ts)
+      val acks = events.map { case (p, body) => e.ingest(p, body) }
+      e.drain()
+      acks
+    }
+    assert(jobs == 0, s"$jobs jobs")
+    assert(acks.forall(_.isRight), acks)
+    assert(e.audit.rawEvents().count() == 504L)
+    assert(e.audit.transformedEvents().count() == 504L)
+    val out = e.audit.transformedEvents()
+      .where(!$"raw_event_id".startsWith("pre-"))
+      .select("success", "transformed_payload").collect()
+    assert(out.forall(_.getBoolean(0)), out.toSeq)
+    Seq("""{"type":"push","repo":"graft"}""",
+      """{"results":[{"sku":"a","dbl":4},{"sku":"b","dbl":6}]}""",
+      """{"id":"auth-1","full_name":"John Doe"}""",
+      """{"domain":"corp.example"}""").foreach { want =>
+      assert(out.exists(r => jsonEq(r.getString(1), want)), want)
+    }
   }
 
   test("reference-table join events launch no Spark job after the first compile") {

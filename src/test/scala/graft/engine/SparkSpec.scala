@@ -47,6 +47,28 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpec.spark
 
+  /** The Spark jobs `body` launches, and its result. The listener bus is
+    * drained before and after, so jobs of earlier actions are not
+    * counted and every job of `body` is.
+    */
+  def jobsIn[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (jobs.get(), out)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** The reference's canonical sample payload (tests/conftest.py:85-98). */
   val samplePayload: String =
     """{"field1": "value1", "field2": "value2",

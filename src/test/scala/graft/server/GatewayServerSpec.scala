@@ -110,6 +110,28 @@ class GatewayServerSpec extends SparkSpec {
     }
   }
 
+  test("empty bodies and trailing content are 400 and write no raw row") {
+    withServer { (server, base) =>
+      req(s"$base/register", "POST",
+        """{"source_path": "/strict-hook", "destination_url": "https://example.com/x",
+          | "transform_query": "SELECT * FROM {{payload}}"}""".stripMargin)
+      Seq("", "   ", """{"a": 1} xyz""", """{"a": 1}{"b": 2}""", "[1,2]]")
+        .foreach { b =>
+          val r = req(s"$base/strict-hook", "POST", b, key = None)
+          assert(r.statusCode() == 400, s"'$b'")
+          assert(mapper.readTree(r.body()).get("detail").asText() ==
+            "Invalid JSON payload", s"'$b'")
+        }
+      // whitespace around one value, and a top-level scalar, stay valid
+      Seq(" {\"a\": 1}\n", "null", "42").foreach { b =>
+        assert(req(s"$base/strict-hook", "POST", b, key = None)
+          .statusCode() == 200, s"'$b'")
+      }
+      server.engine.drain()
+      assert(server.engine.audit.rawEvents().count() == 3L)
+    }
+  }
+
   test("/query write rejection → 400 (test_api_endpoints.py:237-250)") {
     withServer { (_, base) =>
       val r = req(s"$base/query", "POST",
@@ -241,6 +263,10 @@ class GatewayServerSpec extends SparkSpec {
       val n = mapper.readTree(r.body())
       assert(n.get("payload").get("ping").asBoolean())
       assert(n.get("message").asText().contains("Echo"))
+      val empty = req(s"$base/echo-webhook", "POST", "")
+      assert(empty.statusCode() == 500)
+      assert(mapper.readTree(empty.body()).get("detail").asText() ==
+        "Invalid JSON")
     }
   }
 

@@ -183,24 +183,6 @@ class StreamIngestSpec extends SparkSpec {
     assert(auditSnapshot(e) == perEventSnapshot())
   }
 
-  /** Spark jobs `action` launches. */
-  private def jobsIn(action: => Unit): Int = {
-    val s = spark
-    val counter = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    s.sparkContext.addSparkListener(listener)
-    try {
-      action
-      org.apache.spark.ListenerBusDrain(s.sparkContext)
-      counter.get()
-    } finally s.sparkContext.removeSparkListener(listener)
-  }
-
   /** Spark jobs one micro-batch of `n` events `{"v": i}` to `path`
     * launches.
     */
@@ -210,7 +192,7 @@ class StreamIngestSpec extends SparkSpec {
     import s.implicits._
     jobsIn(ingest.processMicroBatch(
       (1 to n).map(i => path -> s"""{"v": $i}""")
-        .toDF("source_path", "payload"), key))
+        .toDF("source_path", "payload"), key))._1
   }
 
   test("row-wise transforms run O(1) Spark jobs per (webhook, batch)") {
@@ -257,7 +239,7 @@ class StreamIngestSpec extends SparkSpec {
       e.audit.logTransformed(raw.id, "w", "{}", "https://example.com/sink",
         success = true, Some(200), "ok")
     }
-    assert(jobsIn(e.audit.flush()) == 0)
+    assert(jobsIn(e.audit.flush())._1 == 0)
     assert(e.audit.rawEvents().count() == 40L)
   }
 
@@ -413,14 +395,15 @@ class StreamIngestSpec extends SparkSpec {
     })
     val hook = WebhookConfig("/malformed", "https://example.com/sink",
       "SELECT * FROM {{payload}}", None, None)
-    val bad = Seq("{not json", """{"a": 1""", "'single'")
+    val bad = Seq("{not json", """{"a": 1""", "'single'", "", "   ",
+      """{"a": 1} xyz""", """{"a": 1}{"b": 2}""", "[1,2]]")
     val e = engine()
     e.register(hook)
     bad.foreach(b =>
       assert(e.ingest("/malformed", b) ==
         Left(graft.engine.WebhookEngine.InvalidJson), b))
     val ingest = new StreamIngest(e)
-    val jobs = jobsIn(ingest.processMicroBatch(
+    val (jobs, _) = jobsIn(ingest.processMicroBatch(
       bad.map("/malformed" -> _).toDF("source_path", "payload"), "bad|1"))
     assert(jobs == 0, s"$jobs jobs for an all-malformed batch")
     assert(delivered.get == 0)
