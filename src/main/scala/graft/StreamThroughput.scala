@@ -13,10 +13,10 @@ import graft.streaming.StreamIngest
   * Two webhook shapes bound the contract:
   *  - `proj`: a projection transform, compiled once per payload shape
   *    and evaluated on the driver with no Spark job (printed as
-  *    `set-oriented`, the label earlier rounds' output used);
-  *  - `agg`: a LIMIT transform, which runs per event on the Spark path
-  *    (printed as `per-event-fallback`). The printed ratio is the
-  *    compiled path's advantage over it.
+  *    `compiled`);
+  *  - `agg`: a `LIMIT 1` transform, which runs per event on the Spark
+  *    path (printed as `limit-1`). The printed ratio is the compiled
+  *    transform's advantage over it.
   *
   * A third shape, `latency`, reruns `proj` against a destination with
   * simulated per-call latency (default 50 ms) — the regime real HTTP
@@ -379,9 +379,9 @@ object StreamThroughput {
       eps
     }
 
-    val proj = run("/proj", nProj, "set-oriented")
-    val agg = run("/agg", nAgg, "per-event-fallback")
-    println(f"[throughput] set-oriented channel advantage: ${proj / agg}%.0fx")
+    val proj = run("/proj", nProj, "compiled")
+    val agg = run("/agg", nAgg, "limit-1")
+    println(f"[throughput] compiled transform advantage over LIMIT 1: ${proj / agg}%.0fx")
     // latency-bound regime: 2000 events → 1000 survivors, each delivery
     // sleeping latencyMs; sequential handoff would pay 1000 × latency
     delayMs = latencyMs

@@ -3,12 +3,15 @@ package graft.streaming
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 import java.util.HexFormat
+import java.util.concurrent.{Callable, ExecutionException, Future,
+  LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.DriverRowReader
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.engine.WebhookEngine
@@ -23,31 +26,34 @@ import graft.engine.WebhookEngine
   * Each micro-batch runs on the driver, through the same per-event
   * pipeline as HTTP ingest:
   *
-  *  - the batch comes to the driver once, in chunks of at most
-  *    `maxSurvivorsInDriver` rows ([[forEachDriverChunk]]: one
-  *    `limit(cap + 1)` collect for a batch under the cap, the only Spark
-  *    job of a warm batch). Only rows whose `source_path`
-  *    is some webhook's exact path (case-sensitive, the same match as
-  *    WebhookCatalog.byPath) are collected; unroutable events drop,
-  *    mirroring the reference's 404 (src/app.py:1068-1083);
-  *  - every routed event passes [[graft.engine.WebhookEngine.admit]],
-  *    the same route/validate/raw-audit step as HTTP ingest: a payload
-  *    that does not parse as JSON drops before its raw row, mirroring
-  *    the HTTP 400. The others get their raw-event audit row in the
-  *    audit buffer, all stamped with the batch start, then take
-  *    [[graft.engine.WebhookEngine.prepare]] in arrival order: UDF
-  *    rehydration, the filter and the transform, compiled once per
-  *    payload shape and evaluated on the driver with no Spark job;
-  *    filtered-out and failed events are audited there;
-  *  - the survivors deliver on a bounded pool
-  *    ([[graft.engine.WebhookEngine.deliverKept]]), so one slow
-  *    destination does not serialize the batch;
+  *  - the batch's rows come to the driver in chunks of at most
+  *    `maxSurvivorsInDriver` rows
+  *    ([[org.apache.spark.sql.execution.DriverRowReader]]): a batch with
+  *    no shuffle in its lineage, which is what a streaming source hands
+  *    foreachBatch, is read on this thread with no Spark job; any other
+  *    is read with `toLocalIterator`. A batch under the cap is read whole
+  *    before its first event is admitted;
+  *  - each row then takes one pass, in arrival order:
+  *    [[graft.engine.WebhookEngine.admit]], the same route/validate/
+  *    raw-audit step as HTTP ingest (the path is normalized and routed
+  *    as HTTP routes it; an unroutable event drops, mirroring the
+  *    reference's 404 (src/app.py:1068-1083), and a payload that does
+  *    not parse as JSON drops before its raw row, mirroring the HTTP
+  *    400; raw rows are stamped with the batch start); then
+  *    [[graft.engine.WebhookEngine.prepare]]: UDF rehydration, the
+  *    filter and the transform, compiled once per payload shape and
+  *    evaluated on the driver with no Spark job (filtered-out and failed
+  *    events are audited there); then a survivor goes straight to a
+  *    bounded delivery pool ([[graft.engine.WebhookEngine.deliverKept]]),
+  *    so its delivery overlaps the preparation of the rows after it and
+  *    one slow destination does not serialize the batch. The chunk ends
+  *    when every delivery it started has finished;
   *  - the batch ends with `audit.flush()`: its raw and outcome rows are
   *    on disk when foreachBatch returns, which is when Structured
   *    Streaming commits the batch. The flush encodes the parquet on this
-  *    thread with no Spark job (graft.engine.AuditLog), so what a small
-  *    batch pays beyond its per-event work is the collect and the
-  *    trigger's own overhead (offset and commit logs).
+  *    thread with no Spark job (graft.engine.AuditLog), so a warm batch
+  *    launches no Spark job at all; what it pays beyond its per-event
+  *    work is the trigger's own overhead (offset and commit logs).
   *
   * Exactly-once notes: raw-event ids are DETERMINISTIC per stream —
   * uuid-shaped md5 of (queryName|batchId, path, occurrence#, payload),
@@ -66,7 +72,7 @@ final class StreamIngest(engine: WebhookEngine,
     compactEveryBatches: Int = 64,
     maxSurvivorsInDriver: Int = 65536) {
 
-  /** Routed rows materialized on the driver across all batches. */
+  /** Routed rows (their path names a webhook) read across all batches. */
   val driverCollectedEvents = new AtomicLong(0L)
 
   /** Largest single driver-resident chunk observed — tests pin this
@@ -88,35 +94,39 @@ final class StreamIngest(engine: WebhookEngine,
       }
       .start()
 
-  /** Process one micro-batch DataFrame (`source_path`, `payload`): route
-    * and audit raw on the driver, run each event through the per-event
-    * pipeline, deliver the survivors, flush the audit log.
+  /** Process one micro-batch DataFrame (`source_path`, `payload`): admit,
+    * prepare and hand each event to delivery in one pass on the driver,
+    * then flush the audit log.
     */
   def processMicroBatch(batch: DataFrame, replayKey: String): Unit = {
-    val paths = engine.catalog.list().map(_.sourcePath)
-    if (paths.isEmpty) return
+    if (engine.catalog.list().isEmpty) return
     val tsMicros = engine.audit.nowMicros()
     // counts per (path, payload) across the whole batch, keyed by a
     // digest so only the counts, not the payloads, outlive each chunk
     val seen = mutable.HashMap[String, Int]()
-    val routed = batch.select("source_path", "payload")
-      .where(col("source_path").isin(paths: _*))
-    forEachDriverChunk(routed) { rows =>
-      val events = rows.flatMap { r =>
-        val (path, payload) = (r.getString(0), r.getString(1))
-        val key = StreamIngest.md5Hex(s"${path.length}:$path" +
-          Option(payload).fold("")("|" + _))
-        val occurrence = seen.updateWith(key)(n => Some(n.getOrElse(0) + 1)).get
-        val id = StreamIngest.rawEventId(replayKey, path, occurrence, payload)
-        engine.admit(path, payload, Some(id), Some(tsMicros)).toOption
-          .map { case (w, raw) => (w, raw.id, payload) }
-      }
-      val survivors = events.flatMap { case (w, id, payload) =>
-        engine.prepare(w, id, payload).toOption.map((w, id, _))
-      }
-      parallelDeliver(survivors) { case (w, id, out) =>
-        engine.deliverKept(w, id, out)
-      }
+    DriverRowReader.foreachChunk(batch.select("source_path", "payload"),
+      maxSurvivorsInDriver) { rows =>
+      maxDriverChunkRows.getAndUpdate(m => math.max(m, rows.length.toLong))
+      val deliveries = ArrayBuffer[Future[Unit]]()
+      try rows.foreach {
+        case (null, _) => () // a null path routes nowhere
+        case (path, payload) =>
+          val key = StreamIngest.md5Hex(s"${path.length}:$path" +
+            Option(payload).fold("")("|" + _))
+          val occurrence =
+            seen.updateWith(key)(n => Some(n.getOrElse(0) + 1)).get
+          val id = StreamIngest.rawEventId(replayKey, path, occurrence, payload)
+          val admitted = engine.admit(path, payload, Some(id), Some(tsMicros))
+          if (admitted != Left(WebhookEngine.UnknownPath))
+            driverCollectedEvents.incrementAndGet()
+          admitted.foreach { case (w, raw) =>
+            engine.prepare(w, raw.id, payload).foreach { out =>
+              deliveries += deliveryPool.submit(new Callable[Unit] {
+                def call(): Unit = engine.deliverKept(w, raw.id, out)
+              })
+            }
+          }
+      } finally deliveries.foreach(awaitUnwrapped)
     }
     engine.audit.flush()
     // epoch maintenance: every micro-batch appends files, so without
@@ -128,81 +138,34 @@ final class StreamIngest(engine: WebhookEngine,
 
   private val batchesProcessed = new AtomicLong(0L)
 
-  /** One shared bounded delivery pool per StreamIngest instance instead
-    * of a fresh pool per batch. Daemon threads: the pool lives for the
-    * instance (one per attached stream) and dies with the JVM. Delivery
-    * tasks never submit back into the pool, so the fixed bound cannot
-    * deadlock.
+  /** The bounded delivery pool: one slow destination call (30 s timeout
+    * each) must not stall the whole batch, and the reference offers no
+    * ordering contract to preserve (its per-event asyncio background
+    * tasks interleave freely). `deliverKept` is thread-safe (stateless
+    * delivery fn, synchronized audit buffer). Its daemon threads end
+    * after a few idle seconds, so an instance that stops receiving
+    * batches holds none. Delivery tasks never submit back into the
+    * pool, so the fixed bound cannot deadlock.
     */
-  private val DeliveryParallelism = 16
-  private lazy val deliveryPool =
-    java.util.concurrent.Executors.newFixedThreadPool(DeliveryParallelism,
-      (r: Runnable) => {
+  private val deliveryPool = {
+    val pool = new ThreadPoolExecutor(16, 16, 3L, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
         val t = new Thread(r, "graft-delivery-worker")
         t.setDaemon(true); t
       })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
 
   /** Blocks on a pool task and rethrows the ORIGINAL failure, not the
     * ExecutionException wrapper — callers' exception taxonomy must not
     * change relative to running the task inline.
     */
-  private def awaitUnwrapped[T](f: java.util.concurrent.Future[T]): T =
+  private def awaitUnwrapped[T](f: Future[T]): T =
     try f.get()
     catch {
-      case e: java.util.concurrent.ExecutionException =>
-        throw Option(e.getCause).getOrElse(e)
+      case e: ExecutionException => throw Option(e.getCause).getOrElse(e)
     }
-
-  /** Bounded-parallel per-survivor delivery: one slow destination call
-    * (30 s timeout each) must not stall the whole batch, and the
-    * reference offers no ordering contract to preserve (its per-event
-    * asyncio background tasks interleave freely). `deliverKept` is
-    * thread-safe (stateless delivery fn, synchronized audit buffer).
-    */
-  private def parallelDeliver[T](rows: Array[T])(fn: T => Unit): Unit =
-    if (rows.length <= 1) rows.foreach(fn)
-    else rows.map(r =>
-      deliveryPool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = fn(r)
-      })).foreach(awaitUnwrapped)
-
-  /** Materializes `df` on the driver in chunks of at most
-    * [[maxSurvivorsInDriver]] rows. One pass, `limit(cap + 1).collect()`,
-    * brings a batch under the cap to the driver whole (a single job over
-    * a one-partition source; `limit` scans more partitions in further
-    * jobs only while it has not reached its count). Only a batch past the
-    * cap pays a count, then is repartitioned to ≤-cap partitions and
-    * streamed one partition at a time via toLocalIterator, so after the
-    * probe the driver holds one ≤-cap chunk at a time (plus
-    * toLocalIterator's current ≤-cap partition buffer).
-    */
-  private def forEachDriverChunk(df: DataFrame)(
-      handle: Array[org.apache.spark.sql.Row] => Unit): Unit = {
-    // an over-cap probe is dropped here, before the chunked pass
-    Some(df.limit(maxSurvivorsInDriver + 1).collect())
-      .filter(_.length <= maxSurvivorsInDriver) match {
-      case Some(rows) =>
-        if (rows.nonEmpty) {
-          noteChunk(rows.length)
-          handle(rows)
-        }
-      case None =>
-        import scala.jdk.CollectionConverters._
-        val parts = math.ceil(df.count().toDouble / maxSurvivorsInDriver).toInt
-        df.repartition(parts).toLocalIterator().asScala
-          .grouped(maxSurvivorsInDriver)
-          .foreach { chunk =>
-            noteChunk(chunk.size)
-            handle(chunk.toArray)
-          }
-    }
-  }
-
-  private def noteChunk(size: Int): Unit = {
-    driverCollectedEvents.addAndGet(size.toLong)
-    maxDriverChunkRows.getAndUpdate(m => math.max(m, size.toLong))
-    ()
-  }
 }
 
 object StreamIngest {

@@ -1,0 +1,124 @@
+package org.apache.spark.sql.execution
+
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
+
+import org.apache.spark.{ShuffleDependency, SparkEnv, TaskContext,
+  TaskContextImpl}
+import org.apache.spark.memory.TaskMemoryManager
+import org.apache.spark.rdd.{InputFileBlockHolder, RDD}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.util.Utils
+
+/** Reads the first two (string) columns of a frame to the driver in
+  * chunks of at most `maxRows` rows.
+  *
+  * When the frame's RDD lineage holds no shuffle, its partitions are
+  * computed one after another on the calling thread with no Spark job:
+  * each under its own task context and task memory manager, as an
+  * executor would run it, and the strings are copied out of each
+  * (reused) row. The context is set only while Spark code pulls rows:
+  * while it is set, `SQLConf.get` reads the context's local properties
+  * instead of the session conf, so the caller's handler never runs
+  * under it. At the end of a partition the context is marked failed
+  * (on an error) and completed, which runs the reader's completion
+  * listeners, then its memory is freed and the context unset.
+  *
+  * Any other lineage is read with `toLocalIterator`, one job per
+  * partition. Either way the rows of a frame of at most `maxRows` rows
+  * reach the handler as one chunk. Spark's task context is private to
+  * Spark, hence this package.
+  */
+object DriverRowReader {
+
+  /** Task attempt ids of driver-side reads count down from -1, so they
+    * never share the scheduler's ids in the memory manager's books.
+    */
+  private val nextAttemptId = new AtomicLong(-1L)
+
+  def foreachChunk(df: DataFrame, maxRows: Int)(
+      handle: Array[(String, String)] => Unit): Unit = {
+    require(maxRows > 0, s"maxRows must be positive, got $maxRows")
+    val rdd = df.queryExecution.toRdd
+    if (hasShuffle(rdd))
+      rdd.map(pair).toLocalIterator.grouped(maxRows)
+        .foreach(chunk => handle(chunk.toArray))
+    else {
+      // what a job's tasks would carry: the thread's local properties
+      // plus the session's conf (SQLExecution.withSQLConfPropagated)
+      val props =
+        Utils.cloneProperties(df.sparkSession.sparkContext.getLocalProperties)
+      df.sparkSession.sessionState.conf.getAllConfs.foreach {
+        case (k, v) if k.startsWith("spark") => props.setProperty(k, v)
+        case _ => ()
+      }
+      val buf = new ArrayBuffer[(String, String)]()
+      def emit(): Unit = { handle(buf.toArray); buf.clear() }
+      val parts = rdd.partitions
+      parts.foreach { split =>
+        val attemptId = nextAttemptId.getAndDecrement()
+        val ctx = new TaskContextImpl(0, 0, split.index, attemptId, 0,
+          parts.length, new TaskMemoryManager(SparkEnv.get.memoryManager,
+            attemptId), props, SparkEnv.get.metricsSystem)
+        var error: Option[Throwable] = None
+        try {
+          val rows = inContext(ctx)(rdd.iterator(split, ctx))
+          while (inContext(ctx)(fill(rows, buf, maxRows))) emit()
+        } catch {
+          case t: Throwable => error = Some(t); throw t
+        } finally finish(ctx, error)
+      }
+      if (buf.nonEmpty) emit()
+    }
+  }
+
+  /** Pulls rows into `buf` until it holds `maxRows`; true when it does. */
+  private def fill(rows: Iterator[InternalRow],
+      buf: ArrayBuffer[(String, String)], maxRows: Int): Boolean = {
+    while (buf.length < maxRows && rows.hasNext) buf += pair(rows.next())
+    buf.length == maxRows
+  }
+
+  private def pair(r: InternalRow): (String, String) = {
+    def str(i: Int) = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+    (str(0), str(1))
+  }
+
+  /** Marks `ctx` failed on `error`, then completed, and frees its memory.
+    * A listener's failure is suppressed into `error` when there is one,
+    * so the caller sees the original exception.
+    */
+  private def finish(ctx: TaskContextImpl, error: Option[Throwable]): Unit =
+    try inContext(ctx) {
+      error.foreach(ctx.markTaskFailed)
+      ctx.markTaskCompleted(error)
+    } catch {
+      case NonFatal(e) if error.isDefined => error.get.addSuppressed(e)
+    } finally {
+      ctx.taskMemoryManager.cleanUpAllAllocatedMemory()
+      ()
+    }
+
+  /** The one place a task context is set on the calling thread. */
+  private def inContext[T](ctx: TaskContext)(body: => T): T = {
+    TaskContext.setTaskContext(ctx)
+    try body
+    finally {
+      TaskContext.unset()
+      InputFileBlockHolder.unset()
+    }
+  }
+
+  private def hasShuffle(rdd: RDD[_]): Boolean = {
+    val seen = mutable.Set[Int]()
+    def walk(r: RDD[_]): Boolean = seen.add(r.id) && r.dependencies.exists {
+      case _: ShuffleDependency[_, _, _] => true
+      case d => walk(d.rdd)
+    }
+    walk(rdd)
+  }
+}

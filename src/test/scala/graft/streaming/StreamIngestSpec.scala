@@ -220,16 +220,139 @@ class StreamIngestSpec extends SparkSpec {
     assert(delivered == Seq(Seq(28L)))
   }
 
-  test("a warm 40-event micro-batch launches at most 1 Spark job") {
+  test("a warm 40-event micro-batch launches no Spark job") {
     val e = newEngine()
     e.register(WebhookConfig("/few-jobs", "https://example.com/sink",
       "SELECT v, v * 2 AS dbl FROM {{payload}}", Some("v % 4 > 0"), None))
     val ingest = new StreamIngest(e)
     jobsFor(ingest, "/few-jobs", 1, "few|warm")
     val jobs = jobsFor(ingest, "/few-jobs", 40, "few|1")
-    // the one collect of the batch, nothing per webhook, per event or
-    // for the audit flush
-    assert(jobs <= 1, s"$jobs jobs for one 40-event batch")
+    // the rows are read on the driver; nothing per webhook, per event
+    // or for the audit flush
+    assert(jobs == 0, s"$jobs jobs for one 40-event batch")
+  }
+
+  test("a warm batch on an attached MemoryStream launches no Spark job") {
+    val s = spark
+    implicit val sqlCtx = s.sqlContext
+    import s.implicits._
+    val e = newEngine()
+    e.register(WebhookConfig("/mem-jobs", "https://example.com/sink",
+      "SELECT v, v * 2 AS dbl FROM {{payload}}", Some("v % 4 > 0"), None))
+    val mem = MemoryStream[(String, String)]
+    val query = new StreamIngest(e).attach(mem.toDS(), "graft-ingest-jobs")
+    def batch(from: Int): Unit = {
+      mem.addData((from until from + 40).map(i =>
+        "/mem-jobs" -> s"""{"v": $i}"""))
+      query.processAllAvailable()
+    }
+    val jobs = try {
+      batch(0) // the query's first batch
+      jobsIn(batch(40))._1
+    } finally query.stop()
+    assert(jobs == 0, s"$jobs jobs for a warm attached batch")
+    assert(e.audit.rawEvents().count() == 80L)
+  }
+
+  test("a batch past the driver cap launches no Spark job") {
+    val e = newEngine()
+    e.register(WebhookConfig("/cap-jobs", "https://example.com/sink",
+      "SELECT v FROM {{payload}}", Some("v > 0"), None))
+    val cap = 8
+    val ingest = new StreamIngest(e, maxSurvivorsInDriver = cap)
+    jobsFor(ingest, "/cap-jobs", 1, "cap|warm")
+    val jobs = jobsFor(ingest, "/cap-jobs", 5 * cap + 3, "cap|1")
+    assert(jobs == 0, s"$jobs jobs for a batch past the cap")
+    assert(ingest.maxDriverChunkRows.get() == cap.toLong)
+    assert(ingest.driverCollectedEvents.get() == 1L + 5 * cap + 3)
+    val delivered = e.adHocQuery(
+      "SELECT COUNT(*) FROM transformed_events WHERE success").toOption.get
+    assert(delivered == Seq(Seq(1L + 5 * cap + 3)))
+  }
+
+  test("a shuffled stream batch reads with jobs and audits as the per-event path does") {
+    // a shuffle in the batch's lineage takes the toLocalIterator read
+    val s = spark
+    implicit val sqlCtx = s.sqlContext
+    import s.implicits._
+    val e = newEngine()
+    registerMixed(e)
+    val mem = MemoryStream[(String, String)]
+    val query = new StreamIngest(e)
+      .attach(mem.toDS().repartition(2), "graft-ingest-shuffled")
+    val jobs = try jobsIn {
+      mem.addData(mixedEvents: _*)
+      query.processAllAvailable()
+    }._1 finally query.stop()
+    assert(jobs > 0)
+    assert(auditSnapshot(e) == perEventSnapshot())
+  }
+
+  test("a failing driver-side read rethrows its error after the completion listeners") {
+    val s = spark
+    import s.implicits._
+    val e = newEngine()
+    e.register(WebhookConfig("/fails", "https://example.com/sink",
+      "SELECT * FROM {{payload}}", None, None))
+    StreamIngestSpec.listenerRuns.set(0)
+    val rows = s.sparkContext.parallelize(Seq(0, 1), 2)
+      .mapPartitionsWithIndex(StreamIngestSpec.failOnSecondPartition)
+    val thrown = intercept[IllegalStateException](
+      new StreamIngest(e).processMicroBatch(
+        rows.toDF("source_path", "payload"), "fails|0"))
+    assert(thrown.getMessage == "second partition")
+    // both partitions' listeners ran: the completed one and the failed one
+    assert(StreamIngestSpec.listenerRuns.get() == 2)
+    assert(org.apache.spark.TaskContext.get() == null)
+  }
+
+  test("stream rows route with the HTTP path's normalization") {
+    val s = spark
+    import s.implicits._
+    val events = Seq(
+      "hook" -> """{"v": 1}""", // no leading slash: routes to /hook
+      "/hook" -> """{"v": 2}""",
+      "nowhere" -> """{"v": 3}""") // unroutable → no raw row
+    val nullPath = (null: String) -> """{"v": 4}""" // routes nowhere either
+    def register(e: graft.engine.WebhookEngine): Unit =
+      e.register(WebhookConfig("/hook", "https://example.com/sink",
+        "SELECT v FROM {{payload}}", None, None))
+    val streamed = newEngine()
+    register(streamed)
+    val ingest = new StreamIngest(streamed)
+    ingest.processMicroBatch((events :+ nullPath).toDF("source_path", "payload"),
+      "norm|0")
+    assert(ingest.driverCollectedEvents.get() == 2L)
+    val perEvent = newEngine()
+    register(perEvent)
+    events.foreach { case (p, j) => perEvent.ingest(p, j) }
+    perEvent.drain()
+    assert(streamed.audit.rawEvents().count() == 2L)
+    assert(auditSnapshot(streamed) == auditSnapshot(perEvent))
+  }
+
+  test("idle StreamIngest instances release their delivery threads") {
+    val s = spark
+    import s.implicits._
+    def workers(): Int = Thread.getAllStackTraces.keySet.toArray
+      .count(_.asInstanceOf[Thread].getName == "graft-delivery-worker")
+    // waits up to 30 s for the live delivery threads to fall to `n`
+    def fallsTo(n: Int): Boolean = {
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (workers() > n && System.nanoTime() < deadline) Thread.sleep(200)
+      workers() <= n
+    }
+    // earlier instances' threads end first, so the count starts at rest
+    assert(fallsTo(0))
+    (1 to 4).foreach { i =>
+      val e = newEngine()
+      e.register(WebhookConfig("/idle", "https://example.com/sink",
+        "SELECT v FROM {{payload}}", None, None))
+      new StreamIngest(e).processMicroBatch((1 to 8).map(v =>
+        "/idle" -> s"""{"v": $v}""").toDF("source_path", "payload"), s"idle|$i")
+    }
+    assert(workers() > 0)
+    assert(fallsTo(0), s"${workers()} delivery threads still live")
   }
 
   test("the batch-end audit flush launches no Spark job") {
@@ -489,4 +612,21 @@ class StreamIngestSpec extends SparkSpec {
     assert(outcomes.count(_.getBoolean(0)) == 2)
     assert(outcomes.count(_.getString(1) == "Filtered out by filter_query") == 1)
   }
+}
+
+object StreamIngestSpec {
+
+  /** Completion listeners run by [[failOnSecondPartition]]. */
+  val listenerRuns = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** A partition function that registers a completion listener, then
+    * yields one routable row on partition 0 and throws on partition 1.
+    */
+  val failOnSecondPartition: (Int, Iterator[Int]) => Iterator[(String, String)] =
+    (i, _) => {
+      org.apache.spark.TaskContext.get()
+        .addTaskCompletionListener[Unit](_ => listenerRuns.incrementAndGet())
+      if (i == 1) throw new IllegalStateException("second partition")
+      Iterator("/fails" -> """{"v": 1}""")
+    }
 }
