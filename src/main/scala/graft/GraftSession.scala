@@ -15,8 +15,7 @@ object GraftSession {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.ui.enabled", "false")
-      // native-counter substitution for user SQL (graft.plans); the
-      // token rule stays conf-gated off inside the rule itself
+      // native-counter substitution for user SQL (graft.plans)
       .withExtensions(new graft.plans.GraftExtensions)
     Tables.sessionConf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()

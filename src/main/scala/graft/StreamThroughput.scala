@@ -2,30 +2,11 @@ package graft
 
 import java.nio.file.Files
 
-import graft.engine.{Delivery, WebhookConfig, WebhookEngine}
-import graft.streaming.StreamIngest
-
-/** Dev evidence harness: measured throughput of the micro-batch
-  * ingestion path (events/s through route → raw audit → filter gate →
-  * transform → delivery handoff → audit flush), with a no-op delivery
-  * so the number isolates ENGINE cost from destination latency.
+/** Dev evidence harness: throughput of the streaming operators, one leg
+  * each (the gateway's micro-batch ingest is measured by perfbench's
+  * `stream_batches` workload).
   *
-  * Two webhook shapes bound the contract:
-  *  - `proj`: a projection transform, compiled once per payload shape
-  *    and evaluated on the driver with no Spark job (printed as
-  *    `compiled`);
-  *  - `agg`: a `LIMIT 1` transform, which runs per event on the Spark
-  *    path (printed as `limit-1`). The printed ratio is the compiled
-  *    transform's advantage over it.
-  *
-  * A third shape, `latency`, reruns `proj` against a destination with
-  * simulated per-call latency (default 50 ms) — the regime real HTTP
-  * delivery lives in — to measure the bounded-parallel delivery pool
-  * rather than raw engine cost.
-  *
-  * Usage: sbt "runMain graft.StreamThroughput [nProj] [nAgg] [latencyMs]".
-  *
-  * A separate mode drives the STREAMING SEMANTIC DEDUP state machine
+  * The `semdedup` leg drives the STREAMING SEMANTIC DEDUP state machine
   * ([[graft.streaming.CorpusStreamOps.semanticDedupCandidates]]) at
   * replica scale — the r9 operator had correctness pins but no
   * throughput evidence (VERDICT r10 item 5). It feeds the replica's
@@ -339,55 +320,14 @@ object StreamThroughput {
     spark.stop()
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("semdedup")) { semanticDedupLeg(args); return }
-    if (args.headOption.contains("chunkdedup")) { chunkDedupLeg(args); return }
-    if (args.headOption.contains("ksdrift")) { ksDriftLeg(args); return }
-    if (args.headOption.contains("rollingactive")) { rollingActiveLeg(args); return }
-    val nProj = args.headOption.map(_.toInt).getOrElse(50000)
-    val nAgg = args.lift(1).map(_.toInt).getOrElse(500)
-    val latencyMs = args.lift(2).map(_.toLong).getOrElse(50L)
-    val spark = GraftSession.local()
-    import spark.implicits._
-
-    @volatile var delayMs = 0L
-    val e = new WebhookEngine(spark,
-      Files.createTempDirectory("graft-throughput").toString,
-      (_, _, _) => {
-        if (delayMs > 0) Thread.sleep(delayMs)
-        Delivery.Result(success = true, Some(200), "ok")
-      })
-    e.register(WebhookConfig("/proj", "https://sink.invalid/x",
-      "SELECT v, v * 2 AS dbl FROM {{payload}}",
-      Some("v % 2 = 0"), None))
-    e.register(WebhookConfig("/agg", "https://sink.invalid/x",
-      "SELECT v FROM {{payload}} LIMIT 1", None, None))
-    val ingest = new StreamIngest(e)
-
-    def run(path: String, n: Int, label: String): Double = {
-      val batch = (1 to n).map(i => path -> s"""{"v": $i}""")
-        .toDF("source_path", "payload")
-      // warm the plan caches untimed, then time one full micro-batch
-      ingest.processMicroBatch(
-        (1 to 100).map(i => path -> s"""{"v": $i}""")
-          .toDF("source_path", "payload"), s"warm|$label")
-      val t0 = System.nanoTime()
-      ingest.processMicroBatch(batch, s"timed|$label")
-      val sec = (System.nanoTime() - t0) / 1e9
-      val eps = n / sec
-      println(f"[throughput] $label%-18s n=$n%6d wall=$sec%8.2fs -> $eps%9.0f events/s")
-      eps
-    }
-
-    val proj = run("/proj", nProj, "compiled")
-    val agg = run("/agg", nAgg, "limit-1")
-    println(f"[throughput] compiled transform advantage over LIMIT 1: ${proj / agg}%.0fx")
-    // latency-bound regime: 2000 events → 1000 survivors, each delivery
-    // sleeping latencyMs; sequential handoff would pay 1000 × latency
-    delayMs = latencyMs
-    val lat = run("/proj", 2000, s"latency-${latencyMs}ms")
-    println(f"[throughput] latency-bound: ${lat}%.0f events/s vs " +
-      f"${1000.0 / latencyMs}%.0f events/s sequential bound")
-    spark.stop()
+  def main(args: Array[String]): Unit = args.headOption match {
+    case Some("semdedup") => semanticDedupLeg(args)
+    case Some("chunkdedup") => chunkDedupLeg(args)
+    case Some("ksdrift") => ksDriftLeg(args)
+    case Some("rollingactive") => rollingActiveLeg(args)
+    case _ =>
+      System.err.println("usage: graft.StreamThroughput " +
+        "semdedup|chunkdedup|ksdrift|rollingactive [args...]")
+      sys.exit(2)
   }
 }

@@ -5,53 +5,57 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonParseException, JsonToken}
+import com.fasterxml.jackson.core.JsonToken._
+import com.fasterxml.jackson.core.io.JsonStringEncoder
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BasePredicate, Expression,
   GenericInternalRow, JoinedRow, Predicate, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.json.InferJsonSchema
+import org.apache.spark.sql.catalyst.json.{InferJsonSchema, ParseJsonText}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sample, View}
 import org.apache.spark.sql.catalyst.trees.TreePattern.{CURRENT_LIKE, LIMIT,
   OFFSET, PLAN_EXPRESSION, WINDOW_GROUP_LIMIT}
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
-import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StructType
 
 /** The event hot path: payload JSON → rows → filter / transform
   * (reference operators P1/P2/P3, src/app.py:434-579).
   *
-  * Two paths compute the same answer:
-  *  - compiled: a filter or transform whose optimized plan is only
-  *    Project / Filter nodes over the payload, with deterministic,
-  *    subquery-free expressions that do not read the clock, is compiled
-  *    once per (webhook, payload schema, array-or-object, query text,
-  *    UDF-registry generation, reference-table generation) into
-  *    predicates plus `UnsafeProjection`s ending in
-  *    `to_json(struct(cols))`, and evaluated on the driver over rows
-  *    parsed by a `from_json` projection compiled once per schema: no
+  * One walk of Jackson's tokenizer keys a payload's shape
+  * ([[shapeKey]]). A first-seen shape's schema is inferred on the
+  * driver, by the steps `spark.read.json` runs as a job
+  * ([[InferJsonSchema]]), and cached per (webhook, shape key) with the
+  * shape's record reader ([[ParseJsonText.reader]]), which reads each
+  * payload as one record of `spark.read.json` with that schema; both
+  * caches are bounded LRUs. Two paths compute the same answer over
+  * those rows:
+  *  - compiled: over an object or an array of objects, a filter or
+  *    transform whose optimized plan is only Project / Filter nodes over
+  *    the payload, with deterministic, subquery-free expressions that do
+  *    not read the clock, is compiled once per (webhook, payload schema,
+  *    query text, UDF-registry generation, reference-table generation)
+  *    into predicates plus `UnsafeProjection`s ending in
+  *    `to_json(struct(cols))`, and evaluated on the driver: no
   *    Catalyst planning, no temp view, no Spark job per event. An
   *    inner or payload-preserving outer equi-join from those rows to a
   *    side that reads only registered reference tables compiles too:
   *    the reference side runs once at compile time and is indexed by
   *    its join keys in a driver-side hash map (reference tables are
   *    local relations, so that run is a local scan with no Spark job);
-  *  - Spark: everything else (other joins, aggregates and limits over
-  *    the payload, sorts, windows, generators) and any compiled
-  *    evaluation that throws runs as SQL
-  *    over the parsed rows as a local relation, so every "Error: …"
+  *  - Spark: everything else (scalars, arrays of scalars and malformed
+  *    text; other joins, aggregates and limits over the payload, sorts,
+  *    windows, generators) and any compiled evaluation that throws runs
+  *    as SQL over the rows as a local relation, so every "Error: …"
   *    outcome is the Spark path's own. The filter is `SELECT 1 … WHERE`
   *    with `LIMIT 1`, and rows are shaped with `to_json(struct(...))`;
   *    the optimizer folds such plans over a local relation into the
   *    relation, so even this path launches no job unless the query
   *    reads another relation.
-  *
-  * A first-seen payload shape's schema is inferred on the driver, by
-  * the steps `spark.read.json` runs as a job ([[InferJsonSchema]]), and
-  * cached per (webhook, [[shapeKey]]), so steady-state events skip
-  * schema inference; both caches are bounded LRUs.
   */
 final class PayloadTransformer(spark: SparkSession,
     isReferenceTable: String => Boolean = _ => false) {
@@ -67,8 +71,8 @@ final class PayloadTransformer(spark: SparkSession,
   def transform(webhookId: String, transformQuery: String,
       payloadJson: String): String = {
     val p = parse(webhookId, payloadJson)
-    compiledRun(webhookId, p, transformQuery, filter = false)(_.json(_))
-      .map(shapeResult)
+    compiled(webhookId, p, transformQuery, filter = false)
+      .flatMap(s => attempt(shapeResult(s.json(p.rows))))
       .getOrElse(sparkTransform(p, transformQuery))
   }
 
@@ -78,77 +82,42 @@ final class PayloadTransformer(spark: SparkSession,
   def applyFilter(webhookId: String, filterQuery: String,
       payloadJson: String): Boolean = {
     val p = parse(webhookId, payloadJson)
-    compiledRun(webhookId, p, filterQuery, filter = true)(_.keep(_))
+    compiled(webhookId, p, filterQuery, filter = true)
+      .flatMap(s => attempt(s.keep(p.rows)))
       .getOrElse(sparkFilter(p, filterQuery))
   }
 
   // ---- payload shapes ----
 
   private def parse(webhookId: String, json: String): Payload = {
-    val scan = new ShapeScan(json)
-    val shape = shapes.getOrElseUpdate(webhookId + "\u0000" + scan.key,
-      newShape(json, scan.isArray, scan.rowWise))
-    Payload(json, shape,
-      shape.parser.flatMap(p => attempt(parseRows(p, shape, json))))
-  }
-
-  private def newShape(json: String, isArray: Boolean,
-      rowWise: Boolean): Shape = {
-    val schema = InferJsonSchema(spark, json)
-    val parser =
-      if (!rowWise ||
-        schema.fieldNames.contains(spark.sessionState.conf.columnNameOfCorruptRecord))
-        None
-      else attempt {
-        import org.apache.spark.sql.functions.{col, from_json}
-        val parsed = if (isArray) ArrayType(schema) else schema
-        withPlaceholder(StructType(Seq(StructField("json", StringType)))) {
-          (df, _, leaf) => compileRowWise(
-            df.select(from_json(col("json"), parsed, Map.empty[String, String])), leaf)
-        }
-      }.flatten
-    new Shape(schema, isArray, parser)
-  }
-
-  private def parseRows(parser: Stages, shape: Shape,
-      json: String): Seq[InternalRow] = {
-    val n = shape.schema.length
-    val out = parser.synchronized {
-      parser(InternalRow(UTF8String.fromString(json))).head.copy()
-    }
-    val rows =
-      if (shape.isArray) {
-        val a = out.getArray(0)
-        (0 until a.numElements()).map(i => a.getStruct(i, n))
-      } else Seq(out.getStruct(0, n))
-    require(rows.forall(_ != null), "payload did not parse to rows")
-    rows
+    val walk = new Walk(json)
+    val shape = shapes.getOrElseUpdate(webhookId + "\u0000" + walk.key, {
+      val schema = InferJsonSchema(spark, json)
+      val corrupt = spark.sessionState.conf.columnNameOfCorruptRecord
+      new Shape(schema, walk.rowWise && !schema.fieldNames.contains(corrupt),
+        ParseJsonText.reader(spark, schema))
+    })
+    Payload(shape, shape.read(json))
   }
 
   // ---- compiled path ----
 
-  private def compiledRun[T](webhookId: String, p: Payload, text: String,
-      filter: Boolean)(run: (Stages, Seq[InternalRow]) => T): Option[T] =
-    for {
-      rows <- p.rows
-      stages <- compiled(webhookId, p, text, filter)
-      out <- attempt(run(stages, rows))
-    } yield out
-
   private def compiled(webhookId: String, p: Payload, text: String,
-      filter: Boolean): Option[Stages] = {
-    // the generations are read before compiling, so a plan built from
-    // content replaced meanwhile keys on the generation before the swap
-    val key = PlanKey(webhookId, p.shape.schema, p.shape.isArray, text,
-      filter, UdfRegistry.generation, ReferenceTables.generation)
-    plans.getOrElseUpdate(key, compile(key))
-  }
+      filter: Boolean): Option[Stages] =
+    if (!p.shape.rowWise) None
+    else {
+      // the generations are read before compiling, so a plan built from
+      // content replaced meanwhile keys on the generation before the swap
+      val key = PlanKey(webhookId, p.shape.schema, text, filter,
+        UdfRegistry.generation, ReferenceTables.generation)
+      plans.getOrElseUpdate(key, compile(key))
+    }
 
   /** Analyzes and optimizes the query once against an empty placeholder
     * of the schema; None when it is not row-wise or does not analyze.
     */
   private def compile(k: PlanKey): Option[Stages] =
-    attempt(withPlaceholder(k.schema) { (_, view, leaf) =>
+    attempt(withPlaceholder(k.schema) { (view, leaf) =>
       compileRowWise(
         if (k.filter) filterDf(view, k.text)
         else jsonDf(spark.sql(substitute(k.text, view))), leaf)
@@ -159,14 +128,14 @@ final class PayloadTransformer(spark: SparkSession,
     * keeps it as a leaf instead of folding queries over it away.
     */
   private def withPlaceholder[T](schema: StructType)(
-      body: (DataFrame, String, RDD[InternalRow]) => T): T = {
+      body: (String, RDD[InternalRow]) => T): T = {
     val df = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     val leaf = df.queryExecution.logical.collectFirst {
       case r: LogicalRDD => r.rdd
     }.get
     val view = tempViewName()
     df.createOrReplaceTempView(view)
-    try body(df, view, leaf)
+    try body(view, leaf)
     finally spark.catalog.dropTempView(view)
   }
 
@@ -267,21 +236,12 @@ final class PayloadTransformer(spark: SparkSession,
       filterDf(view, filterQuery).limit(1).collect().nonEmpty
     }
 
-  /** The payload as a temp view: a local relation of its parsed rows, or,
-    * for a payload that did not parse to rows (a scalar, malformed JSON),
-    * the text read with the cached schema.
-    */
+  /** The payload as a temp view: a local relation of its rows. */
   private def withPayloadView[T](p: Payload)(body: String => T): T = {
     val schema = p.shape.schema
-    val df = p.rows match {
-      case Some(rows) =>
-        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-        spark.createDataFrame(rows.map(r => toRow(r).asInstanceOf[Row]).asJava,
-          schema)
-      case None =>
-        import spark.implicits._
-        spark.read.schema(schema).json(Seq(p.json).toDS())
-    }
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    val df = spark.createDataFrame(
+      p.rows.map(r => toRow(r).asInstanceOf[Row]).asJava, schema)
     val view = tempViewName()
     df.createOrReplaceTempView(view)
     try body(view) finally spark.catalog.dropTempView(view)
@@ -326,19 +286,14 @@ final class PayloadTransformer(spark: SparkSession,
   private[graft] def compiledTransform(webhookId: String,
       transformQuery: String, payloadJson: String): Option[String] = {
     val p = parse(webhookId, payloadJson)
-    for {
-      rows <- p.rows
-      stages <- compiled(webhookId, p, transformQuery, filter = false)
-    } yield shapeResult(stages.json(rows))
+    compiled(webhookId, p, transformQuery, filter = false)
+      .map(s => shapeResult(s.json(p.rows)))
   }
 
   private[graft] def compiledFilter(webhookId: String, filterQuery: String,
       payloadJson: String): Option[Boolean] = {
     val p = parse(webhookId, payloadJson)
-    for {
-      rows <- p.rows
-      stages <- compiled(webhookId, p, filterQuery, filter = true)
-    } yield stages.keep(rows)
+    compiled(webhookId, p, filterQuery, filter = true).map(_.keep(p.rows))
   }
 
   private[graft] def sparkTransform(webhookId: String, transformQuery: String,
@@ -358,21 +313,21 @@ object PayloadTransformer {
   private val MaxShapes = 1024
   private val MaxPlans = 1024
 
-  /** One payload shape of one webhook: its inferred schema and, when
-    * payloads of the shape are an object or an array of objects, the
-    * driver-side `from_json` parser.
+  /** One payload shape of one webhook: its inferred schema, whether the
+    * compiled path takes it (an object or an array of objects, with no
+    * corrupt-record column), and its record reader, which reads a
+    * payload's text as one record of `spark.read.json` with the schema.
+    * The reader reuses its parser, so reads hold the shape's lock.
     */
-  private final class Shape(val schema: StructType, val isArray: Boolean,
-      val parser: Option[Stages])
+  private final class Shape(val schema: StructType, val rowWise: Boolean,
+      reader: String => Seq[InternalRow]) {
+    def read(json: String): Seq[InternalRow] = synchronized(reader(json))
+  }
 
-  /** One payload: its text, shape, and parsed rows (None when the shape
-    * has no parser or the parse failed).
-    */
-  private final case class Payload(json: String, shape: Shape,
-      rows: Option[Seq[InternalRow]])
+  private final case class Payload(shape: Shape, rows: Seq[InternalRow])
 
   private final case class PlanKey(webhookId: String, schema: StructType,
-      isArray: Boolean, text: String, filter: Boolean, udfGeneration: Long,
+      text: String, filter: Boolean, udfGeneration: Long,
       referenceGeneration: Long)
 
   /** A driver-side stage: the output rows of its input rows. */
@@ -464,149 +419,82 @@ object PayloadTransformer {
     * of 19 or more digits may infer as decimals of their own precision,
     * so they key on their text. Array elements shaped like the one
     * before are skipped (merging a type with itself changes nothing).
+    * Names key decoded, then escaped, so two spellings of one name share
+    * a key, as they share a schema. Text that is not exactly one strict
+    * JSON value keys as "!" plus the whole text, so it never shares a
+    * schema with a payload of another shape.
     */
-  def shapeKey(json: String): String = new ShapeScan(json).key
+  def shapeKey(json: String): String = new Walk(json).key
 
-  /** Depth past which a payload keys on its full text. */
-  private val MaxDepth = 256
+  /** Jackson's tokenizer with its default, strict, features. */
+  private val Tokens = new JsonFactory()
 
-  /** One pass over a payload computing [[shapeKey]]. Anything that is
-    * not strict JSON (single quotes, NaN, leading zeros, bad escapes,
-    * trailing text) keys on the full text, so it never shares a schema
-    * with a payload of another shape.
+  /** One walk over a payload's tokens, writing its [[shapeKey]]. [[ok]]
+    * says whether the text is exactly one strict JSON value, as Jackson's
+    * `readTree` with `FAIL_ON_TRAILING_TOKENS` decides but with no tree:
+    * no single quotes, NaN, leading zeros, bad escapes or raw control
+    * characters, within Jackson's nesting, number and string length
+    * limits, and nothing but whitespace after the value.
     */
-  private final class ShapeScan(s: String) {
+  private[engine] final class Walk(json: String) {
     private val out = new java.lang.StringBuilder(32)
-    private var i = 0
-    /** Top-level array elements are all objects. */
-    private var elementsAreObjects = true
+    private val p = Tokens.createParser(json)
+    private var root: JsonToken = _
+    /** Every element of a root array is an object. */
+    private var objectElements = true
 
-    private val ok = value(0) && { ws(); i == s.length }
-    val key: String = if (ok) out.toString else "!" + s
-    val isArray: Boolean = ok && key.startsWith("[")
+    val ok: Boolean =
+      try {
+        root = p.nextToken()
+        root != null && { value(root, top = true); p.nextToken() == null }
+      } catch { case NonFatal(_) => false }
+      finally p.close()
+
+    def key: String = if (ok) out.toString else "!" + json
+
     /** The payload is an object or an array of objects. */
-    val rowWise: Boolean = ok && (key.startsWith("{") || isArray && elementsAreObjects)
+    def rowWise: Boolean = ok &&
+      (root == START_OBJECT || root == START_ARRAY && objectElements)
 
-    private def ws(): Unit =
-      while (i < s.length && " \t\n\r".indexOf(s.charAt(i)) >= 0) i += 1
-
-    private def value(depth: Int): Boolean = {
-      ws()
-      if (i >= s.length || depth > MaxDepth) false
-      else s.charAt(i) match {
-        case '{' => obj(depth)
-        case '[' => arr(depth)
-        case '"' => out.append('s'); str()
-        case 't' => word("true", 'b')
-        case 'f' => word("false", 'b')
-        case 'n' => word("null", 'n')
-        case _ => num()
-      }
-    }
-
-    private def obj(depth: Int): Boolean = {
-      i += 1
-      out.append('{')
-      ws()
-      if (i < s.length && s.charAt(i) == '}') { i += 1; out.append('}'); return true }
-      while (true) {
-        ws()
-        val start = i
-        if (i >= s.length || s.charAt(i) != '"' || !str()) return false
-        out.append(s, start, i) // the name, quoted, escapes as written
-        ws()
-        if (i >= s.length || s.charAt(i) != ':') return false
-        i += 1
-        if (!value(depth + 1)) return false
-        ws()
-        if (i >= s.length) return false
-        s.charAt(i) match {
-          case ',' => i += 1
-          case '}' => i += 1; out.append('}'); return true
-          case _ => return false
+    /** Reads the value starting at token `t`; a token that cannot start
+      * one throws.
+      */
+    private def value(t: JsonToken, top: Boolean): Unit = t match {
+      case START_OBJECT =>
+        out.append('{')
+        while (p.nextToken() == FIELD_NAME) {
+          out.append('"')
+          JsonStringEncoder.getInstance.quoteAsString(p.currentName, out)
+          out.append('"')
+          value(p.nextToken(), top = false)
         }
-      }
-      false
-    }
-
-    private def arr(depth: Int): Boolean = {
-      i += 1
-      out.append('[')
-      ws()
-      if (i < s.length && s.charAt(i) == ']') { i += 1; out.append(']'); return true }
-      var prev = -1
-      while (true) {
-        ws()
-        if (depth == 0 && (i >= s.length || s.charAt(i) != '{'))
-          elementsAreObjects = false
-        val start = out.length
-        if (!value(depth + 1)) return false
-        val len = out.length - start
-        if (prev >= 0 && len == start - prev &&
-          out.substring(prev, start) == out.substring(start)) out.setLength(start)
-        else prev = start
-        ws()
-        if (i >= s.length) return false
-        s.charAt(i) match {
-          case ',' => i += 1
-          case ']' => i += 1; out.append(']'); return true
-          case _ => return false
+        out.append('}')
+      case START_ARRAY =>
+        out.append('[')
+        var prev = -1
+        var next = p.nextToken()
+        while (next != END_ARRAY) {
+          if (top && next != START_OBJECT) objectElements = false
+          val start = out.length
+          value(next, top = false)
+          if (prev >= 0 && out.length - start == start - prev &&
+            out.substring(prev, start) == out.substring(start)) out.setLength(start)
+          else prev = start
+          next = p.nextToken()
         }
-      }
-      false
-    }
-
-    private def str(): Boolean = {
-      i += 1
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '"') { i += 1; return true }
-        else if (c == '\\') {
-          if (i + 1 >= s.length) return false
-          s.charAt(i + 1) match {
-            case '"' | '\\' | '/' | 'b' | 'f' | 'n' | 'r' | 't' => i += 2
-            case 'u' if i + 5 < s.length &&
-                (2 to 5).forall(k => Character.digit(s.charAt(i + k), 16) >= 0) =>
-              i += 6
-            case _ => return false
-          }
-        } else if (c < ' ') return false
-        else i += 1
-      }
-      false
-    }
-
-    private def word(w: String, kind: Char): Boolean =
-      s.startsWith(w, i) && { i += w.length; out.append(kind); true }
-
-    private def digits(): Int = {
-      val start = i
-      while (i < s.length && s.charAt(i) >= '0' && s.charAt(i) <= '9') i += 1
-      i - start
-    }
-
-    private def num(): Boolean = {
-      val start = i
-      if (s.charAt(i) == '-') i += 1
-      val intStart = i
-      val n = digits()
-      if (n == 0 || (n > 1 && s.charAt(intStart) == '0')) return false
-      var fractional = false
-      if (i < s.length && s.charAt(i) == '.') {
-        i += 1
-        if (digits() == 0) return false
-        fractional = true
-      }
-      if (i < s.length && (s.charAt(i) == 'e' || s.charAt(i) == 'E')) {
-        i += 1
-        if (i < s.length && (s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1
-        if (digits() == 0) return false
-        fractional = true
-      }
-      if (fractional) out.append('f')
-      else if (n <= 18) out.append('i')
-      else out.append('I').append(s, start, i).append(';')
-      true
+        out.append(']')
+      case VALUE_STRING =>
+        p.getTextLength // reads the string, so its length limit applies
+        out.append('s')
+      case VALUE_NUMBER_INT if p.getTextLength >= 19 =>
+        val text = p.getText
+        if (text.length - (if (text.startsWith("-")) 1 else 0) <= 18) out.append('i')
+        else out.append('I').append(text).append(';')
+      case VALUE_NUMBER_INT => out.append('i')
+      case VALUE_NUMBER_FLOAT => out.append('f')
+      case VALUE_TRUE | VALUE_FALSE => out.append('b')
+      case VALUE_NULL => out.append('n')
+      case other => throw new JsonParseException(p, s"no value starts at $other")
     }
   }
 }

@@ -2,7 +2,6 @@ package graft.engine
 
 import scala.util.control.NonFatal
 
-import com.fasterxml.jackson.databind.DeserializationFeature
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The event pipeline driver (reference P11, `process_webhook`
@@ -377,8 +376,7 @@ final class WebhookEngine(
   def stats(): Stats = {
     import org.apache.spark.sql.functions._
     audit.retryOnCompactionRace() {
-      val tr = audit.transformedEvents()
-      val rates = tr.groupBy("webhook_id")
+      val rates = audit.transformedEvents().groupBy("webhook_id")
         .agg(count(lit(1)).as("total_events"),
           sum(when(col("success"), 1L).otherwise(0L)).as("success_count"),
           (sum(when(col("success"), 1L).otherwise(0L)).cast("float")
@@ -386,8 +384,9 @@ final class WebhookEngine(
         .collect()
         .map(r => WebhookSuccessRate(r.getString(0), r.getLong(1),
           r.getLong(2), r.getDouble(3)))
+      // every transformed row is in one group, a null webhook_id's too
       Stats(catalog.list().size.toLong, audit.rawEvents().count(),
-        tr.count(), rates.toSeq)
+        rates.map(_.totalEvents).sum, rates.toSeq)
     }
   }
 
@@ -462,13 +461,11 @@ final case class TrRow(id: String, webhookId: String, timestampIso: String,
     transformedJson: String, destinationUrl: String, success: Boolean,
     responseCode: Option[Int], responseBody: String)
 
-/** JSON validity via Jackson (ships with Spark), as the reference's
-  * `json.loads`: one value, whitespace around it allowed; empty input and
-  * anything after the value are invalid.
+/** JSON validity as the reference's `json.loads`: one value, whitespace
+  * around it allowed; empty input and anything after the value are
+  * invalid. Decided by [[PayloadTransformer]]'s token walk, which builds
+  * no tree.
   */
 object Json {
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
-  def isValid(s: String): Boolean =
-    try !mapper.readTree(s).isMissingNode catch { case NonFatal(_) => false }
+  def isValid(s: String): Boolean = new PayloadTransformer.Walk(s).ok
 }

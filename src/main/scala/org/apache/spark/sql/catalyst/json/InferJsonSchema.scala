@@ -66,16 +66,29 @@ object InferJsonSchema {
   * record, so JSON Lines, one document, a one-line or pretty-printed
   * array and blank lines all read; each record then reads as in
   * `spark.read.json(records.toDS())`: [[InferJsonSchema]]'s schema, and
-  * `JacksonParser` rows, where a root array contributes its elements.
-  * Text whose root values do not all parse is split into its non-blank
-  * lines instead, and a line that does not parse gives a corrupt-record
-  * row, as a JSON Lines file read does.
+  * [[reader]]'s rows. Text whose root values do not all parse is split
+  * into its non-blank lines instead, and a line that does not parse
+  * gives a corrupt-record row, as a JSON Lines file read does.
   */
 object ParseJsonText {
-  def apply(spark: SparkSession, text: String): (StructType, Seq[InternalRow]) =
-    InferJsonSchema.withOptions(spark) { options =>
+  def apply(spark: SparkSession, text: String): (StructType, Seq[InternalRow]) = {
+    val (records, schema) = InferJsonSchema.withOptions(spark) { options =>
       val records = rootValues(options, text)
-      val schema = InferJsonSchema.infer(options, records)
+      (records, InferJsonSchema.infer(options, records))
+    }
+    (schema, records.flatMap(reader(spark, schema)))
+  }
+
+  /** A reader of one JSON record with `schema`, built under the
+    * session's conf, reading on the calling thread: the rows
+    * `spark.read.schema(schema).json(Seq(record).toDS())` gives
+    * (`JacksonParser`, where a root array contributes its elements, under
+    * a permissive `FailureSafeParser`), copied. The reader reuses its
+    * parser, so one caller reads at a time. The event gateway reads each
+    * webhook payload as one record with its shape's reader.
+    */
+  def reader(spark: SparkSession, schema: StructType): String => Seq[InternalRow] =
+    InferJsonSchema.withOptions(spark) { options =>
       val corrupt = options.columnNameOfCorruptRecord
       val parser = new JacksonParser(
         StructType(schema.filterNot(_.name == corrupt)), options,
@@ -84,7 +97,7 @@ object ParseJsonText {
         parser.parse(_, CreateJacksonParser.string, UTF8String.fromString),
         options.parseMode, schema, corrupt)
       // a corrupt row is one row the parser reuses
-      (schema, records.flatMap(r => safe.parse(r).map(_.copy())))
+      record => safe.parse(record).map(_.copy()).toSeq
     }
 
   /** The text of each root-level value, from its first character to the

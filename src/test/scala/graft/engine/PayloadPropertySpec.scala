@@ -2,10 +2,11 @@ package graft.engine
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import org.apache.spark.sql.catalyst.json.InferJsonSchema
+import org.apache.spark.sql.types.StructType
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Property tests for payload-shape robustness (SURVEY §5's planned
   * third leg): the reference pins behavior with 3 fixed payloads; these
@@ -14,10 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Case counts are kept small (each case runs Spark jobs).
   */
-class PayloadPropertySpec extends AnyFunSuite {
+class PayloadPropertySpec extends SparkSpec {
 
   private val mapper = new ObjectMapper()
-  private def spark = SparkSpec.spark
   private lazy val transformer = new PayloadTransformer(spark)
 
   /** Drive a generator with fixed seeds (deterministic, replayable;
@@ -417,11 +417,106 @@ class PayloadPropertySpec extends AnyFunSuite {
     assert(shapeKey("""[{"a": 1}]""") != shapeKey("""{"a": 1}"""))
     // a name holding key syntax does not collide with two fields
     assert(shapeKey("""{"a\"s\"b": 1}""") != shapeKey("""{"a": "s", "b": 1}"""))
+    // two spellings of one name share the entry their one schema needs
+    assert(shapeKey("{\"a\\u0062\": 1}") == shapeKey("""{"ab": 1}"""))
     // longs and wider integers infer differently
     assert(shapeKey("""{"a": 9223372036854775807}""") !=
       shapeKey("""{"a": 9223372036854775808}"""))
     // not strict JSON: keyed on the whole text
     assert(shapeKey("""{'a': 1}""") != shapeKey("""{'a': 2}"""))
     assert(shapeKey("""{"a": 01}""") != shapeKey("""{"a": 1}"""))
+  }
+
+  /** Texts at the edges of strict JSON: empty and blank, single quotes,
+    * leading zeros, NaN, a bad escape, a raw tab, trailing text, two
+    * values, a stray close, nesting at and past Jackson's 1000 levels.
+    */
+  private val edgeTexts = Seq("", "   ", "{'a': 1}", "01", "NaN", "\"\\q\"",
+    "\"a\tb\"", "{} x", "{}{}", "[1, 2]]", "[1,]", "{\"a\": 1,}", "\"abc", "-",
+    "42", "-0", "1e5", "null", "\"\\u00e9\"", "{\"a\": 1}\n",
+    "[" * 600 + "]" * 600, "[" * 1000 + "]" * 1000, "[" * 1001 + "]" * 1001)
+
+  /** A generated text with one character dropped, a cut, or a JSON
+    * delimiter inserted: mostly near-miss malformed text.
+    */
+  private val mangledGen: Gen[String] = for {
+    json <- anyJsonGen
+    at <- Gen.choose(0, json.length)
+    edit <- Gen.oneOf("drop", "cut", ",", "]", "}", "\"", "'", "\\", "0", " x")
+  } yield edit match {
+    case "drop" => json.patch(at, Nil, 1)
+    case "cut" => json.take(at)
+    case insert => json.patch(at, insert, 0)
+  }
+
+  test("Json.isValid is readTree's verdict, with no tree") {
+    val reference = new ObjectMapper()
+      .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+    def readTree(s: String) =
+      try !reference.readTree(s).isMissingNode catch { case _: Exception => false }
+    var valid, invalid = 0
+    def check(s: String): Unit = {
+      val v = Json.isValid(s)
+      assert(v == readTree(s), s.take(120))
+      if (v) valid += 1 else invalid += 1
+    }
+    edgeTexts.foreach(check)
+    forAll(anyJsonGen, cases = 300)(check)
+    forAll(mangledGen, cases = 300)(check)
+    assert(valid > 200 && invalid > 150, s"$valid valid, $invalid invalid")
+  }
+
+  /** The text with other values of the same kinds: digits 1-8 count up
+    * and 9 becomes 1 (so no number gains a leading zero), true and false
+    * swap.
+    */
+  private def otherValues(json: String): String =
+    json.map {
+      case d if d >= '1' && d <= '8' => (d + 1).toChar
+      case '9' => '1'
+      case c => c
+    }.replace("true", "\u0000").replace("false", "true").replace("\u0000", "false")
+
+  test("payloads with equal shape keys infer equal schemas") {
+    import PayloadTransformer.shapeKey
+    val first = scala.collection.mutable.Map[String, (String, StructType)]()
+    var shared = 0
+    def check(json: String): Unit = {
+      val schema = InferJsonSchema(spark, json)
+      first.get(shapeKey(json)) match {
+        case Some((other, s)) =>
+          assert(schema == s, s"$json and $other share a key")
+          shared += 1
+        case None => first(shapeKey(json)) = (json, schema)
+      }
+    }
+    forAll(Gen.oneOf(anyJsonGen, mangledGen), cases = 300) { json =>
+      check(json)
+      check(otherValues(json))
+    }
+    assert(shared > 200, s"only $shared payloads shared a key")
+  }
+
+  test("SELECT * over any payload text returns fresh spark.read.json's rows") {
+    val t = new PayloadTransformer(spark) // one webhook sees every shape
+    val q = "SELECT * FROM {{payload}}"
+    def check(json: String): Unit =
+      assert(t.transform("prop-any", q, json) == freshTransform(q, json), json)
+    edgeTexts.filter(_.length < 100).foreach(check)
+    forAll(anyJsonGen, cases = 100) { json =>
+      check(json)
+      check(otherValues(json))
+    }
+  }
+
+  test("scalars, arrays of scalars and malformed text transform with no Spark job") {
+    val t = new PayloadTransformer(spark)
+    val q = "SELECT * FROM {{payload}}"
+    Seq("42", "\"text\"", "null", "[1, 2.5]", "[{\"a\": 1}, 2]", "not json",
+      "{\"a\": 01}", "").foreach { json =>
+      val (jobs, out) = jobsIn(t.transform("prop-scalar", q, json))
+      assert(jobs == 0, s"$jobs jobs for $json")
+      assert(out == freshTransform(q, json), json)
+    }
   }
 }

@@ -94,7 +94,10 @@ class QueryGateSpec extends SparkSpec {
     e.ingest("/stats-hook", """{"keep": true}""")
     e.ingest("/stats-hook", """{"keep": false}""") // filtered → success=false
     e.drain()
-    val s = e.stats()
+    val (jobs, s) = jobsIn(e.stats())
+    // the raw count and the per-webhook groups; the transformed count is
+    // the groups' sum, not an action of its own
+    assert(jobs == 4, s"$jobs jobs")
     assert(s.webhookCount == 1)
     assert(s.rawEventCount == 3)
     assert(s.transformedEventCount == 3)
