@@ -69,5 +69,14 @@ object Tables {
     // pre-collapsed fact sides instead — hints scope the decision to
     // joins whose build side is known-bounded, rather than betting the
     // whole session on every estimate being honest.
-    "spark.sql.join.preferSortMergeJoin" -> "false")
+    "spark.sql.join.preferSortMergeJoin" -> "false",
+    // `file:` through a local file system that starts no `chmod` or
+    // `readlink` process per file (graft.engine.ForkFreeRawLocalFileSystem),
+    // for both Hadoop APIs: `FileSystem` (parquet files, audit and
+    // reference-table directories) and `FileContext` (Structured
+    // Streaming's offset and commit logs)
+    "spark.hadoop.fs.file.impl" ->
+      classOf[graft.engine.ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[graft.engine.ForkFreeLocalFs].getName)
 }

@@ -32,6 +32,10 @@ import org.apache.spark.sql.types.StructType
   * A crash before the renames therefore leaves nothing visible, and a
   * crash between them leaves some files visible; a failed write or
   * rename deletes the temp files and rethrows. Nothing is fsynced.
+  *
+  * Files, their `.crc` checksums and the renames go through the
+  * session's `file:` file system, [[ForkFreeLocalFileSystem]]
+  * ([[graft.Tables.sessionConf]]): a file costs no child process.
   */
 object DriverParquet {
 

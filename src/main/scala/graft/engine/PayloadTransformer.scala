@@ -69,23 +69,38 @@ final class PayloadTransformer(spark: SparkSession,
     * one row → flat object, N rows → {"results": [...]}, zero → {}.
     */
   def transform(webhookId: String, transformQuery: String,
-      payloadJson: String): String = {
-    val p = parse(webhookId, payloadJson)
-    compiled(webhookId, p, transformQuery, filter = false)
-      .flatMap(s => attempt(shapeResult(s.json(p.rows))))
-      .getOrElse(sparkTransform(p, transformQuery))
-  }
+      payloadJson: String): String =
+    transform(webhookId, parse(webhookId, payloadJson), transformQuery)
 
   /** Filter gate: bare WHERE-condition over the payload relation;
     * true = keep (src/app.py:524-579). Null / no-match → filtered out.
     */
   def applyFilter(webhookId: String, filterQuery: String,
-      payloadJson: String): Boolean = {
+      payloadJson: String): Boolean =
+    keep(webhookId, parse(webhookId, payloadJson), filterQuery)
+
+  /** [[applyFilter]] (when there is a filter) then [[transform]], over
+    * one parse of the payload: the shaped JSON, or None when the filter
+    * drops the event.
+    */
+  def filterThenTransform(webhookId: String, filterQuery: Option[String],
+      transformQuery: String, payloadJson: String): Option[String] = {
     val p = parse(webhookId, payloadJson)
+    if (filterQuery.exists(f => !keep(webhookId, p, f))) None
+    else Some(transform(webhookId, p, transformQuery))
+  }
+
+  private def transform(webhookId: String, p: Payload,
+      transformQuery: String): String =
+    compiled(webhookId, p, transformQuery, filter = false)
+      .flatMap(s => attempt(shapeResult(s.json(p.rows))))
+      .getOrElse(sparkTransform(p, transformQuery))
+
+  private def keep(webhookId: String, p: Payload,
+      filterQuery: String): Boolean =
     compiled(webhookId, p, filterQuery, filter = true)
       .flatMap(s => attempt(s.keep(p.rows)))
       .getOrElse(sparkFilter(p, filterQuery))
-  }
 
   // ---- payload shapes ----
 

@@ -185,14 +185,10 @@ final class WebhookEngine(
       payloadJson: String): Either[ProcessResult, String] =
     try {
       udfs.loadWebhookUdfs(webhook.id)
-      val keep = webhook.filterQuery match {
-        case Some(f) if f.nonEmpty =>
-          transformer.applyFilter(webhook.id, f, payloadJson)
-        case _ => true
-      }
-      if (!keep) Left(filteredOut(webhook, rawEventId))
-      else Right(transformer.transform(webhook.id, webhook.transformQuery,
-        payloadJson))
+      transformer.filterThenTransform(webhook.id,
+        webhook.filterQuery.filter(_.nonEmpty), webhook.transformQuery,
+        payloadJson)
+        .toRight(filteredOut(webhook, rawEventId))
     } catch {
       case NonFatal(e) =>
         Left(failed(webhook, rawEventId, s"Error: ${e.getMessage}"))

@@ -53,7 +53,11 @@ import graft.engine.WebhookEngine
   *    Streaming commits the batch. The flush encodes the parquet on this
   *    thread with no Spark job (graft.engine.AuditLog), so a warm batch
   *    launches no Spark job at all; what it pays beyond its per-event
-  *    work is the trigger's own overhead (offset and commit logs).
+  *    work is the trigger's own overhead: the offset log before the
+  *    batch and the commit log after it. Spark writes both through
+  *    Hadoop's `FileContext`, which on `file:` is the session's
+  *    [[graft.engine.ForkFreeLocalFs]], so neither they nor the flush
+  *    start a `chmod` or `readlink` process per file.
   *
   * Exactly-once notes: raw-event ids are DETERMINISTIC per stream —
   * uuid-shaped md5 of (queryName|batchId, path, occurrence#, payload),

@@ -21,12 +21,15 @@ import org.apache.spark.util.Utils
   * computed one after another on the calling thread with no Spark job:
   * each under its own task context and task memory manager, as an
   * executor would run it, and the strings are copied out of each
-  * (reused) row. The context is set only while Spark code pulls rows:
-  * while it is set, `SQLConf.get` reads the context's local properties
-  * instead of the session conf, so the caller's handler never runs
-  * under it. At the end of a partition the context is marked failed
-  * (on an error) and completed, which runs the reader's completion
-  * listeners, then its memory is freed and the context unset.
+  * (reused) row. Like an executor's task, each read is registered with
+  * the block manager, so it can read broadcast blocks (a file source's
+  * Hadoop conf is one). The context is set only while Spark code pulls
+  * rows: while it is set, `SQLConf.get` reads the context's local
+  * properties instead of the session conf, so the caller's handler
+  * never runs under it. At the end of a partition the context is marked
+  * failed (on an error) and completed, which runs the reader's
+  * completion listeners, then its memory and block locks are freed and
+  * the context unset.
   *
   * Any other lineage is read with `toLocalIterator`, one job per
   * partition. Either way the rows of a frame of at most `maxRows` rows
@@ -35,10 +38,11 @@ import org.apache.spark.util.Utils
   */
 object DriverRowReader {
 
-  /** Task attempt ids of driver-side reads count down from -1, so they
-    * never share the scheduler's ids in the memory manager's books.
+  /** Task attempt ids of driver-side reads count up from Long.MinValue,
+    * so they never share the scheduler's (non-negative) ids in the memory
+    * manager's books, nor the block manager's non-task id (-1024).
     */
-  private val nextAttemptId = new AtomicLong(-1L)
+  private val nextAttemptId = new AtomicLong(Long.MinValue)
 
   def foreachChunk(df: DataFrame, maxRows: Int)(
       handle: Array[(String, String)] => Unit): Unit = {
@@ -60,10 +64,11 @@ object DriverRowReader {
       def emit(): Unit = { handle(buf.toArray); buf.clear() }
       val parts = rdd.partitions
       parts.foreach { split =>
-        val attemptId = nextAttemptId.getAndDecrement()
+        val attemptId = nextAttemptId.getAndIncrement()
         val ctx = new TaskContextImpl(0, 0, split.index, attemptId, 0,
           parts.length, new TaskMemoryManager(SparkEnv.get.memoryManager,
             attemptId), props, SparkEnv.get.metricsSystem)
+        SparkEnv.get.blockManager.registerTask(attemptId)
         var error: Option[Throwable] = None
         try {
           val rows = inContext(ctx)(rdd.iterator(split, ctx))
@@ -88,9 +93,9 @@ object DriverRowReader {
     (str(0), str(1))
   }
 
-  /** Marks `ctx` failed on `error`, then completed, and frees its memory.
-    * A listener's failure is suppressed into `error` when there is one,
-    * so the caller sees the original exception.
+  /** Marks `ctx` failed on `error`, then completed, and frees its memory
+    * and block locks. A listener's failure is suppressed into `error`
+    * when there is one, so the caller sees the original exception.
     */
   private def finish(ctx: TaskContextImpl, error: Option[Throwable]): Unit =
     try inContext(ctx) {
@@ -100,6 +105,7 @@ object DriverRowReader {
       case NonFatal(e) if error.isDefined => error.get.addSuppressed(e)
     } finally {
       ctx.taskMemoryManager.cleanUpAllAllocatedMemory()
+      SparkEnv.get.blockManager.releaseAllLocksForTask(ctx.taskAttemptId)
       ()
     }
 

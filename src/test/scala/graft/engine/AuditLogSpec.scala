@@ -6,7 +6,7 @@ import java.time.Instant
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{LocalFileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -229,8 +229,10 @@ class AuditLogSpec extends SparkSpec {
   }
 }
 
-/** A local file system whose renames fail while `failing` is set. */
-class RenameFailingFs extends LocalFileSystem {
+/** The session's local file system, with renames that fail while
+  * `failing` is set.
+  */
+class RenameFailingFs extends ForkFreeLocalFileSystem {
   override def rename(src: HPath, dst: HPath): Boolean =
     !RenameFailingFs.failing && super.rename(src, dst)
 }

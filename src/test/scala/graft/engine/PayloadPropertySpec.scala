@@ -519,4 +519,33 @@ class PayloadPropertySpec extends SparkSpec {
       assert(out == freshTransform(q, json), json)
     }
   }
+
+  test("prepare's outcome is applyFilter followed by transform") {
+    val t = engine.transformer
+    val now = java.time.Instant.now()
+    // Spark-path errors may quote the per-call temp view's name and
+    // expression ids
+    def error(msg: String) = msg
+      .replaceAll("payload_[0-9a-f_]{36}", "payload_*").replaceAll("#\\d+", "#")
+    var (kept, dropped, failed) = (0, 0, 0)
+    forAll(Gen.oneOf(vocabPayloadGen, anyJsonGen), cases = 12) { json =>
+      (None +: filters.map(Some(_))).foreach { f =>
+        transforms.foreach { q =>
+          val w = Webhook("prop-c", "/prop-c", "https://example.com/sink", q,
+            f, None, now, now)
+          val expected = attempt {
+            if (f.exists(!t.applyFilter(w.id, _, json))) None
+            else Some(t.transform(w.id, q, json))
+          }.left.map(e => error(s"Error: ${e.getMessage}"))
+          val got = engine.prepare(w, "prop-raw", json) match {
+            case Right(out) => kept += 1; Right(Some(out))
+            case Left(r) if r.filtered => dropped += 1; Right(None)
+            case Left(r) => failed += 1; Left(error(r.responseBody))
+          }
+          assert(got == expected, s"filter $f, $q over $json")
+        }
+      }
+    }
+    assert(kept > 0 && dropped > 0 && failed > 0, (kept, dropped, failed))
+  }
 }

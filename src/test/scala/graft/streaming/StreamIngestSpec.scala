@@ -612,6 +612,60 @@ class StreamIngestSpec extends SparkSpec {
     assert(outcomes.count(_.getBoolean(0)) == 2)
     assert(outcomes.count(_.getString(1) == "Filtered out by filter_query") == 1)
   }
+
+  test("a parquet-backed batch is read on the driver with no Spark job") {
+    // a file scan reads the broadcast Hadoop conf, so the driver-side
+    // read must be registered with the block manager as a task is
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-parquet")
+      .resolve("in").toString
+    (1 to 3).map(i => "/parquet" -> s"""{"v": $i}""")
+      .toDF("source_path", "payload").write.parquet(dir)
+    val e = newEngine()
+    e.register(WebhookConfig("/parquet", "https://example.com/sink",
+      "SELECT v FROM {{payload}}", None, None))
+    val ingest = new StreamIngest(e)
+    val batch = s.read.parquet(dir)
+    val (jobs, _) = jobsIn(ingest.processMicroBatch(batch, "parquet|0"))
+    assert(jobs == 0)
+    assert(e.audit.rawEvents().count() == 3L)
+    assert(e.audit.transformedEvents().where("success").count() == 3L)
+  }
+
+  test("a restarted query resumes from its checkpoint at the next batch") {
+    // the offset, commit and source logs are written and read back by
+    // the session's file: file system (graft.engine.ForkFreeLocalFs)
+    val s = spark.newSession()
+    import s.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-recover")
+    val (input, checkpoint) = (tmp.resolve("in").toString, tmp.resolve("cp"))
+    s.conf.set("spark.sql.streaming.checkpointLocation", checkpoint.toString)
+    val e = newEngine()
+    e.register(WebhookConfig("/recover", "https://example.com/sink",
+      "SELECT v FROM {{payload}}", None, None))
+    val batches = Seq(Seq(1, 2, 3), Seq(4, 5))
+      .map(_.map(i => "/recover" -> s"""{"v": $i}"""))
+    def run(events: Seq[(String, String)]): Seq[Long] = {
+      events.toDF("source_path", "payload").write.mode("append").parquet(input)
+      val query = new StreamIngest(e).attach(
+        s.readStream.schema("source_path STRING, payload STRING")
+          .parquet(input).as[(String, String)], "graft-recover")
+      try query.processAllAvailable() finally query.stop()
+      query.recentProgress.toSeq.filter(_.numInputRows > 0).map(_.batchId)
+    }
+    assert(run(batches(0)) == Seq(0L))
+    assert(run(batches(1)) == Seq(1L)) // batch 0 is not replayed
+    assert(java.nio.file.Files.exists(checkpoint.resolve("graft-recover/commits/1")))
+    val ids = e.audit.rawEvents().select("id").as[String].collect().toSeq
+    assert(ids.size == ids.distinct.size)
+    val expected = batches.zipWithIndex.flatMap { case (events, b) =>
+      events.map { case (path, payload) =>
+        StreamIngest.rawEventId(s"graft-recover|$b", path, 1, payload)
+      }
+    }
+    assert(ids.toSet == expected.toSet)
+  }
 }
 
 object StreamIngestSpec {
