@@ -324,6 +324,10 @@ final class PayloadTransformer(spark: SparkSession,
 
 object PayloadTransformer {
 
+  /** The names [[PayloadTransformer]] gives its per-call payload views. */
+  private[engine] val TempViewName =
+    "payload_[0-9a-f]{8}(?:_[0-9a-f]{4}){3}_[0-9a-f]{12}".r
+
   /** Bounds of the shape and compiled-plan caches (entries). */
   private val MaxShapes = 1024
   private val MaxPlans = 1024

@@ -15,11 +15,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    one background worker (the reference defers to a background task;
   *    the semantics pinned by its tests are "processed within 1s and
   *    audited");
-  *  - the streaming ingestion wrapper ([[graft.streaming.StreamIngest]])
-  *    runs the same pipeline split in two: [[prepare]] (UDFs, filter,
-  *    transform, and the audit rows of filtered-out and failed events)
-  *    for each event of a micro-batch in arrival order, then
-  *    [[deliverKept]] for the survivors on its delivery pool;
+  *  - the streaming ingestion wrapper ([[graft.streaming.StreamIngest]],
+  *    the sink of a Structured Streaming query) admits each event of a
+  *    micro-batch with the same [[admit]] step and runs the same pipeline
+  *    split in two: [[prepare]] (UDFs, filter, transform, and the audit
+  *    rows of filtered-out and failed events) for each event in arrival
+  *    order, then [[deliverKept]] for the survivors on its delivery pool;
+  *  - a failed event's audited body is the same on every evaluation of
+  *    it ([[WebhookEngine.errorBody]]), so a replayed stream batch audits
+  *    what its first run audited;
   *  - filters and row-wise transforms are compiled once per payload
   *    shape and evaluated on the driver with no Spark job (see
   *    [[PayloadTransformer]]); the audit rows buffer in [[AuditLog]] and
@@ -166,8 +170,9 @@ final class WebhookEngine(
     * rehydrate UDFs → filter (filtered → audit success=false, body
     * "Filtered out by filter_query", payload "{}") → transform → deliver
     * (simulated for example.com/localhost) → audit; any non-fatal
-    * processing error → audit success=false, body "Error: <msg>". Fatal
-    * errors (interrupts, OOM) propagate unaudited.
+    * processing error → audit success=false, body "Error: <msg>"
+    * ([[WebhookEngine.errorBody]]). Fatal errors (interrupts, OOM)
+    * propagate unaudited.
     */
   def process(webhook: Webhook, rawEventId: String,
       payloadJson: String): ProcessResult =
@@ -190,8 +195,7 @@ final class WebhookEngine(
         payloadJson)
         .toRight(filteredOut(webhook, rawEventId))
     } catch {
-      case NonFatal(e) =>
-        Left(failed(webhook, rawEventId, s"Error: ${e.getMessage}"))
+      case NonFatal(e) => Left(failed(webhook, rawEventId, e))
     }
 
   /** Deliver + audit a transformed event: the tail of the pipeline,
@@ -206,8 +210,7 @@ final class WebhookEngine(
       ProcessResult(rawEventId, filtered = false, d.success,
         Some(out), d.code, d.body)
     } catch {
-      case NonFatal(e) =>
-        failed(webhook, rawEventId, s"Error: ${e.getMessage}")
+      case NonFatal(e) => failed(webhook, rawEventId, e)
     }
 
   private def filteredOut(webhook: Webhook, rawEventId: String): ProcessResult = {
@@ -218,7 +221,8 @@ final class WebhookEngine(
   }
 
   private def failed(webhook: Webhook, rawEventId: String,
-      msg: String): ProcessResult = {
+      error: Throwable): ProcessResult = {
+    val msg = errorBody(error)
     audit.logTransformed(rawEventId, webhook.id, "{}",
       webhook.destinationUrl, success = false, None, msg)
     ProcessResult(rawEventId, filtered = false, success = false,
@@ -448,6 +452,24 @@ object WebhookEngine {
 
   final case class Stats(webhookCount: Long, rawEventCount: Long,
       transformedEventCount: Long, successRates: Seq[WebhookSuccessRate])
+
+  /** The audited body of a failed event: "Error: " and the error's
+    * message, less the two parts a Spark analysis message numbers anew
+    * on every run, so that the same failing event (a replayed stream
+    * batch keeps its raw ids) audits the same body: the per-call payload
+    * view reads `{{payload}}`, as in the webhook's query, and expression
+    * ids lose their number (`nx#17377L` → `nx#L`).
+    */
+  private[graft] def errorBody(e: Throwable): String = {
+    val msg = PayloadTransformer.TempViewName
+      .replaceAllIn(String.valueOf(e.getMessage), "{{payload}}")
+    "Error: " + ExprId.replaceAllIn(msg, "#")
+  }
+
+  /** An expression id as Catalyst prints it after a name (`nx#17377`,
+    * `` `a b`#3 ``, `sum(v)#12`).
+    */
+  private val ExprId = "(?<=[\\w`)\\]])#\\d+".r
 }
 
 final case class RawRow(id: String, timestampIso: String,

@@ -10,18 +10,29 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.execution.DriverRowReader
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.{DriverRowReader, SinkQuery}
+import org.apache.spark.sql.execution.streaming.Sink
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StringType
 
 import graft.engine.WebhookEngine
 
-/** Structured Streaming ingestion wrapper (the brief's stated approach:
-  * readStream → foreachBatch running the P11 pipeline).
+/** Structured Streaming ingestion wrapper: the engine's pipeline as the
+  * sink of a streaming query.
   *
   * An upstream receiver (HTTP endpoint, Kafka topic, file drop) lands
   * `(source_path, payload_json)` pairs into any streaming source; this
-  * wrapper attaches the engine to that stream.
+  * wrapper attaches the engine to that stream. [[attach]] starts the
+  * query with its own v1 `Sink` (started by
+  * [[org.apache.spark.sql.execution.SinkQuery]]), not `foreachBatch`:
+  * the sink reads each batch from the RDD of the plan Spark built for
+  * the trigger, so a batch is planned once, by Spark. Both columns are
+  * cast to string in that plan, once, when the query starts (a
+  * string→string cast is optimized away).
   *
   * Each micro-batch runs on the driver, through the same per-event
   * pipeline as HTTP ingest:
@@ -30,7 +41,7 @@ import graft.engine.WebhookEngine
   *    `maxSurvivorsInDriver` rows
   *    ([[org.apache.spark.sql.execution.DriverRowReader]]): a batch with
   *    no shuffle in its lineage, which is what a streaming source hands
-  *    foreachBatch, is read on this thread with no Spark job; any other
+  *    the sink, is read on this thread with no Spark job; any other
   *    is read with `toLocalIterator`. A batch under the cap is read whole
   *    before its first event is admitted;
   *  - each row then takes one pass, in arrival order:
@@ -49,11 +60,13 @@ import graft.engine.WebhookEngine
   *    one slow destination does not serialize the batch. The chunk ends
   *    when every delivery it started has finished;
   *  - the batch ends with `audit.flush()`: its raw and outcome rows are
-  *    on disk when foreachBatch returns, which is when Structured
-  *    Streaming commits the batch. The flush encodes the parquet on this
-  *    thread with no Spark job (graft.engine.AuditLog), so a warm batch
-  *    launches no Spark job at all; what it pays beyond its per-event
-  *    work is the trigger's own overhead: the offset log before the
+  *    on disk when the sink's `addBatch` returns, which is when
+  *    Structured Streaming commits the batch (an error in the batch
+  *    stops the query, with that error as its cause). The flush encodes
+  *    the parquet on this thread with no Spark job
+  *    (graft.engine.AuditLog), so a warm batch launches no Spark job at
+  *    all; what it pays beyond its per-event work is Spark's planning of
+  *    the trigger and the trigger's own overhead: the offset log before the
   *    batch and the commit log after it. Spark writes both through
   *    Hadoop's `FileContext`, which on `file:` is the session's
   *    [[graft.engine.ForkFreeLocalFs]], so neither they nor the flush
@@ -84,32 +97,39 @@ final class StreamIngest(engine: WebhookEngine,
     */
   val maxDriverChunkRows = new AtomicLong(0L)
 
-  /** Attach the engine to a stream of (source_path, payload) pairs.
-    * Returns the running query; callers own its lifecycle.
+  /** Attach the engine to a stream of (source_path, payload) pairs,
+    * read by position. Returns the running query; callers own its
+    * lifecycle.
     */
   def attach(events: Dataset[(String, String)],
       queryName: String = "graft-ingest"): StreamingQuery =
-    events.writeStream
-      .queryName(queryName)
-      .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (batch: Dataset[(String, String)], batchId: Long) =>
-        processMicroBatch(batch.toDF("source_path", "payload"),
+    SinkQuery.start(StreamIngest.pathAndPayload(
+      events.toDF("source_path", "payload")), queryName, new Sink {
+      override def addBatch(batchId: Long, data: DataFrame): Unit =
+        processRows(data.queryExecution.toRdd, data.sparkSession,
           s"$queryName|$batchId")
-      }
-      .start()
+      override def toString: String = s"StreamIngest[$queryName]"
+    })
 
   /** Process one micro-batch DataFrame (`source_path`, `payload`): admit,
     * prepare and hand each event to delivery in one pass on the driver,
     * then flush the audit log.
     */
-  def processMicroBatch(batch: DataFrame, replayKey: String): Unit = {
+  def processMicroBatch(batch: DataFrame, replayKey: String): Unit =
+    processRows(StreamIngest.pathAndPayload(batch).queryExecution.toRdd,
+      batch.sparkSession, replayKey)
+
+  /** [[processMicroBatch]] over the rows of a planned batch whose first
+    * two columns are the string `source_path` and `payload`.
+    */
+  private def processRows(batch: RDD[InternalRow], session: SparkSession,
+      replayKey: String): Unit = {
     if (engine.catalog.list().isEmpty) return
     val tsMicros = engine.audit.nowMicros()
     // counts per (path, payload) across the whole batch, keyed by a
     // digest so only the counts, not the payloads, outlive each chunk
     val seen = mutable.HashMap[String, Int]()
-    DriverRowReader.foreachChunk(batch.select("source_path", "payload"),
-      maxSurvivorsInDriver) { rows =>
+    DriverRowReader.foreachChunk(batch, session, maxSurvivorsInDriver) { rows =>
       maxDriverChunkRows.getAndUpdate(m => math.max(m, rows.length.toLong))
       val deliveries = ArrayBuffer[Future[Unit]]()
       try rows.foreach {
@@ -187,6 +207,15 @@ object StreamIngest {
     s"${h.substring(0, 8)}-${h.substring(8, 12)}-${h.substring(12, 16)}-" +
       s"${h.substring(16, 20)}-${h.substring(20)}"
   }
+
+  /** `source_path` and `payload` of `df`, in that order, cast to string:
+    * a column that only up-casts to string (an `int` path read through
+    * `as[(String, String)]`) is read as its string form, as Spark's own
+    * decoding reads it.
+    */
+  private def pathAndPayload(df: DataFrame): DataFrame =
+    df.select(Seq("source_path", "payload").map(c =>
+      col(c).cast(StringType).as(c)): _*)
 
   private def md5Hex(s: String): String =
     HexFormat.of().formatHex(

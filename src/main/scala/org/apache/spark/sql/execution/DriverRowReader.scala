@@ -10,14 +10,15 @@ import org.apache.spark.{ShuffleDependency, SparkEnv, TaskContext,
   TaskContextImpl}
 import org.apache.spark.memory.TaskMemoryManager
 import org.apache.spark.rdd.{InputFileBlockHolder, RDD}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.util.Utils
 
-/** Reads the first two (string) columns of a frame to the driver in
-  * chunks of at most `maxRows` rows.
+/** Reads the first two (string) columns of a planned frame's rows (its
+  * `queryExecution.toRdd`) to the driver in chunks of at most `maxRows`
+  * rows.
   *
-  * When the frame's RDD lineage holds no shuffle, its partitions are
+  * When the RDD's lineage holds no shuffle, its partitions are
   * computed one after another on the calling thread with no Spark job:
   * each under its own task context and task memory manager, as an
   * executor would run it, and the strings are copied out of each
@@ -32,7 +33,7 @@ import org.apache.spark.util.Utils
   * the context unset.
   *
   * Any other lineage is read with `toLocalIterator`, one job per
-  * partition. Either way the rows of a frame of at most `maxRows` rows
+  * partition. Either way the rows of an RDD of at most `maxRows` rows
   * reach the handler as one chunk. Spark's task context is private to
   * Spark, hence this package.
   */
@@ -44,10 +45,12 @@ object DriverRowReader {
     */
   private val nextAttemptId = new AtomicLong(Long.MinValue)
 
-  def foreachChunk(df: DataFrame, maxRows: Int)(
+  /** `session` is the one that planned `rdd`: its conf is what the
+    * driver-side reads carry, as a job's tasks would.
+    */
+  def foreachChunk(rdd: RDD[InternalRow], session: SparkSession, maxRows: Int)(
       handle: Array[(String, String)] => Unit): Unit = {
     require(maxRows > 0, s"maxRows must be positive, got $maxRows")
-    val rdd = df.queryExecution.toRdd
     if (hasShuffle(rdd))
       rdd.map(pair).toLocalIterator.grouped(maxRows)
         .foreach(chunk => handle(chunk.toArray))
@@ -55,8 +58,8 @@ object DriverRowReader {
       // what a job's tasks would carry: the thread's local properties
       // plus the session's conf (SQLExecution.withSQLConfPropagated)
       val props =
-        Utils.cloneProperties(df.sparkSession.sparkContext.getLocalProperties)
-      df.sparkSession.sessionState.conf.getAllConfs.foreach {
+        Utils.cloneProperties(session.sparkContext.getLocalProperties)
+      session.sessionState.conf.getAllConfs.foreach {
         case (k, v) if k.startsWith("spark") => props.setProperty(k, v)
         case _ => ()
       }

@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Tables
@@ -67,6 +69,31 @@ abstract class SparkSpec extends AnyFunSuite {
       org.apache.spark.ListenerBusDrain(sc)
       (jobs.get(), out)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Runs `body` with a counting rule in
+    * `spark.experimental.extraOptimizations` and returns its result.
+    * `body` is given a function that reads how many optimizer runs so far
+    * were over a plan that `scope` accepts: the rule is alone in its
+    * batch ("User Provided Optimizers") and changes no plan, so it runs
+    * once per optimization. The rule is removed after `body`, but a
+    * session cloned meanwhile (a streaming query's) keeps it, so `scope`
+    * should accept the test's own plans only.
+    */
+  def optimizerRunsIn[T](scope: LogicalPlan => Boolean)(
+      body: (() => Int) => T): T = {
+    val runs = new java.util.concurrent.atomic.AtomicInteger()
+    val rule = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        if (scope(plan)) runs.incrementAndGet()
+        plan
+      }
+    }
+    val methods = spark.experimental
+    methods.extraOptimizations = methods.extraOptimizations :+ rule
+    try body(() => runs.get())
+    finally methods.extraOptimizations =
+      methods.extraOptimizations.filterNot(_ eq rule)
   }
 
   /** The reference's canonical sample payload (tests/conftest.py:85-98). */

@@ -1,12 +1,14 @@
 package graft.streaming
 
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.engine.{SparkSpec, WebhookConfig}
 
-/** Streaming ingestion: MemoryStream → foreachBatch running the P11
-  * pipeline (the brief's stated ingestion approach), and the micro-batch
-  * path's agreement with the per-event path.
+/** Streaming ingestion: MemoryStream → the StreamIngest sink running the
+  * P11 pipeline, and the micro-batch path's agreement with the per-event
+  * path.
   */
 class StreamIngestSpec extends SparkSpec {
   import SparkSpec._
@@ -167,8 +169,8 @@ class StreamIngestSpec extends SparkSpec {
   }
 
   test("attached MemoryStream audits identically to the per-event path") {
-    // foreachBatch hands over batches on the stream's cloned session,
-    // which processMicroBatch alone does not exercise
+    // the sink is handed batches on the stream's cloned session, which
+    // processMicroBatch alone does not exercise
     val s = spark
     implicit val sqlCtx = s.sqlContext
     import s.implicits._
@@ -252,6 +254,93 @@ class StreamIngestSpec extends SparkSpec {
     } finally query.stop()
     assert(jobs == 0, s"$jobs jobs for a warm attached batch")
     assert(e.audit.rawEvents().count() == 80L)
+  }
+
+  test("a warm attached batch runs the optimizer only for Spark's own plan") {
+    val s = spark
+    implicit val sqlCtx = s.sqlContext
+    import s.implicits._
+    val e = newEngine()
+    e.register(WebhookConfig("/mem-opt", "https://example.com/sink",
+      "SELECT v, v * 2 AS dbl FROM {{payload}}", Some("v % 4 > 0"), None))
+    val name = "graft-ingest-opt"
+    // plans optimized on this query's stream execution thread: Spark's
+    // incremental plan of a trigger is a streaming plan, and any other
+    // plan there is one that processing the batch built
+    def onStream(streaming: Boolean): LogicalPlan => Boolean = plan =>
+      plan.isStreaming == streaming &&
+        Thread.currentThread().getName.contains(s" $name [")
+    val mem = MemoryStream[(String, String)]
+    val (sparkRuns, ownRuns) = optimizerRunsIn(onStream(true)) { sparkRuns =>
+      optimizerRunsIn(onStream(false)) { ownRuns =>
+        val query = new StreamIngest(e).attach(mem.toDS(), name)
+        def batch(from: Int): Unit = {
+          mem.addData((from until from + 40).map(i =>
+            "/mem-opt" -> s"""{"v": $i}"""))
+          query.processAllAvailable()
+        }
+        try {
+          batch(0) // the query's first batch
+          val before = (sparkRuns(), ownRuns())
+          batch(40)
+          (sparkRuns() - before._1, ownRuns() - before._2)
+        } finally query.stop()
+      }
+    }
+    // the sink reads the batch from the RDD of Spark's plan, without
+    // planning a frame of its own
+    assert(sparkRuns > 0)
+    assert(ownRuns == 0, s"$ownRuns optimizer runs over the batch's own plans")
+    assert(e.audit.rawEvents().count() == 80L)
+  }
+
+  test("a stream column that up-casts to string is read as Spark decodes it") {
+    val s = spark
+    implicit val sqlCtx = s.sqlContext
+    import s.implicits._
+    def engine() = {
+      val e = newEngine()
+      e.register(WebhookConfig("/7", "https://example.com/sink",
+        "SELECT v FROM {{payload}}", None, None))
+      e
+    }
+    def paths(e: graft.engine.WebhookEngine): Seq[Seq[Any]] =
+      e.adHocQuery("SELECT source_path FROM raw_events").toOption.get
+    val typed = Seq(7 -> """{"v": 1}""").toDF("p", "payload")
+    assert(typed.as[(String, String)].collect().toSeq ==
+      Seq("7" -> """{"v": 1}"""))
+    val attached = engine()
+    val mem = MemoryStream[(Int, String)]
+    val query = new StreamIngest(attached)
+      .attach(mem.toDS().toDF("p", "payload").as[(String, String)],
+        "graft-ingest-int-path")
+    try {
+      mem.addData(7 -> """{"v": 1}""")
+      query.processAllAvailable()
+    } finally query.stop()
+    assert(paths(attached) == Seq(Seq("/7")))
+    val batch = engine()
+    new StreamIngest(batch).processMicroBatch(
+      typed.toDF("source_path", "payload"), "int-path|0")
+    assert(paths(batch) == Seq(Seq("/7")))
+  }
+
+  test("a failing batch stops the query with its own error as the cause") {
+    val s = spark
+    implicit val sqlCtx = s.sqlContext
+    import s.implicits._
+    val e = newEngine()
+    e.register(WebhookConfig("/boom", "https://example.com/sink",
+      "SELECT v FROM {{payload}}", None, None))
+    val mem = MemoryStream[(String, String)]
+    val query = new StreamIngest(e).attach(
+      mem.toDS().map(StreamIngestSpec.failOnBoom), "graft-ingest-boom")
+    val thrown = try {
+      mem.addData("/boom" -> "boom")
+      intercept[StreamingQueryException](query.processAllAvailable())
+    } finally query.stop()
+    assert(thrown.getCause.isInstanceOf[IllegalStateException], thrown.getCause)
+    assert(thrown.getCause.getMessage == "boom payload")
   }
 
   test("a batch past the driver cap launches no Spark job") {
@@ -561,6 +650,29 @@ class StreamIngestSpec extends SparkSpec {
     assert(out.values.forall(_.startsWith("Error: ")), out)
   }
 
+  test("a replayed failing batch audits the error bodies of its first run") {
+    val s = spark
+    import s.implicits._
+    val e = newEngine()
+    // an analysis error: its message quotes the plan, with the per-call
+    // payload view and the analyzer's expression ids
+    e.register(WebhookConfig("/fail-replay", "https://example.com/sink",
+      "SELECT no_such_column FROM {{payload}}", None, None))
+    val batch = Seq("""{"x": 1}""", """{"x": 2}""")
+      .map("/fail-replay" -> _).toDF("source_path", "payload")
+    val ingest = new StreamIngest(e)
+    ingest.processMicroBatch(batch, "fail-replay|3")
+    ingest.processMicroBatch(batch, "fail-replay|3") // the replay
+    val bodies = e.adHocQuery(
+      "SELECT raw_event_id, response_body FROM transformed_events")
+      .toOption.get.groupMap(_(0))(_(1).asInstanceOf[String])
+    assert(bodies.size == 2, bodies)
+    assert(bodies.values.forall(_.size == 2), bodies)
+    assert(bodies.values.forall(_.distinct.size == 1), bodies)
+    assert(bodies.values.flatten.forall(b =>
+      b.startsWith("Error: ") && b.contains("{{payload}}")), bodies)
+  }
+
   test("micro-batch raw ids equal the Spark md5 expression they replace") {
     val s = spark
     import s.implicits._
@@ -672,6 +784,12 @@ object StreamIngestSpec {
 
   /** Completion listeners run by [[failOnSecondPartition]]. */
   val listenerRuns = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** Passes an event through, unless its payload is "boom". */
+  val failOnBoom: ((String, String)) => (String, String) = {
+    case (_, "boom") => throw new IllegalStateException("boom payload")
+    case event => event
+  }
 
   /** A partition function that registers a completion listener, then
     * yields one routable row on partition 0 and throws on partition 1.
